@@ -22,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   * (4-8 cores each), not threads inside one heap. In this single-JVM
   * sandbox 8→32 measures JVM memory contention and host steal, not the
   * job's scaling behavior (the allocation-optimized kernel now reaches
-  * ~19k docs/s/thread at 32 raw threads — KernelBench mt stage — but
-  * 32-thread wall times remain the most load-sensitive). 2→8 keeps the
+  * ~19k docs/s/thread at 32 raw threads outside Spark, BASELINE.md §C —
+  * but 32-thread wall times remain the most load-sensitive). 2→8 keeps the
   * JVM in its linear region — the regime a per-executor JVM actually
   * runs in. Full analysis + raw numbers for both pairs: BASELINE.md §C.
   */

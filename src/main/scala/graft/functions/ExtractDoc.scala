@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.kernels.{ExtractKernel, HtmlCharset, MainTextExtractor, PdfTextExtractor}
+import graft.kernels.ExtractKernel
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,10 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * document kind, so the expression-only fast path can carry the dispatch
   * outcome without a Dataset encoder or a second kernel invocation.
   *
-  * Failure shape matches the library contract: text is null (and n_chars
-  * 0) for empty input, failed PDFs, oversized-upstream-filtered rows, or
-  * a kernel fault (per-row catch); `kind` always reflects the magic-byte
-  * sniff (reference dispatch analog api.py:123-125).
+  * Text, kind and failure shape come from the typed path's core
+  * (`ExtractKernel.extract`): text is null (and n_chars 0) for empty
+  * input, corrupt transport bodies, failed PDFs, or a kernel fault
+  * (per-row catch); `kind` is the dispatch outcome after transport decode
+  * (reference dispatch analog api.py:123-125). n_chars counts code
+  * points, like `length(text)` in SQL; the typed path's
+  * `ExtractedDoc.n_chars` counts UTF-16 units, so the two differ on text
+  * outside the Basic Multilingual Plane.
   */
 case class ExtractDoc(child: Expression) extends UnaryExpression {
 
@@ -52,28 +56,15 @@ object ExtractDoc {
     StructField("kind", StringType, nullable = false)))
 
   /** Shared by interpreted eval and generated code; always returns a row
-    * (never null) — text null is the failure shape.
+    * (never null) — text null is the failure shape. The kind is the typed
+    * path's, except that a row with no bytes reports `passthrough`: the
+    * one-argument function cannot see the crawl text.
     */
-  def evalBytes(bytes0: Array[Byte]): InternalRow = {
-    val bytes =
-      if (ExtractKernel.transportOf(bytes0) != null)
-        ExtractKernel.decompressTransport(bytes0).orNull // corrupt transport -> null text below
-      else bytes0
-    val kind = ExtractKernel.sniff(bytes)
-    val text: UTF8String =
-      try {
-        kind match {
-          case ExtractKernel.KindPassthrough => null
-          case ExtractKernel.KindPdf =>
-            val res = PdfTextExtractor.extract(bytes)
-            if (res.pages.isEmpty) null
-            else UTF8String.fromString(res.pages.map(_.text).mkString("\n"))
-          case _ =>
-            UTF8String.fromString(MainTextExtractor.extract(HtmlCharset.decode(bytes)).text)
-        }
-      } catch { case _: Throwable => null }
-    val n = if (text == null) 0 else text.numChars()
-    InternalRow(text, n, UTF8String.fromString(kind))
+  def evalBytes(bytes: Array[Byte]): InternalRow = {
+    val r = ExtractKernel.extract(bytes, null, Int.MaxValue)
+    val text = UTF8String.fromString(r.textOrNull)
+    val kind = if (bytes.length == 0) ExtractKernel.KindPassthrough else r.kind
+    InternalRow(text, if (text == null) 0 else text.numChars(), UTF8String.fromString(kind))
   }
 
   val fnName: FunctionIdentifier = FunctionIdentifier("extract_doc")

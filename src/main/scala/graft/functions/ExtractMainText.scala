@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.kernels.{ExtractKernel, HtmlCharset, MainTextExtractor, PdfTextExtractor}
+import graft.kernels.ExtractKernel
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -16,9 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen and the enclosing projection stays one generated
   * function instead of splitting at this call.
   *
-  * Dispatch mirrors ExtractKernel.sniff (content sniffing on magic bytes,
-  * reference analog api.py:123-125): `%PDF-` → PDF kernel (pages joined
-  * with '\n'), anything else → HTML boilerplate-strip, null/empty → null.
+  * Dispatch is the typed path's own (`ExtractKernel.extract`: transport
+  * decode, then content sniffing on magic bytes, reference analog
+  * api.py:123-125): `%PDF-` → PDF kernel (pages joined with '\n'),
+  * anything else → HTML boilerplate-strip, null/empty → null.
   */
 case class ExtractMainText(child: Expression)
     extends UnaryExpression {
@@ -58,27 +59,13 @@ case class ExtractMainText(child: Expression)
 object ExtractMainText {
 
   /** Shared by interpreted eval and generated code (static forwarder makes
-    * it callable from Janino-compiled Java). Null ⇔ nothing extractable.
-    * Catches per row (the kernels are property-tested total, but a
-    * pathological document must poison-pill to null — never fail the
-    * task; mirrors ExtractKernel.extractPages' catch-all).
+    * it callable from Janino-compiled Java). Null ⇔ nothing extractable:
+    * no bytes, or an error row of the shared core (`ExtractKernel.extract`),
+    * whose per-row catch keeps a pathological document from failing the
+    * task. No size cap — `ExtractPipeline.extractText` applies it.
     */
-  def evalBytes(bytes0: Array[Byte]): UTF8String =
-    try {
-      val bytes =
-        if (ExtractKernel.transportOf(bytes0) != null)
-          ExtractKernel.decompressTransport(bytes0).getOrElse(return null) // corrupt transport
-        else bytes0
-      ExtractKernel.sniff(bytes) match {
-        case ExtractKernel.KindPassthrough => null // no bytes, nothing to extract
-        case ExtractKernel.KindPdf =>
-          val res = PdfTextExtractor.extract(bytes)
-          if (res.pages.isEmpty) null
-          else UTF8String.fromString(res.pages.map(_.text).mkString("\n"))
-        case _ =>
-          UTF8String.fromString(MainTextExtractor.extract(HtmlCharset.decode(bytes)).text)
-      }
-    } catch { case _: Throwable => null }
+  def evalBytes(bytes: Array[Byte]): UTF8String =
+    UTF8String.fromString(ExtractKernel.extract(bytes, null, Int.MaxValue).textOrNull)
 
   val fnName: FunctionIdentifier = FunctionIdentifier("extract_main_text")
 

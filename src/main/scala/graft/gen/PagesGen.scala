@@ -16,8 +16,8 @@ import java.sql.Timestamp
   */
 object PagesGen {
 
-  /** Bump whenever generated output changes — cache dirs (Bench,
-    * BenchProbe) embed it so stale corpora are never silently re-timed.
+  /** Bump whenever generated output changes — Bench's cache dir embeds
+    * it so stale corpora are never silently re-timed.
     */
   final val CorpusVersion = "v2"
 

@@ -1,12 +1,16 @@
 package graft.kernels
 
-import graft.model.{ExtractedPage, PageRow, Span}
+import graft.model.Span
+import scala.util.control.NonFatal
 
 /** Per-row extraction dispatch: content sniffing + kernel invocation +
   * poison-pill isolation (SURVEY §2.2 "extension dispatch" re-expressed as
   * content sniffing on magic bytes — the reference dispatched on filename
   * extension, api.py:123-125; we dispatch on `%PDF-` vs HTML-ish bytes).
   *
+  * [[extract]] is the one copy of that decision: the typed path
+  * (`ExtractPipeline.extractDoc`) and both SQL functions
+  * (`extract_main_text`, `extract_doc`) are thin adapters over it.
   * Errors never fail the Spark task: a failing document emits a row with
   * `error` set and empty text (reference analog: per-request try/except,
   * api.py:291-336).
@@ -66,60 +70,79 @@ object ExtractKernel {
       }
       in.close()
       if (total > maxOut) None else Some(out.toByteArray)
-    } catch { case _: Throwable => None }
+    } catch { case _: StackOverflowError | NonFatal(_) => None }
 
   /** Back-compat alias (gzip only). */
   def gunzip(bytes: Array[Byte], maxOut: Int = 64 * 1024 * 1024): Option[Array[Byte]] =
     if (isGzip(bytes)) decompressTransport(bytes, maxOut) else None
 
-  /** Extract all pages of one input row. HTML and passthrough rows emit
-    * exactly one page (page_no 0); PDFs emit one page per content stream.
+  /** One document's merged extraction: `kind` is html | pdf |
+    * passthrough | empty, `error` is null on success. PDF pages are
+    * joined with '\n' in page order and their spans re-offset into the
+    * joined text, the combined `{page_count, pages:[...]}` of the
+    * reference (api.py:261-269).
     */
-  def extractPages(row0: PageRow): Iterator[ExtractedPage] = {
-    // transparent transport decode (content sniffing happens on the
-    // decompressed payload); a corrupt compressed body is an error row,
-    // never a task failure
-    val codec = transportOf(row0.html)
-    val row =
-      if (codec == null) row0
-      else decompressTransport(row0.html) match {
-        case Some(b) => row0.copy(html = b)
-        case None =>
-          return Iterator.single(ExtractedPage(row0.url, 0, row0.warc_ts,
-            KindHtml, "", Seq.empty, s"${codec}_corrupt"))
+  final case class Result(kind: String, pageCount: Int, text: String, spans: Seq[Span],
+      error: String) {
+    /** The text the one-argument SQL functions return: null for an error
+      * row and for a row with nothing to extract.
+      */
+    def textOrNull: String = if (error != null || kind == KindEmpty) null else text
+  }
+
+  private def noText(kind: String, pageCount: Int, error: String): Result =
+    Result(kind, pageCount, "", Seq.empty, error)
+
+  /** The per-document decision, shared by the typed path and both SQL
+    * functions: size cap, transport decode, sniff, then the PDF or HTML
+    * kernel. Crawl `text` stands in only when no `html` bytes were stored;
+    * a coded body that decodes to nothing is `empty`. Every non-fatal
+    * fault (and a stack overflow from a recursive walk over a hostile
+    * document) becomes an error row; OOM and task-kill interrupts reach
+    * Spark.
+    */
+  def extract(html: Array[Byte], text: String, maxBytes: Int): Result = {
+    val size = if (html == null) 0 else html.length
+    if (size > maxBytes) return noText(sniff(html), 0, s"too_large:$size")
+    val codec = transportOf(html)
+    val bytes =
+      if (codec == null) html
+      else decompressTransport(html) match {
+        case Some(b) => b
+        case None => return noText(KindHtml, 1, s"${codec}_corrupt")
       }
     try {
-      sniff(row.html) match {
+      sniff(bytes) match {
         case KindPassthrough =>
-          val t = if (row.text == null) "" else row.text
-          val kind = if (t.isEmpty) KindEmpty else KindPassthrough
-          val spans =
-            if (t.isEmpty) Seq.empty[Span] else Seq(Span(0, t.length, "text"))
-          Iterator.single(ExtractedPage(row.url, 0, row.warc_ts, kind, t, spans, null))
+          val t = if (codec != null || text == null) "" else text
+          if (t.isEmpty) noText(KindEmpty, 1, null)
+          else Result(KindPassthrough, 1, t, Seq(Span(0, t.length, "text")), null)
         case KindPdf =>
-          val res = PdfTextExtractor.extract(row.html)
-          if (res.pages.isEmpty) {
-            val err =
-              if (res.unsupported > 0) s"pdf_unsupported:${res.unsupported}"
-              else "pdf_empty"
-            Iterator.single(
-              ExtractedPage(row.url, 0, row.warc_ts, KindPdf, "", Seq.empty, err))
-          } else {
-            res.pages.iterator.map { p =>
-              ExtractedPage(row.url, p.page_no, row.warc_ts, KindPdf, p.text,
-                p.spans.toSeq, null)
+          val res = PdfTextExtractor.extract(bytes)
+          val pages = res.pages
+          if (pages.isEmpty)
+            noText(KindPdf, 1,
+              if (res.unsupported > 0) s"pdf_unsupported:${res.unsupported}" else "pdf_empty")
+          else if (pages.length == 1) Result(KindPdf, 1, pages(0).text, pages(0).spans.toSeq, null)
+          else {
+            val sb = new java.lang.StringBuilder(256)
+            val spans = Seq.newBuilder[Span]
+            pages.foreach { p =>
+              if (sb.length > 0) sb.append('\n')
+              val off = sb.length
+              sb.append(p.text)
+              p.spans.foreach(s => spans += Span(s.begin + off, s.end + off, s.kind))
             }
+            Result(KindPdf, pages.length, sb.toString, spans.result(), null)
           }
         case _ =>
-          val html = HtmlCharset.decode(row.html)
-          val ex = MainTextExtractor.extract(html)
-          Iterator.single(
-            ExtractedPage(row.url, 0, row.warc_ts, KindHtml, ex.text, ex.spans.toSeq, null))
+          val ex = MainTextExtractor.extract(HtmlCharset.decode(bytes))
+          Result(KindHtml, 1, ex.text, ex.spans.toSeq, null)
       }
     } catch {
-      case e: Throwable =>
-        Iterator.single(ExtractedPage(row.url, 0, row.warc_ts, sniff(row.html), "",
-          Seq.empty, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
+      case e @ (_: StackOverflowError | NonFatal(_)) =>
+        noText(sniff(bytes), 1,
+          s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
     }
   }
 }

@@ -20,20 +20,10 @@ final case class PageRow(
   */
 final case class Span(begin: Int, end: Int, kind: String)
 
-/** One extracted page. PDF documents explode to one row per page
-  * (reference: per-page loop api.py:217-228); HTML is always page 0.
-  */
-final case class ExtractedPage(
-    url: String,
-    page_no: Int,
-    warc_ts: Timestamp,
-    doc_kind: String, // html | pdf | passthrough | empty
-    text: String,
-    spans: Seq[Span],
-    error: String) // null = ok; poison-pill isolation (SURVEY §2.9)
-
 /** Final per-document record: the page->document rollup of the reference's
-  * combined JSON `{page_count, pages:[...]}` (api.py:261-269).
+  * combined JSON `{page_count, pages:[...]}` (api.py:261-269). `n_chars`
+  * is `text.length` in UTF-16 units; the SQL functions (`extract_doc`,
+  * `ExtractPipeline.extractText`) count code points instead.
   */
 final case class ExtractedDoc(
     url: String,

@@ -392,8 +392,8 @@ object ExtractionOps {
       .select(col("doc_id"), col("extracted_text"))
 
   /** Multi-page PDF → one combined document: the kernel emits one page
-    * per PDF page object, mergePages '\n'-joins them in page order and
-    * reports page_count — the reference's `{page_count, pages:[...]}`
+    * per PDF page object, ExtractKernel.extract '\n'-joins them in page
+    * order and reports page_count — the reference's `{page_count, pages:[...]}`
     * rollup (api.py:261-269) under the DuckDB oracle end-to-end.
     */
   def extractPdfMultipage(spark: SparkSession, dir: String): DataFrame =

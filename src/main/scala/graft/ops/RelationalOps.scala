@@ -39,7 +39,7 @@ object RelationalOps {
 
   /** Page→document rollup analog (api.py:261-269): order-insensitive aggs
     * keyed by the parent; the real pipeline rolls up in-kernel because
-    * pages arrive inside one row (ExtractPipeline.mergePages).
+    * pages arrive inside one row (ExtractKernel.extract).
     */
   def pageRollup(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "lineitem")

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.kernels.ExtractKernel
-import graft.model.{ExtractedDoc, ExtractedPage, PageRow, Span}
+import graft.model.{ExtractedDoc, PageRow}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -70,52 +70,16 @@ object ExtractPipeline {
     val bytesIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.bytes_in")
   }
 
-  /** Merge a document's extracted pages (already local — all pages of a
-    * url come from its single input row): texts join with '\n' in page
-    * order, spans re-offset into the concatenation. Mirrors the combined
-    * `{page_count, pages:[...]}` JSON of the reference (api.py:261-269).
-    */
-  def mergePages(row: PageRow, pages: Seq[ExtractedPage]): ExtractedDoc = {
-    if (pages.length == 1) {
-      // fast path for the dominant single-page case: no text re-copy, no
-      // span re-offset — cuts per-doc allocation in the hot loop
-      val p = pages.head
-      return ExtractedDoc(row.url, row.warc_ts, p.doc_kind, 1, p.text,
-        p.spans, p.text.length, row.lang, p.error)
-    }
-    val sorted = pages.sortBy(_.page_no)
-    val sb = new java.lang.StringBuilder(256)
-    val spans = Seq.newBuilder[Span]
-    sorted.foreach { p =>
-      if (sb.length > 0) sb.append('\n')
-      val off = sb.length
-      sb.append(p.text)
-      p.spans.foreach(s => spans += Span(s.begin + off, s.end + off, s.kind))
-    }
-    val err = sorted.iterator.map(_.error).find(_ != null).orNull
-    val kind = sorted.headOption.map(_.doc_kind).getOrElse(ExtractKernel.KindEmpty)
-    val text = sb.toString
-    ExtractedDoc(row.url, row.warc_ts, kind, sorted.length, text, spans.result(),
-      text.length, row.lang, err)
-  }
-
   /** Extract one document (all pages) with the size cap applied. */
   def extractDoc(row: PageRow, maxBytes: Int, m: Metrics): ExtractedDoc = {
-    val size = if (row.html == null) 0 else row.html.length
-    if (m != null) m.bytesIn.add(size.toLong)
-    val doc =
-      if (size > maxBytes)
-        ExtractedDoc(row.url, row.warc_ts, ExtractKernel.sniff(row.html), 0, "",
-          Seq.empty, 0, row.lang, s"too_large:$size")
-      else {
-        val pages = ExtractKernel.extractPages(row).toVector
-        mergePages(row, pages)
-      }
+    if (m != null) m.bytesIn.add(if (row.html == null) 0L else row.html.length.toLong)
+    val r = ExtractKernel.extract(row.html, row.text, maxBytes)
     if (m != null) {
-      if (doc.error == null) m.docsOk.add(1L) else m.docsFailed.add(1L)
-      m.pagesOut.add(doc.page_count.toLong)
+      if (r.error == null) m.docsOk.add(1L) else m.docsFailed.add(1L)
+      m.pagesOut.add(r.pageCount.toLong)
     }
-    doc
+    ExtractedDoc(row.url, row.warc_ts, r.kind, r.pageCount, r.text, r.spans, r.text.length,
+      row.lang, r.error)
   }
 
   /** The explicit url-hash exchange, applicable to any plan with a `url`
@@ -147,16 +111,18 @@ object ExtractPipeline {
   }
 
   /** Expression-only fast path: text extraction as a codegen'd projection
-    * (`extract_main_text`), no Dataset encoder round-trip — measured ~38%
-    * faster than the typed path at local[32] (297k vs 215k docs/s on the
-    * 1.2M-doc corpus). Emits (url, warc_ts, lang, text, n_chars) only:
-    * consumers needing spans, page counts, or the error string use
-    * [[extract]]. text=null is the single failure shape here — oversized
-    * blobs, failed PDFs, and kernel faults (the expression catches
-    * per-row, mirroring the typed path's poison-pill isolation) all map
-    * to null. Crawl-provided `text` surfaces ONLY for rows with no html
-    * bytes (the passthrough branch), never as a fallback for failed
-    * extraction — same branch the typed path takes.
+    * (`extract_main_text`), no Dataset encoder round-trip. How it compares
+    * with the typed path is measured, not assumed: see `functions.expr_s`
+    * against `pipeline.extract_s` in the benchmark's traced run
+    * (`perfbench/baseline.json`). Emits (url, warc_ts, lang, text,
+    * n_chars) only: consumers needing spans, page counts, or the error
+    * string use [[extract]]. text=null is the single failure shape here —
+    * oversized blobs, failed PDFs, and kernel faults (the expression runs
+    * the same per-row catch as the typed path) all map to null. n_chars
+    * counts code points, where the typed path counts UTF-16 units.
+    * Crawl-provided `text` surfaces ONLY for rows with no html bytes (the
+    * passthrough branch), never as a fallback for failed extraction —
+    * same branch the typed path takes.
     */
   def extractText(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): DataFrame = {
     graft.functions.ExtractMainText.register(spark) // idempotent

@@ -30,6 +30,13 @@ class ExtractDocSpec extends SparkTestBase {
     assert(empty.isNullAt(0) && empty.getString(2) == "passthrough")
     val nul = run("SELECT extract_doc(cast(null as binary)) as d").head
     assert(nul.isNullAt(0))
+    // transport bodies: a corrupt one is the typed path's html/gzip_corrupt
+    // row, one that decodes to nothing is empty
+    val gz = HostileDocs.gzip("<p>some html</p>".getBytes("UTF-8"))
+    val coded = Seq(gz.take(gz.length * 3 / 5), HostileDocs.gzip(Array.emptyByteArray)).toDF("b")
+      .selectExpr("extract_doc(b) as d").collect().map(_.getStruct(0))
+    assert(coded(0).isNullAt(0) && coded(0).getInt(1) == 0 && coded(0).getString(2) == "html")
+    assert(coded(1).isNullAt(0) && coded(1).getInt(1) == 0 && coded(1).getString(2) == "empty")
   }
 
   test("codegen path over a range scan matches per-row eval") {

@@ -18,12 +18,26 @@ class KernelSpec extends AnyFunSuite {
   test("html: corpus golden round-trip is byte-identical (500 rows)") {
     val pages = PagesGen.corpus(500, seed = 42L)
     pages.foreach { gp =>
-      val rows = ExtractKernel.extractPages(gp.row).toVector
-      assert(rows.forall(_.error == null), s"${gp.row.url}: ${rows.map(_.error)}")
-      val text = rows.sortBy(_.page_no).map(_.text).mkString("\n")
+      val doc = ExtractKernel.extract(gp.row.html, gp.row.text, Int.MaxValue)
+      assert(doc.error == null, s"${gp.row.url}: ${doc.error}")
+      val text = doc.text
       assert(text == gp.expected,
         s"${gp.kind} ${gp.row.url}\n--- got ---\n$text\n--- want ---\n${gp.expected}")
     }
+  }
+
+  test("a stack overflow inside a kernel is an error row, not a task failure") {
+    // on a small stack the recursive page-tree walk overflows on the chain;
+    // the overflow surfaces raw, or wrapped by a regex compile it lands in
+    @volatile var doc: ExtractKernel.Result = null
+    val t = new Thread(null,
+      () => doc = ExtractKernel.extract(HostileDocs.deepKids, "", Int.MaxValue),
+      "small-stack", 512L * 1024)
+    t.start(); t.join()
+    assert(doc != null, "the fault escaped the per-row catch")
+    assert(doc.kind == "pdf" && doc.text == "" && doc.pageCount == 1, doc.toString)
+    assert(doc.error.startsWith("StackOverflowError") || doc.error.contains("Stack overflow"),
+      doc.error)
   }
 
   test("html: entity decoding round-trips special chars") {

@@ -1,9 +1,10 @@
 package graft
 
 import graft.gen.PagesGen
-import graft.model.{ExtractedPage, PageRow}
+import graft.model.{ExtractedDoc, PageRow}
 import graft.pipeline.{ExtractJob, ExtractPipeline, Ledger}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 class PipelineSpec extends SparkTestBase {
   import spark.implicits._
@@ -36,6 +37,33 @@ class PipelineSpec extends SparkTestBase {
     assert(metrics.docsFailed.value == 0)
   }
 
+  /** Runs the typed path, `extractText` (`extract_main_text` under the
+    * crawl-text rule) and the raw `extract_main_text` / `extract_doc`
+    * calls over the same rows and checks that they agree row by row.
+    * Returns the typed docs by url.
+    */
+  private def surfacesAgree(rows: Seq[PageRow]): Map[String, ExtractedDoc] = {
+    graft.functions.ExtractDoc.register(spark)
+    val df = rows.toDS().toDF()
+    val conf = ExtractPipeline.Conf(repartition = 4)
+    val typed = ExtractPipeline.extract(spark, df, conf).collect().map(d => d.url -> d).toMap
+    val fast = ExtractPipeline.extractText(spark, df, conf).collect()
+      .map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+    val sql = df.selectExpr("url", "length(html) = 0 as no_bytes",
+      "extract_main_text(html) as t", "extract_doc(html) as d").collect()
+    assert(typed.size == rows.size && fast.size == rows.size && sql.length == rows.size)
+    sql.foreach { r =>
+      val (url, noBytes) = (r.getString(0), r.getBoolean(1))
+      val (mainText, doc, t) = (r.getString(2), r.getStruct(3), typed(url))
+      val expected = if (t.error != null || t.doc_kind == "empty") null else t.text
+      assert(doc.getString(0) == mainText, s"$url: extract_doc.text vs extract_main_text")
+      assert(fast(url) == expected, s"$url: extractText vs typed ${t.doc_kind}/${t.error}")
+      if (!noBytes) assert(mainText == expected, s"$url: extract_main_text vs typed")
+      assert(doc.getString(2) == (if (noBytes) "passthrough" else t.doc_kind), s"$url: kind")
+    }
+    typed
+  }
+
   test("expression fast path matches the typed pipeline's text per url (null = failure shape)") {
     val corpus = PagesGen.corpus(300, seed = 42L)
     val df = corpus.map(_.row).toDS().toDF()
@@ -47,6 +75,13 @@ class PipelineSpec extends SparkTestBase {
       val expected = if (gp.kind == "empty") None else Some(gp.expected)
       assert(fast(gp.row.url) == expected, s"${gp.kind} ${gp.row.url}")
     }
+    // differential over the generator's seed space plus hostile rows: the
+    // typed path, extract_main_text and extract_doc agree on every row
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(4),
+      Prop.forAll(Gen.choose(Long.MinValue, Long.MaxValue)) { seed =>
+        surfacesAgree(PagesGen.corpus(40, seed).map(_.row) ++ HostileDocs.rows); true
+      })
+    assert(res.passed, res.toString)
   }
 
   test("fast path does NOT surface crawl text for failed (non-empty-html) extraction") {
@@ -93,14 +128,28 @@ class PipelineSpec extends SparkTestBase {
     assert(out("u://big").error.startsWith("too_large:"))
     assert(out("u://garbage-pdf").error != null) // no streams found
     assert(out.values.forall(_.text == ""))
+
+    // hostile bytes: error rows with the typed path's kinds on every surface
+    val typed = surfacesAgree(HostileDocs.rows)
+    def at(name: String) = typed(s"hostile://$name")
+    assert(at("truncated-gzip").doc_kind == "html" && at("truncated-gzip").error == "gzip_corrupt")
+    assert(at("truncated-zstd").doc_kind == "html" && at("truncated-zstd").error == "zstd_corrupt")
+    // a coded body that decodes to nothing is empty: crawl text stands in
+    // only when no bytes were stored
+    assert(at("empty-gzip").doc_kind == "empty" && at("empty-gzip").text == "" &&
+      at("empty-gzip").error == null)
+    assert(at("no-bytes").doc_kind == "passthrough" && at("no-bytes").text == HostileDocs.CrawlText)
+    // deep-kids: the page-tree walk overflows the task thread's stack
+    Seq("garbage-pdf", "cyclic-kids", "deep-kids").foreach { n =>
+      assert(at(n).doc_kind == "pdf" && at(n).error != null && at(n).text == "", n)
+    }
+    assert(at("deep-divs").doc_kind == "html" && at("deep-divs").text == HostileDocs.DeepDivText)
   }
 
   test("relational rollupPages: page order by page_no, not arrival order") {
-    val pages = Seq(
-      ExtractedPage("u://d", 1, new java.sql.Timestamp(0), "pdf", "second", Seq(), null),
-      ExtractedPage("u://d", 0, new java.sql.Timestamp(0), "pdf", "first", Seq(), null),
-      ExtractedPage("u://d", 2, new java.sql.Timestamp(0), "pdf", "third", Seq(), null))
-    val df = ExtractPipeline.rollupPages(pages.toDS().toDF())
+    val ts = new java.sql.Timestamp(0)
+    val pages = Seq(("u://d", 1, ts, "second"), ("u://d", 0, ts, "first"), ("u://d", 2, ts, "third"))
+    val df = ExtractPipeline.rollupPages(pages.toDF("url", "page_no", "warc_ts", "text"))
     val r = df.collect().head
     assert(r.getAs[Int]("page_count") == 3)
     assert(r.getAs[String]("text") == "first\nsecond\nthird")
