@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -19,11 +20,15 @@ object Verify {
     // exact query names; unset = run everything.
     val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
+    // a failed query does not stop the run (the rest still dump, and
+    // oracle_sql.json is still written), but it does fail it at the end
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -60,5 +65,9 @@ object Verify {
       sys.exit(1)
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FATAL: failed queries: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

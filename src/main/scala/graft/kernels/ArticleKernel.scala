@@ -1,6 +1,7 @@
 package graft.kernels
 
 import java.util.Locale
+import scala.util.control.NonFatal
 
 /** Article-level page understanding: JSON-LD (schema.org) harvest,
   * publication-date ladder, pagination links, soft-404 detection — the
@@ -178,7 +179,7 @@ object ArticleKernel {
     bodies.foreach { b =>
       val root =
         try mapper.readTree(b)
-        catch { case _: Throwable => null }
+        catch { case _: StackOverflowError | NonFatal(_) => null }
       val a = articleNode(root)
       if (a != null)
         return (textOf(a.get("headline")), authorOf(a.get("author")),

@@ -10,9 +10,11 @@ import scala.collection.mutable
   * overlapping included — the reference implementation's `get_stats`),
   * merge the most frequent pair corpus-wide, repeat for a fixed number
   * of rounds. Merge APPLICATION is left-to-right non-overlapping — the
-  * same semantics as a string `replace` of `" l r "` with `" lr "` over
-  * the space-joined symbol string, which is exactly how the DuckDB
-  * oracle replays it.
+  * same semantics as a string `replace` of `" l  r "` with `" lr "`
+  * over the symbol string joined with DOUBLED spaces (then collapsed),
+  * which is exactly how the DuckDB oracle replays it. Over the plain
+  * single-space join, `replace` is NOT the same: two adjacent matches
+  * share one delimiter, so `[a,b,a,b]` merges (a,b) only once.
   *
   * Everything is integer-exact and deterministic: pair counts are
   * exact sums, the argmax tie-breaks (count DESC, left ASC, right ASC),
@@ -37,8 +39,8 @@ object BpeKernel {
   def initSeg(word: String): Vector[String] =
     word.iterator.map(_.toString).toVector
 
-  /** Apply ONE merge left-to-right, non-overlapping (replace semantics:
-    * after merging positions (i, i+1) the scan resumes at i+2).
+  /** Apply ONE merge left-to-right, non-overlapping (after merging
+    * positions (i, i+1) the scan resumes at i+2).
     */
   def applyMerge(seg: Vector[String], lhs: String, rhs: String): Vector[String] = {
     if (seg.length < 2) return seg

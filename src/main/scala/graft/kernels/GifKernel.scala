@@ -1,6 +1,7 @@
 package graft.kernels
 
 import graft.kernels.MediaKernel.BmpImage
+import scala.util.control.NonFatal
 
 /** Pure-JVM GIF (87a/89a) decoder — first frame to RGB. GIF's LZW is
   * the LSB-first variable-width variant (initial width = min code size
@@ -17,7 +18,7 @@ import graft.kernels.MediaKernel.BmpImage
 object GifKernel {
 
   def decode(bytes: Array[Byte]): Option[BmpImage] =
-    try decode0(bytes) catch { case _: Throwable => None }
+    try decode0(bytes) catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def decode0(b: Array[Byte]): Option[BmpImage] = {
     if (b == null || b.length < 13) return None

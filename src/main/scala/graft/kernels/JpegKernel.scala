@@ -1,6 +1,7 @@
 package graft.kernels
 
 import graft.kernels.MediaKernel.BmpImage
+import scala.util.control.NonFatal
 
 /** Pure-JVM baseline JPEG (ITU-T T.81 / ISO 10918-1) decoder for the
   * multimodal tier — closes the biggest gap the former stub left: JPEG
@@ -197,7 +198,7 @@ object JpegKernel {
   }
 
   def decode(bytes: Array[Byte]): Option[BmpImage] =
-    try decode0(bytes) catch { case _: Throwable => None }
+    try decode0(bytes) catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def decode0(b: Array[Byte]): Option[BmpImage] = {
     if (b == null || b.length < 4) return None

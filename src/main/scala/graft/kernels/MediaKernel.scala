@@ -1,5 +1,7 @@
 package graft.kernels
 
+import scala.util.control.NonFatal
+
 /** REAL pure-JVM media decoders for the multimodal pipeline — no codec
   * libraries exist in this container, but uncompressed containers need
   * none: BMP (BITMAPINFOHEADER, 24bpp, bottom-up, 4-byte row padding,
@@ -30,7 +32,7 @@ object MediaKernel {
     * BITMAPINFOHEADER shape; top-down (negative height) too.
     */
   def decodeBmp(bytes: Array[Byte]): Option[BmpImage] =
-    try decodeBmp0(bytes) catch { case _: Throwable => None }
+    try decodeBmp0(bytes) catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def decodeBmp0(bytes: Array[Byte]): Option[BmpImage] = {
     if (bytes == null || bytes.length < 54) return None
@@ -103,7 +105,7 @@ object MediaKernel {
     * (a crawl decoder favors recovery); structural errors return None.
     */
   def decodePng(bytes: Array[Byte]): Option[BmpImage] =
-    try decodePng0(bytes) catch { case _: Throwable => None }
+    try decodePng0(bytes) catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def decodePng0(bytes: Array[Byte]): Option[BmpImage] = {
     if (bytes == null || bytes.length < 45) return None
@@ -181,14 +183,14 @@ object MediaKernel {
         }
         if (inf.finished()) Some(buf.toByteArray) else None
       } finally inf.end()
-    } catch { case _: Throwable => None }
+    } catch { case _: StackOverflowError | NonFatal(_) => None }
   }
 
   /** Parse a PCM 16-bit LE mono/stereo WAV (RIFF chunk walk — fmt may be
     * followed by LIST/fact chunks before data, as real encoders emit).
     */
   def decodeWav(bytes: Array[Byte]): Option[WavAudio] =
-    try decodeWav0(bytes) catch { case _: Throwable => None }
+    try decodeWav0(bytes) catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def decodeWav0(bytes: Array[Byte]): Option[WavAudio] = {
     if (bytes == null || bytes.length < 44) return None

@@ -2,6 +2,7 @@ package graft.kernels
 
 import graft.model.Span
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Deterministic PDF text extraction (SURVEY.md §7.1 `pdfkernel`).
   *
@@ -398,7 +399,7 @@ object PdfTextExtractor {
         }
       }
       Some(out.toByteArray)
-    } catch { case _: Throwable => None }
+    } catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def asciiHexDecode(data: Array[Byte]): Option[Array[Byte]] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2)
@@ -1049,7 +1050,7 @@ object PdfTextExtractor {
         }
         Some(buf.toByteArray)
       } finally inf.end()
-    } catch { case _: Throwable => None }
+    } catch { case _: StackOverflowError | NonFatal(_) => None }
   }
 
   private def indexOf(hay: Array[Byte], needle: String, from: Int): Int = {

@@ -1,6 +1,7 @@
 package graft.kernels
 
 import java.util.Locale
+import scala.util.control.NonFatal
 
 /** Exact 1:1 ports of the reference's deterministic text-normalization
   * ladder (SURVEY §2.8) — the functions whose byte-level semantics the
@@ -280,7 +281,7 @@ object ScalarKernels {
       } else None
     }
     try walk(new com.fasterxml.jackson.databind.ObjectMapper().readTree(json), 0)
-    catch { case _: Throwable => None }
+    catch { case _: StackOverflowError | NonFatal(_) => None }
   }
   /** flatten_json (automate_upload.py:657-671, exact port): dicts flatten
     * with `sep`, lists index as `key[i]` (dict elements recurse, scalar
@@ -314,7 +315,7 @@ object ScalarKernels {
     try {
       val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
       if (root != null && root.isObject) walk(root, "")
-    } catch { case _: Throwable => () }
+    } catch { case _: StackOverflowError | NonFatal(_) => () }
     import scala.jdk.CollectionConverters._
     out.entrySet().iterator().asScala.map(e => (e.getKey, e.getValue)).toSeq
   }

@@ -670,7 +670,7 @@ object LinkOps {
     * would bound a hub destination at web scale; here in-degrees are
     * generator-bounded and the join is exact.
     */
-  def cocitation(spark: SparkSession, dir: String): DataFrame = {
+  def bibCoupling(spark: SparkSession, dir: String): DataFrame = {
     val e = domainEdges(spark, dir)
       .select("src_host", "dst_host").distinct().localCheckpoint(true)
     e.toDF("a_host", "dst_host")
@@ -681,7 +681,7 @@ object LinkOps {
       .where("n_shared >= 2")
   }
 
-  val cocitationSql: String =
+  val bibCouplingSql: String =
     s"""WITH e0 AS ($domainEdgesSql),
       |e AS (SELECT DISTINCT src_host, dst_host FROM e0)
       |SELECT a.src_host AS a_host, b.src_host AS b_host,
@@ -1499,7 +1499,7 @@ object LinkOps {
     "q_sitemap_coverage" -> (sitemapCoverage(_, _)),
     "q_politeness_audit" -> (politenessAudit(_, _)),
     "q_robots_delta" -> (robotsDelta(_, _)),
-    "q_cocitation" -> (cocitation(_, _)),
+    "q_bib_coupling" -> (bibCoupling(_, _)),
     "q_feed_items" -> (feedItems(_, _)),
     "q_frontier_schedule" -> (frontierSchedule(_, _)),
     "q_robots_sitemaps" -> (robotsSitemaps(_, _)),
@@ -1532,7 +1532,7 @@ object LinkOps {
     "q_sitemap_coverage" -> sitemapCoverageSql,
     "q_politeness_audit" -> politenessAuditSql,
     "q_robots_delta" -> robotsDeltaSql,
-    "q_cocitation" -> cocitationSql,
+    "q_bib_coupling" -> bibCouplingSql,
     "q_feed_items" -> feedItemsSql,
     "q_frontier_schedule" -> frontierScheduleSql,
     "q_robots_sitemaps" -> robotsSitemapsSql,

@@ -1153,8 +1153,13 @@ object TextOps {
     * ASC, rhs ASC), so the oracle replays all N rounds as unrolled
     * MATERIALIZED CTEs: pair counts via unnest, argmax via ORDER
     * BY/LIMIT 1, merge application via left-to-right `replace` on the
-    * space-joined symbol string — character-identical semantics to the
-    * kernel's non-overlapping scan.
+    * symbol string with every separator DOUBLED (each symbol owns its
+    * own leading and trailing space, so two matches can never share
+    * one) — character-identical semantics to the kernel's
+    * non-overlapping scan. A single-pass `replace` over the plain
+    * space-joined string would eat the delimiter two adjacent matches
+    * share (`a b a b` merges (a,b) once); iterating it to a fixpoint
+    * is no cure either, because it over-merges when lhs == rhs.
     *
     * 100 TB shape: the corpus is touched ONCE (the word-count shuffle);
     * the N per-round jobs aggregate the distinct-word dim only — the
@@ -1216,7 +1221,8 @@ object TextOps {
         |best_$k AS MATERIALIZED (
         |  SELECT l, r, cnt FROM pairs_$k ORDER BY cnt DESC, l, r LIMIT 1),
         |seg_$k AS MATERIALIZED (
-        |  SELECT w, c, trim(replace(' ' || seg || ' ', ' ' || b.l || ' ' || b.r || ' ', ' ' || b.l || b.r || ' ')) AS seg
+        |  SELECT w, c, trim(replace(replace(' ' || replace(seg, ' ', '  ') || ' ',
+        |      ' ' || b.l || '  ' || b.r || ' ', ' ' || b.l || b.r || ' '), '  ', ' ')) AS seg
         |  FROM seg_${k - 1} CROSS JOIN best_$k b)""".stripMargin
     }
     (head +: rounds).mkString(",\n")

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming variant of the pipeline (SURVEY §2.9): the
   * reference's infinite poll worker (endpoint_upload.py:1282-1301, 5 s
@@ -14,39 +14,27 @@ import org.apache.spark.sql.types._
   */
 object StreamingOps {
 
-  /** North-rule pages schema (BASELINE.json input_hint). */
-  val PagesSchema: StructType = StructType(Seq(
-    StructField("url", StringType),
-    StructField("warc_ts", TimestampType),
-    StructField("html", BinaryType),
-    StructField("text", StringType),
-    StructField("lang", StringType)))
-
-
   /** Stage one micro-batch increment: write `df` as a single parquet
     * file `name.parquet` under `destDir` (scratch under `stageRoot`),
-    * pin its mtime — the file source picks oldest-mtime first — and
-    * return the staged path. One shared implementation for every
-    * streaming probe; directory streams are CLOSED (a leaked
-    * `Files.list` handle per staged file adds up across a
-    * full-registry run).
+    * and pin its mtime — the file source picks oldest-mtime first. One
+    * shared implementation for every streaming probe; directory streams
+    * are CLOSED (a leaked `Files.list` handle per staged file adds up
+    * across a full-registry run).
     */
-  private def stageSliceFile(df: DataFrame, stageRoot: java.nio.file.Path,
-      destDir: java.nio.file.Path, name: String, mtimeMs: Long): java.nio.file.Path = {
+  private def stageSliceFile(df: DataFrame, stageRoot: Path,
+      destDir: Path, name: String, mtimeMs: Long): Unit = {
     val tmp = stageRoot.resolve(s"tmp_$name")
     df.coalesce(1).write.parquet(tmp.toString)
-    def withList[T](d: java.nio.file.Path)(f: java.util.stream.Stream[java.nio.file.Path] => T): T = {
-      val st = java.nio.file.Files.list(d)
+    def withList[T](d: Path)(f: java.util.stream.Stream[Path] => T): T = {
+      val st = Files.list(d)
       try f(st) finally st.close()
     }
     val part = withList(tmp)(_.filter(_.toString.endsWith(".parquet")).findFirst().get())
     val dest = destDir.resolve(s"$name.parquet")
-    java.nio.file.Files.move(part, dest)
-    withList(tmp)(_.forEach(java.nio.file.Files.deleteIfExists(_)))
-    java.nio.file.Files.deleteIfExists(tmp)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    dest
+    Files.move(part, dest)
+    withList(tmp)(_.forEach(Files.deleteIfExists(_)))
+    Files.deleteIfExists(tmp)
+    Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
   }
 
   /** Recursive temp-tree delete for the staging/checkpoint scratch a
@@ -54,13 +42,84 @@ object StreamingOps {
     * a silent no-op — the checkpoint/table trees would otherwise pile up
     * in the JVM tmpdir across full-registry runs).
     */
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(java.nio.file.Files.deleteIfExists(_))
+  private def rmTree(p: Path): Unit = {
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))
       finally st.close()
     }
+  }
+
+  /** One staged replay of finite tables as file streams — the harness
+    * behind every oracle-gated `q_stream_*` run. All of a run's files
+    * (staged slices, sink checkpoints, scratch tables) live under one
+    * scratch dir that [[replay]] deletes when the run ends.
+    */
+  private final class Replay(spark: SparkSession, val scratch: Path) {
+
+    /** Stage `slices` under `scratch/name`, one parquet file per slice
+      * with increasing mtimes, and open them as a file stream that takes
+      * ONE file per trigger (oldest mtime first): micro-batch k sees
+      * exactly slice k. The stream schema is the slices' own.
+      */
+    def source(name: String, slices: Seq[DataFrame]): DataFrame = {
+      val dir = Files.createDirectory(scratch.resolve(name))
+      val base = System.currentTimeMillis() - 3600 * 1000L
+      slices.zipWithIndex.foreach { case (df, i) =>
+        stageSliceFile(df, scratch, dir, f"$name-$i%03d", base + i * 10000L)
+      }
+      spark.readStream.schema(slices.head.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(dir.toString)
+    }
+
+    /** Drive `ds` into a memory sink with `Trigger.AvailableNow` until
+      * its staged input is drained. The rows come back detached
+      * (`localCheckpoint`) and the sink's view is dropped, so nothing of
+      * the run stays registered or on the driver heap; the finished query
+      * is returned for its progress metrics.
+      */
+    def run(ds: Dataset[_], outputMode: String): (DataFrame, StreamingQuery) = {
+      val name = s"stream_${System.nanoTime()}"
+      val q = ds.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode)
+        .option("checkpointLocation", scratch.resolve(s"ckpt_$name").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try {
+        q.awaitTermination()
+        (spark.table(name).localCheckpoint(true), q)
+      } finally {
+        q.stop()
+        spark.catalog.dropTempView(name)
+      }
+    }
+  }
+
+  private def replay(spark: SparkSession)(body: Replay => DataFrame): DataFrame = {
+    val scratch = Files.createTempDirectory("stream_replay")
+    try body(new Replay(spark, scratch)) finally rmTree(scratch)
+  }
+
+  /** Min and max of `df`'s `ts_us` column. */
+  private def tsBounds(df: DataFrame): (Long, Long) = {
+    val r = df.agg(min(col("ts_us")), max(col("ts_us"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** `df` cut into `n` STRICT time slices on `ts_us` (every row of slice
+    * k+1 is ≥ every row of slice k), plus the max `ts_us` that sentinel
+    * slices are placed after.
+    */
+  private def timeSlices(df: DataFrame, n: Int): (Seq[DataFrame], Long) = {
+    val (minUs, maxUs) = tsBounds(df)
+    val spanUs = math.max(1L, (maxUs - minUs) / n + 1)
+    val slices = (0 until n).map { i =>
+      val lo = minUs + i * spanUs
+      val hi = if (i == n - 1) Long.MaxValue else lo + spanUs
+      df.filter(col("ts_us") >= lo && col("ts_us") < hi)
+    }
+    (slices, maxUs)
   }
 
   /** File-source stream of pages (Iceberg-snapshot stand-in: each new file
@@ -68,16 +127,9 @@ object StreamingOps {
     */
   def pagesStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(PagesSchema)
+      .schema(Encoders.product[graft.model.PageRow].schema)
       .option("maxFilesPerTrigger", "4") // bounded micro-batches
       .parquet(dir)
-
-  /** Streaming extraction: identical kernel invocation; mapPartitions and
-    * the url-hash repartition are both streaming-compatible.
-    */
-  def extractStream(spark: SparkSession, pages: DataFrame,
-      conf: ExtractPipeline.Conf = ExtractPipeline.Conf()): DataFrame =
-    ExtractPipeline.extract(spark, pages, conf).toDF()
 
   // ------------------------------------------- custom state: streaming dedup
 
@@ -167,32 +219,15 @@ object StreamingOps {
     * incremental engine computes the same answer as the batch plan on the
     * same input — the Iceberg-snapshot tailing story end-to-end.
     */
-  def streamHourlyEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+  def streamHourlyEvents(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     // the testdata table is a single read-only FILE; the file-stream
     // source monitors a DIRECTORY (each new file = one increment), so
-    // stage the file into a temp dir — the same landing-dir shape a
+    // stage the table as one slice — the same landing-dir shape a
     // continuously-written crawl table has
-    val stage = java.nio.file.Files.createTempDirectory("stream_hourly_src")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-      stage.resolve("events-000.parquet"))
-    val src = spark.readStream.schema(schema).parquet(stage.toString)
-    val agg = src
+    val agg = rp.source("events", Seq(spark.read.parquet(s"$dir/events.parquet")))
       .groupBy(window(col("ts").cast("timestamp"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-    val name = s"stream_hourly_${System.nanoTime()}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally { // deleteOnExit can't remove a non-empty dir — clean up now
-      java.nio.file.Files.deleteIfExists(stage.resolve("events-000.parquet"))
-      java.nio.file.Files.deleteIfExists(stage)
-    }
-    spark.table(name)
+    rp.run(agg, "complete")._1
       .selectExpr("unix_micros(window.start) as window_us", "event_type", "n", "sum_value")
   }
 
@@ -225,81 +260,49 @@ object StreamingOps {
     * once, when a later event opens the next session or when its
     * event-time timeout fires.
     */
-  def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
+  def streamSessionize(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id",
         "cast(event_id as long) as event_id",
         "unix_micros(cast(ts as timestamp)) as ts_us",
         "cast(ts as timestamp) as ets")
-    val (minUs, maxUs) = ev.agg(min(col("ts_us")), max(col("ts_us")))
-      .as[(Long, Long)].first()
-    val nSlices = 4
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_sess_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        stageSlice(ev.filter(col("ts_us") >= lo && col("ts_us") < hi),
-          f"slice-$i%03d", base + i * 10000L)
-      }
-      // watermark-advancing sentinel, filtered back out of the result
-      stageSlice(
-        spark.range(1).selectExpr("-1L as user_id", "-1L as event_id",
-          s"${maxUs + 30L * 86400 * 1000000} as ts_us",
-          s"timestamp_micros(${maxUs + 30L * 86400 * 1000000}) as ets"),
-        "slice-zzz", base + nSlices * 10000L)
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType), StructField("ets", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val sessions = src
-        .withWatermark("ets", "0 seconds")
-        .as[EventIn]
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState[SessState, SessRow](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-          (uid: Long, rows: Iterator[EventIn], st: GroupState[SessState]) =>
-            if (st.hasTimedOut) {
-              val s = st.get
-              st.remove()
-              Iterator.single(SessRow(uid, s.start_us, s.last_us, s.n))
-            } else {
-              val evs = rows.toArray.sortBy(e => (e.ts_us, e.event_id))
-              val out = Seq.newBuilder[SessRow]
-              var cur = st.getOption.orNull
-              evs.foreach { e =>
-                if (cur == null) cur = SessState(e.ts_us, e.ts_us, 1L)
-                else if (e.ts_us - cur.last_us > SessGapUs) {
-                  out += SessRow(uid, cur.start_us, cur.last_us, cur.n)
-                  cur = SessState(e.ts_us, e.ts_us, 1L)
-                } else cur = SessState(cur.start_us, e.ts_us, cur.n + 1L)
-              }
-              st.update(cur)
-              // +1 ms covers the micro→milli flooring of the event clock
-              st.setTimeoutTimestamp(cur.last_us / 1000 + SessGapUs / 1000 + 1)
-              out.result().iterator
+    val (slices, maxUs) = timeSlices(ev, 4)
+    // watermark-advancing sentinel, filtered back out of the result
+    val sentinel = spark.range(1).selectExpr("-1L as user_id", "-1L as event_id",
+      s"${maxUs + 30L * 86400 * 1000000} as ts_us",
+      s"timestamp_micros(${maxUs + 30L * 86400 * 1000000}) as ets")
+    val sessions = rp.source("events", slices :+ sentinel)
+      .withWatermark("ets", "0 seconds")
+      .as[EventIn]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[SessState, SessRow](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (uid: Long, rows: Iterator[EventIn], st: GroupState[SessState]) =>
+          if (st.hasTimedOut) {
+            val s = st.get
+            st.remove()
+            Iterator.single(SessRow(uid, s.start_us, s.last_us, s.n))
+          } else {
+            val evs = rows.toArray.sortBy(e => (e.ts_us, e.event_id))
+            val out = Seq.newBuilder[SessRow]
+            var cur = st.getOption.orNull
+            evs.foreach { e =>
+              if (cur == null) cur = SessState(e.ts_us, e.ts_us, 1L)
+              else if (e.ts_us - cur.last_us > SessGapUs) {
+                out += SessRow(uid, cur.start_us, cur.last_us, cur.n)
+                cur = SessState(e.ts_us, e.ts_us, 1L)
+              } else cur = SessState(cur.start_us, e.ts_us, cur.n + 1L)
             }
-        }
-      val name = s"stream_sessions_${System.nanoTime()}"
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).filter(col("user_id") >= 0)
-        .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
-    } finally {
-      rmTree(stage)
-    }
+            st.update(cur)
+            // +1 ms covers the micro→milli flooring of the event clock
+            st.setTimeoutTimestamp(cur.last_us / 1000 + SessGapUs / 1000 + 1)
+            out.result().iterator
+          }
+      }
+    rp.run(sessions, "append")._1.filter(col("user_id") >= 0)
+      .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
   }
 
   val streamSessionizeSql: String =
@@ -343,64 +346,33 @@ object StreamingOps {
     * [[streamSessionize]]); no timeout/sentinel needed since every
     * request emits its schedule immediately.
     */
-  def streamHostSlots(spark: SparkSession, dir: String): DataFrame = {
+  def streamHostSlots(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id % 8 as long) as host_id",
         "cast(event_id as long) as event_id",
         "unix_micros(cast(ts as timestamp)) as ts_us",
         "cast(ts as timestamp) as ets")
-    val (minUs, maxUs) = ev.agg(min(col("ts_us")), max(col("ts_us")))
-      .as[(Long, Long)].first()
-    val nSlices = 4
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_slots_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        stageSlice(ev.filter(col("ts_us") >= lo && col("ts_us") < hi),
-          f"slice-$i%03d", base + i * 10000L)
+    val slots = rp.source("events", timeSlices(ev, 4)._1)
+      .as[FetchIn]
+      .groupByKey(_.host_id)
+      .flatMapGroupsWithState[HostState, SlotRow](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (h: Long, rows: Iterator[FetchIn], st: GroupState[HostState]) =>
+          val evs = rows.toArray.sortBy(e => (e.ts_us, e.event_id))
+          var s = st.getOption.getOrElse(HostState(0L, Long.MinValue))
+          val out = evs.map { e =>
+            val m2 = math.max(s.m, e.ts_us - s.n * PoliteDelayUs)
+            val r = SlotRow(h, e.event_id, s.n, s.n * PoliteDelayUs + m2)
+            s = HostState(s.n + 1, m2)
+            r
+          }
+          st.update(s)
+          out.iterator
       }
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("host_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType), StructField("ets", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val slots = src
-        .as[FetchIn]
-        .groupByKey(_.host_id)
-        .flatMapGroupsWithState[HostState, SlotRow](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (h: Long, rows: Iterator[FetchIn], st: GroupState[HostState]) =>
-            val evs = rows.toArray.sortBy(e => (e.ts_us, e.event_id))
-            var s = st.getOption.getOrElse(HostState(0L, Long.MinValue))
-            val out = evs.map { e =>
-              val m2 = math.max(s.m, e.ts_us - s.n * PoliteDelayUs)
-              val r = SlotRow(h, e.event_id, s.n, s.n * PoliteDelayUs + m2)
-              s = HostState(s.n + 1, m2)
-              r
-            }
-            st.update(s)
-            out.iterator
-        }
-      val name = s"stream_slots_${System.nanoTime()}"
-      val q = slots.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .select(col("host_id"), col("event_id"), col("slot"), col("sched_us"))
-    } finally {
-      rmTree(stage)
-    }
+    rp.run(slots, "append")._1
+      .select(col("host_id"), col("event_id"), col("slot"), col("sched_us"))
   }
 
   val streamHostSlotsSql: String =
@@ -429,47 +401,14 @@ object StreamingOps {
     * [[dedupUrlWithinWatermark]], is spec-covered: eviction would
     * re-admit late duplicates here and break exactness).
     */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id", "event_type",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val nSlices = 4
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_dedup_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        stageSlice(ev.filter(col("ts_us") >= lo && col("ts_us") < hi),
-          f"slice-$i%03d", base + i * 10000L)
-      }
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("ts_us", LongType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val deduped = src.select(col("user_id"), col("event_type"))
-        .dropDuplicates("user_id", "event_type")
-      val name = s"stream_dedup_${System.nanoTime()}"
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally {
-      rmTree(stage)
-    }
+    val deduped = rp.source("events", timeSlices(ev, 4)._1)
+      .select(col("user_id"), col("event_type"))
+      .dropDuplicates("user_id", "event_type")
+    rp.run(deduped, "append")._1
   }
 
   val streamDedupSql: String =
@@ -492,53 +431,32 @@ object StreamingOps {
     * everywhere else; a sink that suppresses forever (unbounded state)
     * or re-admits in-horizon duplicates both fail the hash.
     */
-  def streamDedupEvict(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamDedupEvict(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     import spark.implicits._
     val t0 = 1700000000000000L // fixed epoch base, microseconds
     val spanUs = 60000000L // one-minute slices
     val keys = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("cast(doc_id % 200 as long) as k").distinct()
       .as[Long].collect().sorted
-    val stage = java.nio.file.Files.createTempDirectory("stream_evict_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until 4).foreach { i =>
-        val onTime = keys.filter(_ / 50 == i).flatMap { k =>
-          val ts = t0 + i * spanUs + (k % 50) * 1000000L
-          // in-horizon duplicate (1 s later, same slice): suppressed
-          if (k % 7 == 1) Seq((k, ts), (k, ts + 1000000L)) else Seq((k, ts))
-        }
-        val replants =
-          if (i == 3) keys.filter(k => k < 50 && k % 5 == 0)
-            .map(k => (k, t0 + 3 * spanUs + (k % 50) * 1000000L))
-          else Array.empty[(Long, Long)]
-        staged += stageSliceFile(
-          (onTime ++ replants).toSeq.toDF("user_id", "ts_us")
-            .selectExpr("user_id", "timestamp_micros(ts_us) as ts"),
-          stage, stage, f"evict-$i%03d", base + i * 10000L)
+    val slices = (0 until 4).map { i =>
+      val onTime = keys.filter(_ / 50 == i).flatMap { k =>
+        val ts = t0 + i * spanUs + (k % 50) * 1000000L
+        // in-horizon duplicate (1 s later, same slice): suppressed
+        if (k % 7 == 1) Seq((k, ts), (k, ts + 1000000L)) else Seq((k, ts))
       }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      val deduped = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withWatermark("ts", "10 seconds")
-        .dropDuplicatesWithinWatermark("user_id")
-      val name = s"stream_evict_${System.nanoTime()}"
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .groupBy("user_id")
-        .agg(count(lit(1)).cast("long").as("n_emitted"))
-        .localCheckpoint(true)
-    } finally {
-      rmTree(stage)
+      val replants =
+        if (i == 3) keys.filter(k => k < 50 && k % 5 == 0)
+          .map(k => (k, t0 + 3 * spanUs + (k % 50) * 1000000L))
+        else Array.empty[(Long, Long)]
+      (onTime ++ replants).toSeq.toDF("user_id", "ts_us")
+        .selectExpr("user_id", "timestamp_micros(ts_us) as ts")
     }
+    val deduped = rp.source("evict", slices)
+      .withWatermark("ts", "10 seconds")
+      .dropDuplicatesWithinWatermark("user_id")
+    rp.run(deduped, "append")._1
+      .groupBy("user_id")
+      .agg(count(lit(1)).cast("long").as("n_emitted"))
   }
 
   val streamDedupEvictSql: String =
@@ -567,46 +485,29 @@ object StreamingOps {
     * source's mtime order — the same commit serialization a real
     * snapshot log provides.
     */
-  def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamUpsert(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("cast(doc_id as long) as doc_id", "text")
-    val stage = java.nio.file.Files.createTempDirectory("stream_upsert_src")
-    val tableDir = stage.resolve("table").toString
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until 5).foreach { k =>
-        stageSlice(docs.filter(s"(doc_id + $k) % 3 = 0")
-          .selectExpr("doc_id", s"cast($k as long) as version",
-            s"concat('v', $k, ':', text) as text_v",
-            "cast(doc_id % 4 as string) as day"),
-          f"batch-$k%03d", base + k * 10000L)
+    val tableDir = rp.scratch.resolve("table").toString
+    val src = rp.source("batch", (0 until 5).map { k =>
+      docs.filter(s"(doc_id + $k) % 3 = 0")
+        .selectExpr("doc_id", s"cast($k as long) as version",
+          s"concat('v', $k, ':', text) as text_v",
+          "cast(doc_id % 4 as string) as day")
+    })
+    src.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", rp.scratch.resolve("ckpt").toString)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        graft.pipeline.ParquetFormat.merge(spark, tableDir, b, "doc_id", "day")
       }
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("version", LongType),
-          StructField("text_v", StringType), StructField("day", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val q = src.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          graft.pipeline.ParquetFormat.merge(spark, tableDir, b, "doc_id", "day")
-        }
-        .start()
-      q.awaitTermination()
-      graft.pipeline.ParquetFormat.read(spark, tableDir)
-        .selectExpr("cast(doc_id as long) as doc_id",
-          "cast(version as long) as version", "text_v",
-          "cast(day as string) as day")
-        .localCheckpoint(true) // detach from the temp dirs before cleanup
-    } finally {
-      rmTree(stage) // staged files + checkpoint + merged table scratch
-    }
+      .start()
+      .awaitTermination()
+    graft.pipeline.ParquetFormat.read(spark, tableDir)
+      .selectExpr("cast(doc_id as long) as doc_id",
+        "cast(version as long) as version", "text_v",
+        "cast(day as string) as day")
+      .localCheckpoint(true) // detach from the scratch table before cleanup
   }
 
   val streamUpsertSql: String =
@@ -621,7 +522,7 @@ object StreamingOps {
   /** ORACLE-GATED stream-stream inner join — the last core Structured
     * Streaming surface (after windowed aggs, flatMapGroupsWithState,
     * dropDuplicates and the foreachBatch MERGE sink): two REAL
-    * file-source streams (views and clicks, time-sliced into 4 files
+    * file-source streams (views and clicks, time-sliced into 2 files
     * each, one file per trigger per side) join on user within a
     * 30-minute event-time interval — the crawl-ops shape "pair each
     * fetch REQUEST with its RESPONSE arriving within the timeout".
@@ -638,64 +539,27 @@ object StreamingOps {
     * watermark passes its join window, so state is the watermark-delay
     * working set, never the stream's history.
     */
-  def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamJoin(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id", "event_type",
         "cast(ts as timestamp) as ts",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
     // 2 real slices per side (was 4): the exactness argument above only
     // needs adjacent-slice coverage (>= 2 time-ordered slices); every
     // extra slice costs two more AvailableNow micro-batch floors, and
     // the two-sided joins are the bench loop's ceiling (r4 verdict ask).
-    val nSlices = 2
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_join_src")
-    val viewsDir = java.nio.file.Files.createDirectory(stage.resolve("views"))
-    val clicksDir = java.nio.file.Files.createDirectory(stage.resolve("clicks"))
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, into: java.nio.file.Path, name: String,
-        mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, into, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        val slice = ev.filter(col("ts_us") >= lo && col("ts_us") < hi)
-        stageSlice(slice.filter("event_type = 'view'").select("user_id", "ts"),
-          viewsDir, f"views-$i%03d", base + i * 10000L)
-        stageSlice(slice.filter("event_type = 'click'").select("user_id", "ts"),
-          clicksDir, f"clicks-$i%03d", base + i * 10000L)
-      }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      def side(d: java.nio.file.Path, uid: String, tsc: String): DataFrame =
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(d.toString)
-          .withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
-          .withWatermark(tsc, "1 hour")
-      val joined = side(viewsDir, "user_id", "v_ts")
-        .join(side(clicksDir, "c_user", "c_ts"),
-          expr("user_id = c_user AND c_ts >= v_ts AND " +
-            "c_ts <= v_ts + interval 30 minutes"))
-        .selectExpr("user_id", "unix_micros(v_ts) as view_us",
-          "unix_micros(c_ts) as click_us")
-      val name = s"stream_join_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).localCheckpoint(true)
-    } finally {
-      rmTree(stage) // views/ clicks/ staged files and scratch together
-    }
+    val (slices, _) = timeSlices(ev, 2)
+    def side(kind: String, uid: String, tsc: String): DataFrame =
+      rp.source(kind, slices.map(_.filter(s"event_type = '$kind'").select("user_id", "ts")))
+        .withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
+        .withWatermark(tsc, "1 hour")
+    val joined = side("view", "user_id", "v_ts")
+      .join(side("click", "c_user", "c_ts"),
+        expr("user_id = c_user AND c_ts >= v_ts AND " +
+          "c_ts <= v_ts + interval 30 minutes"))
+      .selectExpr("user_id", "unix_micros(v_ts) as view_us",
+        "unix_micros(c_ts) as click_us")
+    rp.run(joined, "append")._1
   }
 
   val streamJoinSql: String =
@@ -729,73 +593,38 @@ object StreamingOps {
     * watermark-delay working set per side; the outer padding adds no
     * state, only an eviction-time emission.
     */
-  def streamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamLeftJoin(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     import spark.implicits._
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id", "event_type",
         "cast(ts as timestamp) as ts",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
     // 2 real slices per side (was 4) — same adjacent-slice exactness
     // argument as streamJoin; the outer join additionally waits for the
     // sentinel-driven watermark pass before emitting unmatched rows,
     // which the sentinel slices (unchanged) still provide.
-    val nSlices = 2
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_ljoin_src")
-    val viewsDir = java.nio.file.Files.createDirectory(stage.resolve("views"))
-    val clicksDir = java.nio.file.Files.createDirectory(stage.resolve("clicks"))
-    def stageSlice(df: DataFrame, into: java.nio.file.Path, name: String,
-        mtimeMs: Long): Unit = { stageSliceFile(df, stage, into, name, mtimeMs); () }
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        val slice = ev.filter(col("ts_us") >= lo && col("ts_us") < hi)
-        stageSlice(slice.filter("event_type = 'view'").select("user_id", "ts"),
-          viewsDir, f"views-$i%03d", base + i * 10000L)
-        stageSlice(slice.filter("event_type = 'click'").select("user_id", "ts"),
-          clicksDir, f"clicks-$i%03d", base + i * 10000L)
-      }
-      // sentinel slices: push the watermark far past every real window,
-      // one extra trigger at a time (eviction emission lags the data)
-      (0 until 3).foreach { s =>
+    val (slices, maxUs) = timeSlices(ev, 2)
+    // sentinel slices: push the watermark far past every real window,
+    // one extra trigger at a time (eviction emission lags the data);
+    // view sentinels are users -1..-3, click sentinels -101..-103
+    def side(kind: String, sentinelUid: Long, uid: String, tsc: String): DataFrame = {
+      val sentinels = (0 until 3).map { s =>
         val t = new java.sql.Timestamp((maxUs + (s + 4).toLong * 7200L * 1000000L) / 1000L)
-        stageSlice(Seq((-1L - s, t)).toDF("user_id", "ts"),
-          viewsDir, f"views-${nSlices + s}%03d", base + (nSlices + s) * 10000L)
-        stageSlice(Seq((-101L - s, t)).toDF("user_id", "ts"),
-          clicksDir, f"clicks-${nSlices + s}%03d", base + (nSlices + s) * 10000L)
+        Seq((sentinelUid - s, t)).toDF("user_id", "ts")
       }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      def side(d: java.nio.file.Path, uid: String, tsc: String): DataFrame =
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(d.toString)
-          .withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
-          .withWatermark(tsc, "1 hour")
-      val joined = side(viewsDir, "user_id", "v_ts")
-        .join(side(clicksDir, "c_user", "c_ts"),
-          expr("user_id = c_user AND c_ts >= v_ts AND " +
-            "c_ts <= v_ts + interval 30 minutes"),
-          "leftOuter")
-        .selectExpr("user_id", "unix_micros(v_ts) as view_us",
-          "coalesce(unix_micros(c_ts), -1L) as click_us")
-      val name = s"stream_ljoin_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).where("user_id >= 0").localCheckpoint(true)
-    } finally {
-      rmTree(stage)
+      val real = slices.map(_.filter(s"event_type = '$kind'").select("user_id", "ts"))
+      rp.source(kind, real ++ sentinels)
+        .withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
+        .withWatermark(tsc, "1 hour")
     }
+    val joined = side("view", -1L, "user_id", "v_ts")
+      .join(side("click", -101L, "c_user", "c_ts"),
+        expr("user_id = c_user AND c_ts >= v_ts AND " +
+          "c_ts <= v_ts + interval 30 minutes"),
+        "leftOuter")
+      .selectExpr("user_id", "unix_micros(v_ts) as view_us",
+        "coalesce(unix_micros(c_ts), -1L) as click_us")
+    rp.run(joined, "append")._1.where("user_id >= 0")
   }
 
   val streamLeftJoinSql: String =
@@ -838,17 +667,13 @@ object StreamingOps {
     * watermark-bounded; the planted copies ride the same key-partitioned
     * exchange as on-time rows and die at the state operator's gate.
     */
-  def streamLate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamLate(spark: SparkSession, dir: String): DataFrame = replay(spark) { rp =>
     import spark.implicits._
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id",
         "cast(ts as timestamp) as ts",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    val (minUs, maxUs) = tsBounds(ev)
     // whole-second tumbling span, ~8 windows over the table (Spark's
     // window() aligns to the epoch, so the oracle's ts_us div span is
     // exact only for whole-second spans); 8, not 4, so plants four
@@ -856,55 +681,31 @@ object StreamingOps {
     val spanUs = (((maxUs - minUs) / 8 + 1) / 1000000L + 1L) * 1000000L
     val widxs = ev.selectExpr(s"ts_us div ${spanUs}L as widx")
       .distinct().orderBy("widx").as[Long].collect()
-    val stage = java.nio.file.Files.createTempDirectory("stream_late_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      widxs.zipWithIndex.foreach { case (w, k) =>
-        val onTime = ev.filter(s"ts_us div ${spanUs}L = ${w}L").select("user_id", "ts")
-        val slice =
-          if (k >= 4)
-            onTime.unionByName(
-              ev.filter(s"ts_us div ${spanUs}L = ${widxs(k - 4)}L and user_id % 10 = 7")
-                .select("user_id", "ts"))
-          else onTime
-        stageSlice(slice, f"late-$k%03d", base + k * 10000L)
-      }
-      // sentinel: advances the final watermark past every real window
-      stageSlice(
-        Seq((-1L, new java.sql.Timestamp((maxUs + 10 * spanUs) / 1000L)))
-          .toDF("user_id", "ts"),
-        f"late-${widxs.length}%03d", base + widxs.length * 10000L)
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      val agg = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), s"${spanUs / 1000000L} seconds"))
-        .agg(count(lit(1)).as("n"))
-      val name = s"stream_late_${System.nanoTime()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // observability guard, not an oracle column: the engine must have
-      // REPORTED watermark drops (the metric counts dropped partial-agg
-      // rows, so its magnitude is partitioning-dependent — the exact
-      // planted-copy count is what the per-window hash compare pins)
-      val dropped = q.recentProgress.iterator.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      require(widxs.length < 5 || dropped > 0,
-        "late plants present but numRowsDroppedByWatermark stayed 0 — watermark drop path never engaged")
-      spark.table(name)
-        .selectExpr(s"unix_micros(window.start) div ${spanUs}L as widx", "n")
-        .localCheckpoint(true)
-    } finally {
-      rmTree(stage)
+    val slices = widxs.indices.map { k =>
+      val onTime = ev.filter(s"ts_us div ${spanUs}L = ${widxs(k)}L").select("user_id", "ts")
+      if (k >= 4)
+        onTime.unionByName(
+          ev.filter(s"ts_us div ${spanUs}L = ${widxs(k - 4)}L and user_id % 10 = 7")
+            .select("user_id", "ts"))
+      else onTime
     }
+    // sentinel: advances the final watermark past every real window
+    val sentinel = Seq((-1L, new java.sql.Timestamp((maxUs + 10 * spanUs) / 1000L)))
+      .toDF("user_id", "ts")
+    val agg = rp.source("late", slices :+ sentinel)
+      .withWatermark("ts", "0 seconds")
+      .groupBy(window(col("ts"), s"${spanUs / 1000000L} seconds"))
+      .agg(count(lit(1)).as("n"))
+    val (out, q) = rp.run(agg, "append")
+    // observability guard, not an oracle column: the engine must have
+    // REPORTED watermark drops (the metric counts dropped partial-agg
+    // rows, so its magnitude is partitioning-dependent — the exact
+    // planted-copy count is what the per-window hash compare pins)
+    val dropped = q.recentProgress.iterator.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
+    require(widxs.length < 5 || dropped > 0,
+      "late plants present but numRowsDroppedByWatermark stayed 0 — watermark drop path never engaged")
+    out.selectExpr(s"unix_micros(window.start) div ${spanUs}L as widx", "n")
   }
 
   val streamLateSql: String =

@@ -4,10 +4,12 @@ import graft.kernels.BpeKernel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Adversarial fixtures for the learned-BPE trainer: overlapping-pair
-  * counting, left-to-right non-overlapping application (replace
-  * semantics — the oracle's exact mechanism), deterministic tie-breaks,
-  * second-order merges, and per-word-apply ≡ batch-evolution (the
-  * property `q_bpe_apply`'s broadcast path relies on).
+  * counting, left-to-right non-overlapping application (equal to a
+  * string `replace` over the symbols joined with DOUBLED spaces — the
+  * oracle's exact mechanism; a plain single-space `replace` is not),
+  * deterministic tie-breaks, second-order merges, and per-word-apply ≡
+  * batch-evolution (the property `q_bpe_apply`'s broadcast path relies
+  * on).
   */
 class BpeKernelSpec extends AnyFunSuite {
 
@@ -21,6 +23,16 @@ class BpeKernelSpec extends AnyFunSuite {
     assert(BpeKernel.applyMerge(Vector("a", "b", "b"), "a", "b") === Vector("ab", "b"))
     assert(BpeKernel.applyMerge(Vector("q"), "a", "b") === Vector("q"))
     assert(BpeKernel.applyMerge(Vector.empty, "a", "b") === Vector.empty)
+    // exhaustive: every {a,b} sequence up to length 8 and every merge
+    // in {a,b}² agrees with the oracle's doubled-separator replace
+    def oracle(seg: String, l: String, r: String): String =
+      (" " + seg.replace(" ", "  ") + " ")
+        .replace(s" $l  $r ", s" $l$r ").replace("  ", " ").trim
+    val seqs = (0 to 8).flatMap(n => (0 until (1 << n)).map(bits =>
+      Vector.tabulate(n)(i => if ((bits >> i & 1) == 1) "b" else "a")))
+    for (seg <- seqs; l <- Seq("a", "b"); r <- Seq("a", "b"))
+      assert(BpeKernel.applyMerge(seg, l, r).mkString(" ") === oracle(seg.mkString(" "), l, r),
+        s"$seg merge ($l,$r)")
   }
 
   test("pair counting includes overlapping pairs (Sennrich get_stats)") {

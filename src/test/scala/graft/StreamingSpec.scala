@@ -16,7 +16,7 @@ class StreamingSpec extends SparkTestBase {
 
     val stream = StreamingOps.pagesStream(spark, srcDir)
     assert(stream.isStreaming)
-    val extracted = StreamingOps.extractStream(spark, stream)
+    val extracted = ExtractPipeline.extract(spark, stream).toDF()
     val q = extracted.writeStream
       .format("memory")
       .queryName("ext_stream")
@@ -82,7 +82,7 @@ class StreamingSpec extends SparkTestBase {
     corpus.map(_.row).toDS().repartition(3).write.mode("overwrite").parquet(srcDir)
 
     val counts = StreamingOps.hourlyDocCounts(
-      StreamingOps.extractStream(spark, StreamingOps.pagesStream(spark, srcDir)))
+      ExtractPipeline.extract(spark, StreamingOps.pagesStream(spark, srcDir)).toDF())
     val q = counts.writeStream
       .format("memory")
       .queryName("win_stream")
@@ -127,6 +127,21 @@ class StreamingSpec extends SparkTestBase {
     assert(out.nonEmpty)
   }
 
+  test("oracle-gated streaming runs leave no query, view or live result behind") {
+    def streamViews = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("stream_")).map(_.name).toSeq
+    val runs = StreamingOps.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val out = fn(spark, "/root/testdata/sf0.001")
+      val n = out.count()
+      assert(n > 0, name)
+      assert(spark.streams.active.isEmpty, name)
+      assert(streamViews === Seq.empty, name)
+      (name, out, n)
+    }
+    // every result is detached: later runs' clean-up does not change it
+    runs.foreach { case (name, out, n) => assert(out.count() === n, name) }
+  }
+
   test("streaming ingestion commits batch partitions exactly-once across restart") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.lit
@@ -148,7 +163,7 @@ class StreamingSpec extends SparkTestBase {
         wallMs = 0L, committedAtMs = System.currentTimeMillis()))
     }
     def runOnce(): Unit = {
-      val ext = StreamingOps.extractStream(spark, StreamingOps.pagesStream(spark, srcDir))
+      val ext = ExtractPipeline.extract(spark, StreamingOps.pagesStream(spark, srcDir)).toDF()
       val q = ext.writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch(commitBatch _)
