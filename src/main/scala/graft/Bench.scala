@@ -3,6 +3,7 @@ package graft
 import graft.gen.PagesGen
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): one JSON line on stdout with
   * per-query timings over SPARK_GRAFT_SF_DIR plus the north rule's
@@ -107,7 +108,7 @@ object Bench {
     // artifact while a warm run takes <1 s).
     if (!scalingOnly) {
       try { SparkEntry.queries("q1_agg")(spark, sfDir).count() }
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     val results =
       if (scalingOnly) Seq.empty
@@ -126,7 +127,7 @@ object Bench {
         // small against the total).
         val runs = if (name.startsWith("q_stream")) 2 else 1
         try { name -> (1 to runs).map(_ => once()).min }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           failed += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           name -> -1.0
@@ -228,7 +229,7 @@ object Bench {
     import java.nio.file.{Files, Paths}
     Files.writeString(Paths.get("bench_out.json"), fullRecord)
     try Files.writeString(Paths.get("/tmp/graft_bench.json"), fullRecord)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(fullRecord)
     // Headline subset keeps the contract's {"queries":{name:sec}} shape
     // while staying far under the tail window; the full 70+-query map is in

@@ -6,9 +6,14 @@ import graft.ops._
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every operator family registers (query, DuckDB-oracle) pairs:
+/** One registry entry: a query's Spark plan and the DuckDB SQL that gates
+  * it. `oracle` runs on the same parquet tables; its column names and types
+  * match the Spark side (the compare sorts columns by name and hashes values).
+  */
+final case class Gated(run: (SparkSession, String) => DataFrame, oracle: String)
+
+/** Driver contract (SURVEY.md §7): every operator family registers one
+  * [[Gated]] entry per query.
   *  - ExtractionOps: the real HTML/PDF kernel end-to-end (round-trip
   *    oracle: extract(wrap(text)) == text, byte-identical)
   *  - RelationalOps: pipeline-stage analogs over TPC-H-ish tables
@@ -30,24 +35,21 @@ object SparkEntry {
       .toDF()
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ExtractionOps.queries ++ RelationalOps.queries ++ TextOps.queries ++
-      DedupOps.queries ++ SimilarityOps.queries ++ MultimodalOps.queries ++
-      ScalarOps.queries ++ FormOps.queries ++ AggOps.queries ++ SketchOps.queries ++
-      SampleOps.queries ++ LinkOps.queries ++ RankOps.queries ++
-      CorpusOps.queries ++ QualityOps.queries ++ ArticleOps.queries ++
-      graft.streaming.StreamingOps.queries
+  /** The operator families of SURVEY.md §2, each listed once. */
+  def families: Seq[Map[String, Gated]] = Seq(
+    ExtractionOps.registry, RelationalOps.registry, TextOps.registry, DedupOps.registry,
+    SimilarityOps.registry, MultimodalOps.registry, ScalarOps.registry, FormOps.registry,
+    AggOps.registry, SketchOps.registry, SampleOps.registry, LinkOps.registry,
+    RankOps.registry, CorpusOps.registry, QualityOps.registry, ArticleOps.registry,
+    graft.streaming.StreamingOps.registry)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Column names + types match the Spark side
-    * (the driver's compare sorts columns by name and hashes values).
-    */
-  def oracleSql: Map[String, String] =
-    ExtractionOps.oracles ++ RelationalOps.oracles ++ TextOps.oracles ++
-      DedupOps.oracles ++ SimilarityOps.oracles ++ MultimodalOps.oracles ++
-      ScalarOps.oracles ++ FormOps.oracles ++ AggOps.oracles ++ SketchOps.oracles ++
-      SampleOps.oracles ++ LinkOps.oracles ++ RankOps.oracles ++
-      CorpusOps.oracles ++ QualityOps.oracles ++ ArticleOps.oracles ++
-      graft.streaming.StreamingOps.oracles
+  /** Every query by name; the family names are disjoint (RegistrySpec). */
+  def registry: Map[String, Gated] = families.reduce(_ ++ _)
+
+  /** The Spark side of [[registry]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, g) => n -> g.run }
+
+  /** The DuckDB side of [[registry]], under the same names. */
+  def oracleSql: Map[String, String] = registry.map { case (n, g) => n -> g.oracle }
 }

@@ -52,9 +52,10 @@ object Verify {
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Loud drift check: every dump dir written above must have an oracle
-    // entry under its filename key. A missing key is a contract bug that
-    // would silently zero the round's correctness record — fail the run.
+    // Loud orphan check: every dump dir in outDir must have an oracle
+    // entry under its filename key. A registry entry always carries its
+    // oracle, so an orphan is a stale dump left in a reused outDir — it
+    // would silently zero the correctness record, so fail the run.
     val dumped = new java.io.File(outDir).listFiles()
       .filter(f => f.isDirectory && f.getName.endsWith(".parquet")).map(_.getName)
     val orphans = dumped.filterNot(d =>

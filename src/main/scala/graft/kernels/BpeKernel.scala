@@ -20,9 +20,10 @@ import scala.collection.mutable
   * exact sums, the argmax tie-breaks (count DESC, left ASC, right ASC),
   * and training is a pure function of the word-frequency MULTISET —
   * independent of partitioning — so the distributed per-round
-  * pair-count aggregation (`q_bpe_train`) and this in-memory trainer
-  * (`q_bpe_apply`'s broadcast path) provably produce identical merges,
-  * and an unrolled N-round SQL CTE can replay both.
+  * pair-count aggregation (`TextOps.bpeMerges`, the one training path of
+  * every learned-BPE query) and this in-memory trainer (its test
+  * reference in BpeKernelSpec) provably produce identical merges, and an
+  * unrolled N-round SQL CTE can replay both.
   */
 object BpeKernel {
 

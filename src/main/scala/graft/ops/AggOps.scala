@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -112,13 +113,8 @@ object AggOps {
 
   // -------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_histogram_udaf" -> (histogram(_, _)),
-    "q_upsert" -> (upsert(_, _)),
-    "q_salted_agg" -> (saltedAgg(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_histogram_udaf" -> histogramSql,
-    "q_upsert" -> upsertSql,
-    "q_salted_agg" -> saltedAggSql)
+  def registry: Map[String, Gated] = Map(
+    "q_histogram_udaf" -> Gated(histogram(_, _), histogramSql),
+    "q_upsert" -> Gated(upsert(_, _), upsertSql),
+    "q_salted_agg" -> Gated(saltedAgg(_, _), saltedAggSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Article-metadata tier over deterministic article pages
@@ -504,37 +505,20 @@ object ArticleOps {
       |  ON a.host = b.host AND a.path_key = b.path_key
       | AND a.lang_dir < b.lang_dir""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rel_canonical" -> (relCanonical(_, _)),
-    "q_bitext_candidates" -> (bitextCandidates(_, _)),
-    "q_dom_skeleton" -> (domSkeleton(_, _)),
-    "q_template_diversity" -> (templateDiversity(_, _)),
-    "q_meta_refresh" -> (metaRefresh(_, _)),
-    "q_image_alt_pairs" -> (imageAltPairs(_, _)),
-    "q_declared_lang" -> (declaredLang(_, _)),
-    "q_hreflang_alternates" -> (hreflangAlternates(_, _)),
-    "q_pdf_info" -> (pdfInfo(_, _)),
-    "q_html_markdown" -> (htmlMarkdown(_, _)),
-    "q_license_meta" -> (licenseMeta(_, _)),
-    "q_jsonld_article" -> (jsonldArticle(_, _)),
-    "q_pub_date" -> (pubDate(_, _)),
-    "q_pagination" -> (pagination(_, _)),
-    "q_soft404" -> (soft404(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_rel_canonical" -> relCanonicalSql,
-    "q_bitext_candidates" -> bitextCandidatesSql,
-    "q_dom_skeleton" -> domSkeletonSql,
-    "q_template_diversity" -> templateDiversitySql,
-    "q_meta_refresh" -> metaRefreshSql,
-    "q_image_alt_pairs" -> imageAltPairsSql,
-    "q_declared_lang" -> declaredLangSql,
-    "q_hreflang_alternates" -> hreflangAlternatesSql,
-    "q_pdf_info" -> pdfInfoSql,
-    "q_html_markdown" -> htmlMarkdownSql,
-    "q_license_meta" -> licenseMetaSql,
-    "q_jsonld_article" -> jsonldArticleSql,
-    "q_pub_date" -> pubDateSql,
-    "q_pagination" -> paginationSql,
-    "q_soft404" -> soft404Sql)
+  def registry: Map[String, Gated] = Map(
+    "q_rel_canonical" -> Gated(relCanonical(_, _), relCanonicalSql),
+    "q_bitext_candidates" -> Gated(bitextCandidates(_, _), bitextCandidatesSql),
+    "q_dom_skeleton" -> Gated(domSkeleton(_, _), domSkeletonSql),
+    "q_template_diversity" -> Gated(templateDiversity(_, _), templateDiversitySql),
+    "q_meta_refresh" -> Gated(metaRefresh(_, _), metaRefreshSql),
+    "q_image_alt_pairs" -> Gated(imageAltPairs(_, _), imageAltPairsSql),
+    "q_declared_lang" -> Gated(declaredLang(_, _), declaredLangSql),
+    "q_hreflang_alternates" -> Gated(hreflangAlternates(_, _), hreflangAlternatesSql),
+    "q_pdf_info" -> Gated(pdfInfo(_, _), pdfInfoSql),
+    "q_html_markdown" -> Gated(htmlMarkdown(_, _), htmlMarkdownSql),
+    "q_license_meta" -> Gated(licenseMeta(_, _), licenseMetaSql),
+    "q_jsonld_article" -> Gated(jsonldArticle(_, _), jsonldArticleSql),
+    "q_pub_date" -> Gated(pubDate(_, _), pubDateSql),
+    "q_pagination" -> Gated(pagination(_, _), paginationSql),
+    "q_soft404" -> Gated(soft404(_, _), soft404Sql))
 }

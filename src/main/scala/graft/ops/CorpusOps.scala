@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Gated
+import graft.ops.TextOps.docs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +22,6 @@ import org.apache.spark.sql.functions._
   * generalization a Common-Crawl pipeline needs.
   */
 object CorpusOps {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** doc_id + words array, the shared narrow scan. */
   private def words(spark: SparkSession, dir: String): DataFrame =
@@ -807,37 +806,20 @@ object CorpusOps {
       |  CAST(sum(d_new) OVER (ORDER BY day) AS BIGINT) AS cum_vocab
       |FROM j""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_novelty_curve" -> (noveltyCurve(_, _)),
-    "q_heaps_law" -> (heapsLaw(_, _)),
-    "q_effective_tokens" -> (effectiveTokens(_, _)),
-    "q_template_spam" -> (templateSpam(_, _)),
-    "q_para_dedup" -> (paraDedup(_, _)),
-    "q_ngram_dup_rate" -> (ngramDupRate(_, _)),
-    "q_chunk_windows" -> (chunkWindows(_, _)),
-    "q_vocab_topk" -> (vocabTopk(_, _)),
-    "q_nfc_normalize" -> (nfcNormalize(_, _)),
-    "q_cdc_chunks" -> (cdcChunks(_, _)),
-    "q_exact_substr_cut" -> (exactSubstrCut(_, _)),
-    "q_substr_dedup_50" -> (substrDedup50(_, _)),
-    "q_dataset_card" -> (datasetCard(_, _)),
-    "q_compact_plan" -> (compactPlan(_, _)),
-    "q_host_line_dedup" -> (hostLineDedup(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_novelty_curve" -> noveltyCurveSql,
-    "q_heaps_law" -> heapsLawSql,
-    "q_effective_tokens" -> effectiveTokensSql,
-    "q_template_spam" -> templateSpamSql,
-    "q_para_dedup" -> paraDedupSql,
-    "q_ngram_dup_rate" -> ngramDupRateSql,
-    "q_chunk_windows" -> chunkWindowsSql,
-    "q_vocab_topk" -> vocabTopkSql,
-    "q_nfc_normalize" -> nfcNormalizeSql,
-    "q_cdc_chunks" -> cdcChunksSql,
-    "q_exact_substr_cut" -> exactSubstrCutSql,
-    "q_substr_dedup_50" -> substrDedup50Sql,
-    "q_dataset_card" -> datasetCardSql,
-    "q_compact_plan" -> compactPlanSql,
-    "q_host_line_dedup" -> hostLineDedupSql)
+  def registry: Map[String, Gated] = Map(
+    "q_novelty_curve" -> Gated(noveltyCurve(_, _), noveltyCurveSql),
+    "q_heaps_law" -> Gated(heapsLaw(_, _), heapsLawSql),
+    "q_effective_tokens" -> Gated(effectiveTokens(_, _), effectiveTokensSql),
+    "q_template_spam" -> Gated(templateSpam(_, _), templateSpamSql),
+    "q_para_dedup" -> Gated(paraDedup(_, _), paraDedupSql),
+    "q_ngram_dup_rate" -> Gated(ngramDupRate(_, _), ngramDupRateSql),
+    "q_chunk_windows" -> Gated(chunkWindows(_, _), chunkWindowsSql),
+    "q_vocab_topk" -> Gated(vocabTopk(_, _), vocabTopkSql),
+    "q_nfc_normalize" -> Gated(nfcNormalize(_, _), nfcNormalizeSql),
+    "q_cdc_chunks" -> Gated(cdcChunks(_, _), cdcChunksSql),
+    "q_exact_substr_cut" -> Gated(exactSubstrCut(_, _), exactSubstrCutSql),
+    "q_substr_dedup_50" -> Gated(substrDedup50(_, _), substrDedup50Sql),
+    "q_dataset_card" -> Gated(datasetCard(_, _), datasetCardSql),
+    "q_compact_plan" -> Gated(compactPlan(_, _), compactPlanSql),
+    "q_host_line_dedup" -> Gated(hostLineDedup(_, _), hostLineDedupSql))
 }

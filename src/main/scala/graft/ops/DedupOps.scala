@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Gated
+import graft.ops.TextOps.docs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,9 +18,6 @@ import org.apache.spark.sql.functions._
   * intentionally group-bounded.
   */
 object DedupOps {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   // ------------------------------------------------------------ exact dedup
 
@@ -1044,45 +1043,24 @@ object DedupOps {
        |FROM c_lf l JOIN eb USING (band_no, bkey)
        |GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_split_leakage" -> (splitLeakage(_, _)),
-    "q_split_by_group" -> (splitByGroup(_, _)),
-    "q_decontam_fuzzy" -> (decontamFuzzy(_, _)),
-    "q_dedup_exact" -> (exact(_, _)),
-    "q_dedup_keep_newest" -> (keepNewest(_, _)),
-    "q_dedup_jaccard" -> (jaccard(_, _)),
-    "q_shingle_containment" -> (shingleContainment(_, _)),
-    "q_dedup_funnel" -> (dedupFunnel(_, _)),
-    "q_dedup_minhash_lsh" -> (minhashLsh(_, _)),
-    "q_lsh_bucket_stats" -> (lshBucketStats(_, _)),
-    "q_dedup_simhash" -> (simhash(_, _)),
-    "q_simhash_pairs" -> (simhashPairs(_, _)),
-    "q_simhash_bucket_stats" -> (simhashBucketStats(_, _)),
-    "q_dedup_embed_cosine" -> (embedCosine(_, _)),
-    "q_dedup_lsh_verify" -> (lshVerify(_, _)),
-    "q_minhash_est" -> (minhashEst(_, _)),
-    "q_dedup_clusters" -> (dedupClusters(_, _)),
-    "q_dedup_canonical" -> (dedupCanonical(_, _)),
-    "q_dedup_incremental" -> (dedupIncremental(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_split_leakage" -> splitLeakageSql,
-    "q_split_by_group" -> splitByGroupSql,
-    "q_decontam_fuzzy" -> decontamFuzzySql,
-    "q_dedup_exact" -> exactSql,
-    "q_dedup_keep_newest" -> keepNewestSql,
-    "q_dedup_jaccard" -> jaccardSql,
-    "q_shingle_containment" -> shingleContainmentSql,
-    "q_dedup_funnel" -> dedupFunnelSql,
-    "q_dedup_minhash_lsh" -> minhashLshSql,
-    "q_lsh_bucket_stats" -> lshBucketStatsSql,
-    "q_dedup_simhash" -> simhashSql,
-    "q_simhash_pairs" -> simhashPairsSql,
-    "q_simhash_bucket_stats" -> simhashBucketStatsSql,
-    "q_dedup_embed_cosine" -> embedCosineSql,
-    "q_dedup_lsh_verify" -> lshVerifySql,
-    "q_minhash_est" -> minhashEstSql,
-    "q_dedup_clusters" -> dedupClustersSql,
-    "q_dedup_canonical" -> dedupCanonicalSql,
-    "q_dedup_incremental" -> dedupIncrementalSql)
+  def registry: Map[String, Gated] = Map(
+    "q_split_leakage" -> Gated(splitLeakage(_, _), splitLeakageSql),
+    "q_split_by_group" -> Gated(splitByGroup(_, _), splitByGroupSql),
+    "q_decontam_fuzzy" -> Gated(decontamFuzzy(_, _), decontamFuzzySql),
+    "q_dedup_exact" -> Gated(exact(_, _), exactSql),
+    "q_dedup_keep_newest" -> Gated(keepNewest(_, _), keepNewestSql),
+    "q_dedup_jaccard" -> Gated(jaccard(_, _), jaccardSql),
+    "q_shingle_containment" -> Gated(shingleContainment(_, _), shingleContainmentSql),
+    "q_dedup_funnel" -> Gated(dedupFunnel(_, _), dedupFunnelSql),
+    "q_dedup_minhash_lsh" -> Gated(minhashLsh(_, _), minhashLshSql),
+    "q_lsh_bucket_stats" -> Gated(lshBucketStats(_, _), lshBucketStatsSql),
+    "q_dedup_simhash" -> Gated(simhash(_, _), simhashSql),
+    "q_simhash_pairs" -> Gated(simhashPairs(_, _), simhashPairsSql),
+    "q_simhash_bucket_stats" -> Gated(simhashBucketStats(_, _), simhashBucketStatsSql),
+    "q_dedup_embed_cosine" -> Gated(embedCosine(_, _), embedCosineSql),
+    "q_dedup_lsh_verify" -> Gated(lshVerify(_, _), lshVerifySql),
+    "q_minhash_est" -> Gated(minhashEst(_, _), minhashEstSql),
+    "q_dedup_clusters" -> Gated(dedupClusters(_, _), dedupClustersSql),
+    "q_dedup_canonical" -> Gated(dedupCanonical(_, _), dedupCanonicalSql),
+    "q_dedup_incremental" -> Gated(dedupIncremental(_, _), dedupIncrementalSql))
 }

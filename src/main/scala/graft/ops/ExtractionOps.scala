@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -857,71 +858,37 @@ object ExtractionOps {
       |    0) // 512 AS BIGINT) AS shard_id
       |FROM surv s JOIN quot USING (component)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_corpus_pipeline" -> (corpusPipeline(_, _)),
-    "q_crawl_to_corpus" -> (crawlToCorpus(_, _)),
-    "q_extract_error_census" -> (extractErrorCensus(_, _)),
-    "q_extract_doc_struct" -> (extractDocStruct(_, _)),
-    "q_extract_arabic" -> (extractArabic(_, _)),
-    "q_extract_fastpath" -> (extractFastpath(_, _)),
-    "q_extract_sql_expr" -> (extractSqlExpr(_, _)),
-    "q_extract_html" -> (extractHtml(_, _)),
-    "q_incremental_extract" -> (incrementalExtract(_, _)),
-    "q_extract_job_ledger" -> (extractJobLedger(_, _)),
-    "q_extract_html_chunked" -> (extractHtmlChunked(_, _)),
-    "q_extract_pdf" -> (extractPdf(_, _)),
-    "q_extract_pdf_flate" -> (extractPdfFlate(_, _)),
-    "q_extract_pdf_filters" -> (extractPdfFilters(_, _)),
-    "q_extract_pdf_encrypted" -> (extractPdfEncrypted(_, _)),
-    "q_extract_warc" -> (extractWarc(_, _)),
-    "q_warc_revisit" -> (warcRevisit(_, _)),
-    "q_warc_cdx_offsets" -> (warcCdxOffsets(_, _)),
-    "q_warc_gz_members" -> (warcGzMembers(_, _)),
-    "q_extract_pdf_multipage" -> (extractPdfMultipage(_, _)),
-    "q_extract_pdf_scrambled" -> (extractPdfScrambled(_, _)),
-    "q_extract_pdf_winansi" -> (extractPdfWinAnsi(_, _)),
-    "q_extract_pdf_cid" -> (extractPdfCid(_, _)),
-    "q_extract_passthrough" -> (extractPassthrough(_, _)),
-    "q_extract_mixed" -> (extractMixed(_, _)),
-    "q_extract_spans" -> (extractSpans(_, _)),
-    "q_extract_win1252" -> (extractWin1252(_, _)),
-    "q_extract_utf16" -> (extractUtf16(_, _)),
-    "q_extract_gzip" -> (extractGzip(_, _)),
-    "q_extract_zstd" -> (extractZstd(_, _)),
-    "q_html_table" -> (htmlTable(_, _)),
-    "q_wet_roundtrip" -> (wetRoundtrip(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_corpus_pipeline" -> corpusPipelineSql,
-    "q_crawl_to_corpus" -> crawlToCorpusSql,
-    "q_extract_error_census" -> extractErrorCensusSql,
-    "q_extract_doc_struct" -> extractDocStructSql,
-    "q_extract_arabic" -> extractArabicSql,
-    "q_extract_fastpath" -> extractHtmlSql,
-    "q_extract_sql_expr" -> extractHtmlSql,
-    "q_extract_html" -> extractHtmlSql,
-    "q_incremental_extract" -> incrementalExtractSql,
-    "q_extract_job_ledger" -> extractJobLedgerSql,
-    "q_extract_html_chunked" -> extractHtmlChunkedSql,
-    "q_extract_pdf" -> extractPdfSql,
-    "q_extract_pdf_flate" -> extractPdfSql,
-    "q_extract_pdf_filters" -> extractPdfSql,
-    "q_extract_pdf_encrypted" -> extractPdfSql,
-    "q_extract_warc" -> extractHtmlSql,
-    "q_warc_revisit" -> warcRevisitSql,
-    "q_warc_cdx_offsets" -> warcCdxOffsetsSql,
-    "q_warc_gz_members" -> warcGzMembersSql,
-    "q_extract_pdf_multipage" -> extractPdfMultipageSql,
-    "q_extract_pdf_scrambled" -> extractPdfMultipageSql,
-    "q_extract_pdf_winansi" -> extractPdfWinAnsiSql,
-    "q_extract_pdf_cid" -> extractPdfCidSql,
-    "q_extract_passthrough" -> extractPassthroughSql,
-    "q_extract_mixed" -> extractMixedSql,
-    "q_extract_spans" -> extractSpansSql,
-    "q_extract_win1252" -> extractWin1252Sql,
-    "q_extract_utf16" -> extractUtf16Sql,
-    "q_extract_gzip" -> extractGzipSql,
-    "q_extract_zstd" -> extractGzipSql,
-    "q_html_table" -> htmlTableSql,
-    "q_wet_roundtrip" -> wetRoundtripSql)
+  def registry: Map[String, Gated] = Map(
+    "q_corpus_pipeline" -> Gated(corpusPipeline(_, _), corpusPipelineSql),
+    "q_crawl_to_corpus" -> Gated(crawlToCorpus(_, _), crawlToCorpusSql),
+    "q_extract_error_census" -> Gated(extractErrorCensus(_, _), extractErrorCensusSql),
+    "q_extract_doc_struct" -> Gated(extractDocStruct(_, _), extractDocStructSql),
+    "q_extract_arabic" -> Gated(extractArabic(_, _), extractArabicSql),
+    "q_extract_fastpath" -> Gated(extractFastpath(_, _), extractHtmlSql),
+    "q_extract_sql_expr" -> Gated(extractSqlExpr(_, _), extractHtmlSql),
+    "q_extract_html" -> Gated(extractHtml(_, _), extractHtmlSql),
+    "q_incremental_extract" -> Gated(incrementalExtract(_, _), incrementalExtractSql),
+    "q_extract_job_ledger" -> Gated(extractJobLedger(_, _), extractJobLedgerSql),
+    "q_extract_html_chunked" -> Gated(extractHtmlChunked(_, _), extractHtmlChunkedSql),
+    "q_extract_pdf" -> Gated(extractPdf(_, _), extractPdfSql),
+    "q_extract_pdf_flate" -> Gated(extractPdfFlate(_, _), extractPdfSql),
+    "q_extract_pdf_filters" -> Gated(extractPdfFilters(_, _), extractPdfSql),
+    "q_extract_pdf_encrypted" -> Gated(extractPdfEncrypted(_, _), extractPdfSql),
+    "q_extract_warc" -> Gated(extractWarc(_, _), extractHtmlSql),
+    "q_warc_revisit" -> Gated(warcRevisit(_, _), warcRevisitSql),
+    "q_warc_cdx_offsets" -> Gated(warcCdxOffsets(_, _), warcCdxOffsetsSql),
+    "q_warc_gz_members" -> Gated(warcGzMembers(_, _), warcGzMembersSql),
+    "q_extract_pdf_multipage" -> Gated(extractPdfMultipage(_, _), extractPdfMultipageSql),
+    "q_extract_pdf_scrambled" -> Gated(extractPdfScrambled(_, _), extractPdfMultipageSql),
+    "q_extract_pdf_winansi" -> Gated(extractPdfWinAnsi(_, _), extractPdfWinAnsiSql),
+    "q_extract_pdf_cid" -> Gated(extractPdfCid(_, _), extractPdfCidSql),
+    "q_extract_passthrough" -> Gated(extractPassthrough(_, _), extractPassthroughSql),
+    "q_extract_mixed" -> Gated(extractMixed(_, _), extractMixedSql),
+    "q_extract_spans" -> Gated(extractSpans(_, _), extractSpansSql),
+    "q_extract_win1252" -> Gated(extractWin1252(_, _), extractWin1252Sql),
+    "q_extract_utf16" -> Gated(extractUtf16(_, _), extractUtf16Sql),
+    "q_extract_gzip" -> Gated(extractGzip(_, _), extractGzipSql),
+    "q_extract_zstd" -> Gated(extractZstd(_, _), extractGzipSql),
+    "q_html_table" -> Gated(htmlTable(_, _), htmlTableSql),
+    "q_wet_roundtrip" -> Gated(wetRoundtrip(_, _), wetRoundtripSql))
 }

@@ -1,6 +1,8 @@
 package graft.ops
 
+import graft.Gated
 import graft.kernels.ScalarKernels
+import graft.ops.TextOps.docs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +20,6 @@ import org.apache.spark.sql.functions._
   * inside whole-stage codegen, column-pruned at the scan.
   */
 object FormOps {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   // first three words as columns (documents always have >= 10 words)
   private def w3(spark: SparkSession, dir: String): DataFrame =
@@ -680,47 +679,25 @@ object FormOps {
 
   // -------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_structured_record" -> (structuredRecord(_, _)),
-    "q_clean_token" -> (cleanTokenQ(_, _)),
-    "q_find_key_recursive" -> (findKeyRecursiveQ(_, _)),
-    "q_marital_enum" -> (maritalEnum(_, _)),
-    "q_flatten_find" -> (flattenFind(_, _)),
-    "q_clean_ocr" -> (cleanOcr(_, _)),
-    "q_checkbox_kernel" -> (checkboxKernel(_, _)),
-    "q_fragment_rejoin" -> (fragmentRejoin(_, _)),
-    "q_service_desc" -> (serviceDesc(_, _)),
-    "q_service_codes" -> (serviceCodes(_, _)),
-    "q_date_multi" -> (dateMulti(_, _)),
-    "q_icd10" -> (icd10(_, _)),
-    "q_chief_complaint" -> (chiefComplaint(_, _)),
-    "q_name_split" -> (nameSplit(_, _)),
-    "q_base64" -> (base64Roundtrip(_, _)),
-    "q_json_carve" -> (jsonCarve(_, _)),
-    "q_ngram_chunks" -> (ngramChunks(_, _)),
-    "q_payer_lines" -> (payerLines(_, _)),
-    "q_bracket_parse" -> (bracketParse(_, _)),
-    "q_service_table" -> (serviceTable(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_structured_record" -> structuredRecordSql,
-    "q_clean_token" -> cleanTokenSql,
-    "q_find_key_recursive" -> findKeyRecursiveSql,
-    "q_marital_enum" -> maritalEnumSql,
-    "q_flatten_find" -> flattenFindSql,
-    "q_clean_ocr" -> cleanOcrSql,
-    "q_checkbox_kernel" -> checkboxKernelSql,
-    "q_fragment_rejoin" -> fragmentRejoinSql,
-    "q_service_desc" -> serviceDescSql,
-    "q_service_codes" -> serviceCodesSql,
-    "q_date_multi" -> dateMultiSql,
-    "q_icd10" -> icd10Sql,
-    "q_chief_complaint" -> chiefComplaintSql,
-    "q_name_split" -> nameSplitSql,
-    "q_base64" -> base64RoundtripSql,
-    "q_json_carve" -> jsonCarveSql,
-    "q_ngram_chunks" -> ngramChunksSql,
-    "q_payer_lines" -> payerLinesSql,
-    "q_bracket_parse" -> bracketParseSql,
-    "q_service_table" -> serviceTableSql)
+  def registry: Map[String, Gated] = Map(
+    "q_structured_record" -> Gated(structuredRecord(_, _), structuredRecordSql),
+    "q_clean_token" -> Gated(cleanTokenQ(_, _), cleanTokenSql),
+    "q_find_key_recursive" -> Gated(findKeyRecursiveQ(_, _), findKeyRecursiveSql),
+    "q_marital_enum" -> Gated(maritalEnum(_, _), maritalEnumSql),
+    "q_flatten_find" -> Gated(flattenFind(_, _), flattenFindSql),
+    "q_clean_ocr" -> Gated(cleanOcr(_, _), cleanOcrSql),
+    "q_checkbox_kernel" -> Gated(checkboxKernel(_, _), checkboxKernelSql),
+    "q_fragment_rejoin" -> Gated(fragmentRejoin(_, _), fragmentRejoinSql),
+    "q_service_desc" -> Gated(serviceDesc(_, _), serviceDescSql),
+    "q_service_codes" -> Gated(serviceCodes(_, _), serviceCodesSql),
+    "q_date_multi" -> Gated(dateMulti(_, _), dateMultiSql),
+    "q_icd10" -> Gated(icd10(_, _), icd10Sql),
+    "q_chief_complaint" -> Gated(chiefComplaint(_, _), chiefComplaintSql),
+    "q_name_split" -> Gated(nameSplit(_, _), nameSplitSql),
+    "q_base64" -> Gated(base64Roundtrip(_, _), base64RoundtripSql),
+    "q_json_carve" -> Gated(jsonCarve(_, _), jsonCarveSql),
+    "q_ngram_chunks" -> Gated(ngramChunks(_, _), ngramChunksSql),
+    "q_payer_lines" -> Gated(payerLines(_, _), payerLinesSql),
+    "q_bracket_parse" -> Gated(bracketParse(_, _), bracketParseSql),
+    "q_service_table" -> Gated(serviceTable(_, _), serviceTableSql))
 }

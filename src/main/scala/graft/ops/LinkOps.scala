@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr, max}
 
@@ -1475,69 +1476,36 @@ object LinkOps {
       |       WHEN 3 THEN 1 ELSE 2 END AS BIGINT) AS n_stripped
       |FROM b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fetch_shards" -> (fetchShards(_, _)),
-    "q_idn_homograph" -> (idnHomograph(_, _)),
-    "q_url_strip_tracking" -> (urlStripTracking(_, _)),
-    "q_recrawl_etag" -> (recrawlEtag(_, _)),
-    "q_revision_ratio" -> (revisionRatio(_, _)),
-    "q_host_communities" -> (hostCommunities(_, _)),
-    "q_robots_cache_ttl" -> (robotsCacheTtl(_, _)),
-    "q_outlinks" -> (outlinks(_, _)),
-    "q_domain_edges" -> (domainEdges(_, _)),
-    "q_robots_gate" -> (robotsGate(_, _)),
-    "q_anchor_terms" -> (anchorTerms(_, _)),
-    "q_pagerank" -> (pagerank(_, _)),
-    "q_robots_txt_gate" -> (robotsTxtGate(_, _)),
-    "q_hits_scores" -> (hitsScores(_, _)),
-    "q_crawl_budget" -> (crawlBudget(_, _)),
-    "q_url_trap" -> (urlTrapGate(_, _)),
-    "q_surt_key" -> (surtKeys(_, _)),
-    "q_cdx_index" -> (cdxIndex(_, _)),
-    "q_html_meta" -> (htmlMeta(_, _)),
-    "q_sitemap_urls" -> (sitemapUrls(_, _)),
-    "q_sitemap_coverage" -> (sitemapCoverage(_, _)),
-    "q_politeness_audit" -> (politenessAudit(_, _)),
-    "q_robots_delta" -> (robotsDelta(_, _)),
-    "q_bib_coupling" -> (bibCoupling(_, _)),
-    "q_feed_items" -> (feedItems(_, _)),
-    "q_frontier_schedule" -> (frontierSchedule(_, _)),
-    "q_robots_sitemaps" -> (robotsSitemaps(_, _)),
-    "q_crawl_delay" -> (crawlDelay(_, _)),
-    "q_redirect_resolve" -> (redirectResolve(_, _)),
-    "q_fetch_plan" -> (fetchPlan(_, _)),
-    "q_recrawl_schedule" -> (recrawlSchedule(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_fetch_shards" -> fetchShardsSql,
-    "q_idn_homograph" -> idnHomographSql,
-    "q_url_strip_tracking" -> urlStripTrackingSql,
-    "q_recrawl_etag" -> recrawlEtagSql,
-    "q_revision_ratio" -> revisionRatioSql,
-    "q_host_communities" -> hostCommunitiesSql,
-    "q_robots_cache_ttl" -> robotsCacheTtlSql,
-    "q_outlinks" -> outlinksSql,
-    "q_domain_edges" -> domainEdgesSql,
-    "q_robots_gate" -> robotsGateSql,
-    "q_anchor_terms" -> anchorTermsSql,
-    "q_pagerank" -> pagerankSql,
-    "q_robots_txt_gate" -> robotsTxtGateSql,
-    "q_hits_scores" -> hitsScoresSql,
-    "q_crawl_budget" -> crawlBudgetSql,
-    "q_url_trap" -> urlTrapGateSql,
-    "q_surt_key" -> surtKeysSql,
-    "q_cdx_index" -> cdxIndexSql,
-    "q_html_meta" -> htmlMetaSql,
-    "q_sitemap_urls" -> sitemapUrlsSql,
-    "q_sitemap_coverage" -> sitemapCoverageSql,
-    "q_politeness_audit" -> politenessAuditSql,
-    "q_robots_delta" -> robotsDeltaSql,
-    "q_bib_coupling" -> bibCouplingSql,
-    "q_feed_items" -> feedItemsSql,
-    "q_frontier_schedule" -> frontierScheduleSql,
-    "q_robots_sitemaps" -> robotsSitemapsSql,
-    "q_crawl_delay" -> crawlDelaySql,
-    "q_redirect_resolve" -> redirectResolveSql,
-    "q_fetch_plan" -> fetchPlanSql,
-    "q_recrawl_schedule" -> recrawlScheduleSql)
+  def registry: Map[String, Gated] = Map(
+    "q_fetch_shards" -> Gated(fetchShards(_, _), fetchShardsSql),
+    "q_idn_homograph" -> Gated(idnHomograph(_, _), idnHomographSql),
+    "q_url_strip_tracking" -> Gated(urlStripTracking(_, _), urlStripTrackingSql),
+    "q_recrawl_etag" -> Gated(recrawlEtag(_, _), recrawlEtagSql),
+    "q_revision_ratio" -> Gated(revisionRatio(_, _), revisionRatioSql),
+    "q_host_communities" -> Gated(hostCommunities(_, _), hostCommunitiesSql),
+    "q_robots_cache_ttl" -> Gated(robotsCacheTtl(_, _), robotsCacheTtlSql),
+    "q_outlinks" -> Gated(outlinks(_, _), outlinksSql),
+    "q_domain_edges" -> Gated(domainEdges(_, _), domainEdgesSql),
+    "q_robots_gate" -> Gated(robotsGate(_, _), robotsGateSql),
+    "q_anchor_terms" -> Gated(anchorTerms(_, _), anchorTermsSql),
+    "q_pagerank" -> Gated(pagerank(_, _), pagerankSql),
+    "q_robots_txt_gate" -> Gated(robotsTxtGate(_, _), robotsTxtGateSql),
+    "q_hits_scores" -> Gated(hitsScores(_, _), hitsScoresSql),
+    "q_crawl_budget" -> Gated(crawlBudget(_, _), crawlBudgetSql),
+    "q_url_trap" -> Gated(urlTrapGate(_, _), urlTrapGateSql),
+    "q_surt_key" -> Gated(surtKeys(_, _), surtKeysSql),
+    "q_cdx_index" -> Gated(cdxIndex(_, _), cdxIndexSql),
+    "q_html_meta" -> Gated(htmlMeta(_, _), htmlMetaSql),
+    "q_sitemap_urls" -> Gated(sitemapUrls(_, _), sitemapUrlsSql),
+    "q_sitemap_coverage" -> Gated(sitemapCoverage(_, _), sitemapCoverageSql),
+    "q_politeness_audit" -> Gated(politenessAudit(_, _), politenessAuditSql),
+    "q_robots_delta" -> Gated(robotsDelta(_, _), robotsDeltaSql),
+    "q_bib_coupling" -> Gated(bibCoupling(_, _), bibCouplingSql),
+    "q_feed_items" -> Gated(feedItems(_, _), feedItemsSql),
+    "q_frontier_schedule" -> Gated(frontierSchedule(_, _), frontierScheduleSql),
+    "q_robots_sitemaps" -> Gated(robotsSitemaps(_, _), robotsSitemapsSql),
+    "q_crawl_delay" -> Gated(crawlDelay(_, _), crawlDelaySql),
+    "q_redirect_resolve" -> Gated(redirectResolve(_, _), redirectResolveSql),
+    "q_fetch_plan" -> Gated(fetchPlan(_, _), fetchPlanSql),
+    "q_recrawl_schedule" -> Gated(recrawlSchedule(_, _), recrawlScheduleSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -383,25 +384,14 @@ object MultimodalOps {
       |  CAST(sum((ci * 97 + 3 * d) % 256) AS BIGINT) AS sum_b
       |FROM i GROUP BY d""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_media_meta" -> (mediaMeta(_, _)),
-    "q_media_frames" -> (mediaFrames(_, _)),
-    "q_media_features" -> (mediaFeatures(_, _)),
-    "q_media_resize" -> (mediaResize(_, _)),
-    "q_media_decode_bmp" -> (mediaDecodeBmp(_, _)),
-    "q_media_decode_png" -> (mediaDecodePng(_, _)),
-    "q_media_decode_jpeg" -> (mediaDecodeJpeg(_, _)),
-    "q_media_decode_gif" -> (mediaDecodeGif(_, _)),
-    "q_media_decode_wav" -> (mediaDecodeWav(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_media_meta" -> mediaMetaSql,
-    "q_media_frames" -> mediaFramesSql,
-    "q_media_features" -> mediaFeaturesSql,
-    "q_media_resize" -> mediaResizeSql,
-    "q_media_decode_bmp" -> mediaDecodeBmpSql,
-    "q_media_decode_png" -> mediaDecodePngSql,
-    "q_media_decode_jpeg" -> mediaDecodeJpegSql,
-    "q_media_decode_gif" -> mediaDecodeGifSql,
-    "q_media_decode_wav" -> mediaDecodeWavSql)
+  def registry: Map[String, Gated] = Map(
+    "q_media_meta" -> Gated(mediaMeta(_, _), mediaMetaSql),
+    "q_media_frames" -> Gated(mediaFrames(_, _), mediaFramesSql),
+    "q_media_features" -> Gated(mediaFeatures(_, _), mediaFeaturesSql),
+    "q_media_resize" -> Gated(mediaResize(_, _), mediaResizeSql),
+    "q_media_decode_bmp" -> Gated(mediaDecodeBmp(_, _), mediaDecodeBmpSql),
+    "q_media_decode_png" -> Gated(mediaDecodePng(_, _), mediaDecodePngSql),
+    "q_media_decode_jpeg" -> Gated(mediaDecodeJpeg(_, _), mediaDecodeJpegSql),
+    "q_media_decode_gif" -> Gated(mediaDecodeGif(_, _), mediaDecodeGifSql),
+    "q_media_decode_wav" -> Gated(mediaDecodeWav(_, _), mediaDecodeWavSql))
 }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.Gated
+import graft.ops.TextOps.docs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,9 +24,6 @@ import org.apache.spark.sql.functions._
   * a Common-Crawl training pipeline adds on top.
   */
 object QualityOps {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   private def words(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir).selectExpr(
@@ -474,21 +473,12 @@ object QualityOps {
       |    - (CAST(n_hosts AS DOUBLE) + 1.0) / n_hosts, 6) AS gini
       |FROM a""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_powerlaw_tail" -> (powerlawTail(_, _)),
-    "q_host_gini" -> (hostGini(_, _)),
-    "q_decontaminate" -> (decontaminate(_, _)),
-    "q_blocklist_gate" -> (blocklistGate(_, _)),
-    "q_robust_outliers" -> (robustOutliers(_, _)),
-    "q_dist_shift" -> (distShift(_, _)),
-    "q_lm_perplexity" -> (lmPerplexity(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_powerlaw_tail" -> powerlawTailSql,
-    "q_host_gini" -> hostGiniSql,
-    "q_decontaminate" -> decontaminateSql,
-    "q_blocklist_gate" -> blocklistGateSql,
-    "q_robust_outliers" -> robustOutliersSql,
-    "q_dist_shift" -> distShiftSql,
-    "q_lm_perplexity" -> lmPerplexitySql)
+  def registry: Map[String, Gated] = Map(
+    "q_powerlaw_tail" -> Gated(powerlawTail(_, _), powerlawTailSql),
+    "q_host_gini" -> Gated(hostGini(_, _), hostGiniSql),
+    "q_decontaminate" -> Gated(decontaminate(_, _), decontaminateSql),
+    "q_blocklist_gate" -> Gated(blocklistGate(_, _), blocklistGateSql),
+    "q_robust_outliers" -> Gated(robustOutliers(_, _), robustOutliersSql),
+    "q_dist_shift" -> Gated(distShift(_, _), distShiftSql),
+    "q_lm_perplexity" -> Gated(lmPerplexity(_, _), lmPerplexitySql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, lit, min, posexplode, sum, when}
 
@@ -328,10 +329,8 @@ object RankOps {
       .foreach(r => { nt(r.getInt(0)) = r.getLong(1); nr(r.getInt(0)) = r.getLong(2) })
     val tt = nt.sum.toDouble
     val tr = nr.sum.toDouble
-    def halfUp(x: Double): Long =
-      new java.math.BigDecimal(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
     val llr = Array.tabulate(B) { b =>
-      halfUp(1000000.0 * math.log(
+      SimilarityOps.halfUp(1000000.0 * math.log(
         ((nt(b) + 1.0) / (tt + B)) / ((nr(b) + 1.0) / (tr + B))))
     }
     val llrLit = llr.mkString("array(", "L, ", "L)")
@@ -562,29 +561,16 @@ object RankOps {
       |FROM ov JOIN donor ON donor.qid = ov.qid
       |GROUP BY ov.qid""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bm25_topk" -> (bm25TopK(_, _)),
-    "q_tfidf_keywords" -> (tfidfKeywords(_, _)),
-    "q_posting_sizes" -> (postingSizes(_, _)),
-    "q_self_retrieval_rank" -> (selfRetrievalRank(_, _)),
-    "q_quality_classifier" -> (qualityClassifier(_, _)),
-    "q_calibration_bins" -> (calibrationBins(_, _)),
-    "q_quality_auc" -> (qualityAuc(_, _)),
-    "q_domain_quota" -> (domainQuota(_, _)),
-    "q_dsir_select" -> (dsirSelect(_, _)),
-    "q_rrf_fusion" -> (rrfFusion(_, _)),
-    "q_inverted_index" -> (invertedIndex(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_bm25_topk" -> bm25TopKSql,
-    "q_tfidf_keywords" -> tfidfKeywordsSql,
-    "q_posting_sizes" -> postingSizesSql,
-    "q_self_retrieval_rank" -> selfRetrievalRankSql,
-    "q_quality_classifier" -> qualityClassifierSql,
-    "q_calibration_bins" -> calibrationBinsSql,
-    "q_quality_auc" -> qualityAucSql,
-    "q_domain_quota" -> domainQuotaSql,
-    "q_dsir_select" -> dsirSelectSql,
-    "q_rrf_fusion" -> rrfFusionSql,
-    "q_inverted_index" -> invertedIndexSql)
+  def registry: Map[String, Gated] = Map(
+    "q_bm25_topk" -> Gated(bm25TopK(_, _), bm25TopKSql),
+    "q_tfidf_keywords" -> Gated(tfidfKeywords(_, _), tfidfKeywordsSql),
+    "q_posting_sizes" -> Gated(postingSizes(_, _), postingSizesSql),
+    "q_self_retrieval_rank" -> Gated(selfRetrievalRank(_, _), selfRetrievalRankSql),
+    "q_quality_classifier" -> Gated(qualityClassifier(_, _), qualityClassifierSql),
+    "q_calibration_bins" -> Gated(calibrationBins(_, _), calibrationBinsSql),
+    "q_quality_auc" -> Gated(qualityAuc(_, _), qualityAucSql),
+    "q_domain_quota" -> Gated(domainQuota(_, _), domainQuotaSql),
+    "q_dsir_select" -> Gated(dsirSelect(_, _), dsirSelectSql),
+    "q_rrf_fusion" -> Gated(rrfFusion(_, _), rrfFusionSql),
+    "q_inverted_index" -> Gated(invertedIndex(_, _), invertedIndexSql))
 }

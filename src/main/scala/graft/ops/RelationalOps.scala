@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -627,45 +628,24 @@ object RelationalOps {
       |FROM r
       |WHERE rn % greatest(ns // 8, 1) = 0 AND rn // greatest(ns // 8, 1) < 8""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "q_range_bounds" -> (rangeBounds(_, _)),
-    "q_salted_join" -> (saltedJoin(_, _)),
-    "q_q3_shipping" -> (q3Shipping(_, _)),
-    "q_asof_join" -> (asofJoin(_, _)),
-    "q_range_join" -> (rangeJoin(_, _)),
-    "q_bucketed_join" -> (bucketedJoin(_, _)),
-    "q_rollup_totals" -> (rollupTotals(_, _)),
-    "q_page_rollup" -> (pageRollup(_, _)),
-    "q_derived_fields" -> (derivedFields(_, _)),
-    "q_resume_antijoin" -> (resumeAntijoin(_, _)),
-    "q_window_first" -> (windowFirst(_, _)),
-    "q_sessionize" -> (sessionize(_, _)),
-    "q_event_funnel" -> (eventFunnel(_, _)),
-    "q_topk_per_group" -> (topkPerGroup(_, _)),
-    "q_json_extract" -> (jsonExtract(_, _)),
-    "q_date_derive" -> (dateDerive(_, _)),
-    "q_zorder_layout" -> (zorderLayout(_, _)),
-    "q_hourly_window" -> (hourlyWindow(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q_range_bounds" -> rangeBoundsSql,
-    "q_salted_join" -> saltedJoinSql,
-    "q_q3_shipping" -> q3ShippingSql,
-    "q_asof_join" -> asofJoinSql,
-    "q_range_join" -> rangeJoinSql,
-    "q_bucketed_join" -> bucketedJoinSql,
-    "q_rollup_totals" -> rollupTotalsSql,
-    "q_page_rollup" -> pageRollupSql,
-    "q_derived_fields" -> derivedFieldsSql,
-    "q_resume_antijoin" -> resumeAntijoinSql,
-    "q_window_first" -> windowFirstSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_event_funnel" -> eventFunnelSql,
-    "q_topk_per_group" -> topkPerGroupSql,
-    "q_json_extract" -> jsonExtractSql,
-    "q_date_derive" -> dateDeriveSql,
-    "q_zorder_layout" -> zorderLayoutSql,
-    "q_hourly_window" -> hourlyWindowSql)
+  def registry: Map[String, Gated] = Map(
+    "q1_agg" -> Gated(q1Agg(_, _), q1AggSql),
+    "q_range_bounds" -> Gated(rangeBounds(_, _), rangeBoundsSql),
+    "q_salted_join" -> Gated(saltedJoin(_, _), saltedJoinSql),
+    "q_q3_shipping" -> Gated(q3Shipping(_, _), q3ShippingSql),
+    "q_asof_join" -> Gated(asofJoin(_, _), asofJoinSql),
+    "q_range_join" -> Gated(rangeJoin(_, _), rangeJoinSql),
+    "q_bucketed_join" -> Gated(bucketedJoin(_, _), bucketedJoinSql),
+    "q_rollup_totals" -> Gated(rollupTotals(_, _), rollupTotalsSql),
+    "q_page_rollup" -> Gated(pageRollup(_, _), pageRollupSql),
+    "q_derived_fields" -> Gated(derivedFields(_, _), derivedFieldsSql),
+    "q_resume_antijoin" -> Gated(resumeAntijoin(_, _), resumeAntijoinSql),
+    "q_window_first" -> Gated(windowFirst(_, _), windowFirstSql),
+    "q_sessionize" -> Gated(sessionize(_, _), sessionizeSql),
+    "q_event_funnel" -> Gated(eventFunnel(_, _), eventFunnelSql),
+    "q_topk_per_group" -> Gated(topkPerGroup(_, _), topkPerGroupSql),
+    "q_json_extract" -> Gated(jsonExtract(_, _), jsonExtractSql),
+    "q_date_derive" -> Gated(dateDerive(_, _), dateDeriveSql),
+    "q_zorder_layout" -> Gated(zorderLayout(_, _), zorderLayoutSql),
+    "q_hourly_window" -> Gated(hourlyWindow(_, _), hourlyWindowSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{asc, broadcast, coalesce, col, count, desc, expr, lit, posexplode, row_number, sum}
@@ -490,25 +491,14 @@ object SampleOps {
       |  st AS top_source_tokens
       |FROM r WHERE rn = 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_seq_pack" -> (seqPack(_, _)),
-    "q_shard_provenance" -> (shardProvenance(_, _)),
-    "q_token_shards" -> (tokenShards(_, _)),
-    "q_sample_stratified" -> (sampleStratified(_, _)),
-    "q_sample_fixed_k" -> (sampleFixedK(_, _)),
-    "q_sample_weighted" -> (sampleWeighted(_, _)),
-    "q_mix_temperature" -> (mixTemperature(_, _)),
-    "q_train_order" -> (trainOrder(_, _)),
-    "q_token_budget_mix" -> (tokenBudgetMix(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_seq_pack" -> seqPackSql,
-    "q_shard_provenance" -> shardProvenanceSql,
-    "q_token_shards" -> tokenShardsSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_sample_fixed_k" -> sampleFixedKSql,
-    "q_sample_weighted" -> sampleWeightedSql,
-    "q_mix_temperature" -> mixTemperatureSql,
-    "q_train_order" -> trainOrderSql,
-    "q_token_budget_mix" -> tokenBudgetMixSql)
+  def registry: Map[String, Gated] = Map(
+    "q_seq_pack" -> Gated(seqPack(_, _), seqPackSql),
+    "q_shard_provenance" -> Gated(shardProvenance(_, _), shardProvenanceSql),
+    "q_token_shards" -> Gated(tokenShards(_, _), tokenShardsSql),
+    "q_sample_stratified" -> Gated(sampleStratified(_, _), sampleStratifiedSql),
+    "q_sample_fixed_k" -> Gated(sampleFixedK(_, _), sampleFixedKSql),
+    "q_sample_weighted" -> Gated(sampleWeighted(_, _), sampleWeightedSql),
+    "q_mix_temperature" -> Gated(mixTemperature(_, _), mixTemperatureSql),
+    "q_train_order" -> Gated(trainOrder(_, _), trainOrderSql),
+    "q_token_budget_mix" -> Gated(tokenBudgetMix(_, _), tokenBudgetMixSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -329,27 +330,15 @@ object ScalarOps {
 
   // -------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_checkbox" -> (checkbox(_, _)),
-    "q_key_values" -> (keyValues(_, _)),
-    "q_camel_split" -> (camelSplit(_, _)),
-    "q_demographics" -> (demographics(_, _)),
-    "q_referral_clean" -> (referralClean(_, _)),
-    "q_fuzzy_top1" -> (fuzzyTop1(_, _)),
-    "q_token_sort_scores" -> (tokenSortScores(_, _)),
-    "q_union_branches" -> (unionBranches(_, _)),
-    "q_rolling_fp" -> (rollingFp(_, _)),
-    "q_winnowing" -> (winnowing(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_checkbox" -> checkboxSql,
-    "q_key_values" -> keyValuesSql,
-    "q_camel_split" -> camelSplitSql,
-    "q_demographics" -> demographicsSql,
-    "q_referral_clean" -> referralCleanSql,
-    "q_fuzzy_top1" -> fuzzyTop1Sql,
-    "q_token_sort_scores" -> tokenSortScoresSql,
-    "q_union_branches" -> unionBranchesSql,
-    "q_rolling_fp" -> rollingFpSql,
-    "q_winnowing" -> winnowingSql)
+  def registry: Map[String, Gated] = Map(
+    "q_checkbox" -> Gated(checkbox(_, _), checkboxSql),
+    "q_key_values" -> Gated(keyValues(_, _), keyValuesSql),
+    "q_camel_split" -> Gated(camelSplit(_, _), camelSplitSql),
+    "q_demographics" -> Gated(demographics(_, _), demographicsSql),
+    "q_referral_clean" -> Gated(referralClean(_, _), referralCleanSql),
+    "q_fuzzy_top1" -> Gated(fuzzyTop1(_, _), fuzzyTop1Sql),
+    "q_token_sort_scores" -> Gated(tokenSortScores(_, _), tokenSortScoresSql),
+    "q_union_branches" -> Gated(unionBranches(_, _), unionBranchesSql),
+    "q_rolling_fp" -> Gated(rollingFp(_, _), rollingFpSql),
+    "q_winnowing" -> Gated(winnowing(_, _), winnowingSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -306,6 +307,7 @@ object SimilarityOps {
     val pts = spark.read.parquet(s"$dir/embeddings.parquet")
       .selectExpr("cast(vec_id as long) as vec_id",
         "transform(embedding, x -> cast(round(cast(x as double) * 100) as bigint)) as q")
+      .localCheckpoint(true) // one scan feeds the seeds, both rounds and the assignment
 
     val seeds = pts.filter(col("vec_id") < k).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
@@ -329,9 +331,6 @@ object SimilarityOps {
             array_position(col("dks"), col("dist_key")).cast("int")))
         .drop("dks")
     }
-
-    def halfUp(x: Double): Long =
-      new java.math.BigDecimal(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
 
     var t = 0
     while (t < 2) {
@@ -593,7 +592,7 @@ object SimilarityOps {
        |  cast(array_position($dks, array_min($dks)) as int))""".stripMargin
   }
 
-  private def halfUp(x: Double): Long =
+  private[ops] def halfUp(x: Double): Long =
     new java.math.BigDecimal(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue
 
   /** 2 Lloyd rounds per subspace, all M subspaces in one pass per round:
@@ -776,31 +775,17 @@ object SimilarityOps {
        |FROM tr LEFT JOIN pq ON pq.q_id = tr.q_id AND pq.n_id = tr.n_id
        |GROUP BY tr.q_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_embed_quantize" -> (embedQuantize(_, _)),
-    "q_kmeans_assign" -> (kmeansAssign(_, _)),
-    "q_cluster_purity" -> (clusterPurity(_, _)),
-    "q_semdedup" -> (semDedup(_, _)),
-    "q_ann_brute" -> (annBrute(_, _)),
-    "q_ann_lsh" -> (annLsh(_, _)),
-    "q_ann_multiprobe" -> (annMultiprobe(_, _)),
-    "q_ann_ivf" -> (annIvf(_, _)),
-    "q_knn_label" -> (knnLabel(_, _)),
-    "q_ann_recall" -> (annRecall(_, _)),
-    "q_ann_pq" -> (annPq(_, _)),
-    "q_ann_pq_recall" -> (annPqRecall(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_embed_quantize" -> embedQuantizeSql,
-    "q_kmeans_assign" -> kmeansAssignSql,
-    "q_cluster_purity" -> clusterPuritySql,
-    "q_semdedup" -> semDedupSql,
-    "q_ann_brute" -> annBruteSql,
-    "q_ann_lsh" -> annLshSql,
-    "q_ann_multiprobe" -> annMultiprobeSql,
-    "q_ann_ivf" -> annIvfSql,
-    "q_knn_label" -> knnLabelSql,
-    "q_ann_recall" -> annRecallSql,
-    "q_ann_pq" -> annPqSql,
-    "q_ann_pq_recall" -> annPqRecallSql)
+  def registry: Map[String, Gated] = Map(
+    "q_embed_quantize" -> Gated(embedQuantize(_, _), embedQuantizeSql),
+    "q_kmeans_assign" -> Gated(kmeansAssign(_, _), kmeansAssignSql),
+    "q_cluster_purity" -> Gated(clusterPurity(_, _), clusterPuritySql),
+    "q_semdedup" -> Gated(semDedup(_, _), semDedupSql),
+    "q_ann_brute" -> Gated(annBrute(_, _), annBruteSql),
+    "q_ann_lsh" -> Gated(annLsh(_, _), annLshSql),
+    "q_ann_multiprobe" -> Gated(annMultiprobe(_, _), annMultiprobeSql),
+    "q_ann_ivf" -> Gated(annIvf(_, _), annIvfSql),
+    "q_knn_label" -> Gated(knnLabel(_, _), knnLabelSql),
+    "q_ann_recall" -> Gated(annRecall(_, _), annRecallSql),
+    "q_ann_pq" -> Gated(annPq(_, _), annPqSql),
+    "q_ann_pq_recall" -> Gated(annPqRecall(_, _), annPqRecallSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -635,25 +636,14 @@ object SketchOps {
       |FROM e CROSS JOIN s""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hll_registers" -> (hllRegisters(_, _)),
-    "q_hll_overlap" -> (hllOverlap(_, _)),
-    "q_kll_quantiles" -> (kllQuantiles(_, _)),
-    "q_cms_merge" -> (cmsMerge(_, _)),
-    "q_quantile_merge" -> (quantileMerge(_, _)),
-    "q_distinct_sketch" -> (distinctSketch(_, _)),
-    "q_heavy_hitters_cms" -> (heavyHittersCms(_, _)),
-    "q_bloom_seen" -> (bloomSeen(_, _)),
-    "q_length_quantiles" -> (lengthQuantiles(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_hll_registers" -> hllRegistersSql,
-    "q_hll_overlap" -> hllOverlapSql,
-    "q_kll_quantiles" -> kllQuantilesSql,
-    "q_cms_merge" -> cmsMergeSql,
-    "q_quantile_merge" -> quantileMergeSql,
-    "q_distinct_sketch" -> distinctSketchSql,
-    "q_heavy_hitters_cms" -> heavyHittersCmsSql,
-    "q_bloom_seen" -> bloomSeenSql,
-    "q_length_quantiles" -> lengthQuantilesSql)
+  def registry: Map[String, Gated] = Map(
+    "q_hll_registers" -> Gated(hllRegisters(_, _), hllRegistersSql),
+    "q_hll_overlap" -> Gated(hllOverlap(_, _), hllOverlapSql),
+    "q_kll_quantiles" -> Gated(kllQuantiles(_, _), kllQuantilesSql),
+    "q_cms_merge" -> Gated(cmsMerge(_, _), cmsMergeSql),
+    "q_quantile_merge" -> Gated(quantileMerge(_, _), quantileMergeSql),
+    "q_distinct_sketch" -> Gated(distinctSketch(_, _), distinctSketchSql),
+    "q_heavy_hitters_cms" -> Gated(heavyHittersCms(_, _), heavyHittersCmsSql),
+    "q_bloom_seen" -> Gated(bloomSeen(_, _), bloomSeenSql),
+    "q_length_quantiles" -> Gated(lengthQuantiles(_, _), lengthQuantilesSql))
 }

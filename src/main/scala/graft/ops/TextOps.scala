@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Gated
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
+  /** The `documents` table, untyped; shared by the text-side families. */
+  private[ops] def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
   // ----------------------------------------------------------- token count
@@ -1168,12 +1170,24 @@ object TextOps {
     */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    bpeMerges(spark, dir)
+      .map(m => (m.rank.toLong, m.lhs, m.rhs, m.pairCount))
+      .toDF("merge_rank", "lhs", "rhs", "pair_count")
+  }
+
+  /** The ≤ [[graft.kernels.BpeKernel.Rounds]] distributed training rounds
+    * behind [[bpeTrain]], and the one merge table every learned-BPE
+    * consumer broadcasts. Only the per-round argmax row reaches the
+    * driver; the word table never does.
+    */
+  private[graft] def bpeMerges(spark: SparkSession, dir: String)
+      : Seq[graft.kernels.BpeKernel.Merge] = {
+    import spark.implicits._
     val wf = wordFreq(spark, dir).as[(String, Long)].localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var r = 1
+    val merges = scala.collection.mutable.ArrayBuffer.empty[graft.kernels.BpeKernel.Merge]
     var done = false
-    while (r <= graft.kernels.BpeKernel.Rounds && !done) {
-      val ms = merges.toSeq.map(m => (m._2, m._3))
+    while (merges.length < graft.kernels.BpeKernel.Rounds && !done) {
+      val ms = merges.toSeq.map(m => (m.lhs, m.rhs))
       val best = wf
         .mapPartitions(_.flatMap { case (w, c) =>
           val s = graft.kernels.BpeKernel.segment(w, ms)
@@ -1188,12 +1202,11 @@ object TextOps {
       if (best.isEmpty) done = true
       else {
         val b = best.head
-        merges += ((r.toLong, b.getString(0), b.getString(1), b.getLong(2)))
-        r += 1
+        merges += graft.kernels.BpeKernel.Merge(
+          merges.length + 1, b.getString(0), b.getString(1), b.getLong(2))
       }
     }
     merges.toSeq
-      .toDF("merge_rank", "lhs", "rhs", "pair_count")
   }
 
   /** Shared WITH body for the three BPE oracles: words → seg_0 (chars)
@@ -1236,20 +1249,16 @@ object TextOps {
     s"WITH $bpeTrainCtes\n$sel"
   }
 
-  /** Re-segmentation with the LEARNED merges ([[bpeTrain]]'s table,
-    * re-derived here via the in-memory trainer over the collected
-    * word-frequency dim — the two trainers are provably identical, and
-    * each is independently oracle-gated). Per-doc piece count + full
-    * space-joined piece string, so one wrong merge application anywhere
-    * fails the hash; the oracle applies seg_N from the same unrolled
-    * training chain. Zero-shuffle apply: merges broadcast, the map is
-    * narrow per-row kernel work.
+  /** Re-segmentation with the LEARNED merges ([[bpeMerges]], the same
+    * distributed training [[bpeTrain]] returns, broadcast). Per-doc
+    * piece count + full space-joined piece string, so one wrong merge
+    * application anywhere fails the hash; the oracle applies seg_N from
+    * the same unrolled training chain. Zero-shuffle apply: merges
+    * broadcast, the map is narrow per-row kernel work.
     */
   def bpeApply(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wf = wordFreq(spark, dir).as[(String, Long)].collect().toSeq
-    val merges = graft.kernels.BpeKernel.train(wf).map(m => (m.lhs, m.rhs))
-    val bc = spark.sparkContext.broadcast(merges)
+    val bc = spark.sparkContext.broadcast(bpeMerges(spark, dir).map(m => (m.lhs, m.rhs)))
     docs(spark, dir)
       .selectExpr("cast(doc_id as long) as doc_id", "split(text, ' ') as ws")
       .as[(Long, Seq[String])]
@@ -1291,9 +1300,7 @@ object TextOps {
     */
   def oovRateBpe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wf = wordFreq(spark, dir).as[(String, Long)].collect().toSeq
-    val merges = graft.kernels.BpeKernel.train(wf).map(m => (m.lhs, m.rhs))
-    val bc = spark.sparkContext.broadcast(merges)
+    val bc = spark.sparkContext.broadcast(bpeMerges(spark, dir).map(m => (m.lhs, m.rhs)))
     docs(spark, dir)
       .selectExpr("cast(doc_id as long) as doc_id", "source", "split(text, ' ') as ws")
       .as[(Long, String, Seq[String])]
@@ -1355,9 +1362,7 @@ object TextOps {
     */
   def tokenFertility(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wf = wordFreq(spark, dir).as[(String, Long)].collect().toSeq
-    val merges = graft.kernels.BpeKernel.train(wf).map(m => (m.lhs, m.rhs))
-    val bc = spark.sparkContext.broadcast(merges)
+    val bc = spark.sparkContext.broadcast(bpeMerges(spark, dir).map(m => (m.lhs, m.rhs)))
     docs(spark, dir)
       .selectExpr("source", "split(text, ' ') as ws")
       .as[(String, Seq[String])]
@@ -1460,69 +1465,36 @@ object TextOps {
       |UNION ALL SELECT CAST(4 AS BIGINT), 'repetition', s4 FROM s
       |UNION ALL SELECT CAST(5 AS BIGINT), 'stopword_quality', s5 FROM s""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bpe_train" -> (bpeTrain(_, _)),
-    "q_quality_funnel" -> (qualityFunnel(_, _)),
-    "q_bpe_apply" -> (bpeApply(_, _)),
-    "q_token_fertility" -> (tokenFertility(_, _)),
-    "q_oov_rate_bpe" -> (oovRateBpe(_, _)),
-    "q_readability" -> (readability(_, _)),
-    "q_pmi_collocations" -> (pmiCollocations(_, _)),
-    "q_oov_rate" -> (oovRate(_, _)),
-    "q_wordpiece_tokens" -> (wordpieceTokens(_, _)),
-    "q_corpus_clean" -> (corpusClean(_, _)),
-    "q_mojibake_repair" -> (mojibakeRepair(_, _)),
-    "q_dedup_key" -> (dedupKeyQ(_, _)),
-    "q_norm_gain" -> (normGain(_, _)),
-    "q_script_mix" -> (scriptMixQ(_, _)),
-    "q_c4_line_filter" -> (c4LineFilterQ(_, _)),
-    "q_type_token_ratio" -> (typeTokenRatio(_, _)),
-    "q_token_count" -> (tokenCount(_, _)),
-    "q_lang_id" -> (langId(_, _)),
-    "q_lang_agreement" -> (langAgreement(_, _)),
-    "q_host_lang_entropy" -> (hostLangEntropy(_, _)),
-    "q_lang_id_cjk" -> (langIdCjk(_, _)),
-    "q_quality" -> (quality(_, _)),
-    "q_gopher_quality" -> (gopherQuality(_, _)),
-    "q_repetition_gate" -> (repetitionGate(_, _)),
-    "q_char_entropy" -> (charEntropy(_, _)),
-    "q_fingerprint" -> (fingerprint(_, _)),
-    "q_url_parse" -> (urlParse(_, _)),
-    "q_url_canon" -> (urlCanon(_, _)),
-    "q_pii_scrub" -> (piiScrub(_, _)),
-    "q_bpe_tokens" -> (bpeTokens(_, _)),
-    "q_host_quality" -> (hostQuality(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_readability" -> readabilitySql,
-    "q_quality_funnel" -> qualityFunnelSql,
-    "q_pmi_collocations" -> pmiCollocationsSql,
-    "q_oov_rate" -> oovRateSql,
-    "q_bpe_train" -> bpeTrainSql,
-    "q_bpe_apply" -> bpeApplySql,
-    "q_token_fertility" -> tokenFertilitySql,
-    "q_oov_rate_bpe" -> oovRateBpeSql,
-    "q_wordpiece_tokens" -> wordpieceTokensSql,
-    "q_corpus_clean" -> corpusCleanSql,
-    "q_mojibake_repair" -> mojibakeRepairSql,
-    "q_dedup_key" -> dedupKeySql,
-    "q_norm_gain" -> normGainSql,
-    "q_script_mix" -> scriptMixSql,
-    "q_c4_line_filter" -> c4LineFilterSql,
-    "q_type_token_ratio" -> typeTokenRatioSql,
-    "q_token_count" -> tokenCountSql,
-    "q_lang_id" -> langIdSql,
-    "q_lang_agreement" -> langAgreementSql,
-    "q_host_lang_entropy" -> hostLangEntropySql,
-    "q_lang_id_cjk" -> langIdCjkSql,
-    "q_quality" -> qualitySql,
-    "q_gopher_quality" -> gopherQualitySql,
-    "q_char_entropy" -> charEntropySql,
-    "q_repetition_gate" -> repetitionGateSql,
-    "q_fingerprint" -> fingerprintSql,
-    "q_url_parse" -> urlParseSql,
-    "q_url_canon" -> urlCanonSql,
-    "q_pii_scrub" -> piiScrubSql,
-    "q_bpe_tokens" -> bpeTokensSql,
-    "q_host_quality" -> hostQualitySql)
+  def registry: Map[String, Gated] = Map(
+    "q_bpe_train" -> Gated(bpeTrain(_, _), bpeTrainSql),
+    "q_quality_funnel" -> Gated(qualityFunnel(_, _), qualityFunnelSql),
+    "q_bpe_apply" -> Gated(bpeApply(_, _), bpeApplySql),
+    "q_token_fertility" -> Gated(tokenFertility(_, _), tokenFertilitySql),
+    "q_oov_rate_bpe" -> Gated(oovRateBpe(_, _), oovRateBpeSql),
+    "q_readability" -> Gated(readability(_, _), readabilitySql),
+    "q_pmi_collocations" -> Gated(pmiCollocations(_, _), pmiCollocationsSql),
+    "q_oov_rate" -> Gated(oovRate(_, _), oovRateSql),
+    "q_wordpiece_tokens" -> Gated(wordpieceTokens(_, _), wordpieceTokensSql),
+    "q_corpus_clean" -> Gated(corpusClean(_, _), corpusCleanSql),
+    "q_mojibake_repair" -> Gated(mojibakeRepair(_, _), mojibakeRepairSql),
+    "q_dedup_key" -> Gated(dedupKeyQ(_, _), dedupKeySql),
+    "q_norm_gain" -> Gated(normGain(_, _), normGainSql),
+    "q_script_mix" -> Gated(scriptMixQ(_, _), scriptMixSql),
+    "q_c4_line_filter" -> Gated(c4LineFilterQ(_, _), c4LineFilterSql),
+    "q_type_token_ratio" -> Gated(typeTokenRatio(_, _), typeTokenRatioSql),
+    "q_token_count" -> Gated(tokenCount(_, _), tokenCountSql),
+    "q_lang_id" -> Gated(langId(_, _), langIdSql),
+    "q_lang_agreement" -> Gated(langAgreement(_, _), langAgreementSql),
+    "q_host_lang_entropy" -> Gated(hostLangEntropy(_, _), hostLangEntropySql),
+    "q_lang_id_cjk" -> Gated(langIdCjk(_, _), langIdCjkSql),
+    "q_quality" -> Gated(quality(_, _), qualitySql),
+    "q_gopher_quality" -> Gated(gopherQuality(_, _), gopherQualitySql),
+    "q_repetition_gate" -> Gated(repetitionGate(_, _), repetitionGateSql),
+    "q_char_entropy" -> Gated(charEntropy(_, _), charEntropySql),
+    "q_fingerprint" -> Gated(fingerprint(_, _), fingerprintSql),
+    "q_url_parse" -> Gated(urlParse(_, _), urlParseSql),
+    "q_url_canon" -> Gated(urlCanon(_, _), urlCanonSql),
+    "q_pii_scrub" -> Gated(piiScrub(_, _), piiScrubSql),
+    "q_bpe_tokens" -> Gated(bpeTokens(_, _), bpeTokensSql),
+    "q_host_quality" -> Gated(hostQuality(_, _), hostQualitySql))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Gated
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -715,25 +716,14 @@ object StreamingOps {
       |SELECT CAST(ts_us // span AS BIGINT) AS widx, CAST(count(*) AS BIGINT) AS n
       |FROM b GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_join" -> (streamJoin(_, _)),
-    "q_stream_left_join" -> (streamLeftJoin(_, _)),
-    "q_stream_late" -> (streamLate(_, _)),
-    "q_stream_upsert" -> (streamUpsert(_, _)),
-    "q_stream_dedup" -> (streamDedup(_, _)),
-    "q_stream_dedup_evict" -> (streamDedupEvict(_, _)),
-    "q_stream_host_slots" -> (streamHostSlots(_, _)),
-    "q_stream_hourly" -> (streamHourlyEvents(_, _)),
-    "q_stream_sessionize" -> (streamSessionize(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_stream_join" -> streamJoinSql,
-    "q_stream_left_join" -> streamLeftJoinSql,
-    "q_stream_late" -> streamLateSql,
-    "q_stream_upsert" -> streamUpsertSql,
-    "q_stream_dedup" -> streamDedupSql,
-    "q_stream_dedup_evict" -> streamDedupEvictSql,
-    "q_stream_host_slots" -> streamHostSlotsSql,
-    "q_stream_hourly" -> streamHourlyEventsSql,
-    "q_stream_sessionize" -> streamSessionizeSql)
+  def registry: Map[String, Gated] = Map(
+    "q_stream_join" -> Gated(streamJoin(_, _), streamJoinSql),
+    "q_stream_left_join" -> Gated(streamLeftJoin(_, _), streamLeftJoinSql),
+    "q_stream_late" -> Gated(streamLate(_, _), streamLateSql),
+    "q_stream_upsert" -> Gated(streamUpsert(_, _), streamUpsertSql),
+    "q_stream_dedup" -> Gated(streamDedup(_, _), streamDedupSql),
+    "q_stream_dedup_evict" -> Gated(streamDedupEvict(_, _), streamDedupEvictSql),
+    "q_stream_host_slots" -> Gated(streamHostSlots(_, _), streamHostSlotsSql),
+    "q_stream_hourly" -> Gated(streamHourlyEvents(_, _), streamHourlyEventsSql),
+    "q_stream_sessionize" -> Gated(streamSessionize(_, _), streamSessionizeSql))
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.kernels.BpeKernel
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Adversarial fixtures for the learned-BPE trainer: overlapping-pair
   * counting, left-to-right non-overlapping application (equal to a
@@ -9,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle's exact mechanism; a plain single-space `replace` is not),
   * deterministic tie-breaks, second-order merges, and per-word-apply ≡
   * batch-evolution (the property `q_bpe_apply`'s broadcast path relies
-  * on).
+  * on), and the distributed trainer against this in-memory reference.
   */
-class BpeKernelSpec extends AnyFunSuite {
+class BpeKernelSpec extends SparkTestBase {
 
   test("applyMerge is left-to-right non-overlapping (replace semantics)") {
     assert(BpeKernel.applyMerge(Vector("a", "a", "a"), "a", "a") === Vector("aa", "a"))
@@ -88,5 +87,17 @@ class BpeKernelSpec extends AnyFunSuite {
     assert(!BpeKernel.covered("#scan"))
     assert(!BpeKernel.covered("scAn"))
     assert(BpeKernel.covered(""))
+  }
+
+  test("distributed training learns the same merges as the in-memory trainer") {
+    import spark.implicits._
+    val dir = "/root/testdata/sf0.001"
+    val wf = spark.read.parquet(s"$dir/documents.parquet")
+      .selectExpr("explode(split(text, ' ')) as w").where("w <> ''")
+      .groupBy("w").count()
+      .as[(String, Long)].collect().toSeq
+    val distributed = ops.TextOps.bpeMerges(spark, dir)
+    assert(distributed.length === BpeKernel.Rounds)
+    assert(distributed === BpeKernel.train(wf))
   }
 }

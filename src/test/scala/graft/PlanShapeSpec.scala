@@ -231,6 +231,10 @@ class PlanShapeSpec extends SparkTestBase {
     val p = plan("q_kmeans_assign")
     assert(!p.contains("Exchange"),
       "k-means assignment must inline the driver-held codebook, not shuffle")
+    // the seeds, both Lloyd rounds and the assignment read one
+    // checkpointed copy of the points, not embeddings.parquet again
+    assert("FileScan".r.findAllIn(p).isEmpty,
+      "q_kmeans_assign re-scans embeddings.parquet after training")
   }
 
   test("weighted sampling bounds the global top-k via MinK, never a window") {

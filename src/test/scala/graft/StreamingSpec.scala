@@ -130,7 +130,7 @@ class StreamingSpec extends SparkTestBase {
   test("oracle-gated streaming runs leave no query, view or live result behind") {
     def streamViews = spark.catalog.listTables().collect()
       .filter(t => t.isTemporary && t.name.startsWith("stream_")).map(_.name).toSeq
-    val runs = StreamingOps.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val runs = StreamingOps.registry.toSeq.sortBy(_._1).map { case (name, Gated(fn, _)) =>
       val out = fn(spark, "/root/testdata/sf0.001")
       val n = out.count()
       assert(n > 0, name)
