@@ -9,15 +9,13 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.Main graft.jar \
   *     --input  /data/pages        (parquet/iceberg dir of the pages table)
   *     --output /data/extracted    (day-partitioned parquet output)
-  *     --ledger /data/extracted/_ledger   (commit ledger for resume)
-  *     [--partitions N]            (url-hash repartition width; default
-  *                                  3x defaultParallelism)
+  *     [--ledger DIR]              (commit ledger for resume; default
+  *                                  <output>/_ledger)
   *     [--max-bytes B]             (poison-pill size cap, default 64 MiB)
-  *     [--host-salt S]             (>1 = partition by (host, salt bucket)
-  *                                  instead of url hash — keeps rows
-  *                                  host-grouped while spreading giant
-  *                                  hosts over S buckets)
   * }}}
+  *
+  * The job's one exchange is a rebalance on the day column: one file per
+  * day. Bad arguments exit 2 with a usage line before any session starts.
   *
   * On a cluster the session master/resources come from spark-submit; the
   * local[*] fallback is for ad-hoc runs. Re-running after a kill resumes:
@@ -25,18 +23,35 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  private val Flags = Set("input", "output", "ledger", "max-bytes")
+
+  private val Usage = "usage: graft.Main --input DIR --output DIR [--ledger DIR] [--max-bytes N]"
+
+  /** The flags by name, or why the arguments are refused. */
+  private[graft] def parseArgs(args: List[String]): Either[String, Map[String, String]] = {
+    def go(as: List[String]): Either[String, Map[String, String]] = as match {
+      case Nil => Right(Map.empty)
+      case k :: _ if !k.startsWith("--") => Left(s"unexpected argument '$k'")
+      case k :: _ if !Flags(k.drop(2)) => Left(s"unknown flag $k")
+      case k :: v :: rest if !v.startsWith("--") => go(rest).map(_ + (k.drop(2) -> v))
+      case k :: _ => Left(s"$k needs a value")
+    }
+    go(args).filterOrElse(o => o.contains("input") && o.contains("output"),
+      "--input and --output are required")
+      .filterOrElse(_.get("max-bytes").forall(_.toIntOption.exists(_ > 0)),
+        "--max-bytes needs a positive integer")
+  }
 
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
-    val input = opts.getOrElse("input",
-      sys.error("--input <pages parquet dir> is required"))
-    val output = opts.getOrElse("output",
-      sys.error("--output <dir> is required"))
+    val opts = parseArgs(args.toList) match {
+      case Right(o) => o
+      case Left(why) =>
+        System.err.println(s"graft.Main: $why\n$Usage")
+        sys.exit(2)
+    }
+    val output = opts("output")
     val ledger = opts.getOrElse("ledger", s"$output/_ledger")
+    val maxBytes = opts.get("max-bytes").map(_.toInt).getOrElse(64 << 20)
 
     val spark = SparkSession.builder()
       .appName("graft-extract")
@@ -47,15 +62,9 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val partitions = opts.get("partitions").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism * 3)
-    val maxBytes = opts.get("max-bytes").map(_.toInt).getOrElse(64 << 20)
-    val hostSalt = opts.get("host-salt").map(_.toInt).getOrElse(0)
-
-    val pages = spark.read.parquet(input)
+    val pages = spark.read.parquet(opts("input"))
     val res = ExtractJob.run(spark, pages, output, ledger,
-      ExtractPipeline.Conf(repartition = partitions, maxBytes = maxBytes,
-        hostSalt = hostSalt))
+      ExtractPipeline.Conf(maxBytes = maxBytes))
 
     println(
       s"""{"days_processed":${res.daysProcessed.length},"days_skipped":${res.daysSkipped},""" +

@@ -20,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * input, corrupt transport bodies, failed PDFs, or a kernel fault
   * (per-row catch); `kind` is the dispatch outcome after transport decode
   * (reference dispatch analog api.py:123-125). n_chars counts code
-  * points, like `length(text)` in SQL; the typed path's
-  * `ExtractedDoc.n_chars` counts UTF-16 units, so the two differ on text
-  * outside the Basic Multilingual Plane.
+  * points, like `length(text)` in SQL and the typed path's
+  * `ExtractedDoc.n_chars`.
   */
 case class ExtractDoc(child: Expression) extends UnaryExpression {
 

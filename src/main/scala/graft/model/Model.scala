@@ -22,8 +22,7 @@ final case class Span(begin: Int, end: Int, kind: String)
 
 /** Final per-document record: the page->document rollup of the reference's
   * combined JSON `{page_count, pages:[...]}` (api.py:261-269). `n_chars`
-  * is `text.length` in UTF-16 units; the SQL functions (`extract_doc`,
-  * `ExtractPipeline.extractText`) count code points instead.
+  * counts code points, as `extract_doc` and `ExtractPipeline.extractText` do.
   */
 final case class ExtractedDoc(
     url: String,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable day-partitioned extraction batch job (SURVEY §7.3).
@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
   *               Catalyst prunes whole partitions before any html byte
   *               is read; the resume scan never touches `html` of
   *               committed days.
-  *   extracted = ExtractPipeline.extract(todo)
-  *   write parquet partitionBy(p_day)        -- dynamic overwrite: a
-  *               killed job's half-written day is rewritten atomically
-  *               on retry (idempotent per partition = effectively
-  *               exactly-once per url)
+  *   extracted = ExtractPipeline.extract(todo)   -- narrow on scan splits
+  *   rebalance(p_day) → write partitionBy(p_day)  -- the job's one
+  *               exchange (TableFormat's write distribution): one file
+  *               per day. Dynamic overwrite: a killed job's half-written
+  *               day is rewritten atomically on retry (idempotent per
+  *               partition = effectively exactly-once per url)
   *   per-day metrics agg → ledger.commit     -- commit point AFTER data
   * }}}
   */
@@ -48,9 +49,10 @@ object ExtractJob {
       if (committedDays.isEmpty) withDay
       else withDay.filter(!col("p_day").isin(committedDays.toSeq: _*))
 
+    // no url exchange: a directory table cannot prune by url hash
     val metrics = new ExtractPipeline.Metrics(spark)
     val extracted = ExtractPipeline
-      .extract(spark, todo.drop("p_day"), conf, metrics)
+      .extract(spark, todo.drop("p_day"), conf.copy(repartition = 0), metrics)
       .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
 
     // idempotent partition replace through the TableFormat seam: only the

@@ -8,42 +8,30 @@ import org.apache.spark.util.LongAccumulator
 
 /** Spark wiring of the extraction kernel (SURVEY.md §7.1 `pipeline`).
   *
-  * Plan shape (EP1 restated, SURVEY §3). Two placements of the explicit
-  * url-hash exchange:
+  * Plan shape. [[ExtractJob]] runs the kernel narrow on scan splits, and
+  * its one exchange is the write's rebalance on the day column
+  * ([[TableFormat.overwritePartitions]]):
   * {{{
-  *   pre-shuffle (postShuffle=false):     post-shuffle (postShuffle=true):
-  *     scan(pages)                          scan(pages)
-  *       └─ repartition(P, xxhash64(url))     └─ mapPartitions(kernel)  -- narrow
-  *       └─ mapPartitions(kernel)             └─ repartition(P, xxhash64(url))
+  *   scan(pages) └─ mapPartitions(kernel) └─ rebalance(p_day) └─ write partitionBy(p_day)
   * }}}
-  * Both satisfy the north rule's explicit url-hash repartitioning (the
-  * output lands co-partitioned by url either way); they differ in WHAT
-  * crosses the wire. Pre-shuffle moves the raw `html` bytes — at crawl
-  * scale that is the whole 100 TB through the exchange — and buys
-  * row-level CPU balance into the kernel. Post-shuffle keeps the kernel
-  * narrow on scan splits and exchanges only the extracted text
-  * (typically 5-10x smaller); kernel-time imbalance between splits is
-  * absorbed by task-per-core oversubscription, not by pre-balancing
-  * rows. Measured at local[8]/300k docs, interleaved min-of-5: 142k
-  * docs/s pre vs 149k post (178k with no exchange at all —
-  * `repartition = 0`, the right call when the source is already
-  * bucketed by url). The local gap is small because a single-JVM
-  * shuffle is tmpfs-speed; on a real cluster the exchange is
-  * network-bound and scales with bytes moved, which is where shipping
-  * text instead of html pays. Post-shuffle is the default production
-  * shape; pre-shuffle remains for sources with pathological per-split
-  * skew (one parquet file of giant PDFs).
+  * Called on their own ([[extract]] / [[extractText]]: `graft.Bench`'s
+  * scaling pass, the `q_extract_*` queries), the transforms can key
+  * their output by url: by `xxhash64(url)` or by (host, salt), after the
+  * kernel (`postShuffle`, the default: the exchange carries extracted
+  * text, typically 5-10x smaller than the html) or before it (carries
+  * the raw html, and buys row-level balance into the kernel for sources
+  * with pathological per-split skew).
   *
   * The reference processed pages serially per request (api.py:217-228);
-  * here every executor core runs the kernel on its partition's rows with
-  * a single exchange end-to-end.
+  * here every executor core runs the kernel on its partition's rows.
   */
 object ExtractPipeline {
 
-  /** Job configuration.
+  /** Job configuration. [[ExtractJob]] uses only `maxBytes`: it ignores
+    * `repartition`, `hostSalt` and `postShuffle`, which shape the url
+    * exchange of the standalone transforms.
     * @param repartition  target partitions for the url-hash exchange;
-    *                     0 = keep scan partitioning (narrow, no shuffle) —
-    *                     right when the source is already well-bucketed.
+    *                     0 = keep scan partitioning (narrow, no shuffle).
     * @param maxBytes     poison-pill cap: larger blobs become error rows
     *                     (bounds kernel memory; SURVEY §4.3 spill row).
     * @param hostSalt     0/1 = partition by url hash (uniform — the
@@ -53,16 +41,19 @@ object ExtractPipeline {
     *                     politeness) but a giant host spreads over
     *                     `hostSalt` buckets instead of hot-spotting one
     *                     reducer (SURVEY §4.3 skew salting).
-    */
-  /** @param postShuffle  place the url-hash exchange AFTER the kernel
-    *                      (shuffles extracted text instead of raw html —
-    *                      see the plan-shape comparison above). Only
-    *                      meaningful with repartition > 0.
+    * @param postShuffle  place the url exchange AFTER the kernel (shuffles
+    *                     extracted text instead of raw html). Only
+    *                     meaningful with repartition > 0.
     */
   final case class Conf(repartition: Int = 0, maxBytes: Int = 64 << 20,
       hostSalt: Int = 0, postShuffle: Boolean = true)
 
-  /** Task-side counters (lineage/metrics, BASELINE.json north rule). */
+  /** Task-side counters (lineage/metrics, BASELINE.json north rule).
+    * In [[ExtractJob]] the kernel runs in the map stage of the write's
+    * rebalance; a retried stage re-applies its accumulator updates, so
+    * `docsOk`/`docsFailed` can over-count after a fetch failure. The
+    * ledger is exact: it reads the written data.
+    */
   final class Metrics(spark: SparkSession) extends Serializable {
     val docsOk: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs_ok")
     val docsFailed: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs_failed")
@@ -78,8 +69,8 @@ object ExtractPipeline {
       if (r.error == null) m.docsOk.add(1L) else m.docsFailed.add(1L)
       m.pagesOut.add(r.pageCount.toLong)
     }
-    ExtractedDoc(row.url, row.warc_ts, r.kind, r.pageCount, r.text, r.spans, r.text.length,
-      row.lang, r.error)
+    ExtractedDoc(row.url, row.warc_ts, r.kind, r.pageCount, r.text, r.spans,
+      r.text.codePointCount(0, r.text.length), row.lang, r.error)
   }
 
   /** The explicit url-hash exchange, applicable to any plan with a `url`
@@ -118,8 +109,7 @@ object ExtractPipeline {
     * n_chars) only: consumers needing spans, page counts, or the error
     * string use [[extract]]. text=null is the single failure shape here —
     * oversized blobs, failed PDFs, and kernel faults (the expression runs
-    * the same per-row catch as the typed path) all map to null. n_chars
-    * counts code points, where the typed path counts UTF-16 units.
+    * the same per-row catch as the typed path) all map to null.
     * Crawl-provided `text` surfaces ONLY for rows with no html bytes (the
     * passthrough branch), never as a fallback for failed extraction —
     * same branch the typed path takes.

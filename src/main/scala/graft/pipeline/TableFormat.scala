@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Iceberg mapping (not linkable in this container — no Iceberg runtime
   * on the classpath, so the parquet impl is the one wired in):
-  *  - overwritePartitions → `df.writeTo(t).overwritePartitions()`
+  *  - overwritePartitions → `df.writeTo(t).overwritePartitions()` with
+  *                          `write.distribution-mode=hash`
   *  - read               → `spark.table(t)` (snapshot isolation for free)
   *  - merge              → `MERGE INTO t USING u ON t.url = u.url WHEN
   *                          MATCHED THEN UPDATE SET * WHEN NOT MATCHED
@@ -23,6 +24,9 @@ trait TableFormat {
 
   /** Idempotent partition replace: exactly the `partitionCol` values
     * present in `df` are rewritten; other partitions are untouched.
+    * Write distribution: rows are clustered by `partitionCol` first
+    * (Iceberg's `hash` mode), so each value is one file whatever `df`'s
+    * partitioning; one above the advisory shuffle size splits into a few.
     */
   def overwritePartitions(df: DataFrame, table: String, partitionCol: String): Unit
 
@@ -96,9 +100,13 @@ object TableFormat {
 /** Parquet-directory implementation. */
 object ParquetFormat extends TableFormat {
 
+  /** Clustered by an AQE rebalance: small partitions coalesce to about a
+    * task per core, one above the advisory size splits; with AQE off it
+    * is a plain hash exchange on the column, still one file per value.
+    */
   override def overwritePartitions(df: DataFrame, table: String,
       partitionCol: String): Unit =
-    df.write
+    df.hint("rebalance", col(partitionCol)).write
       .partitionBy(partitionCol)
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
@@ -112,49 +120,39 @@ object ParquetFormat extends TableFormat {
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.option("mergeSchema", true).parquet(table)
 
-  /** Partition-granular diff from the ledger's snapshot ids: scan stays
-    * partition-pruned (the isin filter sits on the partition column), so
-    * an incremental consumer reads only the new partitions' files.
-    */
+  /** Partition-granular diff from the ledger's snapshot ids. */
   override def readSince(spark: SparkSession, table: String, ledgerDir: String,
-      sinceSnapshot: Long): DataFrame = {
-    val newer = Ledger.committed(ledgerDir).values
-      .filter(_.snapshot > sinceSnapshot).map(_.partition).toSeq
-    val base = read(spark, table)
-    if (newer.isEmpty) return base.filter(lit(false))
-    val byCol = newer.map { p =>
-      val i = p.indexOf('=')
-      require(i > 0, s"ledger partition '$p' is not col=value")
-      (p.substring(0, i), p.substring(i + 1))
-    }.groupBy(_._1)
-    // a row belongs to the diff if it falls in ANY newer partition —
-    // OR across partition columns (a ledger can carry entries keyed by
-    // different columns when merge() was called with different
-    // partitionCol values); AND would return the intersection
-    val pred = byCol.map { case (c, vs) =>
-      col(c).cast("string").isin(vs.map(_._2): _*)
-    }.reduce(_ || _)
-    base.filter(pred)
-  }
+      sinceSnapshot: Long): DataFrame =
+    committedWhere(spark, table, ledgerDir)(_ > sinceSnapshot)
 
-  /** Partition-granular time travel: keep partitions whose ledger entry
-    * was committed at or before `snapshot`. The ledger holds ONE entry
-    * per partition (latest commit wins), so a partition rewritten after
+  /** Partition-granular time travel. The ledger holds ONE entry per
+    * partition (latest commit wins), so a partition rewritten after
     * `snapshot` has entry.snapshot > snapshot and is excluded — "until
-    * rewritten" retention, stated in the trait doc. Same partition-
-    * pruned isin scan as readSince.
+    * rewritten" retention, stated in the trait doc.
     */
   override def readAt(spark: SparkSession, table: String, ledgerDir: String,
-      snapshot: Long): DataFrame = {
-    val asOf = Ledger.committed(ledgerDir).values
-      .filter(_.snapshot <= snapshot).map(_.partition).toSeq
+      snapshot: Long): DataFrame =
+    committedWhere(spark, table, ledgerDir)(_ <= snapshot)
+
+  /** Rows of the partitions whose ledger snapshot passes `keep`. The scan
+    * stays partition-pruned (the isin filter sits on the partition
+    * column), so a consumer reads only those partitions' files.
+    */
+  private def committedWhere(spark: SparkSession, table: String, ledgerDir: String)(
+      keep: Long => Boolean): DataFrame = {
+    val parts = Ledger.committed(ledgerDir).values
+      .filter(e => keep(e.snapshot)).map(_.partition).toSeq
     val base = read(spark, table)
-    if (asOf.isEmpty) return base.filter(lit(false))
-    val byCol = asOf.map { p =>
+    if (parts.isEmpty) return base.filter(lit(false))
+    val byCol = parts.map { p =>
       val i = p.indexOf('=')
       require(i > 0, s"ledger partition '$p' is not col=value")
       (p.substring(0, i), p.substring(i + 1))
     }.groupBy(_._1)
+    // a row belongs if it falls in ANY kept partition — OR across
+    // partition columns (a ledger can carry entries keyed by different
+    // columns when merge() was called with different partitionCol
+    // values); AND would return the intersection
     val pred = byCol.map { case (c, vs) =>
       col(c).cast("string").isin(vs.map(_._2): _*)
     }.reduce(_ || _)

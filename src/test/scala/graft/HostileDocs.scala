@@ -56,6 +56,12 @@ object HostileDocs {
     ("<html><body>" + "<div>" * 10000 + s"<p>$DeepDivText</p>" +
       "</div>" * 10000 + "</body></html>").getBytes(UTF_8)
 
+  /** Main text outside the Basic Multilingual Plane (an emoji and two
+    * CJK Extension B ideographs): each is two UTF-16 units and one code
+    * point, so a surface counting units instead of code points shows.
+    */
+  val AstralText = "astral plane main text \uD83D\uDE00 with \uD840\uDC00\uD840\uDC01 kept whole"
+
   val rows: Seq[PageRow] = {
     val html = PagesGen.htmlPage(Seq("hostile main content body here"), None, 5L).getBytes(UTF_8)
     val gz = gzip(html)
@@ -68,6 +74,7 @@ object HostileDocs {
       "cyclic-kids" -> cyclicKids,
       "deep-kids" -> deepKids,
       "deep-divs" -> deepDivs,
+      "astral" -> PagesGen.htmlPage(Seq(AstralText), None, 6L).getBytes(UTF_8),
       "no-bytes" -> Array.emptyByteArray
     ).map { case (name, b) =>
       PageRow(s"hostile://$name", new java.sql.Timestamp(0), b, CrawlText, "en")

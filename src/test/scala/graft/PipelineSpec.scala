@@ -25,7 +25,7 @@ class PipelineSpec extends SparkTestBase {
       val d = out(gp.row.url)
       assert(d.error == null, s"${gp.row.url}: ${d.error}")
       assert(d.text == gp.expected, s"${gp.kind} ${gp.row.url}")
-      assert(d.n_chars == d.text.length)
+      assert(d.n_chars == d.text.codePointCount(0, d.text.length))
       // span invariants over the merged doc
       var last = 0
       d.spans.foreach { s =>
@@ -39,8 +39,9 @@ class PipelineSpec extends SparkTestBase {
 
   /** Runs the typed path, `extractText` (`extract_main_text` under the
     * crawl-text rule) and the raw `extract_main_text` / `extract_doc`
-    * calls over the same rows and checks that they agree row by row.
-    * Returns the typed docs by url.
+    * calls over the same rows and checks that they agree row by row, on
+    * text and on `n_chars` (code points; 0 where a SQL surface's text is
+    * null). Returns the typed docs by url.
     */
   private def surfacesAgree(rows: Seq[PageRow]): Map[String, ExtractedDoc] = {
     graft.functions.ExtractDoc.register(spark)
@@ -48,7 +49,7 @@ class PipelineSpec extends SparkTestBase {
     val conf = ExtractPipeline.Conf(repartition = 4)
     val typed = ExtractPipeline.extract(spark, df, conf).collect().map(d => d.url -> d).toMap
     val fast = ExtractPipeline.extractText(spark, df, conf).collect()
-      .map(r => r.getAs[String]("url") -> r.getAs[String]("text")).toMap
+      .map(r => r.getAs[String]("url") -> (r.getAs[String]("text"), r.getAs[Int]("n_chars"))).toMap
     val sql = df.selectExpr("url", "length(html) = 0 as no_bytes",
       "extract_main_text(html) as t", "extract_doc(html) as d").collect()
     assert(typed.size == rows.size && fast.size == rows.size && sql.length == rows.size)
@@ -56,9 +57,14 @@ class PipelineSpec extends SparkTestBase {
       val (url, noBytes) = (r.getString(0), r.getBoolean(1))
       val (mainText, doc, t) = (r.getString(2), r.getStruct(3), typed(url))
       val expected = if (t.error != null || t.doc_kind == "empty") null else t.text
+      val chars = if (expected == null) 0 else t.n_chars
+      assert(t.n_chars == t.text.codePointCount(0, t.text.length), s"$url: typed n_chars")
       assert(doc.getString(0) == mainText, s"$url: extract_doc.text vs extract_main_text")
-      assert(fast(url) == expected, s"$url: extractText vs typed ${t.doc_kind}/${t.error}")
-      if (!noBytes) assert(mainText == expected, s"$url: extract_main_text vs typed")
+      assert(fast(url) == (expected, chars), s"$url: extractText vs typed ${t.doc_kind}/${t.error}")
+      if (!noBytes) {
+        assert(mainText == expected, s"$url: extract_main_text vs typed")
+        assert(doc.getInt(1) == chars, s"$url: extract_doc.n_chars vs typed")
+      }
       assert(doc.getString(2) == (if (noBytes) "passthrough" else t.doc_kind), s"$url: kind")
     }
     typed
@@ -144,6 +150,10 @@ class PipelineSpec extends SparkTestBase {
       assert(at(n).doc_kind == "pdf" && at(n).error != null && at(n).text == "", n)
     }
     assert(at("deep-divs").doc_kind == "html" && at("deep-divs").text == HostileDocs.DeepDivText)
+    // non-BMP text: n_chars counts code points, not UTF-16 units
+    val astral = at("astral")
+    assert(astral.text == HostileDocs.AstralText && astral.error == null)
+    assert(astral.n_chars == astral.text.length - 3, astral.n_chars)
   }
 
   test("relational rollupPages: page order by page_no, not arrival order") {
@@ -159,10 +169,17 @@ class PipelineSpec extends SparkTestBase {
     val outDir = tmpDir("graft-out")
     val ledgerDir = tmpDir("graft-ledger")
     val pages = corpusDf(200).cache()
+    // the write clusters by day, whatever the url-exchange settings say
+    def onePartFilePerDay(): Unit = {
+      val files = new java.io.File(outDir).listFiles().filter(_.getName.startsWith("p_day="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-"))).toMap
+      assert(files.nonEmpty && files.values.forall(_ == 1), files)
+    }
 
     val r1 = ExtractJob.run(spark, pages, outDir, ledgerDir,
       ExtractPipeline.Conf(repartition = 4))
     assert(r1.daysProcessed.nonEmpty)
+    onePartFilePerDay()
     assert(r1.docsOk + r1.docsFailed == 200)
     val full = spark.read.parquet(outDir).orderBy("url").collect()
     assert(full.length == 200)
@@ -189,6 +206,7 @@ class PipelineSpec extends SparkTestBase {
     val r3 = ExtractJob.run(spark, pages, outDir, ledgerDir,
       ExtractPipeline.Conf(repartition = 4))
     assert(r3.daysProcessed.map(s => s"p_day=${s.day}").toSet == dropped.toSet)
+    onePartFilePerDay()
     // only uncommitted days were recomputed
     val droppedRows = committed1.filter(e => dropped.contains(e._1)).values.map(_.rows).sum
     assert(r3.docsOk + r3.docsFailed == droppedRows)

@@ -1,5 +1,16 @@
 package graft
 
+import graft.gen.PagesGen
+import graft.pipeline.{ExtractJob, ExtractPipeline}
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.catalyst.expressions.XxHash64
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Plan-shape regression guard: the scale arguments in COVERAGE.md are
   * asserted against the actual physical plans, so a refactor that
   * silently reintroduces a full-corpus window top-k or loses a broadcast
@@ -11,6 +22,43 @@ class PlanShapeSpec extends SparkTestBase {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+
+  test("extract job: its one exchange is the write's rebalance on p_day, never a url hash") {
+    import spark.implicits._
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val writes = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val out = tmpDir("plan-job")
+    spark.listenerManager.register(listener)
+    try {
+      // url-exchange settings the job must ignore
+      ExtractJob.run(spark, PagesGen.corpus(120, seed = 3L).map(_.row).toDS().toDF(),
+        s"$out/t", s"$out/_ledger", ExtractPipeline.Conf(repartition = 4, hostSalt = 3))
+      val deadline = System.nanoTime() + 10000000000L // listener events arrive async
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"${writes.size} write plans captured")
+    val plan = writes.peek().executedPlan
+    val exchanges = aqe.collect(plan) { case e: Exchange => e }
+    def keys(e: Exchange) = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions
+      case _ => Nil
+    }
+    assert(!exchanges.exists(e => keys(e).exists(_.exists(_.isInstanceOf[XxHash64]))),
+      s"an exchange still partitions by xxhash64(url):\n$plan")
+    assert(exchanges.size == 1, s"${exchanges.size} exchanges in the job's write plan:\n$plan")
+    exchanges.head match {
+      case s: ShuffleExchangeExec =>
+        assert(s.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL, plan)
+        assert(keys(s).flatMap(_.references.map(_.name)) == Seq("p_day"), plan)
+      case other => fail(s"not a shuffle exchange: $other")
+    }
+  }
 
   test("ANN top-k runs through the bounded aggregator, never a window") {
     Seq("q_ann_brute", "q_ann_lsh", "q_ann_ivf", "q_knn_label").foreach { q =>

@@ -32,6 +32,19 @@ class TableFormatSpec extends SparkTestBase {
       ("u4", "2025-01-03", "delta"), ("u9", "2025-01-01", "nine")))
   }
 
+  test("overwritePartitions writes one file per partition value from a scattered input") {
+    val t = tmpDir("tf_cluster") + "/t"
+    // 8 input partitions, each holding rows of all three days
+    val rows = (0 until 240).map(i => (s"u$i", s"2025-01-0${i % 3 + 1}", s"text $i"))
+      .toDF("url", "p_day", "text").repartition(8)
+    assert(rows.rdd.getNumPartitions == 8)
+    ParquetFormat.overwritePartitions(rows, t, "p_day")
+    val files = new java.io.File(t).listFiles().filter(_.getName.startsWith("p_day="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-"))).toMap
+    assert(files == (1 to 3).map(d => s"p_day=2025-01-0$d" -> 1).toMap, files)
+    assert(ParquetFormat.read(spark, t).count() == 240)
+  }
+
   test("merge schema evolution: new column back-fills null, missing column preserved") {
     val t = tmpDir("tf_evolve") + "/t"
     ParquetFormat.overwritePartitions(base, t, "p_day")
