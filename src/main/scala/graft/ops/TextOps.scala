@@ -1175,12 +1175,39 @@ object TextOps {
       .toDF("merge_rank", "lhs", "rhs", "pair_count")
   }
 
-  /** The ≤ [[graft.kernels.BpeKernel.Rounds]] distributed training rounds
-    * behind [[bpeTrain]], and the one merge table every learned-BPE
-    * consumer broadcasts. Only the per-round argmax row reaches the
-    * driver; the word table never does.
+  /** The ≤ [[graft.kernels.BpeKernel.Rounds]] merges behind [[bpeTrain]],
+    * and the one merge table every learned-BPE consumer broadcasts. They
+    * are trained once per (session, input dir) and kept while the input's
+    * file listing (path, size, mtime) is unchanged, so a query loop trains
+    * once and a rewritten input retrains.
     */
   private[graft] def bpeMerges(spark: SparkSession, dir: String)
+      : Seq[graft.kernels.BpeKernel.Merge] = {
+    val input = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+    val files = input.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(input, true)
+    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    val known = bpeTables.synchronized(Option(bpeTables.get(spark)).flatMap(_.get(dir)))
+    known.collect { case (l, merges) if l == listing => merges }.getOrElse {
+      val merges = trainBpeMerges(spark, dir)
+      bpeTables.synchronized {
+        val bySession = Option(bpeTables.get(spark)).getOrElse(Map.empty)
+        bpeTables.put(spark, bySession.updated(dir, (listing, merges)))
+      }
+      merges
+    }
+  }
+
+  /** session → input dir → (input listing, merges); a session's tables go
+    * with it.
+    */
+  private val bpeTables = new java.util.WeakHashMap[SparkSession,
+    Map[String, (Seq[(String, Long, Long)], Seq[graft.kernels.BpeKernel.Merge])]]()
+
+  /** The distributed training rounds: only the per-round argmax row
+    * reaches the driver; the word table never does.
+    */
+  private def trainBpeMerges(spark: SparkSession, dir: String)
       : Seq[graft.kernels.BpeKernel.Merge] = {
     import spark.implicits._
     val wf = wordFreq(spark, dir).as[(String, Long)].localCheckpoint(true)

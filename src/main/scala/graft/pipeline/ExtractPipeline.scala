@@ -48,11 +48,11 @@ object ExtractPipeline {
   final case class Conf(repartition: Int = 0, maxBytes: Int = 64 << 20,
       hostSalt: Int = 0, postShuffle: Boolean = true)
 
-  /** Task-side counters (lineage/metrics, BASELINE.json north rule).
-    * In [[ExtractJob]] the kernel runs in the map stage of the write's
-    * rebalance; a retried stage re-applies its accumulator updates, so
-    * `docsOk`/`docsFailed` can over-count after a fetch failure. The
-    * ledger is exact: it reads the written data.
+  /** Task-side counters of a standalone [[extract]]. [[ExtractJob]] no
+    * longer uses them: it observes its per-day stats in the write stage.
+    * They stay only for the benchmark harness's `extractDoc(row, maxBytes,
+    * null)` call and PipelineSpec's counter check. A retried shuffle map
+    * stage re-applies its accumulator updates, so they can over-count.
     */
   final class Metrics(spark: SparkSession) extends Serializable {
     val docsOk: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs_ok")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table-format seam (SURVEY §7.3): the storage contract ExtractJob and
@@ -27,8 +27,15 @@ trait TableFormat {
     * Write distribution: rows are clustered by `partitionCol` first
     * (Iceberg's `hash` mode), so each value is one file whatever `df`'s
     * partitioning; one above the advisory shuffle size splits into a few.
+    * `observed` (an [[Observation]] and its named aggregate) is placed
+    * after that clustering, in the stage that writes the files: a result
+    * stage, where Spark merges one accumulator update per partition, so
+    * the aggregate stays exact when a task or the stage is retried. Below
+    * the clustering it would sit in a shuffle map stage, whose retries
+    * re-apply their updates.
     */
-  def overwritePartitions(df: DataFrame, table: String, partitionCol: String): Unit
+  def overwritePartitions(df: DataFrame, table: String, partitionCol: String,
+      observed: Option[(Observation, Column)] = None): Unit
 
   def read(spark: SparkSession, table: String): DataFrame
 
@@ -105,12 +112,14 @@ object ParquetFormat extends TableFormat {
     * is a plain hash exchange on the column, still one file per value.
     */
   override def overwritePartitions(df: DataFrame, table: String,
-      partitionCol: String): Unit =
-    df.hint("rebalance", col(partitionCol)).write
+      partitionCol: String, observed: Option[(Observation, Column)]): Unit = {
+    val clustered = df.hint("rebalance", col(partitionCol))
+    observed.fold(clustered) { case (o, agg) => clustered.observe(o, agg) }.write
       .partitionBy(partitionCol)
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .parquet(table)
+  }
 
   /** mergeSchema stands in for Iceberg's tracked table schema: after an
     * add-column merge, partitions written before the evolution lack the

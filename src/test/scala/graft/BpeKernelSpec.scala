@@ -100,4 +100,23 @@ class BpeKernelSpec extends SparkTestBase {
     assert(distributed.length === BpeKernel.Rounds)
     assert(distributed === BpeKernel.train(wf))
   }
+
+  test("one merge table per input: reused while unchanged, retrained after a rewrite") {
+    import spark.implicits._
+    val dir = tmpDir("bpe-input")
+    def write(docs: Seq[String]): Unit =
+      docs.toDF("text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def words(docs: Seq[String]) =
+      docs.flatMap(_.split(' ')).filter(_.nonEmpty).groupBy(identity).view.mapValues(_.size.toLong).toSeq
+    val a = Seq("lower lowest low low slow", "newer newest new knew")
+    val b = Seq("banana bandana band", "cabana ban bana")
+    write(a)
+    val first = ops.TextOps.bpeMerges(spark, dir)
+    assert(first === BpeKernel.train(words(a)))
+    assert(ops.TextOps.bpeMerges(spark, dir) eq first, "the unchanged input was trained again")
+    write(b)
+    val rewritten = ops.TextOps.bpeMerges(spark, dir)
+    assert(rewritten === BpeKernel.train(words(b)))
+    assert(rewritten !== first)
+  }
 }

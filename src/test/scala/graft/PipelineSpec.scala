@@ -2,12 +2,17 @@ package graft
 
 import graft.gen.PagesGen
 import graft.model.{ExtractedDoc, PageRow}
-import graft.pipeline.{ExtractJob, ExtractPipeline, Ledger}
+import graft.pipeline.{ExtractJob, ExtractPipeline, Ledger, ParquetFormat}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
-class PipelineSpec extends SparkTestBase {
+class PipelineSpec extends SparkTestBase with TimeLimits {
   import spark.implicits._
+
+  // a blocked Observation.get is interrupted, so a hang fails the test
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private def corpusDf(n: Int) =
     PagesGen.corpus(n, seed = 42L).map(_.row).toDS().toDF()
@@ -188,9 +193,11 @@ class PipelineSpec extends SparkTestBase {
     assert(committed1.size == r1.daysProcessed.size)
     assert(committed1.values.map(_.rows).sum == 200)
 
-    // rerun with everything committed: nothing recomputed
-    val r2 = ExtractJob.run(spark, pages, outDir, ledgerDir,
-      ExtractPipeline.Conf(repartition = 4))
+    // rerun with everything committed: nothing recomputed, and the write
+    // of no rows still completes its observation instead of blocking
+    val r2 = failAfter(120.seconds) {
+      ExtractJob.run(spark, pages, outDir, ledgerDir, ExtractPipeline.Conf(repartition = 4))
+    }
     assert(r2.daysProcessed.isEmpty)
     assert(r2.docsOk == 0 && r2.docsFailed == 0) // kernel never ran
 
@@ -216,6 +223,75 @@ class PipelineSpec extends SparkTestBase {
     assert(after.length == 200)
     assert(after.map(_.getAs[String]("url")).sameElements(full.map(_.getAs[String]("url"))))
     assert(after.map(_.getAs[String]("text")).sameElements(full.map(_.getAs[String]("text"))))
+    pages.unpersist()
+  }
+
+  /** Per day (rows, chars, errors) of the written table: the read-back
+    * query the job ran before it observed its write.
+    */
+  private def writtenStats(outDir: String): Map[String, (Long, Long, Long)] =
+    ParquetFormat.read(spark, outDir)
+      .withColumn("p_day", col("p_day").cast("string"))
+      .groupBy(col("p_day"))
+      .agg(
+        count(lit(1)).as("rows"),
+        sum(col("n_chars")).as("chars"),
+        sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("errors"))
+      .collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+
+  private def ledgerStats(ledgerDir: String): Map[String, (Long, Long, Long)] =
+    Ledger.committed(ledgerDir).values
+      .map(e => e.partition.stripPrefix("p_day=") -> ((e.rows, e.chars, e.errors))).toMap
+
+  private def pagesWithErrors(seed: Long) =
+    (PagesGen.corpus(160, seed).map(_.row) ++ HostileDocs.rows).toDS().toDF()
+
+  test("extract job: the ledger equals the written table day by day, and only days the run wrote") {
+    val outDir = tmpDir("graft-out")
+    val ledgerDir = tmpDir("graft-ledger")
+    // a killed earlier run left a day directory behind with no ledger
+    // entry, for a day this run's input does not have
+    val stale = new java.sql.Timestamp(java.sql.Date.valueOf("1999-01-01").getTime)
+    ExtractJob.run(spark, PagesGen.corpus(5, seed = 8L).map(_.row.copy(warc_ts = stale)).toDS().toDF(),
+      outDir, ledgerDir)
+    Ledger.drop(ledgerDir, "p_day=1999-01-01")
+
+    val pages = pagesWithErrors(seed = 17L)
+    val r = ExtractJob.run(spark, pages, outDir, ledgerDir)
+    val written = writtenStats(outDir) - "1999-01-01"
+    assert(written.values.map(_._3).sum > 0, "the hostile rows must give error rows")
+    assert(ledgerStats(ledgerDir) == written)
+    assert(r.daysProcessed.map(s => s.day -> ((s.rows, s.chars, s.errors))).toMap == written)
+    assert(r.daysProcessed.map(_.day) == written.keys.toSeq.sorted)
+    assert(r.docsFailed == written.values.map(_._3).sum)
+    assert(r.docsOk + r.docsFailed == pages.count())
+  }
+
+  test("extract job: a write task that fails once and is retried leaves the stats exact") {
+    val pages = pagesWithErrors(seed = 23L).cache()
+    def job(failOnce: Boolean) = {
+      val outDir = tmpDir("graft-out")
+      val ledgerDir = tmpDir("graft-ledger")
+      val key = "spark.sql.sources.commitProtocolClass"
+      val before = spark.conf.getOption(key)
+      if (failOnce) {
+        FailOnceCommitProtocol.arm()
+        spark.conf.set(key, classOf[FailOnceCommitProtocol].getName)
+      }
+      val r = try ExtractJob.run(spark, pages, outDir, ledgerDir)
+        finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      (r, ledgerStats(ledgerDir), writtenStats(outDir))
+    }
+    val (clean, cleanLedger, _) = job(failOnce = false)
+    val (retried, retriedLedger, retriedTable) = job(failOnce = true)
+    assert(FailOnceCommitProtocol.fired, "no write task failed")
+    assert(retriedLedger == retriedTable)
+    assert(retriedLedger == cleanLedger)
+    assert(retried.daysProcessed == clean.daysProcessed)
+    assert((retried.docsOk, retried.docsFailed) == ((clean.docsOk, clean.docsFailed)))
+    assert(retried.docsFailed > 0)
     pages.unpersist()
   }
 

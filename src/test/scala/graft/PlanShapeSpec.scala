@@ -2,13 +2,15 @@ package graft
 
 import graft.gen.PagesGen
 import graft.pipeline.{ExtractJob, ExtractPipeline}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Semaphore, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression guard: the scale arguments in COVERAGE.md are
@@ -33,17 +35,55 @@ class PlanShapeSpec extends SparkTestBase {
           writes.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    // top-level SQL executions between two marker jobs: the bus delivers
+    // in order, so a marker's end means every earlier event has arrived
+    val executions = new ConcurrentLinkedQueue[Long]()
+    val marker = "plan-shape-marker"
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val markersDone = new Semaphore(0)
+    val sqlListener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+          executions.add(s.executionId)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == marker)
+          markerJobs.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markersDone.release()
+    }
+    def drain(): Unit = {
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(markersDone.tryAcquire(30, TimeUnit.SECONDS), "marker job end never delivered")
+    }
     val out = tmpDir("plan-job")
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(sqlListener)
     try {
+      drain()
+      executions.clear()
       // url-exchange settings the job must ignore
       ExtractJob.run(spark, PagesGen.corpus(120, seed = 3L).map(_.row).toDS().toDF(),
         s"$out/t", s"$out/_ledger", ExtractPipeline.Conf(repartition = 4, hostSalt = 3))
       val deadline = System.nanoTime() + 10000000000L // listener events arrive async
       while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
+      drain()
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(sqlListener)
+    }
+    // the write is the job's only query: no read-back of its own table
+    assert(executions.size == 1, s"${executions.size} SQL executions in one ExtractJob.run")
     assert(writes.size == 1, s"${writes.size} write plans captured")
     val plan = writes.peek().executedPlan
+    // the day stats are observed in the write stage, above the rebalance
+    val observed = aqe.collect(plan) { case c: CollectMetricsExec => c }
+    assert(observed.size == 1, s"${observed.size} observations in the job's write plan:\n$plan")
+    assert(aqe.find(observed.head)(_.isInstanceOf[Exchange]).isDefined,
+      s"the observation is not above the write's exchange:\n$plan")
     val exchanges = aqe.collect(plan) { case e: Exchange => e }
     def keys(e: Exchange) = e.outputPartitioning match {
       case h: HashPartitioning => h.expressions

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for Spark-backed specs. */
+/** Shared local session for Spark-backed specs. Four cores, and two
+  * attempts per task, so a spec can fail a task once and see it retried.
+  */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 
@@ -14,7 +16,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+    .master("local[4,2]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
