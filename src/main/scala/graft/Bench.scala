@@ -30,18 +30,9 @@ import scala.util.control.NonFatal
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(cpus: Int): SparkSession =
+    GraftSession(s"local[$cpus]", s"graft-bench-$cpus", shufflePartitions = Some(cpus),
+      ui = Some(false), logLevel = Some("WARN"))
 
   /** Deterministic bench corpus parquet (generated once per JVM run;
     * generation is outside the timed window).
@@ -75,17 +66,10 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, n)
   }
 
-  /** 1 warmup + `Runs` timed passes, median — single-run times at this
-    * scale swing ±2s with GC/page-cache noise, enough to corrupt the
-    * scaling ratio (observed: one noisy pass turned 0.99 efficiency
-    * into 0.34).
+  /** Timed passes per median — single-run times at this scale swing ±2s
+    * with GC/page-cache noise.
     */
   private val Runs = 3
-  private def medianExtract(spark: SparkSession, corpusDir: String, repartition: Int): (Double, Long) = {
-    timeExtract(spark, corpusDir, repartition) // warmup (JIT + footers)
-    val rs = (1 to Runs).map(_ => timeExtract(spark, corpusDir, repartition))
-    (rs.map(_._1).sorted.apply(Runs / 2), rs.head._2)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.{ExtractJob, ExtractPipeline}
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point (SURVEY §7.1 module 5):
   *
@@ -53,14 +52,8 @@ object Main {
     val ledger = opts.getOrElse("ledger", s"$output/_ledger")
     val maxBytes = opts.get("max-bytes").map(_.toInt).getOrElse(64 << 20)
 
-    val spark = SparkSession.builder()
-      .appName("graft-extract")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.props.getOrElse("spark.master", "local[*]"), "graft-extract",
+      logLevel = Some("WARN"))
 
     val pages = spark.read.parquet(opts("input"))
     val res = ExtractJob.run(spark, pages, output, ledger,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit: prints the formatted physical plan of selected
   * queries so scan pruning (ReadSchema), filter pushdown (PushedFilters),
   * broadcast joins, and whole-stage codegen spans can be eyeballed and
@@ -12,13 +10,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val wanted = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("local[4]", "graft-plan-audit", shufflePartitions = Some(4),
+      ui = Some(false), logLevel = Some("ERROR"))
     val names =
       if (wanted.nonEmpty) wanted.toSeq.sorted
       else Seq("q1_agg", "q_derived_fields", "q_fuzzy_top1", "q_dedup_exact",

@@ -1,12 +1,10 @@
 package graft.functions
 
 import graft.kernels.ExtractKernel
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `extract_doc(html binary) -> struct<text string, n_chars int, kind
@@ -23,16 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * points, like `length(text)` in SQL and the typed path's
   * `ExtractedDoc.n_chars`.
   */
-case class ExtractDoc(child: Expression) extends UnaryExpression {
+case class ExtractDoc(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ExtractDoc.Schema
   override def nullable: Boolean = true // null only when the input is null
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"extract_doc expects BINARY, got ${child.dataType.catalogString}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     ExtractDoc.evalBytes(input.asInstanceOf[Array[Byte]])
@@ -65,13 +58,4 @@ object ExtractDoc {
     val kind = if (bytes.length == 0) ExtractKernel.KindPassthrough else r.kind
     InternalRow(text, if (text == null) 0 else text.numChars(), UTF8String.fromString(kind))
   }
-
-  val fnName: FunctionIdentifier = FunctionIdentifier("extract_doc")
-  val fnInfo: ExpressionInfo = new ExpressionInfo(classOf[ExtractDoc].getName, "extract_doc")
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "extract_doc takes exactly 1 argument")
-    ExtractDoc(args.head)
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
 }

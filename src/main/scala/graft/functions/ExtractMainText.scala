@@ -1,9 +1,8 @@
 package graft.functions
 
 import graft.kernels.ExtractKernel
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,18 +21,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * anything else → HTML boilerplate-strip, null/empty → null.
   */
 case class ExtractMainText(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
   // null is produced even for non-null input (empty bytes, PDF with no
   // extractable pages), so nullability can't be inherited from the child
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"extract_main_text expects BINARY, got ${child.dataType.catalogString}")
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     ExtractMainText.evalBytes(input.asInstanceOf[Array[Byte]])
@@ -67,19 +61,8 @@ object ExtractMainText {
   def evalBytes(bytes: Array[Byte]): UTF8String =
     UTF8String.fromString(ExtractKernel.extract(bytes, null, Int.MaxValue).textOrNull)
 
-  val fnName: FunctionIdentifier = FunctionIdentifier("extract_main_text")
-
-  val fnInfo: ExpressionInfo = new ExpressionInfo(
-    classOf[ExtractMainText].getName, "extract_main_text")
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "extract_main_text takes exactly 1 argument")
-    ExtractMainText(args.head)
-  }
-
-  /** Imperative registration for sessions built without extensions
-    * (idempotent — registerFunction overwrites).
+  /** Registers every graft SQL function on a session built without
+    * [[GraftExtensions]]; the benchmark harness compiles against this name.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
+  def register(spark: SparkSession): Unit = GraftExtensions.register(spark)
 }

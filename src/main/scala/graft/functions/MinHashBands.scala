@@ -1,11 +1,8 @@
 package graft.functions
 
 import graft.kernels.MinHashKernel
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,13 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * full `doGenCode`. `posexplode(minhash_bands(text))` yields the
   * (band_no, bkey) long form the LSH bucket join shuffles on.
   */
-case class MinHashBands(child: Expression) extends UnaryExpression {
+case class MinHashBands(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands expects STRING, got ${child.dataType.catalogString}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(t: Any): Any =
     MinHashKernel.minhashBands(t.asInstanceOf[UTF8String])
@@ -33,15 +27,4 @@ case class MinHashBands(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "minhash_bands"
-}
-
-object MinHashBands {
-  val fnName: FunctionIdentifier = FunctionIdentifier("minhash_bands")
-  val fnInfo: ExpressionInfo = new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands")
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "minhash_bands takes exactly 1 argument")
-    MinHashBands(args.head)
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
 }

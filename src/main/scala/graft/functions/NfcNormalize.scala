@@ -1,11 +1,8 @@
 package graft.functions
 
 import graft.kernels.UnicodeKernel
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,13 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * projection inside whole-stage codegen; the kernel's `isNormalized`
   * fast path makes the common all-ASCII row a scan, not an allocation.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc expects STRING, got ${child.dataType.catalogString}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(s: Any): Any =
     UTF8String.fromString(UnicodeKernel.nfc(s.asInstanceOf[UTF8String].toString))
@@ -39,16 +33,4 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "nfc"
-}
-
-object NfcNormalize {
-  val fnName: FunctionIdentifier = FunctionIdentifier("nfc")
-  val fnInfo: ExpressionInfo =
-    new ExpressionInfo(classOf[NfcNormalize].getName, "nfc")
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "nfc takes exactly 1 argument")
-    NfcNormalize(args.head)
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import graft.kernels.PorterStemmer
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,13 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (e.g. stemming both corpus terms and query terms before BM25) stays
   * inside whole-stage codegen. Registered via [[GraftExtensions]].
   */
-case class PorterStem(child: Expression) extends UnaryExpression {
+case class PorterStem(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"porter_stem expects STRING, got ${child.dataType.catalogString}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(s: Any): Any =
     UTF8String.fromString(PorterStemmer.stem(s.asInstanceOf[UTF8String].toString))
@@ -35,16 +29,4 @@ case class PorterStem(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "porter_stem"
-}
-
-object PorterStem {
-  val fnName: FunctionIdentifier = FunctionIdentifier("porter_stem")
-  val fnInfo: ExpressionInfo =
-    new ExpressionInfo(classOf[PorterStem].getName, "porter_stem")
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "porter_stem takes exactly 1 argument")
-    PorterStem(args.head)
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import graft.kernels.SimHashKernel
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,13 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * 64-×-`filter` composed-builtins pipeline that re-scanned the per-doc
   * word-hash array once per bit; identical output, same DuckDB oracle.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects STRING, got ${child.dataType.catalogString}")
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(t: Any): Any =
     SimHashKernel.simhash64(t.asInstanceOf[UTF8String])
@@ -34,15 +28,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "simhash64"
-}
-
-object SimHash64 {
-  val fnName: FunctionIdentifier = FunctionIdentifier("simhash64")
-  val fnInfo: ExpressionInfo = new ExpressionInfo(classOf[SimHash64].getName, "simhash64")
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1, "simhash64 takes exactly 1 argument")
-    SimHash64(args.head)
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import graft.kernels.FuzzyKernels
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,15 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * generated function.
   */
 case class TokenSortRatio(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_sort_ratio expects (STRING, STRING), got " +
-        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
+  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
 
   override def nullSafeEval(a: Any, b: Any): Any =
     FuzzyKernels.tokenSortRatio(
@@ -44,16 +36,4 @@ case class TokenSortRatio(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "token_sort_ratio"
-}
-
-object TokenSortRatio {
-  val fnName: FunctionIdentifier = FunctionIdentifier("token_sort_ratio")
-  val fnInfo: ExpressionInfo =
-    new ExpressionInfo(classOf[TokenSortRatio].getName, "token_sort_ratio")
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "token_sort_ratio takes exactly 2 arguments")
-    TokenSortRatio(args.head, args(1))
-  }
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnName, fnInfo, builder)
 }

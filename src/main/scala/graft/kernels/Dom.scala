@@ -46,13 +46,6 @@ object Dom {
     "(?i)\\barticle\\b|\\bcontent\\b|\\bmain\\b|\\bpost\\b|\\bentry\\b|" +
       "\\bstory\\b|\\bbody-?text\\b|\\btext-?body\\b|\\bpage-?body\\b")
 
-  def hintOf(classId: String): Byte = {
-    if (classId == null || classId.isEmpty) return HintNone
-    if (Neg.matcher(classId).find()) HintNeg
-    else if (Pos.matcher(classId).find()) HintPos
-    else HintNone
-  }
-
   /** Elements whose open implies closing an open `p` (HTML5 tolerance). */
   private val ClosesP: Set[String] = Set(
     "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "ul", "ol", "li",

@@ -99,8 +99,6 @@ object HtmlTokenizer {
   private val RawText: Set[String] =
     Set("script", "style", "textarea", "title", "xmp", "noframes")
 
-  def isVoid(name: String): Boolean = VoidTags.contains(name)
-
   private def isAsciiLetter(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 

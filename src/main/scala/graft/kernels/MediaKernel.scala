@@ -143,7 +143,7 @@ object MediaKernel {
     if (width <= 0 || height <= 0 || idat.size() == 0) return None
     if (width.toLong * height > 64L * 1024 * 1024) return None
     val channels = if (colorType == 2) 3 else 4
-    val raw = inflateAll(idat.toByteArray).getOrElse(return None)
+    val raw = Inflate(idat.toByteArray).filter(_.finished).getOrElse(return None).bytes
     val rowLen = width * channels
     if (raw.length.toLong < (rowLen + 1).toLong * height) return None
     // shared PNG row-filter reconstruction (same math as PDF /Predictor)
@@ -165,25 +165,6 @@ object MediaKernel {
       y += 1
     }
     Some(BmpImage(width, height, px))
-  }
-
-  private def inflateAll(data: Array[Byte]): Option[Array[Byte]] = {
-    try {
-      val inf = new java.util.zip.Inflater()
-      try {
-        inf.setInput(data)
-        val buf = new java.io.ByteArrayOutputStream(data.length * 4)
-        val chunk = new Array[Byte](8192)
-        var guard = 0
-        while (!inf.finished() && guard < (1 << 16)) {
-          val n = inf.inflate(chunk)
-          if (n == 0 && inf.needsInput()) guard = 1 << 16
-          else buf.write(chunk, 0, n)
-          guard += 1
-        }
-        if (inf.finished()) Some(buf.toByteArray) else None
-      } finally inf.end()
-    } catch { case _: StackOverflowError | NonFatal(_) => None }
   }
 
   /** Parse a PCM 16-bit LE mono/stereo WAV (RIFF chunk walk — fmt may be

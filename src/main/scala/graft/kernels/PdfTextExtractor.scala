@@ -291,7 +291,8 @@ object PdfTextExtractor {
       acc.flatMap { data =>
         f match {
           case "FlateDecode" | "Fl" =>
-            inflate(data).flatMap(applyPredictor(dict, _))
+            // a truncated stream keeps what it inflated, as viewers do
+            Inflate(data).flatMap(o => applyPredictor(dict, o.bytes))
           case "LZWDecode" | "LZW" =>
             lzwDecode(data, earlyChangeOf(dict)).flatMap(applyPredictor(dict, _))
           case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
@@ -1032,25 +1033,6 @@ object PdfTextExtractor {
       }
     }
     out
-  }
-
-  private def inflate(data: Array[Byte]): Option[Array[Byte]] = {
-    try {
-      val inf = new java.util.zip.Inflater()
-      try {
-        inf.setInput(data)
-        val buf = new java.io.ByteArrayOutputStream(data.length * 4)
-        val chunk = new Array[Byte](8192)
-        var guard = 0
-        while (!inf.finished() && guard < (1 << 16)) {
-          val k = inf.inflate(chunk)
-          if (k == 0 && inf.needsInput()) guard = (1 << 16) // truncated
-          else buf.write(chunk, 0, k)
-          guard += 1
-        }
-        Some(buf.toByteArray)
-      } finally inf.end()
-    } catch { case _: StackOverflowError | NonFatal(_) => None }
   }
 
   private def indexOf(hay: Array[Byte], needle: String, from: Int): Int = {

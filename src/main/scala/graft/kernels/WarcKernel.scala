@@ -378,26 +378,10 @@ object WarcKernel {
     * well-known population of real servers ships raw deflate; try zlib
     * first, fall back to raw (nowrap) — what every browser does.
     */
-  private def inflate(b: Array[Byte], maxOut: Int = 64 << 20): Option[Array[Byte]] = {
-    def run(nowrap: Boolean): Option[Array[Byte]] =
-      try {
-        val inf = new java.util.zip.Inflater(nowrap)
-        inf.setInput(b)
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val chunk = new Array[Byte](8192)
-        var total = 0L
-        while (!inf.finished() && !inf.needsInput() && total <= maxOut) {
-          val n = inf.inflate(chunk)
-          if (n == 0 && !inf.finished()) return None // stuck (needs dict?)
-          out.write(chunk, 0, n)
-          total += n
-        }
-        val ok = inf.finished()
-        inf.end()
-        if (ok && total <= maxOut) Some(out.toByteArray) else None
-      } catch { case _: java.util.zip.DataFormatException => None }
-    run(false).orElse(run(true))
-  }
+  private def inflate(b: Array[Byte]): Option[Array[Byte]] =
+    Inflate(b).filter(_.finished)
+      .orElse(Inflate(b, nowrap = true).filter(_.finished))
+      .map(_.bytes)
 
   /** Decode HTTP/1.1 chunked transfer encoding (trailers ignored). */
   private def dechunk(b: Array[Byte]): Option[Array[Byte]] = {

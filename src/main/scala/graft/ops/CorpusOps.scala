@@ -598,7 +598,6 @@ object CorpusOps {
     * path means already-NFC text (most of a real crawl) never allocates.
     */
   def nfcNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(spark)
     val acute = new String(Character.toChars(0x0301))
     docs(spark, dir)
       .select(

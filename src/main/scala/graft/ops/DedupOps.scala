@@ -266,7 +266,6 @@ object DedupOps {
     // Hex output orders identically to the digest bytes, so the band
     // keys (and the DuckDB oracle) are byte-identical to the
     // composed-builtins formulation.
-    graft.functions.MinHashBands.register(spark)
     docs(spark, dir).selectExpr(
       "cast(doc_id as long) as doc_id",
       "minhash_bands(text) as bands")
@@ -407,7 +406,6 @@ object DedupOps {
     // a pure projection with zero shuffle; the only exchange in the
     // simhash pipeline is the band-bucket groupBy. The kernel reproduces
     // the md5-hex bit math exactly, so the DuckDB oracle is untouched.
-    graft.functions.SimHash64.register(spark)
     val fp = docs(spark, dir).selectExpr(
       "cast(doc_id as long) as doc_id",
       "simhash64(text) as fp64")
@@ -565,7 +563,6 @@ object DedupOps {
     * exact-Jaccard join touches candidates only.
     */
   def minhashEst(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MinHashBands.register(spark)
     val sigs = docs(spark, dir).selectExpr(
       "cast(doc_id as long) as doc_id",
       // [h1..h8] from the 4 band keys; 3-shingle set for the exact leg
@@ -999,7 +996,6 @@ object DedupOps {
     * projection the LSH dedup path uses. No corpus self-join at all.
     */
   def decontamFuzzy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MinHashBands.register(spark)
     val d = docs(spark, dir).selectExpr("cast(doc_id as long) as doc_id", "text")
     val evalBands = d.where("doc_id % 97 = 0")
       .selectExpr("concat(text, ' heldout eval copy') as text")

@@ -33,8 +33,6 @@ object DocPages {
     (if (df.rdd.getNumPartitions < par) df.repartition(par) else df).as[Doc]
   }
 
-  def docIdOf(url: String): Long = url.substring(url.lastIndexOf('/') + 1).toLong
-
   /** Chunk words into groups of `n`, preserving single-space joins.
     * Mirror of the oracle's `(ord-1)//n` grouping — keep in sync with
     * the SQL in SparkEntry.oracleSql.

@@ -528,7 +528,6 @@ object ExtractionOps {
     * produces byte-identical text.
     */
   def extractSqlExpr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ExtractMainText.register(spark)
     DocPages.htmlSingle(spark, dir).toDF()
       .selectExpr(
         "cast(substring_index(url, '/', -1) as long) as doc_id",
@@ -559,7 +558,6 @@ object ExtractionOps {
     * dispatch branches; crawl text fills the passthrough branch.
     */
   def extractDocStruct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ExtractDoc.register(spark)
     DocPages.mixed(spark, dir).toDF()
       .selectExpr(
         "cast(substring_index(url, '/', -1) as long) as doc_id",

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, li
   * 100 TB shape: everything per-document is in-row (tf, length, feature
   * hashes — text never shuffles); corpus-level statistics reduce to a
   * ONE-ROW aggregate broadcast back; the final top-k rides the bounded
-  * [[graft.functions.TopK]] aggregate, so the combine exchange carries
+  * [[graft.functions.KBest]] aggregate, so the combine exchange carries
   * at most k rows per partition.
   */
 object RankOps {
@@ -46,7 +46,7 @@ object RankOps {
         }.mkString("(", " + ", ") as score"))
       .where("score > 0")
     scored.groupBy()
-      .agg(graft.functions.TopK.topk(10)(col("doc_id"), col("score")).as("top"))
+      .agg(graft.functions.KBest.topk(10)(col("doc_id"), col("score")).as("top"))
       .select(posexplode(col("top")))
       .selectExpr("col.n_id as doc_id", "round(col.sim, 6) as score",
         "cast(pos + 1 as long) as rk")
@@ -363,7 +363,7 @@ object RankOps {
 
   /** Inverted-index construction — the IR-native structure under BM25:
     * per term, exact document frequency plus the head of its postings
-    * list (the [[graft.functions.MinK]] bounded aggregator ships ≤k
+    * list (the [[graft.functions.KBest]] bounded aggregator ships ≤k
     * doc ids per partition per term, so a stop-word's postings never
     * materialize in one buffer — at 10^12 docs full postings are
     * written out partitioned by term range, and this head+df row is the
@@ -381,7 +381,7 @@ object RankOps {
       .groupBy("term")
       .agg(
         count(lit(1)).cast("long").as("df"),
-        graft.functions.MinK.mink(PostingsHead)(col("h"), col("doc_id")).as("picks"))
+        graft.functions.KBest.mink(PostingsHead)(col("h"), col("doc_id")).as("picks"))
       .selectExpr("term", "df",
         // serialized scalar, not ARRAY<BIGINT>: the driver's comparator
         // sorts columns with pandas, which cannot factorize list cells

@@ -575,7 +575,7 @@ object RelationalOps {
     * a GLOBAL sort key histogram is unaffordable, so the partitioner
     * draws a sample, sorts THAT, and reads the k−1 split points off the
     * sample's quantile ranks. The sample is the FIXED-SIZE set of the
-    * 256 rows with the smallest md5 draw ([[graft.functions.MinK]],
+    * 256 rows with the smallest md5 draw ([[graft.functions.KBest]],
     * the deterministic analog of a size-k reservoir) — deterministic,
     * so both engines draw the SAME sample and the boundaries are exact
     * integers under the gate.
@@ -601,7 +601,7 @@ object RelationalOps {
         "md5(cast(concat('rb#', cast(doc_id as string)) as binary)) as h",
         "cast(size(split(text, ' ')) as long) * 4294967296L + cast(doc_id as long) as packed")
       .groupBy()
-      .agg(graft.functions.MinK.mink(k)(col("h"), col("packed")).as("picks"))
+      .agg(graft.functions.KBest.mink(k)(col("h"), col("packed")).as("picks"))
       .select(explode(col("picks")).as("c"))
       .selectExpr("c.id div 4294967296L as n_tokens",
         "c.id % 4294967296L as doc_id")

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions.{asc, broadcast, coalesce, col, count, des
   * 100 TB shape: the rate queries are pure map-side filters — the
   * decision needs only the row itself plus (for the budget mix) a
   * 20-row broadcast of per-source totals; document text never shuffles.
-  * The fixed-k sample uses the bounded [[graft.functions.MinK]]
+  * The fixed-k sample uses the bounded [[graft.functions.KBest]]
   * aggregate, so the exchange carries at most k rows per (partition,
   * group) instead of whole groups.
   */
@@ -55,7 +55,7 @@ object SampleOps {
       .selectExpr("source", "doc_id",
         "md5(cast(concat(cast(doc_id as string), '#fk') as binary)) as h")
     docs.groupBy("source")
-      .agg(graft.functions.MinK.mink(k)(col("h"), col("doc_id")).as("picks"))
+      .agg(graft.functions.KBest.mink(k)(col("h"), col("doc_id")).as("picks"))
       .select(col("source"), posexplode(col("picks")))
       .selectExpr("source", "col.id as doc_id", "cast(pos + 1 as long) as rk")
   }
@@ -144,7 +144,7 @@ object SampleOps {
     * no pow/ln on the comparison path, bit-identical in both engines.
     * Ordering "key DESC" is realized as "nibble-complemented key ASC"
     * (a strict order-reversing bijection on lowercase hex), which lets
-    * the bounded [[graft.functions.MinK]] aggregate do a GLOBAL top-k
+    * the bounded [[graft.functions.KBest]] aggregate do a GLOBAL top-k
     * with map-side capping: the exchange carries at most k rows per
     * partition — never the corpus — exactly the shape a 10^12-row
     * weighted pick needs. Weights here are w_s = (src_num % 4) + 1.
@@ -161,7 +161,7 @@ object SampleOps {
       .selectExpr("doc_id", "w", "wkey",
         "translate(wkey, '0123456789abcdef', 'fedcba9876543210') as inv")
     keyed.groupBy()
-      .agg(graft.functions.MinK.mink(k)(col("inv"), col("doc_id")).as("picks"))
+      .agg(graft.functions.KBest.mink(k)(col("inv"), col("doc_id")).as("picks"))
       .select(posexplode(col("picks")))
       .selectExpr("cast(pos + 1 as long) as rk", "col.id as doc_id",
         "translate(col.h, '0123456789abcdef', 'fedcba9876543210') as wkey")

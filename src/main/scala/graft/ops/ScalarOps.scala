@@ -191,7 +191,6 @@ object ScalarOps {
     * order-invariance on real corpus words.
     */
   def tokenSortScores(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TokenSortRatio.register(spark)
     t(spark, dir, "documents")
       .selectExpr("cast(doc_id as long) as doc_id",
         "cast(doc_id % 7 + 1 as int) as n",

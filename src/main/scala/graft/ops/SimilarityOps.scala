@@ -33,7 +33,7 @@ object SimilarityOps {
   private val DotExpr =
     "aggregate(zip_with(q_embedding, embedding, (a, b) -> cast(a as double) * cast(b as double)), 0D, (acc, x) -> acc + x)"
 
-  /** Shared top-k tail: the bounded [[graft.functions.TopK]] aggregate
+  /** Shared top-k tail: the bounded [[graft.functions.KBest]] aggregate
     * replaces the old `row_number() OVER (PARTITION BY q_id)` window —
     * with the window, EVERY scored corpus row for a query funneled into
     * one reducer before `rn <= k`; with the capped aggregator, map-side
@@ -42,7 +42,7 @@ object SimilarityOps {
     */
   private def topkTail(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy(col("q_id"))
-      .agg(graft.functions.TopK.topk(k)(col("vec_id"), col("sim")).as("cands"))
+      .agg(graft.functions.KBest.topk(k)(col("vec_id"), col("sim")).as("cands"))
       .select(col("q_id"), posexplode(col("cands")))
       .select(col("q_id"), col("col.n_id").as("n_id"),
         (col("pos") + 1).cast("long").as("rn"), col("col.sim").as("sim"))

@@ -115,7 +115,6 @@ object ExtractPipeline {
     * same branch the typed path takes.
     */
   def extractText(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): DataFrame = {
-    graft.functions.ExtractMainText.register(spark) // idempotent
     val htmlLen = coalesce(length(col("html")), lit(0))
     val input = if (conf.postShuffle) pages else keyedBy(pages, conf)
     val out = input

@@ -108,7 +108,6 @@ class CorpusOpsSpec extends SparkTestBase {
   }
 
   test("nfc SQL expression: null-safe, type-checked, codegen-evaluated") {
-    graft.functions.NfcNormalize.register(spark)
     val acute = new String(Character.toChars(0x0301))
     val rows = Seq(Some("e" + acute), None).toDF("s")
       .selectExpr("nfc(s) as n").collect()

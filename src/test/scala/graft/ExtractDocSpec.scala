@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.ExtractDoc
 import org.apache.spark.sql.Row
 
 /** Struct-returning extract_doc expression: SQL registration, dispatch
@@ -9,10 +8,7 @@ import org.apache.spark.sql.Row
 class ExtractDocSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def run(sql: String): Array[Row] = {
-    ExtractDoc.register(spark)
-    spark.sql(sql).collect()
-  }
+  private def run(sql: String): Array[Row] = spark.sql(sql).collect()
 
   test("html bytes -> text + n_chars + kind in one struct") {
     val para = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -40,7 +36,6 @@ class ExtractDocSpec extends SparkTestBase {
   }
 
   test("codegen path over a range scan matches per-row eval") {
-    ExtractDoc.register(spark)
     val rows = spark.range(50)
       .selectExpr("cast(concat('<p>', repeat('word ', 12), id, '</p>') as binary) as html")
       .selectExpr("extract_doc(html) as d")

@@ -1,15 +1,9 @@
 package graft
 
-import graft.functions.ExtractMainText
 import org.apache.spark.sql.AnalysisException
 
 /** SQL-surface tests for the native extract_main_text expression. */
 class ExtractMainTextSpec extends SparkTestBase {
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    ExtractMainText.register(spark)
-  }
 
   test("extract_main_text: html literal through spark.sql") {
     val html = "<html><nav>menu menu</nav><body><p>Real article text here, " +
@@ -32,6 +26,8 @@ class ExtractMainTextSpec extends SparkTestBase {
     val e = intercept[AnalysisException] {
       spark.sql("SELECT extract_main_text('oops')").collect()
     }
-    assert(e.getMessage.contains("extract_main_text expects BINARY"))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"))
+    assert(e.getMessage.contains("extract_main_text"))
+    assert(e.getMessage.contains("\"BINARY\""))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import graft.functions.MinHashBands
-
 /** The native minhash_bands expression must produce byte-identical band
   * keys to the composed-builtins formulation it replaced — that equality
   * is what keeps the DuckDB LSH oracles valid.
@@ -26,7 +24,6 @@ class MinHashBandsSpec extends SparkTestBase {
   }
 
   private def nativeBands(texts: Seq[String]): Seq[Seq[String]] = {
-    MinHashBands.register(spark)
     texts.toDF("text").selectExpr("minhash_bands(text) as bands")
       .collect().map(_.getSeq[String](0).toSeq).toSeq
   }
@@ -44,7 +41,6 @@ class MinHashBandsSpec extends SparkTestBase {
   }
 
   test("null in, null out") {
-    MinHashBands.register(spark)
     val r = Seq[Option[String]](None).toDF("text")
       .selectExpr("minhash_bands(text) as bands").collect().head
     assert(r.isNullAt(0))

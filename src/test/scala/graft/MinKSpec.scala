@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.MinK
-import graft.functions.MinK.HCand
+import graft.functions.KBest
+import graft.functions.KBest.HCand
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit behavior of the bounded min-k sampling aggregate: cap, total
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MinKSpec extends AnyFunSuite {
 
-  private def agg(k: Int) = new MinK.MinKAgg(k)
+  private def agg(k: Int) = KBest.minKAgg(k)
 
   test("buffer caps at k and keeps the k smallest hashes ascending") {
     val a = agg(3)

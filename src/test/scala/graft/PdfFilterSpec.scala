@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.PagesGen
-import graft.kernels.PdfTextExtractor
+import graft.kernels.{Inflate, PdfTextExtractor}
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -95,6 +95,50 @@ class PdfFilterSpec extends AnyFunSuite {
     val r = PdfTextExtractor.extract(pdf)
     assert(r.unsupported > 0)
     assert(r.pages.isEmpty)
+  }
+
+  /** A zlib stream of `n` zero bytes (about 1 KiB per MiB), deflated in
+    * 1 MiB writes so the test never holds the plain bytes.
+    */
+  private def deflatedZeros(n: Long): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(out)
+    val mib = new Array[Byte](1 << 20)
+    var left = n
+    while (left > 0) {
+      val k = math.min(left, mib.length.toLong).toInt
+      z.write(mib, 0, k)
+      left -= k
+    }
+    z.close()
+    out.toByteArray
+  }
+
+  test("bounded inflate: 64 MiB inflates, one byte more is refused, truncation is partial") {
+    val atCap = Inflate(deflatedZeros(Inflate.MaxOut)).get
+    assert(atCap.finished && atCap.bytes.length === Inflate.MaxOut)
+    assert(Inflate(deflatedZeros(Inflate.MaxOut + 1L)).isEmpty)
+    val whole = PagesGen.deflateBytes(lines.mkString("\n").getBytes(ISO_8859_1))
+    val cut = Inflate(whole.take(whole.length - 6)).get
+    assert(!cut.finished && lines.mkString("\n").startsWith(new String(cut.bytes, ISO_8859_1)))
+    assert(Inflate("not a zlib stream".getBytes(ISO_8859_1)).isEmpty)
+  }
+
+  test("a Flate bomb past the output cap counts unsupported; the other page still extracts") {
+    val bomb = deflatedZeros(Inflate.MaxOut + 1L)
+    val bytes = ("%PDF-1.4\n" +
+      "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+      "2 0 obj << /Type /Pages /Kids [3 0 R 5 0 R] /Count 2 >> endobj\n" +
+      "3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n" +
+      s"4 0 obj << /Length ${bomb.length} /Filter /FlateDecode >> stream\n")
+      .getBytes(ISO_8859_1) ++ bomb ++
+      ("\nendstream endobj\n" +
+        "5 0 obj << /Type /Page /Parent 2 0 R /Contents 6 0 R >> endobj\n" +
+        "6 0 obj << /Length 43 >> stream\nBT /F1 12 Tf 72 720 Td (after bomb) Tj ET\nendstream endobj\n" +
+        "trailer << /Root 1 0 R >>\n%%EOF\n").getBytes(ISO_8859_1)
+    val r = PdfTextExtractor.extract(bytes)
+    assert(r.unsupported === 1)
+    assert(r.pages.map(_.text).toSeq === Seq("after bomb"))
   }
 
   test("LZWDecode round-trips byte-identically") {

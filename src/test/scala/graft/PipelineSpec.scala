@@ -49,7 +49,6 @@ class PipelineSpec extends SparkTestBase with TimeLimits {
     * null). Returns the typed docs by url.
     */
   private def surfacesAgree(rows: Seq[PageRow]): Map[String, ExtractedDoc] = {
-    graft.functions.ExtractDoc.register(spark)
     val df = rows.toDS().toDF()
     val conf = ExtractPipeline.Conf(repartition = 4)
     val typed = ExtractPipeline.extract(spark, df, conf).collect().map(d => d.url -> d).toMap

@@ -80,7 +80,6 @@ class PorterStemmerSpec extends AnyFunSuite {
 
   test("porter_stem SQL expression: null-safe, codegen, type-checked") {
     import SparkTestBase.session.implicits._
-    graft.functions.PorterStem.register(SparkTestBase.session)
     val rows = Seq(Some("relational"), None).toDF("s")
       .selectExpr("porter_stem(s) as t").collect()
     assert(rows(0).getString(0) === "relat")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.SimHash64
 import org.scalacheck.Gen
 
 /** The native simhash64 expression must be bit-identical to the
@@ -25,7 +24,6 @@ class SimHash64Spec extends SparkTestBase {
 
   private def nativeFp(spark: org.apache.spark.sql.SparkSession, texts: Seq[String]) = {
     import spark.implicits._
-    SimHash64.register(spark)
     texts.toDF("text").selectExpr("simhash64(text) as fp")
       .collect().map(_.getString(0)).toSeq
   }
@@ -50,7 +48,6 @@ class SimHash64Spec extends SparkTestBase {
 
   test("null input yields null, wrong type fails analysis") {
     import spark.implicits._
-    SimHash64.register(spark)
     val r = Seq[Option[String]](None).toDF("text")
       .selectExpr("simhash64(text) as fp").collect().head
     assert(r.isNullAt(0))

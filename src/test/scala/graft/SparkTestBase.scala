@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for Spark-backed specs. Four cores, and two
-  * attempts per task, so a spec can fail a task once and see it retried.
+/** Shared local session for Spark-backed specs, built by the tools' own
+  * recipe ([[GraftSession]]): the graft SQL functions resolve without
+  * any registration. Four cores, and two attempts per task, so a spec can
+  * fail a task once and see it retried.
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
@@ -15,12 +17,6 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4,2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    GraftSession("local[4,2]", "graft-test", shufflePartitions = Some(4), ui = Some(false))
 }
