@@ -56,50 +56,20 @@ object MediaGen {
     val rgba = d % 2 == 1
     val channels = if (rgba) 4 else 3
     val rowLen = w * channels
-    // build filtered scanlines (tag + filtered bytes per row)
-    val raw = new Array[Byte]((rowLen + 1) * h)
-    val cur = new Array[Int](rowLen)
-    val prior = new Array[Int](rowLen)
+    val raw = new Array[Byte](rowLen * h)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        val o = x * channels
-        cur(o) = red(d, x, y); cur(o + 1) = green(d, x, y); cur(o + 2) = blue(d, x, y)
-        if (rgba) cur(o + 3) = ((x + y + d) % 256).toInt
+        val o = y * rowLen + x * channels
+        raw(o) = red(d, x, y).toByte; raw(o + 1) = green(d, x, y).toByte
+        raw(o + 2) = blue(d, x, y).toByte
+        if (rgba) raw(o + 3) = ((x + y + d) % 256).toByte
         x += 1
       }
-      val tag = y % 5
-      raw(y * (rowLen + 1)) = tag.toByte
-      var i = 0
-      while (i < rowLen) {
-        val a = if (i >= channels) cur(i - channels) else 0
-        val b = prior(i)
-        val c = if (i >= channels) prior(i - channels) else 0
-        val pred = tag match {
-          case 0 => 0
-          case 1 => a
-          case 2 => b
-          case 3 => (a + b) / 2
-          case _ =>
-            val p = a + b - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-            if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-        }
-        raw(y * (rowLen + 1) + 1 + i) = ((cur(i) - pred) & 0xff).toByte
-        i += 1
-      }
-      System.arraycopy(cur, 0, prior, 0, rowLen)
       y += 1
     }
-    // zlib-deflate the filtered stream
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val zbuf = new java.io.ByteArrayOutputStream(raw.length)
-    val chunk = new Array[Byte](8192)
-    while (!defl.finished()) zbuf.write(chunk, 0, defl.deflate(chunk))
-    defl.end()
-    val z = zbuf.toByteArray
+    val z = PagesGen.deflate(PagesGen.pngFilter(raw, rowLen, bpp = channels))
     // assemble chunks with CRCs
     val out = new java.io.ByteArrayOutputStream(z.length + 128)
     out.write(Array[Int](0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte), 0, 8)

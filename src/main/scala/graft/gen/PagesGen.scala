@@ -1,7 +1,8 @@
 package graft.gen
 
 import graft.model.PageRow
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.Charset
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.sql.Timestamp
 
 /** Deterministic synthetic page corpus (FIXTURES.md §1).
@@ -151,9 +152,70 @@ object PagesGen {
   private def escapePdf(s: String): String =
     s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
 
-  /** Minimal single-xref-free PDF: one content stream per page, text shown
-    * with Tj at descending y (14pt leading over a 12pt font so the
-    * y-cluster rule separates lines). `compress` exercises FlateDecode.
+  private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
+
+  private def pdfObj(n: Int, body: String): Array[Byte] = s"$n 0 obj $body endobj\n".getBytes(UTF_8)
+
+  /** Stream object; `keys` follow /Length in its dictionary. */
+  private def pdfStream(n: Int, keys: String, payload: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(payload.length + 96)
+    out.write(s"$n 0 obj << /Length ${payload.length}$keys >> stream\n".getBytes(UTF_8))
+    out.write(payload)
+    out.write("\nendstream endobj\n".getBytes(UTF_8))
+    out.toByteArray
+  }
+
+  /** Font resource `/F1`: Type1 Helvetica, `enc` appended to its dictionary. */
+  private def helvetica(enc: String): (String, String) =
+    "1" -> s"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica$enc >>"
+
+  /** The one PDF object writer behind every `pdfBytes*` fixture (no
+    * xref): catalog (obj 1), page tree (obj 2), then for page i a page
+    * object (3 + 2i) whose font resource is `/F<font._1> <font._2>`, and
+    * its content stream (4 + 2i). Lines are shown with Tj at descending
+    * y (14pt leading over a 12pt font so the y-cluster rule separates
+    * lines), `show` turning each line into its string operand; the
+    * stream text is written in `charset` (chars it cannot encode must not
+    * appear in generated corpora) and `encode(objNum, raw)` gives the
+    * stored bytes plus the stream-dictionary keys that decode them.
+    * `extra` objects follow the pages (numbered from 3 + 2 * pages),
+    * `trailerKeys` follow /Root, and `scramble` REVERSES object file
+    * order (catalog last) so only a page-tree walk recovers page order.
+    */
+  private def pdfWrite(pageLines: Seq[Seq[String]],
+      font: (String, String) = helvetica(""),
+      show: String => String = line => s"(${escapePdf(line)})",
+      charset: Charset = ISO_8859_1,
+      encode: (Int, Array[Byte]) => (Array[Byte], String) = (_, raw) => (raw, ""),
+      extra: Seq[Array[Byte]] = Nil, trailerKeys: String = "",
+      version: String = "1.4", scramble: Boolean = false): Array[Byte] = {
+    val (fontId, fontDict) = font
+    val kids = pageLines.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
+    val pages = pageLines.zipWithIndex.flatMap { case (lines, i) =>
+      val contObj = 4 + 2 * i
+      val cs = new java.lang.StringBuilder(256)
+      cs.append(s"BT /F$fontId 12 Tf 72 720 Td 14 TL\n")
+      lines.zipWithIndex.foreach { case (line, j) =>
+        if (j > 0) cs.append("T*\n")
+        cs.append(show(line)).append(" Tj\n")
+      }
+      cs.append("ET\n")
+      val (payload, keys) = encode(contObj, cs.toString.getBytes(charset))
+      Seq(pdfObj(contObj - 1, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+          s"/Contents $contObj 0 R /Resources << /Font << /F$fontId $fontDict >> >> >>"),
+        pdfStream(contObj, keys, payload))
+    }
+    val objs = Seq(pdfObj(1, "<< /Type /Catalog /Pages 2 0 R >>"),
+      pdfObj(2, s"<< /Type /Pages /Kids [$kids] /Count ${pageLines.length} >>")) ++ pages ++ extra
+    val out = new java.io.ByteArrayOutputStream(1024)
+    out.write(s"%PDF-$version\n".getBytes(UTF_8))
+    (if (scramble) objs.reverse else objs).foreach(out.write)
+    out.write(s"trailer << /Root 1 0 R$trailerKeys >>\n%%EOF\n".getBytes(UTF_8))
+    out.toByteArray
+  }
+
+  /** Minimal PDF: one content stream per page. `compress` exercises
+    * FlateDecode.
     */
   def pdfBytes(pageLines: Seq[Seq[String]], compress: Boolean): Array[Byte] =
     pdfBytesAdv(pageLines, compress, winAnsi = false, scramble = false)
@@ -165,54 +227,12 @@ object PagesGen {
     * first) so only a page-tree walk recovers document order.
     */
   def pdfBytesAdv(pageLines: Seq[Seq[String]], compress: Boolean,
-      winAnsi: Boolean, scramble: Boolean): Array[Byte] = {
-    val charset =
-      if (winAnsi) java.nio.charset.Charset.forName("windows-1252")
-      else java.nio.charset.StandardCharsets.ISO_8859_1
-    val enc = if (winAnsi) " /Encoding /WinAnsiEncoding" else ""
-    val objs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    objs += "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n".getBytes(UTF_8)
-    val kids = pageLines.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    objs += s"2 0 obj << /Type /Pages /Kids [$kids] /Count ${pageLines.length} >> endobj\n".getBytes(UTF_8)
-    pageLines.zipWithIndex.foreach { case (lines, i) =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      objs += (s"$pageObj 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Contents $contObj 0 R /Resources << /Font << /F1 << /Type /Font " +
-        s"/Subtype /Type1 /BaseFont /Helvetica$enc >> >> >> >> endobj\n").getBytes(UTF_8)
-      val cs = new java.lang.StringBuilder(256)
-      cs.append("BT /F1 12 Tf 72 720 Td 14 TL\n")
-      lines.zipWithIndex.foreach { case (line, j) =>
-        if (j > 0) cs.append("T*\n")
-        cs.append(s"(${escapePdf(line)}) Tj\n")
-      }
-      cs.append("ET\n")
-      // string bytes: windows-1252 under winAnsi, else Latin-1 (chars the
-      // charset cannot encode must not appear in generated corpora)
-      val raw = cs.toString.getBytes(charset)
-      val payload =
-        if (compress) {
-          val d = new java.util.zip.Deflater()
-          d.setInput(raw); d.finish()
-          val buf = new java.io.ByteArrayOutputStream(raw.length)
-          val chunk = new Array[Byte](8192)
-          while (!d.finished()) buf.write(chunk, 0, d.deflate(chunk))
-          d.end()
-          buf.toByteArray
-        } else raw
-      val filter = if (compress) " /Filter /FlateDecode" else ""
-      val head = new java.io.ByteArrayOutputStream(payload.length + 96)
-      head.write(s"$contObj 0 obj << /Length ${payload.length}$filter >> stream\n".getBytes(UTF_8))
-      head.write(payload)
-      head.write("\nendstream endobj\n".getBytes(UTF_8))
-      objs += head.toByteArray
-    }
-    val out = new java.io.ByteArrayOutputStream(1024)
-    out.write("%PDF-1.4\n".getBytes(UTF_8))
-    (if (scramble) objs.reverse else objs).foreach(out.write)
-    out.write("trailer << /Root 1 0 R >>\n%%EOF\n".getBytes(UTF_8))
-    out.toByteArray
-  }
+      winAnsi: Boolean, scramble: Boolean): Array[Byte] =
+    pdfWrite(pageLines,
+      font = helvetica(if (winAnsi) " /Encoding /WinAnsiEncoding" else ""),
+      charset = if (winAnsi) Charset.forName("windows-1252") else ISO_8859_1,
+      encode = (_, raw) => if (compress) (deflate(raw), " /Filter /FlateDecode") else (raw, ""),
+      scramble = scramble)
 
   /** Single-page PDF carrying a document-information dictionary:
     * /Title as a LITERAL string (escaped parens load-bearing), /Author
@@ -222,34 +242,13 @@ object PagesGen {
     */
   def pdfBytesInfo(pageLines: Seq[Seq[String]], title: String, author: String,
       creation: String, utf16Author: Boolean): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def w(s: String): Unit = out.write(s.getBytes(UTF_8))
-    w("%PDF-1.4\n")
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    w(s"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    w("3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Contents 4 0 R /Resources << /Font << /F1 << /Type /Font " +
-      "/Subtype /Type1 /BaseFont /Helvetica >> >> >> >> endobj\n")
-    val cs = new java.lang.StringBuilder(256)
-    cs.append("BT /F1 12 Tf 72 720 Td 14 TL\n")
-    pageLines.headOption.getOrElse(Seq.empty).zipWithIndex.foreach { case (line, j) =>
-      if (j > 0) cs.append("T*\n")
-      cs.append(s"(${escapePdf(line)}) Tj\n")
-    }
-    cs.append("ET\n")
-    val raw = cs.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    w(s"4 0 obj << /Length ${raw.length} >> stream\n")
-    out.write(raw)
-    w("\nendstream endobj\n")
     val authorPdf =
-      if (utf16Author) {
-        val b = author.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
-        "<FEFF" + b.map(x => f"${x & 0xff}%02X").mkString + ">"
-      } else s"(${escapePdf(author)})"
-    w(s"5 0 obj << /Title (${escapePdf(title)}) /Author $authorPdf " +
-      s"/CreationDate (D:$creation) /Producer (graft) >> endobj\n")
-    w("trailer << /Root 1 0 R /Info 5 0 R >>\n%%EOF\n")
-    out.toByteArray
+      if (utf16Author) s"<FEFF${hex(author.getBytes(java.nio.charset.StandardCharsets.UTF_16BE))}>"
+      else s"(${escapePdf(author)})"
+    pdfWrite(Seq(pageLines.headOption.getOrElse(Seq.empty)),
+      extra = Seq(pdfObj(5, s"<< /Title (${escapePdf(title)}) /Author $authorPdf " +
+        s"/CreationDate (D:$creation) /Producer (graft) >>")),
+      trailerKeys = " /Info 5 0 R")
   }
 
   /** PDF whose content streams travel through realistic filter chains:
@@ -263,56 +262,19 @@ object PagesGen {
     * between content-stream tokens.
     */
   def pdfBytesFiltered(pageLines: Seq[Seq[String]], mode: String): Array[Byte] = {
-    val objs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    objs += "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n".getBytes(UTF_8)
-    val kids = pageLines.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    objs += s"2 0 obj << /Type /Pages /Kids [$kids] /Count ${pageLines.length} >> endobj\n".getBytes(UTF_8)
-    pageLines.zipWithIndex.foreach { case (lines, i) =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      objs += (s"$pageObj 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Contents $contObj 0 R /Resources << /Font << /F1 << /Type /Font " +
-        "/Subtype /Type1 /BaseFont /Helvetica >> >> >> >> endobj\n").getBytes(UTF_8)
-      val cs = new java.lang.StringBuilder(256)
-      cs.append("BT /F1 12 Tf 72 720 Td 14 TL\n")
-      lines.zipWithIndex.foreach { case (line, j) =>
-        if (j > 0) cs.append("T*\n")
-        cs.append(s"(${escapePdf(line)}) Tj\n")
-      }
-      cs.append("ET\n")
-      val raw = cs.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-      val (payload, filterDecl) = mode match {
-        case "png"  =>
-          val cols = 16
-          (deflateBytes(pngPredict(padTo(raw, cols), cols)),
-            s" /Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns $cols >>")
-        case "tiff" =>
-          val cols = 16
-          (deflateBytes(tiffPredict(padTo(raw, cols), cols)),
-            s" /Filter /FlateDecode /DecodeParms << /Predictor 2 /Columns $cols >>")
-        case "ahx"  =>
-          (asciiHexEncode(deflateBytes(raw)),
-            " /Filter [/ASCIIHexDecode /FlateDecode]")
-        case "a85"  =>
-          (ascii85Encode(deflateBytes(raw)),
-            " /Filter [/ASCII85Decode /FlateDecode]")
-        case "rl"   =>
-          (runLengthEncode(raw), " /Filter /RunLengthDecode")
-        case "lzw"  =>
-          (lzwEncode(raw), " /Filter /LZWDecode")
-        case other  => throw new IllegalArgumentException(s"mode $other")
-      }
-      val head = new java.io.ByteArrayOutputStream(payload.length + 96)
-      head.write(s"$contObj 0 obj << /Length ${payload.length}$filterDecl >> stream\n".getBytes(UTF_8))
-      head.write(payload)
-      head.write("\nendstream endobj\n".getBytes(UTF_8))
-      objs += head.toByteArray
+    val cols = 16
+    val encode: Array[Byte] => (Array[Byte], String) = mode match {
+      case "png"  => raw => (deflate(pngFilter(padTo(raw, cols), cols, bpp = 1)),
+        s" /Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns $cols >>")
+      case "tiff" => raw => (deflate(tiffPredict(padTo(raw, cols), cols)),
+        s" /Filter /FlateDecode /DecodeParms << /Predictor 2 /Columns $cols >>")
+      case "ahx"  => raw => (asciiHexEncode(deflate(raw)), " /Filter [/ASCIIHexDecode /FlateDecode]")
+      case "a85"  => raw => (ascii85Encode(deflate(raw)), " /Filter [/ASCII85Decode /FlateDecode]")
+      case "rl"   => raw => (runLengthEncode(raw), " /Filter /RunLengthDecode")
+      case "lzw"  => raw => (lzwEncode(raw), " /Filter /LZWDecode")
+      case other  => throw new IllegalArgumentException(s"mode $other")
     }
-    val out = new java.io.ByteArrayOutputStream(1024)
-    out.write("%PDF-1.4\n".getBytes(UTF_8))
-    objs.foreach(out.write)
-    out.write("trailer << /Root 1 0 R >>\n%%EOF\n".getBytes(UTF_8))
-    out.toByteArray
+    pdfWrite(pageLines, encode = (_, raw) => encode(raw))
   }
 
   private[graft] def padTo(raw: Array[Byte], cols: Int): Array[Byte] = {
@@ -320,31 +282,43 @@ object PagesGen {
     if (rem == 0) raw else raw ++ Array.fill[Byte](cols - rem)(' '.toByte)
   }
 
-  private[graft] def deflateBytes(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
+  /** zlib stream (raw deflate when `nowrap`) at the default level. */
+  private[graft] def deflate(raw: Array[Byte], nowrap: Boolean = false): Array[Byte] = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, nowrap)
     d.setInput(raw); d.finish()
-    val buf = new java.io.ByteArrayOutputStream(raw.length)
+    val buf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
     val chunk = new Array[Byte](8192)
     while (!d.finished()) buf.write(chunk, 0, d.deflate(chunk))
     d.end()
     buf.toByteArray
   }
 
-  /** PNG-predict rows (tag cycles 0..4: None, Sub, Up, Average, Paeth). */
-  private[graft] def pngPredict(raw: Array[Byte], cols: Int): Array[Byte] = {
-    val nRows = raw.length / cols
-    val out = new Array[Byte](nRows * (cols + 1))
-    val prior = new Array[Byte](cols)
+  /** One gzip member; JDK gzip writes MTIME=0, so the bytes are reproducible. */
+  private[graft] def gzip(raw: Array[Byte]): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
+    val gz = new java.util.zip.GZIPOutputStream(buf)
+    gz.write(raw); gz.finish()
+    buf.toByteArray
+  }
+
+  /** PNG row filters over `raw` rows of `rowLen` bytes with `bpp` bytes
+    * per pixel: each row is prefixed by its tag, which cycles 0..4 (None,
+    * Sub, Up, Average, Paeth) so every filter is exercised. The inverse
+    * of [[graft.kernels.PngFilters.unfilter]].
+    */
+  private[graft] def pngFilter(raw: Array[Byte], rowLen: Int, bpp: Int): Array[Byte] = {
+    val nRows = raw.length / rowLen
+    val out = new Array[Byte](nRows * (rowLen + 1))
     var r = 0
     while (r < nRows) {
       val tag = r % 5
-      out(r * (cols + 1)) = tag.toByte
+      val row = r * rowLen
+      out(r * (rowLen + 1)) = tag.toByte
       var i = 0
-      while (i < cols) {
-        val cur = raw(r * cols + i) & 0xff
-        val left = if (i > 0) raw(r * cols + i - 1) & 0xff else 0
-        val up = prior(i) & 0xff
-        val upLeft = if (i > 0) prior(i - 1) & 0xff else 0
+      while (i < rowLen) {
+        val left = if (i >= bpp) raw(row + i - bpp) & 0xff else 0
+        val up = if (r > 0) raw(row - rowLen + i) & 0xff else 0
+        val upLeft = if (r > 0 && i >= bpp) raw(row - rowLen + i - bpp) & 0xff else 0
         val pred = tag match {
           case 0 => 0
           case 1 => left
@@ -355,10 +329,9 @@ object PagesGen {
             val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - upLeft)
             if (pa <= pb && pa <= pc) left else if (pb <= pc) up else upLeft
         }
-        out(r * (cols + 1) + 1 + i) = ((cur - pred) & 0xff).toByte
+        out(r * (rowLen + 1) + 1 + i) = (((raw(row + i) & 0xff) - pred) & 0xff).toByte
         i += 1
       }
-      System.arraycopy(raw, r * cols, prior, 0, cols)
       r += 1
     }
     out
@@ -425,9 +398,6 @@ object PagesGen {
     sb.toString.getBytes(UTF_8)
   }
 
-  /** RunLengthDecode encoder: repeat runs (>=3 identical bytes) as
-    * (257-n, byte), literals chunked to <=128, EOD marker 128.
-    */
   /** TIFF-style LZW encoder (PDF 7.4.4 inverse): MSB-first 9→12-bit
     * codes, EarlyChange=1 (width grows when the DECODER's next code + 1
     * reaches 2^width — the decoder's table lags this encoder's by one
@@ -472,6 +442,9 @@ object PagesGen {
     out.toByteArray
   }
 
+  /** RunLengthDecode encoder: repeat runs (>=3 identical bytes) as
+    * (257-n, byte), literals chunked to <=128, EOD marker 128.
+    */
   private def runLengthEncode(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length + 16)
     var i = 0
@@ -511,37 +484,13 @@ object PagesGen {
     }))
     val bf = codes.map { case (c, code) => f"<$code%04X> <${c.toInt}%04X>" }.mkString("\n")
     val cmap = s"beginbfchar\n$bf\nendbfchar"
-    val nPages = pageLines.length
-    val fontObj = 3 + 2 * nPages
-    val cmapObj = fontObj + 1
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def w(s: String): Unit = out.write(s.getBytes(UTF_8))
-    w("%PDF-1.4\n")
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    val kids = pageLines.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    w(s"2 0 obj << /Type /Pages /Kids [$kids] /Count $nPages >> endobj\n")
-    pageLines.zipWithIndex.foreach { case (lines, i) =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      w(s"$pageObj 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Contents $contObj 0 R /Resources << /Font << /FC $fontObj 0 R >> >> >> endobj\n")
-      val cs = new java.lang.StringBuilder(256)
-      cs.append("BT /FC 12 Tf 72 720 Td 14 TL\n")
-      lines.zipWithIndex.foreach { case (line, j) =>
-        if (j > 0) cs.append("T*\n")
-        cs.append(line.map(c => f"${codes(c)}%04X").mkString("<", "", "> Tj\n"))
-      }
-      cs.append("ET\n")
-      val raw = cs.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-      w(s"$contObj 0 obj << /Length ${raw.length} >> stream\n")
-      out.write(raw)
-      w("\nendstream endobj\n")
-    }
-    w(s"$fontObj 0 obj << /Type /Font /Subtype /Type0 /BaseFont /Synth " +
-      s"/Encoding /Identity-H /ToUnicode $cmapObj 0 R >> endobj\n")
-    w(s"$cmapObj 0 obj << /Length ${cmap.length} >> stream\n$cmap\nendstream endobj\n")
-    w("trailer << /Root 1 0 R >>\n%%EOF\n")
-    out.toByteArray
+    val fontObj = 3 + 2 * pageLines.length
+    pdfWrite(pageLines, font = "C" -> s"$fontObj 0 R",
+      show = _.map(c => f"${codes(c)}%04X").mkString("<", "", ">"),
+      extra = Seq(
+        pdfObj(fontObj, "<< /Type /Font /Subtype /Type0 /BaseFont /Synth " +
+          s"/Encoding /Identity-H /ToUnicode ${fontObj + 1} 0 R >>"),
+        pdfStream(fontObj + 1, "", cmap.getBytes(UTF_8))))
   }
 
   /** Encrypted PDF via the standard security handler with an EMPTY user
@@ -565,7 +514,6 @@ object PagesGen {
       }
       out
     }
-    def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
     val id0 = rnd(1, 16)
     val p = -44
     val empty = Array.emptyByteArray
@@ -604,42 +552,41 @@ object PagesGen {
             " /CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen /Length 32 >> >> /StmF /StdCF /StrF /StdCF >>")
       case other => throw new IllegalArgumentException(s"mode $other")
     }
-    val objs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    objs += "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n".getBytes(UTF_8)
-    val kids = pageLines.indices.map(i => s"${3 + 2 * i} 0 R").mkString(" ")
-    objs += s"2 0 obj << /Type /Pages /Kids [$kids] /Count ${pageLines.length} >> endobj\n".getBytes(UTF_8)
-    pageLines.zipWithIndex.foreach { case (lines, i) =>
-      val pageObj = 3 + 2 * i
-      val contObj = pageObj + 1
-      objs += (s"$pageObj 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        s"/Contents $contObj 0 R /Resources << /Font << /F1 << /Type /Font " +
-        "/Subtype /Type1 /BaseFont /Helvetica >> >> >> >> endobj\n").getBytes(UTF_8)
-      val cs = new java.lang.StringBuilder(256)
-      cs.append("BT /F1 12 Tf 72 720 Td 14 TL\n")
-      lines.zipWithIndex.foreach { case (line, j) =>
-        if (j > 0) cs.append("T*\n")
-        cs.append(s"(${escapePdf(line)}) Tj\n")
-      }
-      cs.append("ET\n")
-      val raw = cs.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-      val payload = dec.encrypt(contObj, 0, raw, rnd(100 + contObj, 16))
-      val head = new java.io.ByteArrayOutputStream(payload.length + 96)
-      head.write(s"$contObj 0 obj << /Length ${payload.length} >> stream\n".getBytes(UTF_8))
-      head.write(payload)
-      head.write("\nendstream endobj\n".getBytes(UTF_8))
-      objs += head.toByteArray
-    }
     val encObj = 3 + 2 * pageLines.length
-    objs += s"$encObj 0 obj $encDict endobj\n".getBytes(UTF_8)
-    val out = new java.io.ByteArrayOutputStream(1024)
-    out.write("%PDF-1.6\n".getBytes(UTF_8))
-    objs.foreach(out.write)
-    out.write((s"trailer << /Root 1 0 R /Encrypt $encObj 0 R " +
-      s"/ID [<${id0.map(x => f"${x & 0xff}%02X").mkString}> <${id0.map(x => f"${x & 0xff}%02X").mkString}>] >>\n%%EOF\n").getBytes(UTF_8))
-    out.toByteArray
+    pdfWrite(pageLines,
+      encode = (n, raw) => (dec.encrypt(n, 0, raw, rnd(100 + n, 16)), ""),
+      extra = Seq(pdfObj(encObj, encDict)),
+      trailerKeys = s" /Encrypt $encObj 0 R /ID [<${hex(id0)}> <${hex(id0)}>]",
+      version = "1.6")
   }
 
   // ------------------------------------------------------------ WARC builder
+
+  /** The CRLFCRLF that closes a WARC record in an archive. */
+  private[graft] val WarcSep: Array[Byte] = "\r\n\r\n".getBytes(UTF_8)
+
+  /** One WARC/1.0 record: version line, `headers`, Content-Length and the
+    * blank line, then `block` — without the closing [[WarcSep]].
+    */
+  private[graft] def warcRecord(headers: Seq[(String, String)], block: Array[Byte]): Array[Byte] = {
+    val sb = new java.lang.StringBuilder(256)
+    sb.append("WARC/1.0\r\n")
+    headers.foreach { case (k, v) => sb.append(k).append(": ").append(v).append("\r\n") }
+    sb.append("Content-Length: ").append(block.length).append("\r\n\r\n")
+    sb.toString.getBytes(UTF_8) ++ block
+  }
+
+  /** Records each closed by [[WarcSep]]; `gzipMembers` puts every closed
+    * record in its own gzip member (the .warc.gz layout).
+    */
+  private[graft] def warcArchive(records: Seq[Array[Byte]], gzipMembers: Boolean): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(4096)
+    records.foreach { r =>
+      val closed = r ++ WarcSep
+      out.write(if (gzipMembers) gzip(closed) else closed)
+    }
+    out.toByteArray
+  }
 
   /** Deterministic WARC/1.0 file wrapping `(url, ts, payload)` entries
     * the way Common Crawl does: a warcinfo record, then per entry a
@@ -648,31 +595,14 @@ object PagesGen {
     * transfer encoding, gzip content-encoding, deflate content-encoding
     * (zlib-wrapped and raw variants); every 5th entry is
     * instead stored as a raw `resource` record. `gzipMembers` emits each
-    * record as its own gzip member (the .warc.gz layout). JDK gzip
-    * writes MTIME=0 so the bytes are reproducible.
+    * record as its own gzip member (the .warc.gz layout).
     */
   def warcBytes(entries: Seq[(String, Timestamp, Array[Byte])],
       gzipMembers: Boolean): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(4096)
-    def member(record: Array[Byte]): Unit =
-      if (gzipMembers) {
-        val gz = new java.util.zip.GZIPOutputStream(out)
-        gz.write(record); gz.finish()
-      } else out.write(record)
-    def record(headers: Seq[(String, String)], block: Array[Byte]): Array[Byte] = {
-      val sb = new java.lang.StringBuilder(256)
-      sb.append("WARC/1.0\r\n")
-      headers.foreach { case (k, v) => sb.append(k).append(": ").append(v).append("\r\n") }
-      sb.append("Content-Length: ").append(block.length).append("\r\n\r\n")
-      val head = sb.toString.getBytes(UTF_8)
-      val buf = new java.io.ByteArrayOutputStream(head.length + block.length + 4)
-      buf.write(head); buf.write(block); buf.write("\r\n\r\n".getBytes(UTF_8))
-      buf.toByteArray
-    }
     def iso(ts: Timestamp): String =
       java.time.format.DateTimeFormatter.ISO_INSTANT.format(
         java.time.Instant.ofEpochMilli(ts.getTime))
-    member(record(Seq(
+    val records = scala.collection.mutable.ArrayBuffer(warcRecord(Seq(
       "WARC-Type" -> "warcinfo",
       "WARC-Record-ID" -> "<urn:uuid:00000000-0000-0000-0000-000000000000>",
       "WARC-Date" -> "2025-01-01T00:00:00Z",
@@ -680,19 +610,19 @@ object PagesGen {
       "software: graft-testgen\r\n".getBytes(UTF_8)))
     entries.zipWithIndex.foreach { case ((url, ts, payload), i) =>
       val req = ("GET " + url + " HTTP/1.1\r\nHost: example\r\n\r\n").getBytes(UTF_8)
-      member(record(Seq(
+      records += warcRecord(Seq(
         "WARC-Type" -> "request",
         "WARC-Record-ID" -> f"<urn:uuid:11111111-0000-0000-0000-${i}%012d>",
         "WARC-Target-URI" -> url,
         "WARC-Date" -> iso(ts),
-        "Content-Type" -> "application/http; msgtype=request"), req))
+        "Content-Type" -> "application/http; msgtype=request"), req)
       if (i % 5 == 4) {
-        member(record(Seq(
+        records += warcRecord(Seq(
           "WARC-Type" -> "resource",
           "WARC-Record-ID" -> f"<urn:uuid:22222222-0000-0000-0000-${i}%012d>",
           "WARC-Target-URI" -> s"<$url>", // angle-bracketed URI form
           "WARC-Date" -> iso(ts),
-          "Content-Type" -> "text/html"), payload))
+          "Content-Type" -> "text/html"), payload)
       } else {
         val http = new java.io.ByteArrayOutputStream(payload.length + 256)
         def w(s: String): Unit = http.write(s.getBytes(UTF_8))
@@ -711,43 +641,28 @@ object PagesGen {
             }
             w("0\r\n\r\n")
           case 2 => // gzip content-encoding
-            val gz = deflateGzip(payload)
+            val gz = gzip(payload)
             w(s"Content-Encoding: gzip\r\nContent-Length: ${gz.length}\r\n\r\n")
             http.write(gz)
           case 3 => // deflate content-encoding: zlib-wrapped on even
             // entries, RAW deflate on odd (the real-server misbehavior
             // browsers tolerate)
-            val zlibWrapped = (i / 4) % 2 == 0
-            val d = new java.util.zip.Deflater(
-              java.util.zip.Deflater.DEFAULT_COMPRESSION, !zlibWrapped)
-            d.setInput(payload); d.finish()
-            val buf = new java.io.ByteArrayOutputStream(payload.length / 2 + 32)
-            val chunk = new Array[Byte](8192)
-            while (!d.finished()) buf.write(chunk, 0, d.deflate(chunk))
-            d.end()
-            val z = buf.toByteArray
+            val z = deflate(payload, nowrap = (i / 4) % 2 == 1)
             w(s"Content-Encoding: deflate\r\nContent-Length: ${z.length}\r\n\r\n")
             http.write(z)
           case _ =>
             w(s"Content-Length: ${payload.length}\r\n\r\n")
             http.write(payload)
         }
-        member(record(Seq(
+        records += warcRecord(Seq(
           "WARC-Type" -> "response",
           "WARC-Record-ID" -> f"<urn:uuid:33333333-0000-0000-0000-${i}%012d>",
           "WARC-Target-URI" -> url,
           "WARC-Date" -> iso(ts),
-          "Content-Type" -> "application/http; msgtype=response"), http.toByteArray))
+          "Content-Type" -> "application/http; msgtype=response"), http.toByteArray)
       }
     }
-    out.toByteArray
-  }
-
-  private[graft] def deflateGzip(raw: Array[Byte]): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val gz = new java.util.zip.GZIPOutputStream(buf)
-    gz.write(raw); gz.finish()
-    buf.toByteArray
+    warcArchive(records.toSeq, gzipMembers)
   }
 
   // -------------------------------------------------------- corpus assembly

@@ -104,10 +104,6 @@ object ScalarKernels {
       line
     }.mkString("\n")
 
-  /** preprocess_ocr_text (convert_to_json.py:130-135): the full ladder. */
-  def preprocessOcrText(text: String): String =
-    formatKeyValues(processCheckboxes(cleanOcrText(text)))
-
   /** Fragment re-join ladder (convert_to_json.py:647-664): repair
     * OCR-split word suffixes `stem SUFFIX` → `stemSUFFIX` for the
     * reference's 9 suffixes, applied in its order.

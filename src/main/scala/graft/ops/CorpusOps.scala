@@ -769,6 +769,9 @@ object CorpusOps {
     * lexicon is saturating even while raw tokens keep arriving. All
     * integers: per-day token sums and per-word first-occurrence days
     * roll up exactly; the cumulative window runs over 30 day-rows.
+    * Each document also carries one long-tail token `r<doc_id div 7>`:
+    * the generated text draws on a 31-word vocabulary that all appears
+    * on day 0, so without it `cum_vocab` would be a constant.
     *
     * 100 TB shape: one (word, day) partial-min shuffle over the
     * dictionary-encoded word dim + one per-day token count — the
@@ -777,7 +780,8 @@ object CorpusOps {
   def heapsLaw(spark: SparkSession, dir: String): DataFrame = {
     val toks = docs(spark, dir)
       .selectExpr("cast(doc_id % 30 as long) as day",
-        "filter(split(text, ' '), x -> x <> '') as ws")
+        "concat(filter(split(text, ' '), x -> x <> ''), " +
+          "array(concat('r', cast(doc_id div 7 as string)))) as ws")
       .localCheckpoint(true)
     val perDayTokens = toks.groupBy("day")
       .agg(sum(expr("size(ws)")).cast("long").as("d_tokens"))
@@ -793,7 +797,8 @@ object CorpusOps {
 
   val heapsLawSql: String =
     """WITH d AS (SELECT CAST(doc_id % 30 AS BIGINT) AS day,
-      |    list_filter(string_split(text, ' '), x -> x <> '') AS ws FROM documents),
+      |    list_append(list_filter(string_split(text, ' '), x -> x <> ''),
+      |      'r' || CAST(doc_id // 7 AS VARCHAR)) AS ws FROM documents),
       |pt AS (SELECT day, CAST(sum(len(ws)) AS BIGINT) AS d_tokens FROM d GROUP BY day),
       |fw AS (SELECT w, min(day) AS day FROM (
       |    SELECT day, unnest(list_distinct(ws)) AS w FROM d) GROUP BY w),

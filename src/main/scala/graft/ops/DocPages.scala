@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.gen.PagesGen
 import graft.model.PageRow
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 
@@ -40,32 +40,34 @@ object DocPages {
   def chunkWords(text: String, n: Int): Seq[String] =
     text.split(' ').grouped(n).map(_.mkString(" ")).toSeq
 
-  /** One `<p>` holding the whole text inside full boilerplate chrome. */
-  def htmlSingle(spark: SparkSession, dir: String): Dataset[PageRow] = {
+  /** One row per document: url `doc://<tag>/<doc_id>`, the fixed crawl
+    * time, the `(payload, crawl text)` that `wrap` makes of it, its lang.
+    */
+  private def rows(spark: SparkSession, dir: String, tag: String)(
+      wrap: Doc => (Array[Byte], String)): Dataset[PageRow] = {
     import spark.implicits._
     docs(spark, dir).map { d =>
-      val html = PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
-      PageRow(s"doc://h/${d.doc_id}", Ts0, html.getBytes(UTF_8), "", d.lang)
+      val (payload, text) = wrap(d)
+      PageRow(s"doc://$tag/${d.doc_id}", Ts0, payload, text, d.lang)
     }
   }
+
+  /** The text as one `<p>` inside full boilerplate chrome, UTF-8. */
+  private def html(text: String, d: Doc): Array[Byte] =
+    PagesGen.htmlPage(Seq(text), None, d.doc_id).getBytes(UTF_8)
+
+  /** One `<p>` holding the whole text inside full boilerplate chrome. */
+  def htmlSingle(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "h")(d => (html(d.text, d), ""))
 
   /** 40-word paragraphs inside chrome; expected text = chunks \n-joined. */
-  def htmlChunked(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val html = PagesGen.htmlPage(chunkWords(d.text, n), None, d.doc_id)
-      PageRow(s"doc://c/${d.doc_id}", Ts0, html.getBytes(UTF_8), "", d.lang)
-    }
-  }
+  def htmlChunked(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] =
+    rows(spark, dir, "c")(d =>
+      (PagesGen.htmlPage(chunkWords(d.text, n), None, d.doc_id).getBytes(UTF_8), ""))
 
   /** Single-page single-line PDF (whole text in one Tj). */
-  def pdfSingle(spark: SparkSession, dir: String, compress: Boolean): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val pdf = PagesGen.pdfBytes(Seq(Seq(d.text)), compress)
-      PageRow(s"doc://p/${d.doc_id}", Ts0, pdf, "", d.lang)
-    }
-  }
+  def pdfSingle(spark: SparkSession, dir: String, compress: Boolean): Dataset[PageRow] =
+    rows(spark, dir, "p")(d => (PagesGen.pdfBytes(Seq(Seq(d.text)), compress), ""))
 
   /** Multi-page PDF: every 40-word chunk becomes its OWN page (one Tj
     * line per page), so the PDF kernel must emit one page per page
@@ -75,14 +77,9 @@ object DocPages {
     * outputs/2025-03-20/w_f_abbasia.json has page_count 2). Compression
     * alternates per doc so both stream branches run.
     */
-  def pdfMulti(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val pdf = PagesGen.pdfBytes(chunkWords(d.text, n).map(Seq(_)),
-        compress = d.doc_id % 2 == 1)
-      PageRow(s"doc://pm/${d.doc_id}", Ts0, pdf, "", d.lang)
-    }
-  }
+  def pdfMulti(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] =
+    rows(spark, dir, "pm")(d => (PagesGen.pdfBytes(chunkWords(d.text, n).map(Seq(_)),
+      compress = d.doc_id % 2 == 1), ""))
 
   /** Object-order-scrambled multi-page PDF: same pages as [[pdfMulti]]
     * but with file order REVERSED (catalog last, final page's content
@@ -90,14 +87,9 @@ object DocPages {
     * document order, so the oracle failing would mean the kernel fell
     * back to file-order scanning.
     */
-  def pdfScrambled(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val pdf = PagesGen.pdfBytesAdv(chunkWords(d.text, n).map(Seq(_)),
-        compress = d.doc_id % 2 == 1, winAnsi = false, scramble = true)
-      PageRow(s"doc://ps/${d.doc_id}", Ts0, pdf, "", d.lang)
-    }
-  }
+  def pdfScrambled(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] =
+    rows(spark, dir, "ps")(d => (PagesGen.pdfBytesAdv(chunkWords(d.text, n).map(Seq(_)),
+      compress = d.doc_id % 2 == 1, winAnsi = false, scramble = true), ""))
 
   /** Filter-chain PDF: content streams travel through PNG-predictor
     * Flate (doc_id%6=0), TIFF-predictor Flate (1), an ASCIIHex→Flate
@@ -105,21 +97,9 @@ object DocPages {
     * LZWDecode (5) — byte-identical recovery requires the
     * declared-filter pipeline incl. /DecodeParms predictors.
     */
-  def pdfFiltered(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val mode = (d.doc_id % 6) match {
-        case 0 => "png"
-        case 1 => "tiff"
-        case 2 => "ahx"
-        case 3 => "a85"
-        case 4 => "rl"
-        case _ => "lzw"
-      }
-      PageRow(s"doc://pf/${d.doc_id}", Ts0,
-        PagesGen.pdfBytesFiltered(Seq(Seq(d.text)), mode), "", d.lang)
-    }
-  }
+  def pdfFiltered(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "pf")(d => (PagesGen.pdfBytesFiltered(Seq(Seq(d.text)),
+      Seq("png", "tiff", "ahx", "a85", "rl", "lzw")((d.doc_id % 6).toInt)), ""))
 
   /** Assemble docs into WARC files of ≤8 records each (doc_id/8 buckets,
     * in-file order by doc_id): each file carries warcinfo + request +
@@ -132,10 +112,7 @@ object DocPages {
   def warcFiles(spark: SparkSession, dir: String): Dataset[(Long, Array[Byte])] = {
     import spark.implicits._
     docs(spark, dir).groupByKey(_.doc_id / 8).mapGroups { (gid, it) =>
-      val entries = it.toSeq.sortBy(_.doc_id).map { d =>
-        val html = PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
-        (s"doc://w/${d.doc_id}", Ts0, html.getBytes(UTF_8))
-      }
+      val entries = it.toSeq.sortBy(_.doc_id).map(d => (s"doc://w/${d.doc_id}", Ts0, html(d.text, d)))
       (gid, PagesGen.warcBytes(entries, gzipMembers = gid % 2 == 1))
     }
   }
@@ -146,19 +123,9 @@ object DocPages {
     * handshake (empty-password validation against /U, per-object key
     * derivation, decrypt-then-Flate) to be byte-exact.
     */
-  def pdfEncrypted(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val mode = (d.doc_id % 4) match {
-        case 0 => "rc4-40"
-        case 1 => "rc4-128"
-        case 2 => "aes128"
-        case _ => "aes256"
-      }
-      PageRow(s"doc://pe/${d.doc_id}", Ts0,
-        PagesGen.pdfBytesEncrypted(Seq(Seq(d.text)), mode, seed = d.doc_id), "", d.lang)
-    }
-  }
+  def pdfEncrypted(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "pe")(d => (PagesGen.pdfBytesEncrypted(Seq(Seq(d.text)),
+      Seq("rc4-40", "rc4-128", "aes128", "aes256")((d.doc_id % 4).toInt), seed = d.doc_id), ""))
 
   /** WinAnsi-encoded PDF: the text is prefixed with glyphs that live at
     * 0x80-0x9F in windows-1252 (euro, em-dash, oe) where Latin-1 has
@@ -166,42 +133,25 @@ object DocPages {
     * /Encoding table to be honored.
     */
   val WinAnsiPrefix = "€ — «œuvre» "
-  def pdfWinAnsi(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val pdf = PagesGen.pdfBytesAdv(Seq(Seq(WinAnsiPrefix + d.text)),
-        compress = false, winAnsi = true, scramble = false)
-      PageRow(s"doc://pw/${d.doc_id}", Ts0, pdf, "", d.lang)
-    }
-  }
+  def pdfWinAnsi(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "pw")(d => (PagesGen.pdfBytesAdv(Seq(Seq(WinAnsiPrefix + d.text)),
+      compress = false, winAnsi = true, scramble = false), ""))
 
   /** Type0/Identity-H wrap: the whole text as 2-byte CID codes with a
     * generated ToUnicode CMap — recoverable ONLY through the CMap path.
     * An Arabic marker rides along so multi-byte UTF-16 mapping is
     * exercised, not just ASCII.
     */
-  def pdfCid(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val t = "نص " + d.text
-      PageRow(s"doc://pc/${d.doc_id}", Ts0,
-        PagesGen.pdfBytesCid(Seq(Seq(t))), "", d.lang)
-    }
-  }
+  def pdfCid(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "pc")(d => (PagesGen.pdfBytesCid(Seq(Seq("نص " + d.text))), ""))
 
   /** Arabic/RTL byte-fidelity wrap: prefixes Arabic text + typographic
     * punctuation before the chrome wrap — the kernel must return it
     * byte-identically (input_hint invariant; the reference demands exact
     * Arabic preservation, convert_to_json.py:489-497, prompt.py:169).
     */
-  def htmlArabic(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val t = "نص تجريبي — " + d.text
-      PageRow(s"doc://a/${d.doc_id}", Ts0,
-        PagesGen.htmlPage(Seq(t), None, d.doc_id).getBytes(UTF_8), "", d.lang)
-    }
-  }
+  def htmlArabic(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "a")(d => (html("نص تجريبي — " + d.text, d), ""))
 
   /** Legacy-encoding wrap: the page BYTES are windows-1252 (glyphs at
     * 0x80-0x9F where Latin-1 has control chars), declared via `<meta
@@ -211,18 +161,15 @@ object DocPages {
     * charset sniff; a UTF-8-only decoder mojibakes every prefix glyph.
     */
   val Win1252Prefix = "€ — «œuvre» ™ "
-  def htmlWin1252(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
+  def htmlWin1252(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "w1252") { d =>
       val decl =
         if (d.doc_id % 2 == 0) "<meta charset=\"windows-1252\">"
         else "<meta http-equiv=\"Content-Type\" content=\"text/html; charset=iso-8859-1\">"
       val page = PagesGen.htmlPage(Seq(Win1252Prefix + d.text), None, d.doc_id)
         .replace("<meta charset=\"utf-8\">", decl)
-      PageRow(s"doc://w1252/${d.doc_id}", Ts0,
-        page.getBytes(java.nio.charset.Charset.forName("windows-1252")), "", d.lang)
+      (page.getBytes(java.nio.charset.Charset.forName("windows-1252")), "")
     }
-  }
 
   /** UTF-16 wrap: page bytes are BOM-prefixed UTF-16 (LE on even
     * doc_ids, BE on odd) — the BOM outranks every declaration in the
@@ -230,9 +177,8 @@ object DocPages {
     * inside is a decoy the decoder must ignore.
     */
   val Utf16Prefix = "Ωμέγα — "
-  def htmlUtf16(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
+  def htmlUtf16(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "u16") { d =>
       val page = PagesGen.htmlPage(Seq(Utf16Prefix + d.text), None, d.doc_id)
       val bytes =
         if (d.doc_id % 2 == 0)
@@ -241,91 +187,60 @@ object DocPages {
         else
           Array[Byte](0xFE.toByte, 0xFF.toByte) ++
             page.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
-      PageRow(s"doc://u16/${d.doc_id}", Ts0, bytes, "", d.lang)
+      (bytes, "")
     }
-  }
+
+  /** The transport payload of [[gzipped]] and [[zstded]]: html chrome on
+    * even doc_ids, a PDF on odd ones (Flate on doc_id%4 = 1).
+    */
+  private def transportInner(d: Doc): Array[Byte] =
+    if (d.doc_id % 2 == 0) html(d.text, d)
+    else PagesGen.pdfBytes(Seq(Seq(d.text)), compress = d.doc_id % 4 == 1)
 
   /** gzip transport wrap: the stored payload is the raw COMPRESSED
     * response body (common in crawl tables) — html chrome inside on even
     * doc_ids, a PDF inside on odd ones, so the kernel must gunzip before
     * content sniffing to recover either.
     */
-  def gzipped(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val inner =
-        if (d.doc_id % 2 == 0)
-          PagesGen.htmlPage(Seq(d.text), None, d.doc_id).getBytes(UTF_8)
-        else PagesGen.pdfBytes(Seq(Seq(d.text)), compress = d.doc_id % 4 == 1)
-      val bos = new java.io.ByteArrayOutputStream(inner.length / 2)
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(inner); gz.close()
-      PageRow(s"doc://gz/${d.doc_id}", Ts0, bos.toByteArray, "", d.lang)
-    }
-  }
+  def gzipped(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "gz")(d => (PagesGen.gzip(transportInner(d)), ""))
 
   /** zstd-compressed transport variant of [[gzipped]] — same inner
     * payload routing (html on even doc_ids, PDF on odd), zstd frame
     * outside. Exercises the second transport codec real crawl archives
     * use (zstd-jni ships with Spark).
     */
-  def zstded(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val inner =
-        if (d.doc_id % 2 == 0)
-          PagesGen.htmlPage(Seq(d.text), None, d.doc_id).getBytes(UTF_8)
-        else PagesGen.pdfBytes(Seq(Seq(d.text)), compress = d.doc_id % 4 == 1)
-      val out = com.github.luben.zstd.Zstd.compress(inner, 3)
-      PageRow(s"doc://zst/${d.doc_id}", Ts0, out, "", d.lang)
-    }
-  }
+  def zstded(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "zst")(d => (com.github.luben.zstd.Zstd.compress(transportInner(d), 3), ""))
 
   /** Empty html → crawl-text passthrough branch. */
-  def passthrough(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      PageRow(s"doc://t/${d.doc_id}", Ts0, Array.emptyByteArray, d.text, d.lang)
-    }
-  }
+  def passthrough(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "t")(d => (Array.emptyByteArray, d.text))
 
   /** Failure-mode census corpus — real crawls are full of rows that
     * must become ERROR ROWS, never task failures: doc_id%5 cycles
     * good-HTML / corrupt-gzip / degenerate-PDF / empty / passthrough.
     */
-  def errorMix(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
-      val url = s"doc://e/${d.doc_id}"
+  def errorMix(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "e") { d =>
       d.doc_id % 5 match {
-        case 0 =>
-          PageRow(url, Ts0, PagesGen.htmlPage(Seq(d.text), None, d.doc_id).getBytes(UTF_8), "", d.lang)
-        case 1 => // valid gzip magic, garbage stream -> gzip_corrupt
-          PageRow(url, Ts0, Array[Byte](0x1f, 0x8b.toByte, 1, 2, 3, 4, 5, 6), "", d.lang)
-        case 2 => // PDF magic, truncated object graph -> pdf_empty
-          PageRow(url, Ts0, "%PDF-1.4\n1 0 obj\n<< /Type /Catalog".getBytes(UTF_8), "", d.lang)
-        case 3 => // nothing at all -> 'empty' kind, no error
-          PageRow(url, Ts0, Array.emptyByteArray, "", d.lang)
-        case _ =>
-          PageRow(url, Ts0, Array.emptyByteArray, d.text, d.lang)
+        case 0 => (html(d.text, d), "")
+        // valid gzip magic, garbage stream -> gzip_corrupt
+        case 1 => (Array[Byte](0x1f, 0x8b.toByte, 1, 2, 3, 4, 5, 6), "")
+        // PDF magic, truncated object graph -> pdf_empty
+        case 2 => ("%PDF-1.4\n1 0 obj\n<< /Type /Catalog".getBytes(UTF_8), "")
+        case 3 => (Array.emptyByteArray, "") // nothing at all -> 'empty' kind, no error
+        case _ => (Array.emptyByteArray, d.text)
       }
     }
-  }
 
   /** Content-sniffing dispatch exercise: doc_id%3 ∈ {html, pdf, passthrough}. */
-  def mixed(spark: SparkSession, dir: String): Dataset[PageRow] = {
-    import spark.implicits._
-    docs(spark, dir).map { d =>
+  def mixed(spark: SparkSession, dir: String): Dataset[PageRow] =
+    rows(spark, dir, "m") { d =>
       d.doc_id % 3 match {
-        case 0 =>
-          PageRow(s"doc://m/${d.doc_id}", Ts0,
-            PagesGen.htmlPage(Seq(d.text), None, d.doc_id).getBytes(UTF_8), "", d.lang)
-        case 1 =>
-          PageRow(s"doc://m/${d.doc_id}", Ts0,
-            PagesGen.pdfBytes(Seq(Seq(d.text)), compress = d.doc_id % 2 == 1), "", d.lang)
-        case _ =>
-          PageRow(s"doc://m/${d.doc_id}", Ts0, Array.emptyByteArray, d.text, d.lang)
+        case 0 => (html(d.text, d), "")
+        case 1 => (PagesGen.pdfBytes(Seq(Seq(d.text)), compress = d.doc_id % 2 == 1), "")
+        case _ => (Array.emptyByteArray, d.text)
       }
     }
-  }
 }

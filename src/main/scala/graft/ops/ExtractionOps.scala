@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Gated
+import graft.gen.PagesGen
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,7 +54,7 @@ object ExtractionOps {
         .map(x => f"${x & 0xff}%02x").mkString
     // standing table: last crawl's raw digest + the text extracted then
     val standing = DocPages.docs(spark, dir).map { d =>
-      val raw = graft.gen.PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
+      val raw = PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       (d.doc_id, md5hex(raw), d.text)
     }.toDF("doc_id", "digest_old", "text_old")
@@ -61,7 +62,7 @@ object ExtractionOps {
     // byte-identical content
     val crawl = DocPages.docs(spark, dir).map { d =>
       val t2 = if (d.doc_id % 4 == 1) d.text + " updated content" else d.text
-      val raw = graft.gen.PagesGen.htmlPage(Seq(t2), None, d.doc_id)
+      val raw = PagesGen.htmlPage(Seq(t2), None, d.doc_id)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       (d.doc_id, raw, md5hex(raw), d.lang)
     }.toDF("doc_id", "raw", "digest_new", "lang")
@@ -102,7 +103,7 @@ object ExtractionOps {
     val dayMs = 86400000L
     val baseMs = 1735689600000L // 2025-01-01T00:00:00Z
     val pages = DocPages.docs(spark, dir).map { d =>
-      val html = graft.gen.PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
+      val html = PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
       graft.model.PageRow(s"doc://h/${d.doc_id}",
         new java.sql.Timestamp(baseMs + (d.doc_id % 4) * dayMs),
         html.getBytes(java.nio.charset.StandardCharsets.UTF_8), "", d.lang)
@@ -195,59 +196,33 @@ object ExtractionOps {
     extracted(spark, pages).select(col("doc_id"), col("extracted_text"))
   }
 
-  /** resource record (payload = text) + its revisit record, shared by
+  /** Resource record (payload = text) + its revisit record, shared by
     * the revisit, CDX-offset and gz-member queries.
     */
-  private def resourceRecord(d: Long, text: String): Array[Byte] = {
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val url = s"http://host${d % 20}.example/p$d.html"
-    val body = text.getBytes(utf8)
-    val rec = new java.io.ByteArrayOutputStream(body.length + 256)
-    def w(s: String): Unit = rec.write(s.getBytes(utf8))
-    w("WARC/1.0\r\nWARC-Type: resource\r\n")
-    w(s"WARC-Target-URI: $url\r\nWARC-Date: 2024-01-01T00:00:00Z\r\n")
-    w(s"Content-Length: ${body.length}\r\n\r\n")
-    rec.write(body)
-    rec.toByteArray
-  }
-
-  private def revisitRecord(d: Long, text: String): Array[Byte] = {
+  private def docRecords(d: Long, text: String): Seq[Array[Byte]] = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val url = s"http://host${d % 20}.example/p$d.html"
     val digest = "md5:" + java.security.MessageDigest.getInstance("MD5")
       .digest(text.getBytes(utf8)).map(b => f"${b & 0xff}%02x").mkString
-    (s"WARC/1.0\r\nWARC-Type: revisit\r\n" +
-      s"WARC-Target-URI: $url?recrawl\r\nWARC-Date: 2024-02-01T00:00:00Z\r\n" +
-      s"WARC-Refers-To-Target-URI: <$url>\r\n" +
-      s"WARC-Payload-Digest: $digest\r\nContent-Length: 0\r\n\r\n").getBytes(utf8)
+    Seq(
+      PagesGen.warcRecord(Seq("WARC-Type" -> "resource", "WARC-Target-URI" -> url,
+        "WARC-Date" -> "2024-01-01T00:00:00Z"), text.getBytes(utf8)),
+      PagesGen.warcRecord(Seq("WARC-Type" -> "revisit", "WARC-Target-URI" -> s"$url?recrawl",
+        "WARC-Date" -> "2024-02-01T00:00:00Z", "WARC-Refers-To-Target-URI" -> s"<$url>",
+        "WARC-Payload-Digest" -> digest), Array.emptyByteArray))
   }
 
-  private val RecSep = "\r\n\r\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  private def twoRecordArchive(d: Long, text: String): Array[Byte] = {
-    val archive = new java.io.ByteArrayOutputStream(512)
-    archive.write(resourceRecord(d, text))
-    archive.write(RecSep)
-    archive.write(revisitRecord(d, text))
-    archive.toByteArray
-  }
+  /** The records joined by CRLFCRLF, with none after the last: the
+    * `q_warc_cdx_offsets` oracle pins these extents.
+    */
+  private def twoRecordArchive(d: Long, text: String): Array[Byte] =
+    docRecords(d, text).reduce(_ ++ PagesGen.WarcSep ++ _)
 
   /** Per-member `.warc.gz` (the real Common Crawl layout: one gzip
     * member per record, trailing CRLFCRLF inside the member).
     */
-  private def twoMemberGzArchive(d: Long, text: String): Array[Byte] = {
-    def gz(recs: Array[Byte]*): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream(256)
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      recs.foreach(g.write)
-      g.close()
-      bos.toByteArray
-    }
-    val archive = new java.io.ByteArrayOutputStream(512)
-    archive.write(gz(resourceRecord(d, text), RecSep))
-    archive.write(gz(revisitRecord(d, text), RecSep))
-    archive.toByteArray
-  }
+  private def twoMemberGzArchive(d: Long, text: String): Array[Byte] =
+    PagesGen.warcArchive(docRecords(d, text), gzipMembers = true)
 
   /** WARC revisit records — Common Crawl's digest-dedup at the archive
     * layer: a re-crawl whose payload matched an earlier capture ships a
@@ -765,7 +740,7 @@ object ExtractionOps {
             case _ => "zz " + d.text
           }
         graft.model.PageRow(s"doc://pp/${d.doc_id * 2 + cap}", ts0,
-          graft.gen.PagesGen.htmlPage(Seq(body), None, d.doc_id).getBytes(
+          PagesGen.htmlPage(Seq(body), None, d.doc_id).getBytes(
             java.nio.charset.StandardCharsets.UTF_8), "", d.lang)
       }
     }

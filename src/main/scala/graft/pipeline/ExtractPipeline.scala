@@ -127,22 +127,4 @@ object ExtractPipeline {
       .withColumn("n_chars", coalesce(length(col("text")), lit(0)))
     if (conf.postShuffle) keyedBy(out, conf) else out
   }
-
-  /** Relational page→doc rollup for the general case where pages of one
-    * document arrive as separate rows (reference multi-page combined JSON,
-    * api.py:261-269). Order-correct via sort_array on page_no — never
-    * relies on collect_list arrival order (SURVEY §7.4 hard part #5).
-    */
-  def rollupPages(pages: DataFrame): DataFrame = {
-    pages
-      .groupBy(col("url"))
-      .agg(
-        count(lit(1)).cast("int").as("page_count"),
-        array_join(
-          transform(
-            sort_array(collect_list(struct(col("page_no"), col("text")))),
-            p => p.getField("text")),
-          "\n").as("text"),
-        min(col("warc_ts")).as("warc_ts"))
-  }
 }

@@ -61,8 +61,8 @@ class PdfFilterSpec extends AnyFunSuite {
     val payloadRaw = (header + bodies.mkString)
       .getBytes(ISO_8859_1)
     val cols = 8
-    val payload = PagesGen.deflateBytes(
-      PagesGen.pngPredict(PagesGen.padTo(payloadRaw, cols), cols))
+    val payload = PagesGen.deflate(
+      PagesGen.pngFilter(PagesGen.padTo(payloadRaw, cols), cols, bpp = 1))
     val bytes = ("%PDF-1.5\n" +
       s"7 0 obj << /Type /ObjStm /N 3 /First ${header.length} /Length ${payload.length} " +
       s"/Filter /FlateDecode /DecodeParms << /Predictor 12 /Columns $cols >> >> stream\n")
@@ -118,7 +118,7 @@ class PdfFilterSpec extends AnyFunSuite {
     val atCap = Inflate(deflatedZeros(Inflate.MaxOut)).get
     assert(atCap.finished && atCap.bytes.length === Inflate.MaxOut)
     assert(Inflate(deflatedZeros(Inflate.MaxOut + 1L)).isEmpty)
-    val whole = PagesGen.deflateBytes(lines.mkString("\n").getBytes(ISO_8859_1))
+    val whole = PagesGen.deflate(lines.mkString("\n").getBytes(ISO_8859_1))
     val cut = Inflate(whole.take(whole.length - 6)).get
     assert(!cut.finished && lines.mkString("\n").startsWith(new String(cut.bytes, ISO_8859_1)))
     assert(Inflate("not a zlib stream".getBytes(ISO_8859_1)).isEmpty)

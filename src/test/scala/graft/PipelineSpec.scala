@@ -160,15 +160,6 @@ class PipelineSpec extends SparkTestBase with TimeLimits {
     assert(astral.n_chars == astral.text.length - 3, astral.n_chars)
   }
 
-  test("relational rollupPages: page order by page_no, not arrival order") {
-    val ts = new java.sql.Timestamp(0)
-    val pages = Seq(("u://d", 1, ts, "second"), ("u://d", 0, ts, "first"), ("u://d", 2, ts, "third"))
-    val df = ExtractPipeline.rollupPages(pages.toDF("url", "page_no", "warc_ts", "text"))
-    val r = df.collect().head
-    assert(r.getAs[Int]("page_count") == 3)
-    assert(r.getAs[String]("text") == "first\nsecond\nthird")
-  }
-
   test("extract job: day-partitioned write + ledger commit + resume skips committed days") {
     val outDir = tmpDir("graft-out")
     val ledgerDir = tmpDir("graft-ledger")
