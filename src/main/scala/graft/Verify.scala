@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,26 +26,13 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // DRIVER CONTRACT (round-1 postmortem): the driver keys its oracle
     // lookup by the parquet dump's *filename* ("q_foo.parquet"), while the
     // natural key here is the bare query name ("q_foo"). Round 1 emitted
     // only bare keys -> 0/73 key overlap -> every query recorded
     // err:"no_oracle". Emit every oracle under BOTH keys so either join works.
-    val json = SparkEntry.oracleSql
-      .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      SparkEntry.oracleSql.flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Loud orphan check: every dump dir in outDir must have an oracle
     // entry under its filename key. A registry entry always carries its

@@ -72,10 +72,6 @@ object ExtractKernel {
       if (total > maxOut) None else Some(out.toByteArray)
     } catch { case _: StackOverflowError | NonFatal(_) => None }
 
-  /** Back-compat alias (gzip only). */
-  def gunzip(bytes: Array[Byte], maxOut: Int = 64 * 1024 * 1024): Option[Array[Byte]] =
-    if (isGzip(bytes)) decompressTransport(bytes, maxOut) else None
-
   /** One document's merged extraction: `kind` is html | pdf |
     * passthrough | empty, `error` is null on success. PDF pages are
     * joined with '\n' in page order and their spans re-offset into the

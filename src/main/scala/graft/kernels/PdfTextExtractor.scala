@@ -17,26 +17,33 @@ import scala.util.control.NonFatal
   *    chain would resolve to). Page order comes from the catalog's page
   *    TREE (`/Root` → `/Pages` → `/Kids` recursion), not stream file
   *    order; `/Contents` arrays concatenate.
+  *  - TOKEN READERS, one per token form, shared by every site that meets
+  *    it: `readLiteral` for `( … )` strings (lexer, /Info, /Encrypt),
+  *    `readHex` for `< … >` strings (lexer, /Info, /Encrypt, trailer /ID,
+  *    ToUnicode CMap codes and targets; strict for the ASCIIHexDecode
+  *    filter) and `scanStreams` for `stream … endstream` payloads (one
+  *    whole-file scan read by the object index, `streamOf` and fallback).
   *  - ENCODINGS: per-font decode tables from `/Resources /Font`:
   *    WinAnsiEncoding and MacRomanEncoding (built from the JDK's
   *    windows-1252 / x-MacRoman charsets), `/Differences` overrides via
   *    a glyph-name→Unicode table (AGL subset + `uniXXXX`), Latin-1
-  *    semantics for fonts with no declared encoding.
+  *    semantics for fonts with no declared encoding; Type0 fonts map
+  *    2-byte codes through their ToUnicode CMap (codes over 4 bytes are
+  *    skipped, never fatal).
   *  - streams: declared filter CHAINS of FlateDecode (with PNG
   *    predictors 10-15 and TIFF predictor 2 via /DecodeParms — common on
   *    real /ObjStm, XRef and content streams), LZWDecode (9→12-bit
   *    TIFF-style codes, /EarlyChange honored, predictors apply),
   *    ASCIIHexDecode, ASCII85Decode and RunLengthDecode; raw when no
-  *    filter;
-  *    content-stream lexer for
-  *    BT/ET, Tf (font + size), Td, TD, Tm, TL, T*, Tj, TJ, quote;
-  *    literal `(..)` strings with escapes and hex `<..>` strings.
+  *    filter; content-stream lexer for BT/ET, Tf (font + size), Td, TD,
+  *    Tm, TL, T*, Tj, TJ, quote.
   *  - lines: y-cluster rule re-derived from the reference's dormant
   *    `group_lines` (azure_ocr.py:42-82): runs share a line when y
   *    distance < 0.8 × average text height (azure_ocr.py:55-56).
-  *  - files with no parseable catalog fall back to file-order stream
-  *    scanning; anything outside scope (encryption, DCT/JBIG2/JPX
-  *    filters) is surfaced via `unsupported` — honest counting, never
+  *  - FALLBACK: files with no parseable catalog are read from the
+  *    index's own whole-file stream scan, one page per stream that draws
+  *    text, in file order; anything outside scope (encryption, DCT/JBIG2/
+  *    JPX filters) is surfaced via `unsupported` — honest counting, never
   *    silent.
   *
   * Pages: one extraction unit per page-tree leaf; `pages` returns
@@ -51,31 +58,34 @@ object PdfTextExtractor {
 
   private val Latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
 
-  def extract(bytes: Array[Byte]): PdfResult =
-    extractViaPageTree(bytes).getOrElse(extractFileOrder(bytes))
+  def extract(bytes: Array[Byte]): PdfResult = {
+    val doc = indexObjects(bytes)
+    extractViaPageTree(doc).getOrElse(extractFileOrder(doc))
+  }
 
-  /** Fallback for files with no parseable object graph/catalog: streams
-    * in file order (the pre-object-graph behavior).
+  /** Fallback for files with no parseable object graph/catalog: the
+    * index's stream scan in file order (the pre-object-graph behavior).
     */
-  private def extractFileOrder(bytes: Array[Byte]): PdfResult = {
-    val streams = findStreams(bytes)
+  private def extractFileOrder(doc: PdfDoc): PdfResult = {
     // an encrypted file that falls back here has no resolvable object
     // numbers to key per-object decryption: count it honestly instead
     // of lexing ciphertext as content
-    if (indexOf(bytes, "/Encrypt", 0) >= 0)
-      return PdfResult(Array.empty, math.max(1, streams.length))
+    if (doc.s.contains("/Encrypt"))
+      return PdfResult(Array.empty, math.max(1, doc.streams.length))
     val pages = new ArrayBuffer[PageText](4)
     var unsupported = 0
     var pageNo = 0
-    streams.foreach { case (data, ok) =>
-      if (!ok) unsupported += 1
-      else {
-        val runs = parseContentStream(data, Map.empty)
-        if (runs.nonEmpty) {
-          val (text, spans) = assembleLines(runs)
-          pages += PageText(pageNo, text, spans)
-          pageNo += 1
-        }
+    doc.streams.foreach { st =>
+      val raw = java.util.Arrays.copyOfRange(doc.bytes, st.from, st.until)
+      decodeStream(doc.s.substring(st.dict, st.kw), raw) match {
+        case None => unsupported += 1
+        case Some(data) =>
+          val runs = parseContentStream(data, Map.empty)
+          if (runs.nonEmpty) {
+            val (text, spans) = assembleLines(runs)
+            pages += PageText(pageNo, text, spans)
+            pageNo += 1
+          }
       }
     }
     PdfResult(pages.toArray, unsupported)
@@ -83,74 +93,112 @@ object PdfTextExtractor {
 
   // -------------------------------------------------- object graph / pages
 
+  /** A scanned stream: keyword offset `kw`, dict [dict, kw), payload [from, until). */
+  private final case class FileStream(kw: Int, dict: Int, from: Int, until: Int)
+
   private final case class PdfDoc(s: String, bytes: Array[Byte],
+      streams: ArrayBuffer[FileStream],
       objs: Map[Int, (Int, Int)],
       extra: Map[Int, String] = Map.empty,
       crypt: Option[PdfCrypto.Decryptor] = None) {
+    /** The scanned stream whose keyword lies in [a, b), by binary search. */
+    def streamIn(a: Int, b: Int): Option[FileStream] =
+      streams.lift(streams.view.map(_.kw).search(a).insertionPoint).filter(_.kw < b)
+
     /** Dict text of an object (body up to its `stream` keyword, if any).
       * Direct file objects win; `extra` holds members expanded out of
       * /ObjStm compressed object streams (PDF 1.5+), which never carry
       * streams of their own.
       */
     def dict(num: Int): String = objs.get(num) match {
-      case Some((a, b)) =>
-        val body = s.substring(a, b)
-        val k = body.indexOf("stream")
-        if (k >= 0) body.substring(0, k) else body
+      case Some((a, b)) => s.substring(a, streamIn(a, b).fold(b)(_.kw))
       case None => extra.getOrElse(num, "")
     }
   }
 
   private val ObjHeadRe = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+obj\\b")
 
-  /** stream…endstream payload spans — `N G obj` byte patterns INSIDE a
-    * compressed payload (or page text) are phantom headers: under the
-    * later-duplicate-wins rule one could shadow a real object and
-    * silently corrupt extraction, so the header scan skips these spans.
+  /** Start of the dict of a `stream` keyword at `kw`: the balanced
+    * `<< … >>` that ends just before it (bar whitespace), or `floor` (the
+    * end of the previous stream) when that `>>` has no `<<`; -1 when no
+    * `>>` ends there, so `stream` at `kw` is no keyword.
     */
-  private def streamPayloadSpans(s: String): ArrayBuffer[(Int, Int)] = {
-    val spans = new ArrayBuffer[(Int, Int)](8)
-    var i = 0
-    while (i >= 0 && i < s.length) {
-      val k = s.indexOf("stream", i)
-      if (k < 0) i = -1
-      else if (k >= 3 && s.regionMatches(k - 3, "end", 0, 3)) i = k + 6
-      else {
-        var p = k + 6
-        if (p < s.length && s.charAt(p) == '\r') p += 1
-        if (p < s.length && s.charAt(p) == '\n') p += 1
-        val e = s.indexOf("endstream", p)
-        if (e < 0) { spans += ((p, s.length)); i = -1 }
-        else { spans += ((p, e)); i = e + 9 }
-      }
+  private def dictBefore(s: String, kw: Int, floor: Int): Int = {
+    var i = kw
+    while (i > floor && isWsChar(s.charAt(i - 1))) i -= 1
+    if (!s.startsWith(">>", i - 2)) return -1
+    var depth = 0
+    i -= 2
+    while (i >= floor) {
+      if (s.startsWith(">>", i)) { depth += 1; i -= 2 }
+      else if (s.startsWith("<<", i)) { depth -= 1; if (depth == 0) return i; i -= 2 }
+      else i -= 1
     }
-    spans
+    floor
   }
 
-  private def indexObjects(bytes: Array[Byte]): Option[PdfDoc] = {
+  /** The one stream locator: in file order, each `stream` keyword that
+    * follows a dict (never the tail of `endstream`), its dict and payload,
+    * from the keyword's EOL to a direct /Length that `endstream` follows
+    * (binary data may end in CR/LF or hold `endstream`), else to the EOL
+    * before the next `endstream`, else to the end. The spans also guard the
+    * header scan: an `N G obj` INSIDE a payload is a phantom header.
+    */
+  private def scanStreams(s: String): ArrayBuffer[FileStream] = {
+    def skipEol(i0: Int): Int = {
+      val i = if (i0 < s.length && s.charAt(i0) == '\r') i0 + 1 else i0
+      if (i < s.length && s.charAt(i) == '\n') i + 1 else i
+    }
+    val out = new ArrayBuffer[FileStream](8)
+    var i = 0
+    while (i < s.length) {
+      val k = s.indexOf("stream", i)
+      val d = if (k < 0) -1 else dictBefore(s, k, i)
+      if (k < 0) i = s.length
+      else if (d < 0) i = k + 6 // text such as `endstream` or a string's word
+      else {
+        val p = skipEol(k + 6)
+        intOf(s.substring(d, k), "Length").filter(p.toLong + _ <= s.length).map(p + _)
+          .filter(q => s.startsWith("endstream", skipEol(q))) match {
+          case Some(q) => out += FileStream(k, d, p, q); i = skipEol(q) + 9
+          case None =>
+            val e = s.indexOf("endstream", p)
+            var q = if (e < 0) s.length else e
+            if (q > p && s.charAt(q - 1) == '\n') q -= 1
+            if (q > p && s.charAt(q - 1) == '\r') q -= 1
+            out += FileStream(k, d, p, q)
+            i = if (e < 0) s.length else e + 9
+        }
+      }
+    }
+    out
+  }
+
+  /** Object index (`objs` empty when the file has no object headers). */
+  private def indexObjects(bytes: Array[Byte]): PdfDoc = {
     val s = new String(bytes, Latin1)
+    val streams = scanStreams(s)
     val m = ObjHeadRe.matcher(s)
     val all = new ArrayBuffer[(Int, Int, Int)](16) // (num, bodyStart, headStart)
     while (m.find()) all += ((m.group(1).toInt, m.end(), m.start()))
-    if (all.isEmpty) return None
-    val payload = streamPayloadSpans(s)
-    val filtered = all.filterNot { case (_, _, h) =>
-      payload.exists { case (a, b) => h >= a && h < b }
+    val filtered = all.filterNot { case (_, _, h) => // last stream starting at or before h
+      streams.lift(streams.view.map(_.from).search(h + 1).insertionPoint - 1).exists(h < _.until)
     }
     // raw-scan fallback: if span exclusion leaves nothing (pathological
     // framing), trust the raw header scan as before
     val heads = if (filtered.nonEmpty) filtered else all
     var objs = Map.empty[Int, (Int, Int)]
+    var e = s.indexOf("endobj") // first `endobj` at or after the current body
     var i = 0
     while (i < heads.length) {
       val (num, a, _) = heads(i)
       val hardEnd = if (i + 1 < heads.length) heads(i + 1)._3 else s.length
-      val e = s.indexOf("endobj", a)
+      if (e >= 0 && e < a) e = s.indexOf("endobj", a)
       val b = if (e >= 0 && e < hardEnd) e else hardEnd
       objs += num -> (a, b) // later duplicate (incremental update) wins
       i += 1
     }
-    Some(PdfDoc(s, bytes, objs))
+    PdfDoc(s, bytes, streams, objs)
   }
 
   // key-parameterized patterns compile once per (shape, key) — these run
@@ -216,37 +264,10 @@ object PdfTextExtractor {
     * filter (encryption, DCT, ... stay honestly `unsupported`).
     */
   private def streamOf(doc: PdfDoc, num: Int): Option[Array[Byte]] =
-    doc.objs.get(num).flatMap { case (a, b) =>
-      val body = doc.s.substring(a, b)
-      val k = body.indexOf("stream")
-      if (k < 0) None
-      else {
-        val d = body.substring(0, k)
-        var p = a + k + 6
-        if (p < doc.bytes.length && doc.bytes(p) == '\r') p += 1
-        if (p < doc.bytes.length && doc.bytes(p) == '\n') p += 1
-        // Prefer a validated direct /Length: binary payloads (encrypted
-        // or compressed) may legitimately end in \r/\n bytes, which the
-        // scan-based fallback would clip, or contain 'endstream' as data.
-        // An indirect "/Length N 0 R" mis-parses as N here and simply
-        // fails validation → scan fallback.
-        val byLength = intOf(d, "Length").filter { len =>
-          val end = p.toLong + len
-          end <= doc.bytes.length && {
-            var r = end.toInt
-            if (r < doc.bytes.length && doc.bytes(r) == '\r') r += 1
-            if (r < doc.bytes.length && doc.bytes(r) == '\n') r += 1
-            doc.s.startsWith("endstream", r)
-          }
-        }.map(p + _)
-        val q = byLength.getOrElse {
-          val e = doc.s.indexOf("endstream", p)
-          var q0 = if (e < 0) b else e
-          if (q0 > p && doc.bytes(q0 - 1) == '\n') q0 -= 1
-          if (q0 > p && doc.bytes(q0 - 1) == '\r') q0 -= 1
-          q0
-        }
-        val raw = java.util.Arrays.copyOfRange(doc.bytes, p, math.max(p, q))
+    doc.objs.get(num).flatMap { case (a, b) => doc.streamIn(a, b).map((a, _)) }.flatMap {
+      case (a, st) =>
+        val d = doc.s.substring(a, st.kw)
+        val raw = java.util.Arrays.copyOfRange(doc.bytes, st.from, st.until)
         // decrypt-then-decode: stream data is encrypted AFTER filtering
         // at write time, so decryption comes first on read. Generation
         // numbers are virtually always 0 in practice (and always 0 in
@@ -255,7 +276,6 @@ object PdfTextExtractor {
           case Some(c) => c.decrypt(num, 0, raw).flatMap(decodeStream(d, _))
           case None    => decodeStream(d, raw)
         }
-      }
     }
 
   // ------------------------------------------------------- stream filters
@@ -294,7 +314,10 @@ object PdfTextExtractor {
             // a truncated stream keeps what it inflated, as viewers do
             Inflate(data).flatMap(o => applyPredictor(dict, o.bytes))
           case "LZWDecode" | "LZW" =>
-            lzwDecode(data, earlyChangeOf(dict)).flatMap(applyPredictor(dict, _))
+            // /EarlyChange defaults to 1 per the spec: code width grows
+            // one code early, TIFF-compatible
+            val early = decodeParms(dict).flatMap(intOf(_, "EarlyChange")).getOrElse(1)
+            lzwDecode(data, early).flatMap(applyPredictor(dict, _))
           case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
           case "ASCII85Decode" | "A85" => ascii85Decode(data)
           case "RunLengthDecode" | "RL" => runLengthDecode(data)
@@ -304,18 +327,22 @@ object PdfTextExtractor {
     }
   }
 
+  /** The /DecodeParms (or abbreviated /DP) dict of a stream dict. */
+  private def decodeParms(dict: String): Option[String] = {
+    val pi = dict.indexOf("/DecodeParms") match {
+      case -1 => dict.indexOf("/DP")
+      case x  => x
+    }
+    if (pi < 0) None else balancedDict(dict, pi)
+  }
+
   /** Undo the /DecodeParms /Predictor transform after Inflate: PNG
     * predictors 10-15 (per-row filter-tag byte, the form real producers
     * emit on /ObjStm, XRef and content streams) and TIFF predictor 2
     * (8-bit components). Predictor 1 / absent = identity.
     */
   private def applyPredictor(dict: String, data: Array[Byte]): Option[Array[Byte]] = {
-    val pi = dict.indexOf("/DecodeParms") match {
-      case -1 => dict.indexOf("/DP")
-      case x  => x
-    }
-    if (pi < 0) return Some(data)
-    val parms = balancedDict(dict, pi).getOrElse(return Some(data))
+    val parms = decodeParms(dict).getOrElse(return Some(data))
     val pred = intOf(parms, "Predictor").getOrElse(1)
     if (pred <= 1) return Some(data)
     val colors = intOf(parms, "Colors").getOrElse(1)
@@ -341,18 +368,6 @@ object PdfTextExtractor {
     } else if (pred >= 10) {
       PngFilters.unfilter(data, rowLen, bpp) // shared PNG row reconstruction
     } else None
-  }
-
-  /** /DecodeParms EarlyChange for LZW (default 1 per the PDF spec —
-    * code width grows one code early, TIFF-compatible).
-    */
-  private def earlyChangeOf(dict: String): Int = {
-    val pi = dict.indexOf("/DecodeParms") match {
-      case -1 => dict.indexOf("/DP")
-      case x  => x
-    }
-    if (pi < 0) 1
-    else balancedDict(dict, pi).flatMap(intOf(_, "EarlyChange")).getOrElse(1)
   }
 
   /** TIFF-style LZW (PDF 7.4.4): MSB-first variable-width codes 9→12
@@ -403,28 +418,9 @@ object PdfTextExtractor {
     } catch { case _: StackOverflowError | NonFatal(_) => None }
 
   private def asciiHexDecode(data: Array[Byte]): Option[Array[Byte]] = {
-    val out = new java.io.ByteArrayOutputStream(data.length / 2)
-    var hi = -1
-    var i = 0
-    while (i < data.length) {
-      val c = data(i).toChar
-      if (c == '>') i = data.length
-      else {
-        val v =
-          if (c >= '0' && c <= '9') c - '0'
-          else if (c >= 'a' && c <= 'f') c - 'a' + 10
-          else if (c >= 'A' && c <= 'F') c - 'A' + 10
-          else if (c == ' ' || c == '\n' || c == '\r' || c == '\t' || c == '\f' || c == 0.toChar) -2
-          else return None
-        if (v >= 0) {
-          if (hi < 0) hi = v
-          else { out.write((hi << 4) | v); hi = -1 }
-        }
-        i += 1
-      }
-    }
-    if (hi >= 0) out.write(hi << 4) // odd final digit: low nibble 0
-    Some(out.toByteArray)
+    val sb = new java.lang.StringBuilder(data.length / 2)
+    if (readHex(new String(data, Latin1), 0, strict = true, sb) < 0) None
+    else Some(sb.toString.getBytes(Latin1))
   }
 
   private def ascii85Decode(data: Array[Byte]): Option[Array[Byte]] = {
@@ -489,56 +485,100 @@ object PdfTextExtractor {
 
   private def intOf(dict: String, key: String): Option[Int] = {
     val m = cachedPattern("int:" + key, "/" + key + "\\s+(\\d+)").matcher(dict)
-    if (m.find()) Some(m.group(1).toInt) else None
+    // a value past Int.MaxValue reads as absent, like any unusable value
+    if (m.find()) m.group(1).toIntOption else None
+  }
+
+  // --------------------------------------------------------- token readers
+
+  /** Literal string whose `(` is at `open` (PDF 32000 §7.3.4.2): balanced
+    * parentheses, the escape table, 1-3 digit octal, and a backslash
+    * before LF, CR or CRLF continues the line. Appends one char per
+    * decoded byte to `sb`; returns the index after the closing `)` (end
+    * of input when unterminated).
+    */
+  private def readLiteral(s: String, open: Int, sb: java.lang.StringBuilder): Int = {
+    val n = s.length
+    var depth = 1
+    var i = open + 1
+    while (i < n && depth > 0) {
+      val ch = s.charAt(i)
+      if (ch == '\\' && i + 1 < n) {
+        s.charAt(i + 1) match {
+          case 'n' => sb.append('\n'); i += 2
+          case 'r' => sb.append('\r'); i += 2
+          case 't' => sb.append('\t'); i += 2
+          case 'b' => sb.append('\b'); i += 2
+          case 'f' => sb.append('\f'); i += 2
+          case d if d >= '0' && d <= '7' =>
+            var v = 0; var k = 0; i += 1
+            while (k < 3 && i < n && s.charAt(i) >= '0' && s.charAt(i) <= '7') {
+              v = v * 8 + (s.charAt(i) - '0'); i += 1; k += 1
+            }
+            sb.append((v & 0xFF).toChar)
+          case '\n' => i += 2
+          case '\r' => i += (if (i + 2 < n && s.charAt(i + 2) == '\n') 3 else 2)
+          case other => sb.append(other); i += 2 // \( \) \\ and unknown escapes
+        }
+      } else {
+        if (ch == '(') depth += 1 else if (ch == ')') depth -= 1
+        if (depth > 0) sb.append(ch)
+        i += 1
+      }
+    }
+    i
+  }
+
+  /** Hex string body from `from` (just past `<`) up to `>` (§7.3.4.3):
+    * whitespace is skipped and an odd final digit is padded with 0.
+    * Appends one char per decoded byte to `sb`; returns the index after
+    * `>` (end of input when unterminated). Other characters are skipped,
+    * or, when `strict` (the ASCIIHexDecode filter), reject it with -1.
+    */
+  private def readHex(s: String, from: Int, strict: Boolean, sb: java.lang.StringBuilder): Int = {
+    var hi = -1
+    var i = from
+    while (i < s.length && s.charAt(i) != '>') {
+      val c = s.charAt(i)
+      val v = Character.digit(c, 16)
+      if (v >= 0) {
+        if (hi < 0) hi = v
+        else { sb.append(((hi << 4) | v).toChar); hi = -1 }
+      } else if (strict && !isWsChar(c)) return -1
+      i += 1
+    }
+    if (hi >= 0) sb.append((hi << 4).toChar)
+    if (i < s.length) i + 1 else i
+  }
+
+  /** The string token at `i` — literal `(..)` or hex `<..>`, not a `<<`
+    * dict — decoded into `sb`; returns the index after it, or -1 when no
+    * string starts at `i`.
+    */
+  private def readString(s: String, i: Int, sb: java.lang.StringBuilder): Int =
+    if (i >= s.length) -1
+    else if (s.charAt(i) == '(') readLiteral(s, i, sb)
+    else if (s.charAt(i) == '<' && i + 1 < s.length && s.charAt(i + 1) != '<')
+      readHex(s, i + 1, strict = false, sb)
+    else -1
+
+  /** PDF string value of `/key` — the first `/key` followed by a string
+    * token — as raw bytes.
+    */
+  private def strOf(dict: String, key: String): Option[Array[Byte]] = {
+    val tag = "/" + key
+    var k = dict.indexOf(tag)
+    while (k >= 0) {
+      var i = k + tag.length
+      while (i < dict.length && isWsChar(dict.charAt(i))) i += 1
+      val sb = new java.lang.StringBuilder(32)
+      if (readString(dict, i, sb) >= 0) return Some(sb.toString.getBytes(Latin1))
+      k = dict.indexOf(tag, k + 1)
+    }
+    None
   }
 
   // ------------------------------------------------------------ encryption
-
-  /** PDF string value of `/key` — hex `<..>` or literal `(..)` with the
-    * standard escapes — as raw bytes.
-    */
-  private def strOf(dict: String, key: String): Option[Array[Byte]] = {
-    val m = cachedPattern("str:" + key,
-      "/" + key + "\\s*(?:<([0-9A-Fa-f\\s]*)>|\\(((?:[^\\\\()]|\\\\[\\s\\S])*)\\))").matcher(dict)
-    if (!m.find()) None
-    else if (m.group(1) != null) {
-      val hex = m.group(1).filterNot(_.isWhitespace)
-      val padded = if (hex.length % 2 == 1) hex + "0" else hex
-      val out = new Array[Byte](padded.length / 2)
-      var i = 0
-      while (i < out.length) {
-        out(i) = Integer.parseInt(padded.substring(2 * i, 2 * i + 2), 16).toByte
-        i += 1
-      }
-      Some(out)
-    } else {
-      val lit = m.group(2)
-      val out = new java.io.ByteArrayOutputStream(lit.length)
-      var i = 0
-      while (i < lit.length) {
-        val c = lit.charAt(i)
-        if (c != '\\') { out.write(c & 0xff); i += 1 }
-        else if (i + 1 < lit.length) {
-          lit.charAt(i + 1) match {
-            case 'n' => out.write('\n'); i += 2
-            case 'r' => out.write('\r'); i += 2
-            case 't' => out.write('\t'); i += 2
-            case 'b' => out.write('\b'); i += 2
-            case 'f' => out.write('\f'); i += 2
-            case d if d >= '0' && d <= '7' =>
-              var v = 0
-              var k = i + 1
-              while (k < lit.length && k < i + 4 && lit.charAt(k) >= '0' && lit.charAt(k) <= '7') {
-                v = v * 8 + (lit.charAt(k) - '0'); k += 1
-              }
-              out.write(v & 0xff); i = k
-            case other => out.write(other & 0xff); i += 2
-          }
-        } else i += 1
-      }
-      Some(out.toByteArray)
-    }
-  }
 
   final case class DocInfo(title: String, author: String, creationDate: String)
 
@@ -554,19 +594,14 @@ object PdfTextExtractor {
     * raw (unreadable) bytes' decode honestly rather than guessing.
     */
   def docInfo(bytes: Array[Byte]): DocInfo = {
-    val empty = DocInfo("", "", "")
-    indexObjects(bytes) match {
-      case None => empty
-      case Some(doc0) =>
-        val (doc, _) = expandObjStm(doc0)
-        lastRefOf(doc.s, "Info") match {
-          case None => empty
-          case Some(num) =>
-            val d = doc.dict(num)
-            def str(key: String): String =
-              strOf(d, key).map(decodePdfText).getOrElse("")
-            DocInfo(str("Title"), str("Author"), pdfDate(strOf(d, "CreationDate")))
-        }
+    val (doc, _) = expandObjStm(indexObjects(bytes))
+    lastRefOf(doc.s, "Info") match {
+      case None => DocInfo("", "", "")
+      case Some(num) =>
+        val d = doc.dict(num)
+        def str(key: String): String =
+          strOf(d, key).map(decodePdfText).getOrElse("")
+        DocInfo(str("Title"), str("Author"), pdfDate(strOf(d, "CreationDate")))
     }
   }
 
@@ -595,23 +630,14 @@ object PdfTextExtractor {
   }
 
   /** First element of the LAST trailer /ID array, as raw bytes. */
-  private val IdRe =
-    java.util.regex.Pattern.compile("/ID\\s*\\[\\s*<([0-9A-Fa-f\\s]*)>")
+  private val IdRe = java.util.regex.Pattern.compile("/ID\\s*\\[\\s*<")
   private def idFirst(s: String): Array[Byte] = {
     val m = IdRe.matcher(s)
-    var hex: String = null
-    while (m.find()) hex = m.group(1)
-    if (hex == null) Array.emptyByteArray
-    else {
-      val h = hex.filterNot(_.isWhitespace)
-      val out = new Array[Byte](h.length / 2)
-      var i = 0
-      while (i < out.length) {
-        out(i) = Integer.parseInt(h.substring(2 * i, 2 * i + 2), 16).toByte
-        i += 1
-      }
-      out
-    }
+    var from = -1
+    while (m.find()) from = m.end()
+    val sb = new java.lang.StringBuilder(16)
+    if (from >= 0) readHex(s, from, strict = false, sb)
+    sb.toString.getBytes(Latin1)
   }
 
   /** Resolve the /Encrypt state of the document with the EMPTY user
@@ -701,8 +727,8 @@ object PdfTextExtractor {
   }
 
   /** Page-tree extraction; None when no catalog/page tree resolves. */
-  private def extractViaPageTree(bytes: Array[Byte]): Option[PdfResult] = {
-    val doc0 = indexObjects(bytes).getOrElse(return None)
+  private def extractViaPageTree(doc0: PdfDoc): Option[PdfResult] = {
+    if (doc0.objs.isEmpty) return None
     val doc1 = buildCrypt(doc0) match {
       case None            => doc0
       case Some(None)      => return Some(PdfResult(Array.empty, 1)) // honest: can't decrypt
@@ -770,17 +796,26 @@ object PdfTextExtractor {
     "beginbfchar(.*?)endbfchar", java.util.regex.Pattern.DOTALL)
   private val BfRangeRe = java.util.regex.Pattern.compile(
     "beginbfrange(.*?)endbfrange", java.util.regex.Pattern.DOTALL)
-  private val HexTokRe = java.util.regex.Pattern.compile("<([0-9A-Fa-f]+)>")
 
-  private def utf16Hex(hex: String): String = {
-    val sb = new java.lang.StringBuilder(hex.length / 4)
-    var i = 0
-    while (i + 4 <= hex.length) {
-      sb.append(Integer.parseInt(hex.substring(i, i + 4), 16).toChar)
-      i += 4
+  /** The `<..>` tokens of one CMap section in order, one char per byte. */
+  private def hexTokens(section: String): ArrayBuffer[String] = {
+    val out = new ArrayBuffer[String](8)
+    var i = section.indexOf('<')
+    while (i >= 0) {
+      val sb = new java.lang.StringBuilder(4)
+      i = section.indexOf('<', readHex(section, i + 1, strict = false, sb))
+      out += sb.toString
     }
-    sb.toString
+    out
   }
+
+  /** A CMap code: its 1-4 bytes big-endian, or -1 for any other length. */
+  private def cmapCode(tok: String): Long =
+    if (tok.isEmpty || tok.length > 4) -1L else tok.foldLeft(0L)((v, c) => (v << 8) | c)
+
+  /** A CMap target: its bytes as UTF-16BE units (an odd last byte drops). */
+  private def utf16(tok: String): String =
+    new String(Array.tabulate(tok.length / 2)(i => ((tok(2 * i) << 8) | tok(2 * i + 1)).toChar))
 
   /** Parse a ToUnicode CMap stream (bfchar pairs + simple bfrange runs —
     * the shapes every mainstream producer emits).
@@ -789,33 +824,29 @@ object PdfTextExtractor {
     val m = new java.util.HashMap[Integer, String]()
     val bc = BfCharRe.matcher(cmap)
     while (bc.find()) {
-      val toks = HexTokRe.matcher(bc.group(1))
-      var src = -1
-      while (toks.find()) {
-        if (src < 0) src = Integer.parseInt(toks.group(1), 16)
-        else { m.put(src, utf16Hex(toks.group(1))); src = -1 }
+      val t = hexTokens(bc.group(1))
+      var j = 0
+      while (j + 1 < t.length) {
+        val src = cmapCode(t(j))
+        if (src >= 0) m.put(src.toInt, utf16(t(j + 1)))
+        j += 2
       }
     }
     val br = BfRangeRe.matcher(cmap)
     while (br.find()) {
-      val toks = HexTokRe.matcher(br.group(1))
-      val trio = new ArrayBuffer[String](3)
-      while (toks.find()) {
-        trio += toks.group(1)
-        if (trio.length == 3) {
-          val lo = Integer.parseInt(trio(0), 16)
-          val hi = Integer.parseInt(trio(1), 16)
-          val dst0 = utf16Hex(trio(2))
-          if (dst0.nonEmpty && hi - lo <= 0xFFFF) {
-            var c = lo
-            while (c <= hi) {
-              val last = dst0.charAt(dst0.length - 1)
-              m.put(c, dst0.substring(0, dst0.length - 1) + (last + (c - lo)).toChar)
-              c += 1
-            }
-          }
-          trio.clear()
+      val t = hexTokens(br.group(1))
+      var j = 0
+      while (j + 2 < t.length) {
+        val lo = cmapCode(t(j))
+        val hi = cmapCode(t(j + 1))
+        val dst0 = utf16(t(j + 2))
+        if (lo >= 0 && dst0.nonEmpty && hi - lo <= 0xFFFF) {
+          val stem = dst0.substring(0, dst0.length - 1)
+          val last = dst0.charAt(dst0.length - 1)
+          var c = lo
+          while (c <= hi) { m.put(c.toInt, stem + (last + (c - lo)).toChar); c += 1 }
         }
+        j += 3
       }
     }
     CidMap(m)
@@ -994,72 +1025,6 @@ object PdfTextExtractor {
         }
     }
 
-  // ------------------------------------------------------------ stream scan
-
-  /** Find raw stream payloads; decode Flate when declared. Returns
-    * (payload, decodable) pairs in file order.
-    */
-  private def findStreams(bytes: Array[Byte]): ArrayBuffer[(Array[Byte], Boolean)] = {
-    val out = new ArrayBuffer[(Array[Byte], Boolean)](4)
-    val n = bytes.length
-    var i = 0
-    while (i < n) {
-      val s = indexOf(bytes, "stream", i)
-      if (s < 0) { i = n }
-      else {
-        // dict lookback: from previous "<<" to s
-        val dictStart = lastIndexOf(bytes, "<<", s)
-        val dict =
-          if (dictStart >= 0) new String(bytes, dictStart, s - dictStart, Latin1)
-          else ""
-        // payload starts after "stream" + EOL
-        var p = s + 6
-        if (p < n && bytes(p) == '\r') p += 1
-        if (p < n && bytes(p) == '\n') p += 1
-        val e = indexOf(bytes, "endstream", p)
-        val end = if (e < 0) n else e
-        // trim trailing EOL before "endstream"
-        var q = end
-        if (q > p && bytes(q - 1) == '\n') q -= 1
-        if (q > p && bytes(q - 1) == '\r') q -= 1
-        val raw = java.util.Arrays.copyOfRange(bytes, p, math.max(p, q))
-        if (dict.contains("/Filter") || dict.contains("/DecodeParms")) {
-          decodeStream(dict, raw) match {
-            case Some(d) => out += ((d, true))
-            case None    => out += ((Array.emptyByteArray, false))
-          }
-        } else out += ((raw, true))
-        i = if (e < 0) n else e + 9
-      }
-    }
-    out
-  }
-
-  private def indexOf(hay: Array[Byte], needle: String, from: Int): Int = {
-    val nb = needle.getBytes(Latin1)
-    var i = math.max(from, 0)
-    val last = hay.length - nb.length
-    while (i <= last) {
-      var j = 0
-      while (j < nb.length && hay(i + j) == nb(j)) j += 1
-      if (j == nb.length) return i
-      i += 1
-    }
-    -1
-  }
-
-  private def lastIndexOf(hay: Array[Byte], needle: String, before: Int): Int = {
-    val nb = needle.getBytes(Latin1)
-    var i = math.min(before, hay.length) - nb.length
-    while (i >= 0) {
-      var j = 0
-      while (j < nb.length && hay(i + j) == nb(j)) j += 1
-      if (j == nb.length) return i
-      i -= 1
-    }
-    -1
-  }
-
   // ---------------------------------------------------- content-stream lexer
 
   /** Parse text-positioning + text-showing operators from one content
@@ -1172,60 +1137,15 @@ object PdfTextExtractor {
 
     while (i < n) {
       val c = s.charAt(i)
-      if (c == '(') {
-        // literal string with escapes and balanced parens
+      if (c == '(' || c == '<') {
         val sb = new java.lang.StringBuilder(32)
-        var depth = 1
-        i += 1
-        while (i < n && depth > 0) {
-          val ch = s.charAt(i)
-          if (ch == '\\' && i + 1 < n) {
-            val e = s.charAt(i + 1)
-            e match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case 'b' => sb.append('\b'); i += 2
-              case 'f' => sb.append('\f'); i += 2
-              case '(' => sb.append('('); i += 2
-              case ')' => sb.append(')'); i += 2
-              case '\\' => sb.append('\\'); i += 2
-              case d if d >= '0' && d <= '7' =>
-                var v = 0; var k = 0; i += 1
-                while (k < 3 && i < n && s.charAt(i) >= '0' && s.charAt(i) <= '7') {
-                  v = v * 8 + (s.charAt(i) - '0'); i += 1; k += 1
-                }
-                sb.append((v & 0xFF).toChar)
-              case '\n' => i += 2 // line continuation
-              case other => sb.append(other); i += 2
-            }
-          } else if (ch == '(') { depth += 1; sb.append(ch); i += 1 }
-          else if (ch == ')') { depth -= 1; if (depth > 0) sb.append(ch); i += 1 }
-          else { sb.append(ch); i += 1 }
+        val end = readString(s, i, sb)
+        if (end < 0) i += 2 // '<<' dict begin — skip both
+        else {
+          val str = sb.toString
+          if (inArray) pendingArray += str else pendingString = str
+          i = end
         }
-        val str = sb.toString
-        if (inArray) pendingArray += str else pendingString = str
-      } else if (c == '<' && i + 1 < n && s.charAt(i + 1) != '<') {
-        // hex string
-        val end = s.indexOf('>', i + 1)
-        val hex = if (end < 0) s.substring(i + 1) else s.substring(i + 1, end)
-        val sb = new java.lang.StringBuilder(hex.length / 2)
-        var k = 0
-        var hi = -1
-        while (k < hex.length) {
-          val h = Character.digit(hex.charAt(k), 16)
-          if (h >= 0) {
-            if (hi < 0) hi = h
-            else { sb.append(((hi << 4) | h).toChar); hi = -1 }
-          }
-          k += 1
-        }
-        if (hi >= 0) sb.append((hi << 4).toChar)
-        val str = sb.toString
-        if (inArray) pendingArray += str else pendingString = str
-        i = if (end < 0) n else end + 1
-      } else if (c == '<') { // '<<' dict begin — skip both
-        i += 2
       } else if (c == '[') { inArray = true; pendingArray.clear(); i += 1 }
       else if (c == ']') { inArray = false; i += 1 }
       else if (c == '/') { // name object: record (Tf reads it for font)

@@ -361,7 +361,9 @@ object WarcKernel {
     }
     val ce = headerOf(head, "Content-Encoding").map(_.trim.toLowerCase(java.util.Locale.ROOT))
     if (ce.contains("gzip") || ce.contains("x-gzip")) {
-      ExtractKernel.gunzip(body) match {
+      val gunzipped =
+        if (ExtractKernel.isGzip(body)) ExtractKernel.decompressTransport(body) else None
+      gunzipped match {
         case Some(b) => body = b
         case None    => return Left("http_gzip_corrupt")
       }

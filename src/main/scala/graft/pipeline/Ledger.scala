@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Atomic manifest ledger: commit semantics for checkpointed resume
   * (SURVEY.md §7.3). No Iceberg runtime jar is available offline, so the
@@ -33,6 +34,8 @@ object Ledger {
     java.net.URLEncoder.encode(partition, "UTF-8")
 
   private def ledgerPath(dir: String): Path = Paths.get(dir)
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   def committed(dir: String): Map[String, Entry] = {
     val p = ledgerPath(dir)
@@ -66,12 +69,11 @@ object Ledger {
     // like Iceberg's sequence numbers)
     val e = if (e0.snapshot != 0L) e0
       else e0.copy(snapshot = currentSnapshot(dir) + 1L)
-    val json =
-      s"""{"partition":${q(e.partition)},"rows":${e.rows},"chars":${e.chars},""" +
-        s""""errors":${e.errors},"wall_ms":${e.wallMs},"committed_at_ms":${e.committedAtMs},""" +
-        s""""snapshot":${e.snapshot}}"""
+    val json = Json.createObjectNode().put("partition", e.partition).put("rows", e.rows)
+      .put("chars", e.chars).put("errors", e.errors).put("wall_ms", e.wallMs)
+      .put("committed_at_ms", e.committedAtMs).put("snapshot", e.snapshot)
     val tmp = p.resolve(s".tmp-${enc(e.partition)}-${Thread.currentThread().getId}")
-    Files.write(tmp, json.getBytes(UTF_8))
+    Files.write(tmp, Json.writeValueAsBytes(json))
     // atomic rename = the commit point (move-after-success)
     Files.move(tmp, p.resolve(s"${enc(e.partition)}.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
@@ -83,33 +85,21 @@ object Ledger {
     ()
   }
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Tiny flat-JSON reader for our own writer's output (no JSON lib on the
-    * offline classpath worth pulling in for 6 fixed fields).
+  /** One ledger file back to its entry; None when it is not a ledger
+    * object (no string `partition` or integral `rows`).
     */
-  private[pipeline] def parse(json: String): Option[Entry] = {
-    def str(k: String): Option[String] = {
-      val m = ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(json)
-      m.map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    }
-    def num(k: String): Option[Long] = {
-      val m = ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(json)
-      m.map(_.group(1).toLong)
-    }
-    for {
-      p <- str("partition")
-      r <- num("rows")
-    } yield Entry(p, r, num("chars").getOrElse(0L), num("errors").getOrElse(0L),
-      num("wall_ms").getOrElse(0L), num("committed_at_ms").getOrElse(0L),
-      // entries written before snapshot ids existed parse as snapshot 1,
-      // not 0: readSince(0) ("everything") must still include them
-      num("snapshot").getOrElse(1L))
-  }
+  private[pipeline] def parse(json: String): Option[Entry] =
+    try {
+      val n = Json.readTree(json)
+      def num(k: String): Option[Long] =
+        Option(n.get(k)).filter(_.isIntegralNumber).map(_.asLong)
+      for {
+        p <- Option(n.get("partition")).filter(_.isTextual).map(_.asText)
+        r <- num("rows")
+      } yield Entry(p, r, num("chars").getOrElse(0L), num("errors").getOrElse(0L),
+        num("wall_ms").getOrElse(0L), num("committed_at_ms").getOrElse(0L),
+        // entries written before snapshot ids existed parse as snapshot 1,
+        // not 0: readSince(0) ("everything") must still include them
+        num("snapshot").getOrElse(1L))
+    } catch { case NonFatal(_) => None }
 }

@@ -66,7 +66,7 @@ class GzipTransportSpec extends AnyFunSuite {
 
   test("gunzip bounds output size (decompression-bomb guard)") {
     val bomb = gz(new Array[Byte](4 * 1024 * 1024)) // 4MB of zeros, tiny gz
-    assert(ExtractKernel.gunzip(bomb, maxOut = 1024 * 1024).isEmpty)
-    assert(ExtractKernel.gunzip(bomb).isDefined) // default cap admits it
+    assert(ExtractKernel.decompressTransport(bomb, maxOut = 1024 * 1024).isEmpty)
+    assert(ExtractKernel.decompressTransport(bomb).isDefined) // default cap admits it
   }
 }

@@ -78,6 +78,24 @@ class SnapshotDiffSpec extends SparkTestBase {
     assert(Ledger.currentSnapshot(ledger) === 1L)
   }
 
+  test("pre-snapshot ledger entries without counters read them as 0") {
+    val ledger = tmpDir("snapdiff_bare")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ledger))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$ledger/p_day%3D2025-01-02.json"),
+      """{"partition":"p_day=2025-01-02","rows":4}""")
+    assert(Ledger.committed(ledger) ===
+      Map("p_day=2025-01-02" -> Ledger.Entry("p_day=2025-01-02", 4, 0, 0, 0, 0, 1)))
+  }
+
+  test("a partition with control, quote and backslash characters survives commit and read") {
+    val ledger = tmpDir("snapdiff_escape")
+    val part = "k=a\u0001b\"c\\d"
+    val e = Ledger.Entry(part, 1, 2, 3, 4, 5, 6)
+    Ledger.commit(ledger, e)
+    assert(Ledger.committed(ledger) === Map(part -> e))
+  }
+
   test("readSince ORs across different partition columns") {
     val out = tmpDir("snapdiff_or_out")
     val ledger = tmpDir("snapdiff_or_ledger")
