@@ -46,8 +46,8 @@ object ExtractKernel {
 
   def isGzip(b: Array[Byte]): Boolean = transportOf(b) == "gzip"
 
-  /** Bounded transport decompression; None on corrupt/truncated/
-    * oversized streams (decompression-bomb guard).
+  /** Bounded transport decompression, its stream closed on every path;
+    * None on corrupt/truncated/oversized streams (decompression-bomb guard).
     */
   def decompressTransport(bytes: Array[Byte],
       maxOut: Int = 64 * 1024 * 1024): Option[Array[Byte]] =
@@ -59,17 +59,18 @@ object ExtractKernel {
           new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(bytes))
         case _ => return None
       }
-      val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 20))
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      var total = 0L
-      while (n >= 0 && total <= maxOut) {
-        out.write(chunk, 0, n)
-        total += n
-        n = in.read(chunk)
-      }
-      in.close()
-      if (total > maxOut) None else Some(out.toByteArray)
+      try {
+        val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 20))
+        val chunk = new Array[Byte](8192)
+        var n = in.read(chunk)
+        var total = 0L
+        while (n >= 0 && total <= maxOut) {
+          out.write(chunk, 0, n)
+          total += n
+          n = in.read(chunk)
+        }
+        if (total > maxOut) None else Some(out.toByteArray)
+      } finally in.close()
     } catch { case _: StackOverflowError | NonFatal(_) => None }
 
   /** One document's merged extraction: `kind` is html | pdf |
@@ -93,9 +94,9 @@ object ExtractKernel {
     * functions: size cap, transport decode, sniff, then the PDF or HTML
     * kernel. Crawl `text` stands in only when no `html` bytes were stored;
     * a coded body that decodes to nothing is `empty`. Every non-fatal
-    * fault (and a stack overflow from a recursive walk over a hostile
-    * document) becomes an error row; OOM and task-kill interrupts reach
-    * Spark.
+    * fault becomes an error row, and so would a stack overflow (the
+    * kernels walk nested input on their own stacks; this is the guard
+    * if one ever recurses); OOM and task-kill interrupts reach Spark.
     */
   def extract(html: Array[Byte], text: String, maxBytes: Int): Result = {
     val size = if (html == null) 0 else html.length

@@ -9,20 +9,24 @@ import scala.util.control.NonFatal
   * Replaces the reference's raster→Azure-OCR path (api.py:127-144,
   * azure_ocr.py:98-140) with direct content-stream parsing — zero egress,
   * zero raster. Scope (SURVEY §7.4 hard part #1):
-  *  - OBJECT-GRAPH WALK: `N G obj … endobj` objects are indexed by
-  *    scanning headers (deliberately NOT trusting xref byte offsets —
-  *    the repair-mode strategy real parsers fall back to, and the only
-  *    robust one against the broken offsets common in crawl PDFs; for
-  *    incremental updates the later object wins, which is what the xref
-  *    chain would resolve to). Page order comes from the catalog's page
-  *    TREE (`/Root` → `/Pages` → `/Kids` recursion), not stream file
-  *    order; `/Contents` arrays concatenate.
-  *  - TOKEN READERS, one per token form, shared by every site that meets
-  *    it: `readLiteral` for `( … )` strings (lexer, /Info, /Encrypt),
-  *    `readHex` for `< … >` strings (lexer, /Info, /Encrypt, trailer /ID,
-  *    ToUnicode CMap codes and targets; strict for the ASCIIHexDecode
-  *    filter) and `scanStreams` for `stream … endstream` payloads (one
-  *    whole-file scan read by the object index, `streamOf` and fallback).
+  *  - OBJECT PARSER: `ObjReader` reads the PDF object grammar (PDF
+  *    32000-1 §7.2-7.3) into dicts, arrays, names, numbers, strings,
+  *    references and keywords, nesting on an explicit stack, so no input
+  *    depth can overflow the task stack. Every key is read from a parsed
+  *    dict; damaged syntax is repaired locally (`ObjReader.value`).
+  *  - OBJECT-GRAPH WALK: one forward pass of the parser (§7.5) reads
+  *    `N G obj … endobj`, `trailer` dicts and streams in file order,
+  *    deliberately NOT trusting xref byte offsets (the repair-mode
+  *    strategy real parsers fall back to, and the only robust one against
+  *    the broken offsets common in crawl PDFs); for incremental updates
+  *    the later object wins, which is what the xref chain would resolve
+  *    to. Strings and stream payloads are tokens, so `endobj` inside one
+  *    is never structure. Page order comes from the catalog's page TREE
+  *    (`/Root` → `/Pages` → `/Kids`, an explicit-stack walk with a
+  *    visited set), not stream file order; `/Contents` arrays concatenate.
+  *  - TOKEN READERS: `readLiteral` for `( … )` and `readHex` for `< … >`
+  *    strings serve the object parser, the content-stream lexer and
+  *    ToUnicode CMap codes and targets (strict for ASCIIHexDecode).
   *  - ENCODINGS: per-font decode tables from `/Resources /Font`:
   *    WinAnsiEncoding and MacRomanEncoding (built from the JDK's
   *    windows-1252 / x-MacRoman charsets), `/Differences` overrides via
@@ -40,11 +44,10 @@ import scala.util.control.NonFatal
   *  - lines: y-cluster rule re-derived from the reference's dormant
   *    `group_lines` (azure_ocr.py:42-82): runs share a line when y
   *    distance < 0.8 × average text height (azure_ocr.py:55-56).
-  *  - FALLBACK: files with no parseable catalog are read from the
-  *    index's own whole-file stream scan, one page per stream that draws
-  *    text, in file order; anything outside scope (encryption, DCT/JBIG2/
-  *    JPX filters) is surfaced via `unsupported` — honest counting, never
-  *    silent.
+  *  - FALLBACK: files with no parseable catalog are read from the same
+  *    pass's streams, one page per stream that draws text, in file
+  *    order; anything outside scope (encryption, DCT/JBIG2/JPX filters)
+  *    is surfaced via `unsupported` — honest counting, never silent.
   *
   * Pages: one extraction unit per page-tree leaf; `pages` returns
   * per-page text in page-tree order (reference per-page loop
@@ -64,199 +67,352 @@ object PdfTextExtractor {
   }
 
   /** Fallback for files with no parseable object graph/catalog: the
-    * index's stream scan in file order (the pre-object-graph behavior).
+    * index's streams in file order (the pre-object-graph behavior).
     */
   private def extractFileOrder(doc: PdfDoc): PdfResult = {
     // an encrypted file that falls back here has no resolvable object
     // numbers to key per-object decryption: count it honestly instead
     // of lexing ciphertext as content
-    if (doc.s.contains("/Encrypt"))
+    if (doc.trailer("Encrypt").isDefined)
       return PdfResult(Array.empty, math.max(1, doc.streams.length))
     val pages = new ArrayBuffer[PageText](4)
     var unsupported = 0
-    var pageNo = 0
     doc.streams.foreach { st =>
-      val raw = java.util.Arrays.copyOfRange(doc.bytes, st.from, st.until)
-      decodeStream(doc.s.substring(st.dict, st.kw), raw) match {
+      decodeStream(st.dict, doc.payload(st)) match {
         case None => unsupported += 1
-        case Some(data) =>
-          val runs = parseContentStream(data, Map.empty)
-          if (runs.nonEmpty) {
-            val (text, spans) = assembleLines(runs)
-            pages += PageText(pageNo, text, spans)
-            pageNo += 1
-          }
+        case Some(data) => addPage(pages, data, Map.empty)
       }
     }
     PdfResult(pages.toArray, unsupported)
   }
 
-  // -------------------------------------------------- object graph / pages
+  /** Appends the next page, when content `data` draws any text. */
+  private def addPage(pages: ArrayBuffer[PageText], data: Array[Byte],
+      fonts: Map[String, FontDec]): Unit = {
+    val runs = parseContentStream(data, fonts)
+    if (runs.nonEmpty) {
+      val (text, spans) = assembleLines(runs)
+      pages += PageText(pages.length, text, spans)
+    }
+  }
 
-  /** A scanned stream: keyword offset `kw`, dict [dict, kw), payload [from, until). */
-  private final case class FileStream(kw: Int, dict: Int, from: Int, until: Int)
+  // --------------------------------------------------------- object parser
 
-  private final case class PdfDoc(s: String, bytes: Array[Byte],
-      streams: ArrayBuffer[FileStream],
-      objs: Map[Int, (Int, Int)],
-      extra: Map[Int, String] = Map.empty,
-      crypt: Option[PdfCrypto.Decryptor] = None) {
-    /** The scanned stream whose keyword lies in [a, b), by binary search. */
-    def streamIn(a: Int, b: Int): Option[FileStream] =
-      streams.lift(streams.view.map(_.kw).search(a).insertionPoint).filter(_.kw < b)
+  /** A parsed PDF object (§7.3). Strings hold one char per byte; a
+    * reference keeps only its object number (generation numbers are
+    * virtually always 0, and the index does not track them); `Kw` is
+    * true, false, null or any other bare word; a `FileStream` is a
+    * stream's dict plus its payload span [from, until) in the file.
+    */
+  private sealed trait Obj
+  private final case class Kw(word: String) extends Obj
+  private final case class Num(v: Double) extends Obj
+  private final case class Str(chars: String) extends Obj
+  private final case class Name(name: String) extends Obj
+  private final case class Ref(num: Int) extends Obj
+  private final case class Arr(items: ArrayBuffer[Obj]) extends Obj
+  private final case class FileStream(dict: Dict, from: Int, until: Int) extends Obj
+  private final case class Dict(m: Map[String, Obj]) extends Obj {
+    def apply(key: String): Obj = m.getOrElse(key, Null)
+    def name(key: String): Option[String] = m.get(key).collect { case Name(n) => n }
+    def int(key: String): Option[Int] = m.get(key).flatMap(intValue)
+    def ref(key: String): Option[Int] = m.get(key).collect { case Ref(n) => n }
+    def str(key: String): Option[Array[Byte]] = m.get(key).collect { case Str(c) => c.getBytes(Latin1) }
+  }
+  private val Null: Obj = Kw("null")
+  private val NoDict = Dict(Map.empty)
 
-    /** Dict text of an object (body up to its `stream` keyword, if any).
-      * Direct file objects win; `extra` holds members expanded out of
-      * /ObjStm compressed object streams (PDF 1.5+), which never carry
-      * streams of their own.
+  /** A whole number in [0, Int.MaxValue]; any other value reads as absent. */
+  private def intValue(o: Obj): Option[Int] = o match {
+    case Num(v) if v >= 0 && v <= Int.MaxValue && v == math.rint(v) => Some(v.toInt)
+    case _ => None
+  }
+
+  /** Object numbers of a reference or of an array of them (/Kids, /Contents). */
+  private def refNums(o: Obj): Seq[Int] = o match {
+    case Ref(n) => Seq(n)
+    case Arr(xs) => xs.collect { case Ref(n) => n }.toSeq
+    case _ => Nil
+  }
+
+  /** An array or dict still being read. A dict keeps the first of
+    * duplicate keys. A value with no key goes to the name read last as a
+    * value, if any: a stray `/Name` took that key as its value.
+    */
+  private final class Open(val isDict: Boolean, private var m: Map[String, Obj] = Map.empty) {
+    val items = new ArrayBuffer[Obj](4)
+    private var key: String = null
+    private var lastName: String = null
+    private var last: Obj = null
+    def add(v: Obj): Unit =
+      if (!isDict) items += v
+      else if (key != null) {
+        if (!m.contains(key)) m += key -> v
+        lastName = v match { case Name(n) => n; case _ => null }
+        last = v
+        key = null
+      } else v match {
+        case Name(n) => key = n
+        case _ => if (lastName != null && !m.contains(lastName)) m += lastName -> v; lastName = null; last = v
+      }
+
+    /** An outer dict cut short (its `>>` never came) took a stray `<<`:
+      * the keys of the dict it read last are its own.
       */
-    def dict(num: Int): String = objs.get(num) match {
-      case Some((a, b)) => s.substring(a, streamIn(a, b).fold(b)(_.kw))
-      case None => extra.getOrElse(num, "")
+    def close(cut: Boolean): Obj = if (!isDict) Arr(items) else last match {
+      case d: Dict if cut => Dict(d.m ++ m)
+      case _ => Dict(m)
+    }
+
+    /** How many of an array's last items alternate `/Key value`. */
+    def pairsAtEnd: Int = {
+      var k = items.length - 2
+      while (k >= 0 && items(k).isInstanceOf[Name]) k -= 2
+      items.length - k - 2
     }
   }
 
-  private val ObjHeadRe = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+obj\\b")
+  /** Keywords no value spans (`obj` counts only after `N G`). */
+  private val Structural = Set("stream", "endobj", "endstream", "trailer", "xref", "startxref")
 
-  /** Start of the dict of a `stream` keyword at `kw`: the balanced
-    * `<< … >>` that ends just before it (bar whitespace), or `floor` (the
-    * end of the previous stream) when that `>>` has no `<<`; -1 when no
-    * `>>` ends there, so `stream` at `kw` is no keyword.
-    */
-  private def dictBefore(s: String, kw: Int, floor: Int): Int = {
-    var i = kw
-    while (i > floor && isWsChar(s.charAt(i - 1))) i -= 1
-    if (!s.startsWith(">>", i - 2)) return -1
-    var depth = 0
-    i -= 2
-    while (i >= floor) {
-      if (s.startsWith(">>", i)) { depth += 1; i -= 2 }
-      else if (s.startsWith("<<", i)) { depth -= 1; if (depth == 0) return i; i -= 2 }
-      else i -= 1
-    }
-    floor
-  }
+  /** The object parser: tokens and values of `s` from `i`, not past `until`. */
+  private final class ObjReader(s: String, var i: Int, until: Int) {
+    def skipWs(): Unit =
+      while (i < until && (isWsChar(s.charAt(i)) || s.charAt(i) == '%')) {
+        if (s.charAt(i) == '%') while (i < until && s.charAt(i) != '\n' && s.charAt(i) != '\r') i += 1
+        else i += 1
+      }
 
-  /** The one stream locator: in file order, each `stream` keyword that
-    * follows a dict (never the tail of `endstream`), its dict and payload,
-    * from the keyword's EOL to a direct /Length that `endstream` follows
-    * (binary data may end in CR/LF or hold `endstream`), else to the EOL
-    * before the next `endstream`, else to the end. The spans also guard the
-    * header scan: an `N G obj` INSIDE a payload is a phantom header.
-    */
-  private def scanStreams(s: String): ArrayBuffer[FileStream] = {
-    def skipEol(i0: Int): Int = {
-      val i = if (i0 < s.length && s.charAt(i0) == '\r') i0 + 1 else i0
-      if (i < s.length && s.charAt(i) == '\n') i + 1 else i
+    private def skipEol(i0: Int): Int = {
+      val j = if (i0 < until && s.charAt(i0) == '\r') i0 + 1 else i0
+      if (j < until && s.charAt(j) == '\n') j + 1 else j
     }
-    val out = new ArrayBuffer[FileStream](8)
-    var i = 0
-    while (i < s.length) {
-      val k = s.indexOf("stream", i)
-      val d = if (k < 0) -1 else dictBefore(s, k, i)
-      if (k < 0) i = s.length
-      else if (d < 0) i = k + 6 // text such as `endstream` or a string's word
-      else {
-        val p = skipEol(k + 6)
-        intOf(s.substring(d, k), "Length").filter(p.toLong + _ <= s.length).map(p + _)
-          .filter(q => s.startsWith("endstream", skipEol(q))) match {
-          case Some(q) => out += FileStream(k, d, p, q); i = skipEol(q) + 9
-          case None =>
-            val e = s.indexOf("endstream", p)
-            var q = if (e < 0) s.length else e
-            if (q > p && s.charAt(q - 1) == '\n') q -= 1
-            if (q > p && s.charAt(q - 1) == '\r') q -= 1
-            out += FileStream(k, d, p, q)
-            i = if (e < 0) s.length else e + 9
+
+    /** Index after the unsigned integer at `j`, or -1 when none starts there. */
+    private def digitsEnd(j: Int): Int = {
+      var k = j
+      while (k < until && isDigit(s.charAt(k))) k += 1
+      if (k > j) k else -1
+    }
+
+    /** Index after ` G word` where an integer ends at `j` (`G R`, `G obj`), or -1. */
+    private def tail(j: Int, word: String): Int = {
+      if (j < 0) return -1
+      var k = j
+      while (k < until && isWsChar(s.charAt(k))) k += 1
+      val g = if (k > j) digitsEnd(k) else -1
+      if (g < 0) return -1
+      k = g
+      while (k < until && isWsChar(s.charAt(k))) k += 1
+      val e = k + word.length
+      if (k > g && e <= until && s.startsWith(word, k) && (e == until || isDelim(s.charAt(e)))) e
+      else -1
+    }
+
+    /** At an `N G obj` header its number, `i` past `obj`; else -1, `i` past the digits. */
+    def header(): Int = {
+      val d = digitsEnd(i)
+      val e = tail(d, "obj")
+      val num = if (e < 0) None else s.substring(i, d).toIntOption
+      i = if (num.isEmpty) d else e
+      num.getOrElse(-1)
+    }
+
+    private var hdr, strayAt = -1
+
+    /** Start of the first line after `i` that opens with an `N G obj`
+      * header, else `until`. Cached (no value reads across a header, so
+      * a reread never passes it): a pass scans each char once.
+      */
+    private def nextHeaderLine(): Int = {
+      if (i >= hdr) {
+        hdr = i + 1
+        while (hdr < until && !((s.charAt(hdr - 1) == '\n' || s.charAt(hdr - 1) == '\r') &&
+            isDigit(s.charAt(hdr)) && tail(digitsEnd(hdr), "obj") >= 0)) hdr += 1
+      }
+      hdr
+    }
+
+    /** The next value, or null when none starts before a structural
+      * keyword, an `N G obj` header or `until`. A value ends early at any
+      * of these, closing what is open, so a truncated object keeps what
+      * it read and the next one parses. Damage repair: a closer matching
+      * nothing is skipped, `>>` also closes the arrays above its dict, an
+      * outer dict closed before its object ends reopens, and a string
+      * that runs into a line opening with a header (it reads no further)
+      * or a `<` not followed by hex is a stray byte.
+      */
+    def value(asDict: Boolean = false): Obj = {
+      val open = new ArrayBuffer[Open](4)
+      var dicts = 0 // how many of `open` are dicts
+      def push(o: Open): Unit = { open += o; if (o.isDict) dicts += 1 }
+      if (asDict) push(new Open(isDict = true))
+      var out: Obj = null
+      def put(v: Obj): Unit = if (open.isEmpty) out = v else open.last.add(v)
+      // closes the innermost container; an array cut short inside a dict
+      // (its `]` lost) hands back the `/Key value` pairs it ends with
+      def pop(cut: Boolean): Unit = {
+        val c = open.remove(open.length - 1)
+        if (c.isDict) dicts -= 1
+        val kv = c.items.takeRight(if (cut && open.nonEmpty && open.last.isDict) c.pairsAtEnd else 0)
+        c.items.dropRightInPlace(kv.length)
+        put(c.close(cut && open.isEmpty))
+        kv.foreach(put)
+      }
+      var stop = false
+      while (out == null && !stop) {
+        skipWs()
+        if (i >= until) stop = true
+        else s.charAt(i) match {
+          case '<' if s.startsWith("<<", i) => push(new Open(isDict = true)); i += 2
+          case '[' => push(new Open(isDict = false)); i += 1
+          case '>' if s.startsWith(">>", i) =>
+            i += 2
+            if (dicts > 0) {
+              while (!open.last.isDict) pop(cut = true)
+              pop(cut = false)
+              out match {
+                case d: Dict if !atBoundary => push(new Open(isDict = true, d.m)); out = null
+                case _ => ()
+              }
+            }
+          case ']' =>
+            i += 1
+            if (open.lastOption.exists(!_.isDict)) pop(cut = false)
+          case '(' | '<' =>
+            val sb = new java.lang.StringBuilder(16)
+            val h = nextHeaderLine()
+            val e = if (s.charAt(i) == '(') readLiteral(s, i, sb, h) else readHex(s, i + 1, strict = true, sb, h)
+            // a closed string cannot end at a line start, so e == h means
+            // cut: its opener is a stray, once before each header
+            if (e == h && h < until && strayAt == h) { stop = true; i = h }
+            else if (e == h && h < until) { strayAt = h; i += 1 }
+            else if (e < 0) i += 1
+            else { i = e; put(Str(sb.toString)) }
+          case '/' =>
+            val a = i + 1
+            i = a
+            while (i < until && !isDelim(s.charAt(i))) i += 1
+            put(Name(s.substring(a, i)))
+          case c if isDelim(c) => i += 1 // a stray ) > { or }
+          case _ =>
+            val a = i
+            while (i < until && !isDelim(s.charAt(i))) i += 1
+            val word = s.substring(a, i)
+            val ref = if (digitsEnd(a) == i) tail(i, "R") else -1
+            if (ref >= 0) {
+              put(word.toIntOption.fold(Null)(Ref))
+              i = ref
+            } else if (Structural(word) || (digitsEnd(a) == i && tail(i, "obj") >= 0)) {
+              stop = true
+              i = a
+            } else if (word.forall(ch => isDigit(ch) || ch == '.' || ch == '-' || ch == '+'))
+              put(word.toDoubleOption.fold[Obj](Kw(word))(Num))
+            else put(Kw(word))
         }
       }
+      while (open.nonEmpty) pop(cut = true) // stopped: close what is open, innermost first
+      out
     }
-    out
+
+    /** Whether `i`, past whitespace, is at `until`, a structural keyword or an `N G obj` header. */
+    def atBoundary: Boolean = {
+      skipWs()
+      var w = i
+      while (w < until && !isDelim(s.charAt(w))) w += 1
+      i >= until || Structural(s.substring(i, w)) || (digitsEnd(i) == w && tail(w, "obj") >= 0)
+    }
+
+    /** The stream whose dict `d` was just read, if `stream` follows: its
+      * payload runs from the keyword's EOL to a direct /Length that
+      * `endstream` follows (binary data may end in CR/LF or hold
+      * `endstream`), else to the EOL before the next `endstream`, else
+      * to the end; `i` moves past `endstream`. Else null.
+      */
+    def streamAfter(d: Dict): FileStream = {
+      skipWs()
+      if (!s.startsWith("stream", i)) return null
+      val p = skipEol(i + 6)
+      d.int("Length").filter(p.toLong + _ <= until).map(p + _)
+        .filter(q => s.startsWith("endstream", skipEol(q))) match {
+        case Some(q) => i = skipEol(q) + 9; FileStream(d, p, q)
+        case None =>
+          val e = s.indexOf("endstream", p)
+          var q = if (e < 0) until else e
+          if (q > p && s.charAt(q - 1) == '\n') q -= 1
+          if (q > p && s.charAt(q - 1) == '\r') q -= 1
+          i = if (e < 0) until else e + 9
+          FileStream(d, p, q)
+      }
+    }
   }
 
-  /** Object index (`objs` empty when the file has no object headers). */
+  /** The parsed file: objects by number; streams and trailer dicts in file order. */
+  private final case class PdfDoc(bytes: Array[Byte], objs: Map[Int, Obj],
+      streams: ArrayBuffer[FileStream], trailers: ArrayBuffer[Dict],
+      extra: Map[Int, Obj] = Map.empty,
+      crypt: Option[PdfCrypto.Decryptor] = None) {
+    /** The dict of `o`, through a reference and a stream: direct file
+      * objects win over `extra`, the members expanded out of /ObjStm
+      * object streams (PDF 1.5+), which never carry streams.
+      */
+    def dict(o: Obj): Dict = (o match {
+      case Ref(n) => objs.getOrElse(n, extra.getOrElse(n, Null))
+      case _ => o
+    }) match {
+      case d: Dict => d
+      case st: FileStream => st.dict
+      case _ => NoDict
+    }
+
+    /** `key` of the last trailer or XRef-stream dict that has it: the
+      * final trailer governs in incrementally-updated files.
+      */
+    def trailer(key: String): Option[Obj] = trailers.findLast(_.m.contains(key)).map(_(key))
+
+    def payload(st: FileStream): Array[Byte] = java.util.Arrays.copyOfRange(bytes, st.from, st.until)
+  }
+
+  /** The one pass over the file, in file order: `N G obj` objects, `trailer`
+    * dicts, top-level `<< … >> stream`s; between them a char at a time, so
+    * after an object that ends early it goes on at the next header.
+    */
   private def indexObjects(bytes: Array[Byte]): PdfDoc = {
     val s = new String(bytes, Latin1)
-    val streams = scanStreams(s)
-    val m = ObjHeadRe.matcher(s)
-    val all = new ArrayBuffer[(Int, Int, Int)](16) // (num, bodyStart, headStart)
-    while (m.find()) all += ((m.group(1).toInt, m.end(), m.start()))
-    val filtered = all.filterNot { case (_, _, h) => // last stream starting at or before h
-      streams.lift(streams.view.map(_.from).search(h + 1).insertionPoint - 1).exists(h < _.until)
+    val r = new ObjReader(s, 0, s.length)
+    var objs = Map.empty[Int, Obj]
+    val streams = new ArrayBuffer[FileStream](8)
+    val trailers = new ArrayBuffer[Dict](2)
+    def withStream(v: Obj): Obj = v match {
+      case d: Dict => Option(r.streamAfter(d)).fold[Obj](d) { st =>
+        streams += st
+        if (d.name("Type").contains("XRef")) trailers += d // a PDF 1.5 xref stream's trailer keys
+        st
+      }
+      case _ => v
     }
-    // raw-scan fallback: if span exclusion leaves nothing (pathological
-    // framing), trust the raw header scan as before
-    val heads = if (filtered.nonEmpty) filtered else all
-    var objs = Map.empty[Int, (Int, Int)]
-    var e = s.indexOf("endobj") // first `endobj` at or after the current body
-    var i = 0
-    while (i < heads.length) {
-      val (num, a, _) = heads(i)
-      val hardEnd = if (i + 1 < heads.length) heads(i + 1)._3 else s.length
-      if (e >= 0 && e < a) e = s.indexOf("endobj", a)
-      val b = if (e >= 0 && e < hardEnd) e else hardEnd
-      objs += num -> (a, b) // later duplicate (incremental update) wins
-      i += 1
+    while (r.i < s.length) {
+      val c = s.charAt(r.i)
+      if (isDigit(c)) {
+        val num = r.header()
+        if (num >= 0) {
+          val at = r.i
+          var v0 = r.value()
+          // a body that goes on past its first value lost its `<<`
+          if (v0 != null && !r.atBoundary) { r.i = at; v0 = r.value(asDict = true) }
+          val v = withStream(Option(v0).getOrElse(Null))
+          r.skipWs()
+          if (s.startsWith("endobj", r.i)) r.i += 6
+          objs += num -> v // later duplicate (incremental update) wins
+        }
+      } else if (c == 't' && s.startsWith("trailer", r.i)) {
+        r.i += 7
+        r.value() match { case d: Dict => trailers += d; case _ => () }
+      } else if (c == '<' && s.startsWith("<<", r.i)) withStream(r.value())
+      else if (c == '%') r.skipWs()
+      else r.i += 1
     }
-    PdfDoc(s, bytes, streams, objs)
-  }
-
-  // key-parameterized patterns compile once per (shape, key) — these run
-  // per page per document on the corpus hot path
-  private val patternCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
-  private def cachedPattern(id: String, regex: => String): java.util.regex.Pattern = {
-    val p = patternCache.get(id)
-    if (p != null) p
-    else { val c = java.util.regex.Pattern.compile(regex); patternCache.putIfAbsent(id, c); c }
-  }
-
-  private def refOf(dict: String, key: String): Option[Int] = {
-    val m = cachedPattern("ref:" + key, "/" + key + "\\s+(\\d+)\\s+\\d+\\s+R").matcher(dict)
-    if (m.find()) Some(m.group(1).toInt) else None
-  }
-
-  /** LAST match of `/key N 0 R` — for whole-file keys (e.g. /Root) the
-    * final trailer governs in incrementally-updated files, consistent
-    * with the later-object-wins rule applied to object bodies.
-    */
-  private def lastRefOf(s: String, key: String): Option[Int] = {
-    val m = cachedPattern("ref:" + key, "/" + key + "\\s+(\\d+)\\s+\\d+\\s+R").matcher(s)
-    var r: Option[Int] = None
-    while (m.find()) r = Some(m.group(1).toInt)
-    r
-  }
-
-  private def refsOf(dict: String, key: String): Seq[Int] = {
-    val arr = cachedPattern("refs:" + key, "/" + key + "\\s*\\[([^\\]]*)\\]").matcher(dict)
-    if (arr.find()) {
-      val inner = arr.group(1)
-      val r = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+R").matcher(inner)
-      val out = new ArrayBuffer[Int](4)
-      while (r.find()) out += r.group(1).toInt
-      out.toSeq
-    } else refOf(dict, key).toSeq
-  }
-
-  private def nameOf(dict: String, key: String): Option[String] = {
-    val m = cachedPattern("name:" + key, "/" + key + "\\s*/(\\w+)").matcher(dict)
-    if (m.find()) Some(m.group(1)) else None
-  }
-
-  /** Balanced `<< … >>` region starting at the first `<<` at/after `from`. */
-  private def balancedDict(s: String, from: Int): Option[String] = {
-    val start = s.indexOf("<<", from)
-    if (start < 0) return None
-    var depth = 0
-    var i = start
-    while (i < s.length - 1) {
-      if (s.charAt(i) == '<' && s.charAt(i + 1) == '<') { depth += 1; i += 2 }
-      else if (s.charAt(i) == '>' && s.charAt(i + 1) == '>') {
-        depth -= 1; i += 2
-        if (depth == 0) return Some(s.substring(start, i))
-      } else i += 1
-    }
-    None
+    PdfDoc(bytes, objs, streams, trailers)
   }
 
   /** Stream payload of object `num`, decoded through its declared filter
@@ -264,60 +420,43 @@ object PdfTextExtractor {
     * filter (encryption, DCT, ... stay honestly `unsupported`).
     */
   private def streamOf(doc: PdfDoc, num: Int): Option[Array[Byte]] =
-    doc.objs.get(num).flatMap { case (a, b) => doc.streamIn(a, b).map((a, _)) }.flatMap {
-      case (a, st) =>
-        val d = doc.s.substring(a, st.kw)
-        val raw = java.util.Arrays.copyOfRange(doc.bytes, st.from, st.until)
-        // decrypt-then-decode: stream data is encrypted AFTER filtering
-        // at write time, so decryption comes first on read. Generation
-        // numbers are virtually always 0 in practice (and always 0 in
-        // the fixture corpus); the object index doesn't track them.
-        doc.crypt match {
-          case Some(c) => c.decrypt(num, 0, raw).flatMap(decodeStream(d, _))
-          case None    => decodeStream(d, raw)
-        }
+    doc.objs.get(num).collect { case st: FileStream => st }.flatMap { st =>
+      val raw = doc.payload(st)
+      // decrypt-then-decode: stream data is encrypted AFTER filtering
+      // at write time, so decryption comes first on read
+      doc.crypt match {
+        case Some(c) => c.decrypt(num, 0, raw).flatMap(decodeStream(st.dict, _))
+        case None    => decodeStream(st.dict, raw)
+      }
     }
 
   // ------------------------------------------------------- stream filters
 
-  private val FilterRe =
-    java.util.regex.Pattern.compile("/Filter\\s*(?:\\[([^\\]]*)\\]|/(\\w+))")
-  private val NameRe = java.util.regex.Pattern.compile("/(\\w+)")
-
-  /** Declared filter names in application (decode) order. */
-  private def filtersOf(dict: String): Seq[String] = {
-    val m = FilterRe.matcher(dict)
-    if (!m.find()) Seq.empty
-    else if (m.group(2) != null) Seq(m.group(2))
-    else {
-      val inner = NameRe.matcher(m.group(1))
-      val out = new ArrayBuffer[String](2)
-      while (inner.find()) out += inner.group(1)
-      out.toSeq
-    }
-  }
-
   /** Apply the declared filter chain (ASCIIHex / ASCII85 / RunLength /
-    * LZW / Flate with PNG+TIFF predictors). Unknown filter → None. A /Filter
-    * key the name regex cannot parse (indirect reference `/Filter 8 0 R`
+    * LZW / Flate with PNG+TIFF predictors). Unknown filter → None. A
+    * /Filter that names no filter (an indirect reference `/Filter 8 0 R`
     * — legal, some producers emit it) must ALSO be None: returning the
     * raw compressed bytes would feed deflate garbage to the lexer as a
     * "successful" extraction, violating honest `unsupported` counting.
     */
-  private def decodeStream(dict: String, raw: Array[Byte]): Option[Array[Byte]] = {
-    val filters = filtersOf(dict)
-    if (filters.isEmpty && dict.contains("/Filter")) return None
+  private def decodeStream(d: Dict, raw: Array[Byte]): Option[Array[Byte]] = {
+    val filters = d.m.get("Filter") match {
+      case None => Nil
+      case Some(Name(f)) => Seq(f)
+      case Some(Arr(fs)) if fs.exists(_.isInstanceOf[Name]) => fs.collect { case Name(f) => f }.toSeq
+      case _ => return None
+    }
     filters.foldLeft(Option(raw)) { (acc, f) =>
       acc.flatMap { data =>
         f match {
           case "FlateDecode" | "Fl" =>
             // a truncated stream keeps what it inflated, as viewers do
-            Inflate(data).flatMap(o => applyPredictor(dict, o.bytes))
+            Inflate(data).flatMap(o => applyPredictor(d, o.bytes))
           case "LZWDecode" | "LZW" =>
             // /EarlyChange defaults to 1 per the spec: code width grows
             // one code early, TIFF-compatible
-            val early = decodeParms(dict).flatMap(intOf(_, "EarlyChange")).getOrElse(1)
-            lzwDecode(data, early).flatMap(applyPredictor(dict, _))
+            val early = decodeParms(d).flatMap(_.int("EarlyChange")).getOrElse(1)
+            lzwDecode(data, early).flatMap(applyPredictor(d, _))
           case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
           case "ASCII85Decode" | "A85" => ascii85Decode(data)
           case "RunLengthDecode" | "RL" => runLengthDecode(data)
@@ -327,27 +466,26 @@ object PdfTextExtractor {
     }
   }
 
-  /** The /DecodeParms (or abbreviated /DP) dict of a stream dict. */
-  private def decodeParms(dict: String): Option[String] = {
-    val pi = dict.indexOf("/DecodeParms") match {
-      case -1 => dict.indexOf("/DP")
-      case x  => x
+  /** The /DecodeParms (or abbreviated /DP) dict, or the first dict of its array. */
+  private def decodeParms(d: Dict): Option[Dict] =
+    d.m.get("DecodeParms").orElse(d.m.get("DP")) match {
+      case Some(p: Dict) => Some(p)
+      case Some(Arr(ps)) => ps.collectFirst { case p: Dict => p }
+      case _ => None
     }
-    if (pi < 0) None else balancedDict(dict, pi)
-  }
 
   /** Undo the /DecodeParms /Predictor transform after Inflate: PNG
     * predictors 10-15 (per-row filter-tag byte, the form real producers
     * emit on /ObjStm, XRef and content streams) and TIFF predictor 2
     * (8-bit components). Predictor 1 / absent = identity.
     */
-  private def applyPredictor(dict: String, data: Array[Byte]): Option[Array[Byte]] = {
-    val parms = decodeParms(dict).getOrElse(return Some(data))
-    val pred = intOf(parms, "Predictor").getOrElse(1)
+  private def applyPredictor(d: Dict, data: Array[Byte]): Option[Array[Byte]] = {
+    val parms = decodeParms(d).getOrElse(return Some(data))
+    val pred = parms.int("Predictor").getOrElse(1)
     if (pred <= 1) return Some(data)
-    val colors = intOf(parms, "Colors").getOrElse(1)
-    val bpc = intOf(parms, "BitsPerComponent").getOrElse(8)
-    val columns = intOf(parms, "Columns").getOrElse(1)
+    val colors = parms.int("Colors").getOrElse(1)
+    val bpc = parms.int("BitsPerComponent").getOrElse(8)
+    val columns = parms.int("Columns").getOrElse(1)
     val bpp = math.max(1, colors * bpc / 8)
     val rowLen = (columns * colors * bpc + 7) / 8
     if (rowLen <= 0) return None
@@ -419,7 +557,7 @@ object PdfTextExtractor {
 
   private def asciiHexDecode(data: Array[Byte]): Option[Array[Byte]] = {
     val sb = new java.lang.StringBuilder(data.length / 2)
-    if (readHex(new String(data, Latin1), 0, strict = true, sb) < 0) None
+    if (readHex(new String(data, Latin1), 0, strict = true, sb, data.length) < 0) None
     else Some(sb.toString.getBytes(Latin1))
   }
 
@@ -483,22 +621,15 @@ object PdfTextExtractor {
     Some(out.toByteArray)
   }
 
-  private def intOf(dict: String, key: String): Option[Int] = {
-    val m = cachedPattern("int:" + key, "/" + key + "\\s+(\\d+)").matcher(dict)
-    // a value past Int.MaxValue reads as absent, like any unusable value
-    if (m.find()) m.group(1).toIntOption else None
-  }
-
   // --------------------------------------------------------- token readers
 
   /** Literal string whose `(` is at `open` (PDF 32000 §7.3.4.2): balanced
     * parentheses, the escape table, 1-3 digit octal, and a backslash
     * before LF, CR or CRLF continues the line. Appends one char per
-    * decoded byte to `sb`; returns the index after the closing `)` (end
-    * of input when unterminated).
+    * decoded byte to `sb`; returns the index after the closing `)`, or
+    * `n` when none comes before it.
     */
-  private def readLiteral(s: String, open: Int, sb: java.lang.StringBuilder): Int = {
-    val n = s.length
+  private def readLiteral(s: String, open: Int, sb: java.lang.StringBuilder, n: Int): Int = {
     var depth = 1
     var i = open + 1
     while (i < n && depth > 0) {
@@ -532,13 +663,13 @@ object PdfTextExtractor {
   /** Hex string body from `from` (just past `<`) up to `>` (§7.3.4.3):
     * whitespace is skipped and an odd final digit is padded with 0.
     * Appends one char per decoded byte to `sb`; returns the index after
-    * `>` (end of input when unterminated). Other characters are skipped,
+    * `>`, or `n` when none comes before it. Other characters are skipped,
     * or, when `strict` (the ASCIIHexDecode filter), reject it with -1.
     */
-  private def readHex(s: String, from: Int, strict: Boolean, sb: java.lang.StringBuilder): Int = {
+  private def readHex(s: String, from: Int, strict: Boolean, sb: java.lang.StringBuilder, n: Int): Int = {
     var hi = -1
     var i = from
-    while (i < s.length && s.charAt(i) != '>') {
+    while (i < n && s.charAt(i) != '>') {
       val c = s.charAt(i)
       val v = Character.digit(c, 16)
       if (v >= 0) {
@@ -548,7 +679,7 @@ object PdfTextExtractor {
       i += 1
     }
     if (hi >= 0) sb.append((hi << 4).toChar)
-    if (i < s.length) i + 1 else i
+    if (i < n) i + 1 else i
   }
 
   /** The string token at `i` — literal `(..)` or hex `<..>`, not a `<<`
@@ -557,26 +688,10 @@ object PdfTextExtractor {
     */
   private def readString(s: String, i: Int, sb: java.lang.StringBuilder): Int =
     if (i >= s.length) -1
-    else if (s.charAt(i) == '(') readLiteral(s, i, sb)
+    else if (s.charAt(i) == '(') readLiteral(s, i, sb, s.length)
     else if (s.charAt(i) == '<' && i + 1 < s.length && s.charAt(i + 1) != '<')
-      readHex(s, i + 1, strict = false, sb)
+      readHex(s, i + 1, strict = false, sb, s.length)
     else -1
-
-  /** PDF string value of `/key` — the first `/key` followed by a string
-    * token — as raw bytes.
-    */
-  private def strOf(dict: String, key: String): Option[Array[Byte]] = {
-    val tag = "/" + key
-    var k = dict.indexOf(tag)
-    while (k >= 0) {
-      var i = k + tag.length
-      while (i < dict.length && isWsChar(dict.charAt(i))) i += 1
-      val sb = new java.lang.StringBuilder(32)
-      if (readString(dict, i, sb) >= 0) return Some(sb.toString.getBytes(Latin1))
-      k = dict.indexOf(tag, k + 1)
-    }
-    None
-  }
 
   // ------------------------------------------------------------ encryption
 
@@ -595,14 +710,9 @@ object PdfTextExtractor {
     */
   def docInfo(bytes: Array[Byte]): DocInfo = {
     val (doc, _) = expandObjStm(indexObjects(bytes))
-    lastRefOf(doc.s, "Info") match {
-      case None => DocInfo("", "", "")
-      case Some(num) =>
-        val d = doc.dict(num)
-        def str(key: String): String =
-          strOf(d, key).map(decodePdfText).getOrElse("")
-        DocInfo(str("Title"), str("Author"), pdfDate(strOf(d, "CreationDate")))
-    }
+    val d = doc.trailer("Info").fold(NoDict)(doc.dict)
+    def str(key: String): String = d.str(key).map(decodePdfText).getOrElse("")
+    DocInfo(str("Title"), str("Author"), pdfDate(d.str("CreationDate")))
   }
 
   private def decodePdfText(b: Array[Byte]): String =
@@ -610,34 +720,18 @@ object PdfTextExtractor {
       new String(b, 2, b.length - 2, java.nio.charset.StandardCharsets.UTF_16BE)
     else new String(b, Latin1)
 
+  private val PdfDateRe =
+    java.util.regex.Pattern.compile("D:(\\d{4})(\\d{2})?(\\d{2})?(\\d{2})?(\\d{2})?(\\d{2})?")
+
   private def pdfDate(raw: Option[Array[Byte]]): String = raw match {
     case None => ""
     case Some(b) =>
-      val s = new String(b, Latin1)
-      val m = cachedPattern("pdfdate",
-        "D:(\\d{4})(\\d{2})?(\\d{2})?(\\d{2})?(\\d{2})?(\\d{2})?").matcher(s)
+      val m = PdfDateRe.matcher(new String(b, Latin1))
       if (!m.find()) ""
       else {
         def g(i: Int, dflt: String) = Option(m.group(i)).getOrElse(dflt)
         s"${m.group(1)}-${g(2, "01")}-${g(3, "01")}T${g(4, "00")}:${g(5, "00")}:${g(6, "00")}"
       }
-  }
-
-  /** Signed integer value of `/key` (the /P permissions flag is negative). */
-  private def signedIntOf(dict: String, key: String): Option[Int] = {
-    val m = cachedPattern("sint:" + key, "/" + key + "\\s+(-?\\d+)").matcher(dict)
-    if (m.find()) Some(m.group(1).toLong.toInt) else None
-  }
-
-  /** First element of the LAST trailer /ID array, as raw bytes. */
-  private val IdRe = java.util.regex.Pattern.compile("/ID\\s*\\[\\s*<")
-  private def idFirst(s: String): Array[Byte] = {
-    val m = IdRe.matcher(s)
-    var from = -1
-    while (m.find()) from = m.end()
-    val sb = new java.lang.StringBuilder(16)
-    if (from >= 0) readHex(s, from, strict = false, sb)
-    sb.toString.getBytes(Latin1)
   }
 
   /** Resolve the /Encrypt state of the document with the EMPTY user
@@ -647,22 +741,23 @@ object PdfTextExtractor {
     * decryption via `d`.
     */
   private def buildCrypt(doc: PdfDoc): Option[Option[PdfCrypto.Decryptor]] = {
-    val encNum = lastRefOf(doc.s, "Encrypt").getOrElse(return None)
-    val d = doc.dict(encNum)
-    if (d.isEmpty || !nameOf(d, "Filter").contains("Standard")) return Some(None)
-    val v = intOf(d, "V").getOrElse(0)
-    val r = intOf(d, "R").getOrElse(if (v == 1) 2 else 3)
-    val o = strOf(d, "O").getOrElse(return Some(None))
-    val u = strOf(d, "U").getOrElse(return Some(None))
+    val d = doc.dict(doc.trailer("Encrypt").getOrElse(return None))
+    if (!d.name("Filter").contains("Standard")) return Some(None)
+    val v = d.int("V").getOrElse(0)
+    val r = d.int("R").getOrElse(if (v == 1) 2 else 3)
+    val o = d.str("O").getOrElse(return Some(None))
+    val u = d.str("U").getOrElse(return Some(None))
     val empty = Array.emptyByteArray
     if ((v == 1 || v == 2 || v == 4) && r >= 2 && r <= 4) {
-      val cfm = nameOf(d, "CFM")
+      // streams use the crypt filter that /StmF names in /CF
+      val cfm = d.name("StmF").flatMap(f => doc.dict(doc.dict(d("CF"))(f)).name("CFM"))
       if (v == 4 && !cfm.exists(c => c == "AESV2" || c == "V2")) return Some(None)
       val aes = v == 4 && cfm.contains("AESV2")
-      val p = signedIntOf(d, "P").getOrElse(-1)
-      val lengthBits = intOf(d, "Length").getOrElse(40)
-      val encMeta = !d.replaceAll("\\s+", " ").contains("/EncryptMetadata false")
-      val id0 = idFirst(doc.s)
+      val p = d("P") match { case Num(x) => x.toLong.toInt; case _ => -1 }
+      val lengthBits = d.int("Length").getOrElse(40)
+      val encMeta = d("EncryptMetadata") != Kw("false")
+      val id0 = doc.trailer("ID").collect { case Arr(ids) if ids.nonEmpty => ids(0) }
+        .collect { case Str(c) => c.getBytes(Latin1) }.getOrElse(empty)
       val key = PdfCrypto.fileKey(empty, o, p, id0, r, lengthBits, encMeta)
       if (!PdfCrypto.userPasswordIsEmpty(key, u, id0, r)) Some(None)
       else Some(Some(PdfCrypto.Decryptor(aes, key, r)))
@@ -671,7 +766,7 @@ object PdfTextExtractor {
       val hash = u.take(32)
       val vSalt = u.slice(32, 40)
       val kSalt = u.slice(40, 48)
-      val ue = strOf(d, "UE").getOrElse(return Some(None))
+      val ue = d.str("UE").getOrElse(return Some(None))
       if (ue.length < 32) return Some(None)
       val computed =
         if (r == 5) PdfCrypto.sha256(empty ++ vSalt)
@@ -689,37 +784,35 @@ object PdfTextExtractor {
 
   /** Expand /ObjStm compressed object streams (PDF 1.5+): the decoded
     * payload is N (objNum, offset) integer pairs followed by the
-    * serialized member objects (no obj/endobj wrappers, never streams).
+    * serialized member objects (no obj/endobj wrappers, never streams),
+    * each read by the object parser up to the next member's offset.
     * Returns the doc with members visible plus the count of object
     * streams that failed to expand (→ unsupported).
     */
   private def expandObjStm(doc0: PdfDoc): (PdfDoc, Int) = {
-    var extra = Map.empty[Int, String]
+    var extra = Map.empty[Int, Obj]
     var failed = 0
-    doc0.objs.keys.foreach { n =>
-      val d = doc0.dict(n)
-      if (d.contains("/ObjStm")) {
+    doc0.objs.foreach { case (n, o) =>
+      val d = doc0.dict(o)
+      if (d.name("Type").contains("ObjStm")) {
         val ok = (for {
           data <- streamOf(doc0, n)
-          nObjs <- intOf(d, "N")
-          first <- intOf(d, "First")
+          nObjs <- d.int("N")
+          first <- d.int("First")
+          if first <= data.length
         } yield {
           val s2 = new String(data, Latin1)
-          if (first > s2.length) false
-          else {
-            val header = s2.substring(0, first)
-            val ints = "\\d+".r.findAllIn(header).map(_.toInt).toArray
-            val pairs = (0 until math.min(nObjs, ints.length / 2))
-              .map(i => (ints(2 * i), ints(2 * i + 1)))
-            pairs.zipWithIndex.foreach { case ((num, off), i) =>
-              val from = math.min(first + off, s2.length)
-              val to = if (i + 1 < pairs.length)
-                math.min(first + pairs(i + 1)._2, s2.length) else s2.length
-              if (from < to) extra += num -> s2.substring(from, to)
-            }
-            true
+          val head = new ObjReader(s2, 0, first)
+          val ints = Iterator.continually(intValue(head.value()))
+            .takeWhile(_.isDefined).take(2 * math.min(nObjs, first)).map(_.get).toArray
+          def at(k: Int): Int = // start of member k
+            if (2 * k + 1 < ints.length) math.min(first.toLong + ints(2 * k + 1), s2.length).toInt
+            else s2.length
+          (0 until ints.length / 2).foreach { k =>
+            if (at(k) < at(k + 1))
+              extra += ints(2 * k) -> Option(new ObjReader(s2, at(k), at(k + 1)).value()).getOrElse(Null)
           }
-        }).getOrElse(false)
+        }).isDefined
         if (!ok) failed += 1
       }
     }
@@ -735,45 +828,36 @@ object PdfTextExtractor {
       case Some(Some(dec)) => doc0.copy(crypt = Some(dec))
     }
     val (doc, objStmFailed) = expandObjStm(doc1)
-    val rootNum = lastRefOf(doc.s, "Root").orElse {
-      (doc.objs.keys ++ doc.extra.keys).find(n => doc.dict(n).contains("/Catalog"))
-    }.getOrElse(return None)
-    val pagesRoot = refOf(doc.dict(rootNum), "Pages").getOrElse(return None)
-    // walk the page tree in Kids order
+    val root = doc.trailer("Root").getOrElse {
+      (doc.objs.keys ++ doc.extra.keys).find(n => doc.dict(Ref(n)).name("Type").contains("Catalog"))
+        .fold(return None)(Ref)
+    }
+    val pagesRoot = doc.dict(root).ref("Pages").getOrElse(return None)
+    // walk the page tree in Kids order, on an explicit stack
     val leaves = new ArrayBuffer[Int](8)
     val visited = scala.collection.mutable.HashSet.empty[Int]
-    def walk(num: Int): Unit = {
-      if (!visited.add(num) || leaves.length > 100000) return
-      val d = doc.dict(num)
-      val kids = refsOf(d, "Kids")
-      if (kids.nonEmpty && d.contains("/Pages")) kids.foreach(walk)
-      else if (kids.nonEmpty && !d.contains("/Page")) kids.foreach(walk)
-      else if (d.contains("/Page") || d.contains("/Contents")) leaves += num
+    val todo = ArrayBuffer(pagesRoot)
+    while (todo.nonEmpty && leaves.length <= 100000) {
+      val num = todo.remove(todo.length - 1)
+      if (visited.add(num)) {
+        val d = doc.dict(Ref(num))
+        val isPage = d.name("Type").contains("Page")
+        val kids = refNums(d("Kids"))
+        if (kids.nonEmpty && !isPage) todo ++= kids.reverseIterator
+        else if (isPage || d.m.contains("Contents")) leaves += num
+      }
     }
-    walk(pagesRoot)
     if (leaves.isEmpty) return None
 
     val pages = new ArrayBuffer[PageText](leaves.length)
     var unsupported = 0
-    var pageNo = 0
     leaves.foreach { pg =>
-      val d = doc.dict(pg)
-      val fonts = fontTables(doc, d)
-      val contentRefs = refsOf(d, "Contents")
-      if (contentRefs.isEmpty) ()
-      else {
-        val parts = contentRefs.map(c => (c, streamOf(doc, c)))
-        if (parts.exists(_._2.isEmpty)) unsupported += parts.count(_._2.isEmpty)
-        val data = parts.flatMap(_._2) match {
-          case Seq() => Array.emptyByteArray
-          case ds    => ds.reduce((x, y) => x ++ Array[Byte]('\n') ++ y)
-        }
-        val runs = parseContentStream(data, fonts)
-        if (runs.nonEmpty) {
-          val (text, spans) = assembleLines(runs)
-          pages += PageText(pageNo, text, spans)
-          pageNo += 1
-        }
+      val d = doc.dict(Ref(pg))
+      val parts = refNums(d("Contents")).map(streamOf(doc, _))
+      if (parts.nonEmpty) {
+        unsupported += parts.count(_.isEmpty)
+        val data = parts.flatten.reduceOption((x, y) => x ++ Array[Byte]('\n') ++ y)
+        addPage(pages, data.getOrElse(Array.emptyByteArray), fontTables(doc, d))
       }
     }
     // object streams that failed to expand stay honestly counted
@@ -803,7 +887,7 @@ object PdfTextExtractor {
     var i = section.indexOf('<')
     while (i >= 0) {
       val sb = new java.lang.StringBuilder(4)
-      i = section.indexOf('<', readHex(section, i + 1, strict = false, sb))
+      i = section.indexOf('<', readHex(section, i + 1, strict = false, sb, section.length))
       out += sb.toString
     }
     out
@@ -948,81 +1032,57 @@ object PdfTextExtractor {
     * → 256-entry char map. Fonts with no /Encoding get no entry (Latin-1
     * identity at emit).
     */
-  private def fontTables(doc: PdfDoc, pageDict: String): Map[String, FontDec] = {
+  private def fontTables(doc: PdfDoc, page: Dict): Map[String, FontDec] = {
     // /Resources is INHERITABLE: a missing entry on the leaf page must be
     // looked up the /Parent chain (producers routinely declare fonts once
     // on the /Pages node) — otherwise encoded fonts silently degrade to
     // Latin-1 mojibake
-    def resolveRes(d: String, depth: Int): Option[String] =
-      refOf(d, "Resources") match {
-        case Some(r) => Some(doc.dict(r))
-        case None =>
-          val i = d.indexOf("/Resources")
-          if (i >= 0) balancedDict(d, i)
-          else if (depth < 8) refOf(d, "Parent").flatMap(p => resolveRes(doc.dict(p), depth + 1))
-          else None
-      }
-    val resText = resolveRes(pageDict, 0).getOrElse(return Map.empty)
-    val fi = resText.indexOf("/Font")
-    if (fi < 0) return Map.empty
-    val fontDict = refOf(resText.substring(fi), "Font") match {
-      case Some(r) => doc.dict(r)
-      case None    => balancedDict(resText, fi).getOrElse(return Map.empty)
+    var node = page
+    var depth = 0
+    while (!node.m.contains("Resources") && node.m.contains("Parent") && depth < 8) {
+      node = doc.dict(node("Parent"))
+      depth += 1
     }
-    // font entries: referenced (/F1 5 0 R) or inline (/F1 << ... >>)
-    val m = java.util.regex.Pattern
-      .compile("/(\\w+)\\s*(<<|(\\d+)\\s+\\d+\\s+R)").matcher(fontDict)
     val out = Map.newBuilder[String, FontDec]
-    while (m.find()) {
-      val fname = m.group(1)
-      val fdict =
-        if (m.group(3) != null) doc.dict(m.group(3).toInt)
-        else balancedDict(fontDict, m.start(2)).getOrElse("")
-      fontDecode(doc, fdict).foreach(t => out += fname -> t)
+    doc.dict(doc.dict(node("Resources"))("Font")).m.foreach { case (name, font) =>
+      fontDecode(doc, doc.dict(font)).foreach(t => out += name -> t)
     }
     out.result()
   }
 
   /** Decode model of one font: Type0 fonts resolve their ToUnicode CMap
     * (2-byte Identity-H codes); simple fonts resolve /Encoding (named
-    * base, or an encoding object with /BaseEncoding + /Differences).
+    * base, or an encoding dict with /BaseEncoding + /Differences).
     */
-  private def fontDecode(doc: PdfDoc, fontDict: String): Option[FontDec] = {
-    if (nameOf(fontDict, "Subtype").contains("Type0"))
-      return refOf(fontDict, "ToUnicode")
+  private def fontDecode(doc: PdfDoc, font: Dict): Option[FontDec] =
+    if (font.name("Subtype").contains("Type0"))
+      font.ref("ToUnicode")
         .flatMap(n => streamOf(doc, n))
         .map(b => parseToUnicode(new String(b, Latin1)))
-    encodingTable(doc, fontDict).map(ByteTable)
-  }
+    else encodingTable(doc, font).map(ByteTable)
 
-  private def encodingTable(doc: PdfDoc, fontDict: String): Option[Array[Char]] =
-    nameOf(fontDict, "Encoding") match {
-      case Some(n) => baseTable(n)
-      case None =>
-        refOf(fontDict, "Encoding").flatMap { encNum =>
-          val ed = doc.dict(encNum)
-          val base = nameOf(ed, "BaseEncoding").flatMap(baseTable)
-            .getOrElse(Latin1Table)
-          val t = base.clone()
-          val di = ed.indexOf("/Differences")
-          if (di >= 0) {
-            val arrS = ed.indexOf('[', di)
-            val arrE = ed.indexOf(']', arrS + 1)
-            if (arrS >= 0 && arrE > arrS) {
-              val tok = java.util.regex.Pattern
-                .compile("(\\d+)|/([\\w.]+)").matcher(ed.substring(arrS + 1, arrE))
-              var code = -1
-              while (tok.find()) {
-                if (tok.group(1) != null) code = tok.group(1).toInt
-                else if (code >= 0 && code < 256) {
-                  t(code) = glyphChar(tok.group(2))
-                  code += 1
-                }
+  private def encodingTable(doc: PdfDoc, font: Dict): Option[Array[Char]] =
+    font("Encoding") match {
+      case Name(n) => baseTable(n)
+      case enc @ (_: Ref | _: Dict) =>
+        val ed = doc.dict(enc)
+        val base = ed.name("BaseEncoding").flatMap(baseTable)
+        val t = base.getOrElse(Latin1Table).clone()
+        ed.m.get("Differences") match {
+          case Some(diffs) =>
+            var code = -1
+            diffs match {
+              case Arr(xs) => xs.foreach {
+                case Num(c) => code = c.toInt
+                case Name(g) if code >= 0 && code < 256 => t(code) = glyphChar(g); code += 1
+                case _ => ()
               }
+              case _ => ()
             }
             Some(t)
-          } else nameOf(ed, "BaseEncoding").flatMap(baseTable).map(_ => t)
+          case None => base.map(_ => t)
         }
+      case _ => None
     }
 
   // ---------------------------------------------------- content-stream lexer
@@ -1185,6 +1245,8 @@ object PdfTextExtractor {
 
   private def isWsChar(c: Char): Boolean =
     c == ' ' || c == '\n' || c == '\r' || c == '\t' || c == '\f' || c == 0
+
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
 
   private def isDelim(c: Char): Boolean =
     isWsChar(c) || c == '(' || c == ')' || c == '<' || c == '>' ||

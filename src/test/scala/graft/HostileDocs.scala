@@ -33,19 +33,39 @@ object HostileDocs {
     "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
     "<< /Type /Pages /Kids [2 0 R] /Count 1 >>"))
 
-  /** A chain of 100k /Pages nodes above one text page: the recursive
-    * page-tree walk overflows any default task-thread stack on it. At 10k
-    * levels the JIT-compiled walk fits in a 1 MB stack and the interpreted
-    * one does not, so the outcome would depend on JIT state.
+  val DeepLeafText = "deep leaf page"
+
+  private val Depth = 100000
+
+  /** Catalog (1), page-tree objects `tree` from 2, then one page dict
+    * carrying `pageKeys` and its text stream.
     */
-  val deepKids: Array[Byte] = {
-    val depth = 100000
-    val content = "BT /F1 12 Tf 72 720 Td (deep leaf page) Tj ET"
-    pdf(("<< /Type /Catalog /Pages 2 0 R >>" +:
-      (2 to depth + 1).map(n => s"<< /Type /Pages /Kids [${n + 1} 0 R] /Count 1 >>")) ++ Seq(
-      s"<< /Type /Page /Contents ${depth + 3} 0 R >>",
+  private def leafPdf(tree: Seq[String], pageKeys: String = ""): Array[Byte] = {
+    val content = s"BT /F1 12 Tf 72 720 Td ($DeepLeafText) Tj ET"
+    val page = tree.length + 2
+    pdf(("<< /Type /Catalog /Pages 2 0 R >>" +: tree) ++ Seq(
+      s"<< /Type /Page /Contents ${page + 1} 0 R$pageKeys >>",
       s"<< /Length ${content.length} >> stream\n$content\nendstream"))
   }
+
+  /** A chain of 100k /Pages nodes above one text page. A recursive
+    * page-tree walk overflows any default task-thread stack on it; the
+    * kernel walks it on an explicit stack and extracts the page.
+    */
+  val deepKids: Array[Byte] =
+    leafPdf((2 to Depth + 1).map(n => s"<< /Type /Pages /Kids [${n + 1} 0 R] /Count 1 >>"))
+
+  /** The page's /Kids entry nested in 100k arrays: no kid resolves, so
+    * the file-order fallback reads the page.
+    */
+  val deepArrays: Array[Byte] =
+    leafPdf(Seq(s"<< /Type /Pages /Kids ${"[" * Depth}3 0 R${"]" * Depth} /Count 1 >>"))
+
+  /** A page dict holding 100k nested, unterminated dicts: they close at
+    * `endobj` and the page keeps its own keys.
+    */
+  val deepDicts: Array[Byte] =
+    leafPdf(Seq("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"), " /Deep" + " << /A" * Depth)
 
   val DeepDivText = "a paragraph nested under very many division elements of markup"
 

@@ -26,18 +26,19 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
-  test("a stack overflow inside a kernel is an error row, not a task failure") {
-    // on a small stack the recursive page-tree walk overflows on the chain;
-    // the overflow surfaces raw, or wrapped by a regex compile it lands in
-    @volatile var doc: ExtractKernel.Result = null
-    val t = new Thread(null,
-      () => doc = ExtractKernel.extract(HostileDocs.deepKids, "", Int.MaxValue),
-      "small-stack", 512L * 1024)
-    t.start(); t.join()
-    assert(doc != null, "the fault escaped the per-row catch")
-    assert(doc.kind == "pdf" && doc.text == "" && doc.pageCount == 1, doc.toString)
-    assert(doc.error.startsWith("StackOverflowError") || doc.error.contains("Stack overflow"),
-      doc.error)
+  test("100k-deep PDF nesting extracts its page on a 512 KB stack") {
+    // the page-tree walk and the object parser keep their own stacks, so
+    // no document depth reaches the task thread's
+    for ((name, bytes) <- Seq("deep-kids" -> HostileDocs.deepKids,
+        "deep-arrays" -> HostileDocs.deepArrays, "deep-dicts" -> HostileDocs.deepDicts)) {
+      @volatile var doc: ExtractKernel.Result = null
+      val t = new Thread(null, () => doc = ExtractKernel.extract(bytes, "", Int.MaxValue),
+        "small-stack", 512L * 1024)
+      t.start(); t.join()
+      assert(doc != null, s"$name: the fault escaped the per-row catch")
+      assert((doc.kind, doc.pageCount, doc.text, doc.error) ===
+        (("pdf", 1, HostileDocs.DeepLeafText, null)), name)
+    }
   }
 
   test("html: entity decoding round-trips special chars") {
@@ -111,6 +112,20 @@ class KernelSpec extends AnyFunSuite {
       val res = PdfTextExtractor.extract(bs)
       assert(res.pages != null)
     }
+    // every prefix of a real file: it can end inside a string, dict or stream
+    val whole = PagesGen.pdfBytesInfo(Seq(Seq("one two")), "t (x)", "a", "2024", utf16Author = true)
+    (1 to whole.length).foreach { n =>
+      assert(PdfTextExtractor.extract(whole.take(n)).pages != null)
+      assert(PdfTextExtractor.docInfo(whole.take(n)) != null)
+    }
+    // an /ObjStm member with unbalanced parens stops at the next member,
+    // which opens a line with a digit
+    val (head, members) = ("10 0 11 5\n", "(a(b\n7 0 R")
+    val objStm = (s"%PDF-1.5\n5 0 obj << /Type /ObjStm /N 2 /First ${head.length} " +
+      s"/Length ${head.length + members.length} >> stream\n$head$members\nendstream endobj\n" +
+      "trailer << /Info 10 0 R >>\n").getBytes(UTF_8)
+    assert(PdfTextExtractor.extract(objStm).pages.isEmpty)
+    assert(PdfTextExtractor.docInfo(objStm).title === "")
   }
 
   test("sniff dispatch: pdf magic vs html vs empty") {

@@ -82,12 +82,42 @@ class PdfTokenReaderSpec extends AnyFunSuite {
     assert((info.title, info.author) === (("a stream b", "me")))
   }
 
+  test("`N G obj`, `stream` and `endobj` inside a /Title are text, and the keys after it stay") {
+    for (title <- Seq("T 1 0 obj", "stream endstream obj endobj")) {
+      val b = PagesGen.pdfBytesInfo(Seq(Seq("x")), title, "me", "2024", utf16Author = false)
+      assert(PdfTextExtractor.docInfo(b) === PdfTextExtractor.DocInfo(title, "me", "2024-01-01T00:00:00"))
+      assert(PdfTextExtractor.extract(b).pages.map(_.text).toSeq === Seq("x"))
+    }
+  }
+
+  test("a page dict's `endobj` string reads whole; a string left open ends at the next header") {
+    val content = "BT /F1 12 Tf 72 720 Td (kept page) Tj ET"
+    val b = pdf(page(content, "").map(_.replace("/Parent 2 0 R",
+      "/Parent 2 0 R /Note (see endobj 4 0 obj here)")): _*)
+    assert(PdfTextExtractor.extract(b).pages.map(_.text).toSeq === Seq("kept page"))
+    val open = pdf("9 0 obj << /Title (left open >> endobj" +: page(content, ""): _*)
+    assert(PdfTextExtractor.extract(open).pages.map(_.text).toSeq === Seq("kept page"))
+  }
+
   test("objects after the last stream cost linear time to index") {
-    val tail = (10 until 200010).map(n => s"$n 0 obj null endobj").mkString("\n")
-    val b = pdf(page("BT /F1 12 Tf 72 720 Td (first) Tj ET", "") :+ tail: _*)
-    val t0 = System.nanoTime()
-    assert(PdfTextExtractor.extract(b).pages.map(_.text).toSeq === Seq("first"))
-    assert((System.nanoTime() - t0) / 1e9 < 10.0)
+    // a string left open ends at the next line's header; nesting never closed stays linear too
+    val tails = Seq("null", "(x", "<x").map(body => (10 until 200010).map(n => s"$n 0 obj $body endobj").mkString("\n")) ++
+      Seq("[" * 100000 + ">>" * 100000, (0 until 100000).map(k => s"<< /K$k ").mkString).map(b => s"10 0 obj $b endobj")
+    for (tail <- tails) {
+      val b = pdf(page("BT /F1 12 Tf 72 720 Td (first) Tj ET", "") :+ tail: _*)
+      val t0 = System.nanoTime()
+      assert(PdfTextExtractor.extract(b).pages.map(_.text).toSeq === Seq("first"), tail.take(12))
+      assert((System.nanoTime() - t0) / 1e9 < 10.0, tail.take(12))
+    }
+  }
+
+  test("a page dict keeps its keys past a lost `]`, an extra `>>` or a stray name") {
+    val content = "BT /F1 12 Tf 72 720 Td (kept page) Tj ET"
+    for (damage <- Seq("/MediaBox [0 0 612 792 /Parent 2 0 R", "/Parent 2 0 R /Resources << >> >>",
+        "/Parent 2 0 R /Junk")) {
+      val b = pdf(page(content, "").map(_.replace("/Parent 2 0 R", damage)): _*)
+      assert(PdfTextExtractor.extract(b).pages.map(_.text).toSeq === Seq("kept page"), damage)
+    }
   }
 
   test("the no-catalog fallback reads a raw and a Flate stream, CRLF before endstream") {

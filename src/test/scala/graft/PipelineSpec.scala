@@ -149,10 +149,12 @@ class PipelineSpec extends SparkTestBase with TimeLimits {
     assert(at("empty-gzip").doc_kind == "empty" && at("empty-gzip").text == "" &&
       at("empty-gzip").error == null)
     assert(at("no-bytes").doc_kind == "passthrough" && at("no-bytes").text == HostileDocs.CrawlText)
-    // deep-kids: the page-tree walk overflows the task thread's stack
-    Seq("garbage-pdf", "cyclic-kids", "deep-kids").foreach { n =>
+    Seq("garbage-pdf", "cyclic-kids").foreach { n =>
       assert(at(n).doc_kind == "pdf" && at(n).error != null && at(n).text == "", n)
     }
+    // deep-kids: the page-tree walk keeps its own stack, so the chain's leaf extracts
+    val deep = at("deep-kids")
+    assert(deep.doc_kind == "pdf" && deep.text == HostileDocs.DeepLeafText && deep.error == null)
     assert(at("deep-divs").doc_kind == "html" && at("deep-divs").text == HostileDocs.DeepDivText)
     // non-BMP text: n_chars counts code points, not UTF-16 units
     val astral = at("astral")
