@@ -46,31 +46,34 @@ object ExtractKernel {
 
   def isGzip(b: Array[Byte]): Boolean = transportOf(b) == "gzip"
 
-  /** Bounded transport decompression, its stream closed on every path;
-    * None on corrupt/truncated/oversized streams (decompression-bomb guard).
+  /** Bounded transport decompression; None on corrupt, truncated or
+    * oversized bodies (decompression-bomb guard, `maxOut` bytes in all).
+    * gzip is [[Inflate.gunzip]] read as the JDK gzip stream reads it:
+    * the members concatenated, a tail after a whole member that parses
+    * as no gzip header ignored, any failing member refusing the body.
+    * zstd reads its frames as one stream, closed on every path.
     */
   def decompressTransport(bytes: Array[Byte],
       maxOut: Int = 64 * 1024 * 1024): Option[Array[Byte]] =
-    try {
-      val in: java.io.InputStream = transportOf(bytes) match {
-        case "gzip" =>
-          new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
-        case "zstd" =>
-          new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(bytes))
-        case _ => return None
-      }
-      try {
-        val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 20))
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        var total = 0L
-        while (n >= 0 && total <= maxOut) {
-          out.write(chunk, 0, n)
-          total += n
-          n = in.read(chunk)
-        }
-        if (total > maxOut) None else Some(out.toByteArray)
-      } finally in.close()
+    try transportOf(bytes) match {
+      case "gzip" =>
+        val g = Inflate.gunzip(bytes, maxOut)
+        if (g.members.nonEmpty && g.tail.forall(_ == Inflate.BadHeader)) Some(g.bytes) else None
+      case "zstd" =>
+        val in = new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(bytes))
+        try {
+          val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 20))
+          val chunk = new Array[Byte](8192)
+          var n = in.read(chunk)
+          var total = 0L
+          while (n >= 0 && total <= maxOut) {
+            out.write(chunk, 0, n)
+            total += n
+            n = in.read(chunk)
+          }
+          if (total > maxOut) None else Some(out.toByteArray)
+        } finally in.close()
+      case _ => None
     } catch { case _: StackOverflowError | NonFatal(_) => None }
 
   /** One document's merged extraction: `kind` is html | pdf |

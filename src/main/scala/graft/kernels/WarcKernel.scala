@@ -18,10 +18,12 @@ package graft.kernels
   *    `Content-Encoding: gzip` decode;
   *  - `WARC-Type: resource` blocks as raw payload bytes;
   *  - request/warcinfo/metadata records are skipped (not errors);
-  *  - gzip member concatenation, decoded MEMBER-WISE so each record
-  *    carries the compressed byte extents of its member (the real
-  *    Common Crawl CDX coordinate system — range-read one member out
-  *    of a 1 GB archive).
+  *  - gzip member concatenation, decoded MEMBER-WISE by the one gzip
+  *    reader, [[Inflate.gunzip]], so each record carries the compressed
+  *    byte extents of its member (the real Common Crawl CDX coordinate
+  *    system — range-read one member out of a 1 GB archive). Body
+  *    `Content-Encoding: gzip` goes through the same reader by way of
+  *    `ExtractKernel.decompressTransport`.
   *
   * Malformed records abort the remainder of the file honestly (error
   * row, never a task failure) — a truncated tail is the common real
@@ -46,9 +48,6 @@ object WarcKernel {
       refersTo: String = null, payloadDigest: String = null,
       offset: Long = -1L, recLen: Long = -1L,
       gzOffset: Long = -1L, gzLen: Long = -1L)
-
-  /** One gzip member's compressed extents + decompressed payload. */
-  final case class GzMember(offset: Long, compLen: Long, data: Array[Byte])
 
   /** Serialize extracted text as WARC/1.0 `conversion` records — the
     * WET layout (Common Crawl's extracted-text companion format): one
@@ -107,122 +106,22 @@ object WarcKernel {
     * carries as `(gzOffset, gzLen)`, and a truncated/corrupt tail member
     * degrades honestly — every record from the complete members is
     * emitted, followed by one error row for the tail (mirrors the plain
-    * truncated-tail contract; the old whole-stream decode lost the
-    * entire file).
+    * truncated-tail contract; a whole-stream decode would lose the
+    * entire file). Its class is `warc_gz_` + [[Inflate.gunzip]]'s: an
+    * FHCRC mismatch is `bad_member_header`, over `maxOut` is `too_large`.
     */
   def split(bytes0: Array[Byte], maxOut: Int = 1 << 30): Iterator[WarcPage] = {
     if (ExtractKernel.isGzip(bytes0)) {
-      val (members, tailErr) = gzipMembers(bytes0, maxOut)
-      if (members.isEmpty)
-        return Iterator.single(err(tailErr.getOrElse("warc_gzip_corrupt")))
-      var total = 0
-      members.foreach(m => total += m.data.length)
-      val buf = new Array[Byte](total)
-      val uStarts = new Array[Long](members.size)
-      var p = 0
-      var i = 0
-      while (i < members.size) {
-        uStarts(i) = p.toLong
-        System.arraycopy(members(i).data, 0, buf, p, members(i).data.length)
-        p += members(i).data.length
-        i += 1
-      }
+      val g = Inflate.gunzip(bytes0, maxOut)
+      val starts = g.members.map(_.start).toArray
       val memberOf = (recStart: Long) => {
-        val r = java.util.Arrays.binarySearch(uStarts, recStart)
-        val m = members(if (r >= 0) r else -r - 2)
+        val r = java.util.Arrays.binarySearch(starts, recStart)
+        val m = g.members(if (r >= 0) r else -r - 2)
         (m.offset, m.compLen)
       }
-      val base = records(buf, memberOf)
-      tailErr match {
-        case Some(e) => base ++ Iterator.single(err(e))
-        case None    => base
-      }
+      records(g.bytes, memberOf) ++ g.tail.iterator.map(t => err("warc_gz_" + t))
     } else records(bytes0, _ => (-1L, -1L))
   }
-
-  /** Member-wise `.warc.gz` decode: decompress each gzip member
-    * separately (RFC 1952 header walk incl. FEXTRA/FNAME/FCOMMENT/FHCRC,
-    * raw-deflate inflate, CRC32 + ISIZE trailer check), recording its
-    * COMPRESSED `(offset, compLen)` extents. Returns every complete
-    * member plus an optional error for a truncated/corrupt tail.
-    */
-  def gzipMembers(bytes: Array[Byte], maxOut: Int = 1 << 30): (Vector[GzMember], Option[String]) = {
-    val out = Vector.newBuilder[GzMember]
-    var off = 0
-    var budget = maxOut.toLong
-    while (off < bytes.length) {
-      val dataStart = gzipHeaderEnd(bytes, off)
-      if (dataStart < 0) return (out.result(), Some("warc_gz_bad_member_header"))
-      val inf = new java.util.zip.Inflater(true)
-      try {
-        inf.setInput(bytes, dataStart, bytes.length - dataStart)
-        val bos = new java.io.ByteArrayOutputStream(
-          math.min(math.max(bytes.length - dataStart, 64), 1 << 16))
-        val chunk = new Array[Byte](8192)
-        var produced = 0L
-        while (!inf.finished()) {
-          val n =
-            try inf.inflate(chunk)
-            catch {
-              case _: java.util.zip.DataFormatException =>
-                return (out.result(), Some("warc_gz_member_corrupt"))
-            }
-          if (n > 0) {
-            bos.write(chunk, 0, n)
-            produced += n
-            if (produced > budget) return (out.result(), Some("warc_gz_too_large"))
-          } else if (!inf.finished()) {
-            // needs more input (truncated deflate) or a preset dictionary
-            // (never legal in gzip) — either way the member is unusable
-            return (out.result(), Some("warc_gz_member_truncated"))
-          }
-        }
-        val deflateEnd = dataStart + inf.getBytesRead.toInt
-        if (deflateEnd + 8 > bytes.length)
-          return (out.result(), Some("warc_gz_member_truncated"))
-        val data = bos.toByteArray
-        val crc = new java.util.zip.CRC32
-        crc.update(data)
-        if (readLE32(bytes, deflateEnd) != crc.getValue ||
-            readLE32(bytes, deflateEnd + 4) != (data.length.toLong & 0xffffffffL))
-          return (out.result(), Some("warc_gz_member_crc"))
-        val end = deflateEnd + 8
-        out += GzMember(off.toLong, (end - off).toLong, data)
-        budget -= data.length
-        off = end
-      } finally inf.end()
-    }
-    (out.result(), None)
-  }
-
-  /** End of the RFC 1952 member header starting at `off` (= first byte of
-    * the deflate stream), or -1 if malformed/truncated.
-    */
-  private def gzipHeaderEnd(b: Array[Byte], off: Int): Int = {
-    if (off + 10 > b.length) return -1
-    if ((b(off) & 0xff) != 0x1f || (b(off + 1) & 0xff) != 0x8b || b(off + 2) != 8)
-      return -1
-    val flg = b(off + 3) & 0xff
-    var p = off + 10
-    if ((flg & 4) != 0) { // FEXTRA: 2-byte little-endian length + payload
-      if (p + 2 > b.length) return -1
-      p += 2 + ((b(p) & 0xff) | ((b(p + 1) & 0xff) << 8))
-    }
-    if ((flg & 8) != 0) { // FNAME: NUL-terminated
-      while (p < b.length && b(p) != 0) p += 1
-      p += 1
-    }
-    if ((flg & 16) != 0) { // FCOMMENT: NUL-terminated
-      while (p < b.length && b(p) != 0) p += 1
-      p += 1
-    }
-    if ((flg & 2) != 0) p += 2 // FHCRC
-    if (p > b.length) -1 else p
-  }
-
-  private def readLE32(b: Array[Byte], at: Int): Long =
-    (b(at) & 0xffL) | ((b(at + 1) & 0xffL) << 8) |
-      ((b(at + 2) & 0xffL) << 16) | ((b(at + 3) & 0xffL) << 24)
 
   /** Record iterator over a decompressed WARC stream; `memberOf` maps a
     * record's start offset to the compressed extents of its gzip member.

@@ -53,7 +53,7 @@ object DocPages {
   }
 
   /** The text as one `<p>` inside full boilerplate chrome, UTF-8. */
-  private def html(text: String, d: Doc): Array[Byte] =
+  private[ops] def html(text: String, d: Doc): Array[Byte] =
     PagesGen.htmlPage(Seq(text), None, d.doc_id).getBytes(UTF_8)
 
   /** One `<p>` holding the whole text inside full boilerplate chrome. */

@@ -54,16 +54,13 @@ object ExtractionOps {
         .map(x => f"${x & 0xff}%02x").mkString
     // standing table: last crawl's raw digest + the text extracted then
     val standing = DocPages.docs(spark, dir).map { d =>
-      val raw = PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      (d.doc_id, md5hex(raw), d.text)
+      (d.doc_id, md5hex(DocPages.html(d.text, d)), d.text)
     }.toDF("doc_id", "digest_old", "text_old")
     // fresh crawl: every 4th page gained a sentence, the rest re-serve
     // byte-identical content
     val crawl = DocPages.docs(spark, dir).map { d =>
       val t2 = if (d.doc_id % 4 == 1) d.text + " updated content" else d.text
-      val raw = PagesGen.htmlPage(Seq(t2), None, d.doc_id)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val raw = DocPages.html(t2, d)
       (d.doc_id, raw, md5hex(raw), d.lang)
     }.toDF("doc_id", "raw", "digest_new", "lang")
     val j = crawl.join(standing, Seq("doc_id"))
@@ -103,19 +100,11 @@ object ExtractionOps {
     val dayMs = 86400000L
     val baseMs = 1735689600000L // 2025-01-01T00:00:00Z
     val pages = DocPages.docs(spark, dir).map { d =>
-      val html = PagesGen.htmlPage(Seq(d.text), None, d.doc_id)
       graft.model.PageRow(s"doc://h/${d.doc_id}",
-        new java.sql.Timestamp(baseMs + (d.doc_id % 4) * dayMs),
-        html.getBytes(java.nio.charset.StandardCharsets.UTF_8), "", d.lang)
+        new java.sql.Timestamp(baseMs + (d.doc_id % 4) * dayMs), DocPages.html(d.text, d), "", d.lang)
     }.toDF()
     val out = java.nio.file.Files.createTempDirectory("ej_out")
     val led = java.nio.file.Files.createTempDirectory("ej_led")
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(java.nio.file.Files.deleteIfExists(_))
-      finally s.close()
-    }
     try {
       graft.pipeline.ExtractJob.run(spark,
         pages.filter(col("warc_ts") < lit("2025-01-03")), out.toString, led.toString)
@@ -127,7 +116,7 @@ object ExtractionOps {
         .toDF("day", "rows", "chars", "errors", "snapshot")
         .localCheckpoint(true) // detach from the temp dirs before cleanup
     } finally {
-      rmTree(out); rmTree(led)
+      graft.streaming.StreamingOps.rmTree(out); graft.streaming.StreamingOps.rmTree(led)
     }
   }
 
@@ -739,9 +728,7 @@ object ExtractionOps {
             case 1 => d.text + " rev2"
             case _ => "zz " + d.text
           }
-        graft.model.PageRow(s"doc://pp/${d.doc_id * 2 + cap}", ts0,
-          PagesGen.htmlPage(Seq(body), None, d.doc_id).getBytes(
-            java.nio.charset.StandardCharsets.UTF_8), "", d.lang)
+        graft.model.PageRow(s"doc://pp/${d.doc_id * 2 + cap}", ts0, DocPages.html(body, d), "", d.lang)
       }
     }
     val meta = spark.read.parquet(s"$dir/documents.parquet")

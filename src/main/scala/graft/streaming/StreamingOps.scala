@@ -38,12 +38,13 @@ object StreamingOps {
     Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
   }
 
-  /** Recursive temp-tree delete for the staging/checkpoint scratch a
-    * streaming probe creates (deleteIfExists on a non-empty directory is
+  /** Recursive temp-tree delete for the scratch a probe creates: a
+    * streaming replay's staging and checkpoints, `extractJobLedger`'s
+    * table and ledger (deleteIfExists on a non-empty directory is
     * a silent no-op — the checkpoint/table trees would otherwise pile up
     * in the JVM tmpdir across full-registry runs).
     */
-  private def rmTree(p: Path): Unit = {
+  private[graft] def rmTree(p: Path): Unit = {
     if (Files.exists(p)) {
       val st = Files.walk(p)
       try st.sorted(java.util.Comparator.reverseOrder()).forEach(Files.deleteIfExists(_))

@@ -22,6 +22,34 @@ object HostileDocs {
 
   def zstd(b: Array[Byte]): Array[Byte] = com.github.luben.zstd.Zstd.compress(b, 3)
 
+  /** One RFC 1952 member written field by field, with the optional
+    * header fields the JDK writer never emits but real archivers do:
+    * FEXTRA (`extra`), FNAME (`name`), FCOMMENT (`comment`) and FHCRC
+    * (`hcrc`: the low 16 bits of the header's CRC32, XOR `hcrcFlip`).
+    */
+  def gzipMember(payload: Array[Byte], extra: Array[Byte] = null, name: String = null,
+      comment: String = null, hcrc: Boolean = false, hcrcFlip: Int = 0): Array[Byte] = {
+    def le(v: Long, n: Int): Array[Byte] = Array.tabulate(n)(i => ((v >> (8 * i)) & 0xff).toByte)
+    val flg = (if (hcrc) 2 else 0) | (if (extra != null) 4 else 0) |
+      (if (name != null) 8 else 0) | (if (comment != null) 16 else 0)
+    val bos = new java.io.ByteArrayOutputStream()
+    bos.write(Array[Byte](0x1f.toByte, 0x8b.toByte, 8, flg.toByte, 0, 0, 0, 0, 0, (-1).toByte))
+    if (extra != null) { bos.write(le(extra.length.toLong, 2)); bos.write(extra) }
+    if (name != null) { bos.write(name.getBytes(ISO_8859_1)); bos.write(0) }
+    if (comment != null) { bos.write(comment.getBytes(ISO_8859_1)); bos.write(0) }
+    if (hcrc) {
+      val crc = new java.util.zip.CRC32
+      crc.update(bos.toByteArray)
+      bos.write(le((crc.getValue ^ hcrcFlip) & 0xffff, 2))
+    }
+    bos.write(PagesGen.deflate(payload, nowrap = true))
+    val crc = new java.util.zip.CRC32
+    crc.update(payload)
+    bos.write(le(crc.getValue, 4))
+    bos.write(le(payload.length.toLong, 4))
+    bos.toByteArray
+  }
+
   /** A PDF whose objects are numbered 1.. in the given order (1 = catalog). */
   private def pdf(objs: Seq[String]): Array[Byte] =
     ("%PDF-1.4\n" + objs.zipWithIndex.map { case (o, i) => s"${i + 1} 0 obj $o endobj\n" }.mkString +
@@ -90,6 +118,8 @@ object HostileDocs {
       "truncated-gzip" -> gz.take(gz.length * 3 / 5),
       "truncated-zstd" -> zst.take(zst.length * 3 / 5),
       "empty-gzip" -> gzip(Array.emptyByteArray),
+      "two-member-gzip" -> (gzip(html.take(html.length / 2)) ++ gzip(html.drop(html.length / 2))),
+      "fname-gzip" -> gzipMember(html, name = "page.html"),
       "garbage-pdf" -> "%PDF-1.4 garbage".getBytes(UTF_8),
       "cyclic-kids" -> cyclicKids,
       "deep-kids" -> deepKids,

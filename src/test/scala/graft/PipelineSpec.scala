@@ -149,6 +149,11 @@ class PipelineSpec extends SparkTestBase with TimeLimits {
     assert(at("empty-gzip").doc_kind == "empty" && at("empty-gzip").text == "" &&
       at("empty-gzip").error == null)
     assert(at("no-bytes").doc_kind == "passthrough" && at("no-bytes").text == HostileDocs.CrawlText)
+    // a two-member body and an FNAME header decode like one plain member
+    Seq("two-member-gzip", "fname-gzip").foreach { n =>
+      assert(at(n).doc_kind == "html" && at(n).error == null, n)
+      assert(at(n).text == "hostile main content body here", n)
+    }
     Seq("garbage-pdf", "cyclic-kids").foreach { n =>
       assert(at(n).doc_kind == "pdf" && at(n).error != null && at(n).text == "", n)
     }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.PagesGen
-import graft.kernels.WarcKernel
+import graft.kernels.{ExtractKernel, Inflate, WarcKernel}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
@@ -109,9 +109,9 @@ class WarcKernelSpec extends AnyFunSuite {
     assert(pages.size === 7 && pages.forall(_.error == null))
     // ALL members (incl. the skipped warcinfo/request records') tile the
     // file: start 0, contiguous, end at file length
-    val (members, tailErr) = WarcKernel.gzipMembers(gz)
-    assert(tailErr.isEmpty)
-    val tiling = members.map(m => (m.offset, m.compLen))
+    val g = Inflate.gunzip(gz, 1 << 30)
+    assert(g.tail.isEmpty)
+    val tiling = g.members.map(m => (m.offset, m.compLen))
     assert(tiling.head._1 === 0L)
     tiling.sliding(2).foreach {
       case Seq((o1, l1), (o2, _)) => assert(o1 + l1 === o2)
@@ -197,6 +197,41 @@ class WarcKernelSpec extends AnyFunSuite {
     assert(pages.size === 1 && pages.head.error == null)
     assert(pages.head.url === "u://f")
     assert(new String(pages.head.body, UTF_8) === "BODY")
+  }
+
+  test("a gz member whose FHCRC does not match is a bad member header") {
+    val rec = ("WARC/1.0\r\nWARC-Type: resource\r\nWARC-Target-URI: u://h\r\n" +
+      "WARC-Date: 2025-01-01T00:00:00Z\r\nContent-Length: 4\r\n\r\nBODY\r\n\r\n").getBytes(UTF_8)
+    val good = HostileDocs.gzipMember(rec, name = "a.warc", hcrc = true)
+    val bad = HostileDocs.gzipMember(rec, name = "a.warc", hcrc = true, hcrcFlip = 0x8000)
+    assert(WarcKernel.split(good).map(p => (p.url, p.error)).toSeq === Seq(("u://h", null)))
+    assert(WarcKernel.split(bad).map(_.error).toSeq === Seq("warc_gz_bad_member_header"))
+    // after a whole member it ends the walk with that member's records kept
+    assert(WarcKernel.split(good ++ bad).map(p => (p.url, p.error)).toSeq ===
+      Seq(("u://h", null), (null, "warc_gz_bad_member_header")))
+  }
+
+  test("differential: every prefix that decodes as whole members gunzips the same on the transport") {
+    val gz = PagesGen.warcBytes(entries(5), gzipMembers = true)
+    def jdkGunzip(b: Array[Byte]): Array[Byte] = {
+      val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
+      try in.readAllBytes() finally in.close()
+    }
+    var whole = 0
+    (4 to gz.length).foreach { cut =>
+      val prefix = java.util.Arrays.copyOfRange(gz, 0, cut)
+      val g = Inflate.gunzip(prefix, 1 << 30)
+      if (WarcKernel.split(prefix).forall(p => p.error == null || !p.error.startsWith("warc_gz_"))) {
+        assert(g.tail.isEmpty, cut)
+        whole += 1
+        // each member read alone by the JDK, then concatenated
+        val members = g.members.flatMap(m =>
+          jdkGunzip(java.util.Arrays.copyOfRange(prefix, m.offset.toInt, (m.offset + m.compLen).toInt)))
+        assert(ExtractKernel.decompressTransport(prefix).map(_.toSeq) === Some(members), cut)
+        assert(g.bytes.toSeq === members, cut)
+      }
+    }
+    assert(whole === Inflate.gunzip(gz, 1 << 30).members.size)
   }
 
   test("fuzz: every truncation of a .warc.gz parses totally, prior records intact") {
