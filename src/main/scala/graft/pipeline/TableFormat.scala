@@ -104,8 +104,23 @@ object TableFormat {
   final case class VacuumStats(filesDeleted: Long, bytesFreed: Long)
 }
 
-/** Parquet-directory implementation. */
+/** Parquet-directory implementation.
+  *
+  * Every table write (`overwritePartitions`, so `merge` too, and
+  * `compact`'s rewrite) sets local file modes in the JVM, through
+  * [[JvmModeLocalFileSystem]]: without libhadoop, which Spark does not
+  * ship, Hadoop's `RawLocalFileSystem` forks a `chmod` process per
+  * directory, data file and `.crc` sidecar. Other schemes are untouched.
+  */
 object ParquetFormat extends TableFormat {
+
+  /** Spark copies write options into the Hadoop conf of the committer and
+    * of the tasks; with the cache off, the class applies even when a
+    * plain `file://` file system is already cached in this JVM.
+    */
+  private val writeOptions = Map(
+    "fs.file.impl" -> classOf[JvmModeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Clustered by an AQE rebalance: small partitions coalesce to about a
     * task per core, one above the advisory size splits; with AQE off it
@@ -115,6 +130,7 @@ object ParquetFormat extends TableFormat {
       partitionCol: String, observed: Option[(Observation, Column)]): Unit = {
     val clustered = df.hint("rebalance", col(partitionCol))
     observed.fold(clustered) { case (o, agg) => clustered.observe(o, agg) }.write
+      .options(writeOptions)
       .partitionBy(partitionCol)
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
@@ -202,7 +218,7 @@ object ParquetFormat extends TableFormat {
         val df = spark.read.parquet(pdir.getPath)
           .repartition(desired.toInt)
           .localCheckpoint(true)
-        df.write.mode(SaveMode.Overwrite).parquet(pdir.getPath)
+        df.write.options(writeOptions).mode(SaveMode.Overwrite).parquet(pdir.getPath)
         rewritten += 1
         after += dataFiles(pdir).length
       } else after += files.length

@@ -1,12 +1,25 @@
 package graft
 
-import graft.pipeline.ParquetFormat
+import java.nio.file.{Files, LinkOption, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
+
+import graft.gen.PagesGen
+import graft.pipeline.{ExtractJob, JvmModeLocalFileSystem, ParquetFormat}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** The TableFormat seam: idempotent partition replace and the keyed
   * copy-on-write MERGE writer (the api.py:458-474 edited-result sink as
   * a real table write, not a query-shaped view). The merge must touch
-  * only the partitions the updates name.
+  * only the partitions the updates name. Its writes set file modes in the
+  * JVM: the same files and modes as a plain Spark write, no forked process.
   */
 class TableFormatSpec extends SparkTestBase {
 
@@ -119,5 +132,112 @@ class TableFormatSpec extends SparkTestBase {
     val twice = ParquetFormat.read(spark, t).orderBy("url")
       .select($"url", $"text").as[(String, String)].collect().toSeq
     assert(once === twice)
+  }
+
+  private def mode(p: java.nio.file.Path): String =
+    PosixFilePermissions.toString(Files.getPosixFilePermissions(p, LinkOption.NOFOLLOW_LINKS))
+
+  /** Every path under `root` (itself as "") with its POSIX mode; the
+    * task and job ids in part-file names are masked.
+    */
+  private def layout(root: String): Set[(String, String)] = {
+    val r = Paths.get(root)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.map { p =>
+      r.relativize(p).toString.replaceAll("part-\\d+-[0-9a-f-]+", "part-*") -> mode(p)
+    }.toSet
+    finally walk.close()
+  }
+
+  /** `body`'s result and the commands of the processes the JVM started
+    * while it ran.
+    */
+  private def processStarts[A](body: => A): (A, Seq[String]) = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val a = try body finally rec.stop()
+      val f = Files.createTempFile("graft-forks", ".jfr")
+      try {
+        rec.dump(f)
+        (a, RecordingFile.readAllEvents(f).asScala.map(_.getString("command")).toSeq)
+      } finally Files.delete(f)
+    } finally rec.close()
+  }
+
+  /** The table write with Spark's default file system: one file per day,
+    * dynamic overwrite (which commits through a staging dir, so no
+    * `_SUCCESS` is left at the root).
+    */
+  private def plainWrite(df: DataFrame, table: String): Unit =
+    df.coalesce(1).write.partitionBy("p_day").option("partitionOverwriteMode", "dynamic")
+      .mode(SaveMode.Overwrite).parquet(table)
+
+  test("setPermission sets explicit modes in the JVM; a sticky bit keeps Hadoop's path") {
+    val fs = new JvmModeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    val root = Paths.get(tmpDir("tf_modes"))
+    val file = Files.createFile(root.resolve("f"))
+    val dir = Files.createDirectory(root.resolve("d"))
+    val sticky = Files.createDirectory(root.resolve("s"))
+    def set(p: java.nio.file.Path, bits: Int): Unit =
+      fs.setPermission(new Path(p.toUri), new FsPermission(bits.toShort))
+    set(file, Integer.parseInt("640", 8))
+    set(dir, Integer.parseInt("700", 8))
+    set(sticky, Integer.parseInt("1777", 8))
+    assert(mode(file) == "rw-r-----")
+    assert(mode(dir) == "rwx------")
+    val unixMode = Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int]
+    assert((unixMode & Integer.parseInt("7777", 8)) == Integer.parseInt("1777", 8),
+      Integer.toOctalString(unixMode))
+  }
+
+  test("overwritePartitions, merge and compact leave a plain Spark write's files and modes") {
+    val dir = tmpDir("tf_parity")
+    // overwritePartitions: one file per day, as the coalesced plain write
+    ParquetFormat.overwritePartitions(base, s"$dir/ow", "p_day")
+    plainWrite(base, s"$dir/ow_plain")
+    assert(layout(s"$dir/ow") == layout(s"$dir/ow_plain"))
+    assert(layout(s"$dir/ow").exists(_._1.endsWith(".parquet.crc")))
+
+    // merge: rewrites day 1 in place, the other days keep their files
+    val updates = Seq(("u2", "2025-01-01", "edit")).toDF("url", "p_day", "text")
+    ParquetFormat.merge(spark, s"$dir/ow", updates, "url", "p_day")
+    val merged = ParquetFormat.read(spark, s"$dir/ow")
+      .withColumn("p_day", col("p_day").cast("string"))
+    plainWrite(merged.localCheckpoint(true), s"$dir/merge_plain")
+    assert(layout(s"$dir/ow") == layout(s"$dir/merge_plain"))
+
+    // compact: four files per day, each day rewritten into one; the
+    // control does the same rewrite with a plain write
+    val scattered = (0 until 40).map(i => (s"u$i", s"2025-01-0${i % 2 + 1}", s"t$i"))
+      .toDF("url", "p_day", "text").repartition(4)
+    Seq("cp", "cp_plain").foreach { t =>
+      scattered.write.partitionBy("p_day").parquet(s"$dir/$t")
+    }
+    assert(ParquetFormat.compact(spark, s"$dir/cp", "p_day", 1L << 30).partitionsRewritten == 2)
+    new java.io.File(s"$dir/cp_plain").listFiles().filter(_.getName.startsWith("p_day="))
+      .foreach { d =>
+        spark.read.parquet(d.getPath).repartition(1).localCheckpoint(true)
+          .write.mode(SaveMode.Overwrite).parquet(d.getPath)
+      }
+    assert(layout(s"$dir/cp") == layout(s"$dir/cp_plain"))
+  }
+
+  test("ExtractJob.run starts no process; a plain partitioned write does") {
+    val pages = PagesGen.corpus(120, seed = 31L).map(_.row).toDS().toDF().cache()
+    assert(pages.count() == 120)
+    val dir = tmpDir("tf_forks")
+    val (_, plain) = processStarts {
+      pages.withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
+        .write.partitionBy("p_day").parquet(s"$dir/plain")
+    }
+    if (plain.isEmpty)
+      cancel("a plain local write started no process (native Hadoop present): nothing to compare")
+    val (r, job) = processStarts(ExtractJob.run(spark, pages, s"$dir/out", s"$dir/ledger"))
+    assert(r.daysProcessed.size > 1)
+    assert(job.isEmpty, job.mkString("\n"))
+    pages.unpersist()
   }
 }
