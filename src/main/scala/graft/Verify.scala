@@ -1,9 +1,12 @@
 package graft
+import graft.pipeline.ParquetFormat
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The dumps write
+  * with `ParquetFormat.writeOptions`, so they set file modes without
+  * forking a `chmod` per directory, part file and `.crc` sidecar. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,7 +22,8 @@ object Verify {
     // oracle_sql.json is still written), but it does fail it at the end
     val failed = selected.toSeq.flatMap { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+        fn(spark, sfDir).coalesce(1).write.options(ParquetFormat.writeOptions)
+          .mode("overwrite").parquet(s"$outDir/$name.parquet")
         None
       } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -1,6 +1,8 @@
 package graft.kernels
 
+import com.github.luben.zstd.{RecyclingBufferPool, Zstd, ZstdInputStreamNoFinalizer}
 import graft.model.Span
+import java.io.ByteArrayInputStream
 import scala.util.control.NonFatal
 
 /** Per-row extraction dispatch: content sniffing + kernel invocation +
@@ -51,7 +53,13 @@ object ExtractKernel {
     * gzip is [[Inflate.gunzip]] read as the JDK gzip stream reads it:
     * the members concatenated, a tail after a whole member that parses
     * as no gzip header ignored, any failing member refusing the body.
-    * zstd reads its frames as one stream, closed on every path.
+    * zstd reads its frames as one stream, closed on every path: a
+    * stream with no finalizer whose input buffer comes from zstd-jni's
+    * recycling pool, read straight into one [[Inflate.Buf]]. The buffer
+    * takes its size from the first frame header's content size where
+    * that claim is within `maxOut` and within what the body could
+    * expand to (one 4-byte RLE block yields at most 128 KiB); an
+    * unsized frame, or any output past the claim, grows it by doubling.
     */
   def decompressTransport(bytes: Array[Byte],
       maxOut: Int = 64 * 1024 * 1024): Option[Array[Byte]] =
@@ -60,19 +68,14 @@ object ExtractKernel {
         val g = Inflate.gunzip(bytes, maxOut)
         if (g.members.nonEmpty && g.tail.forall(_ == Inflate.BadHeader)) Some(g.bytes) else None
       case "zstd" =>
-        val in = new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(bytes))
-        try {
-          val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 20))
-          val chunk = new Array[Byte](8192)
-          var n = in.read(chunk)
-          var total = 0L
-          while (n >= 0 && total <= maxOut) {
-            out.write(chunk, 0, n)
-            total += n
-            n = in.read(chunk)
-          }
-          if (total > maxOut) None else Some(out.toByteArray)
-        } finally in.close()
+        val claim = Zstd.getFrameContentSize(bytes)
+        val out = new Inflate.Buf(
+          if (claim >= 0 && claim <= maxOut && claim <= (bytes.length.toLong << 15)) claim
+          else bytes.length * 4L,
+          maxOut)
+        val in = new ZstdInputStreamNoFinalizer(new ByteArrayInputStream(bytes), RecyclingBufferPool.INSTANCE)
+        try if (out.fill(in)) Some(out.result()) else None
+        finally in.close()
       case _ => None
     } catch { case _: StackOverflowError | NonFatal(_) => None }
 

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import java.io.InputStream
 import java.util.zip.{CRC32, DataFormatException, Inflater}
 
 /** The one inflater: zlib / raw-deflate streams ([[apply]]: PDF
@@ -7,10 +8,11 @@ import java.util.zip.{CRC32, DataFormatException, Inflater}
   * member walks ([[gunzip]]: the gzip arm of
   * `ExtractKernel.decompressTransport`, and `.warc.gz` in
   * `WarcKernel.split`). Both inflate through one drain loop straight
-  * into one contiguous buffer, and every decode is bounded, so a few KiB
-  * cannot make a task allocate hundreds of MiB: streams and the
-  * transport stop at [[MaxOut]] (64 MiB), a `.warc.gz` at its own bound
-  * (1 GiB by default, as one archive holds thousands of pages).
+  * into one contiguous [[Buf]], the buffer the zstd transport decodes
+  * into too, and every decode is bounded, so a few KiB cannot make a
+  * task allocate hundreds of MiB: streams and the transport stop at
+  * [[MaxOut]] (64 MiB), a `.warc.gz` at its own bound (1 GiB by
+  * default, as one archive holds thousands of pages).
   */
 object Inflate {
 
@@ -119,8 +121,12 @@ object Inflate {
   private def le32(b: Array[Byte], at: Int): Long =
     (b(at) & 0xffL) | (b(at + 1) & 0xffL) << 8 | (b(at + 2) & 0xffL) << 16 | (b(at + 3) & 0xffL) << 24
 
-  /** Output an inflater writes into directly; it doubles up to `limit` + 1 bytes. */
-  private final class Buf(sizeHint: Long, limit: Int) {
+  /** Output a decoder writes into directly, pre-sized from `sizeHint`;
+    * it doubles up to `limit` + 1 bytes. The inflater and the zstd
+    * transport each fill it through their own loop, so neither call site
+    * sees the other's reader.
+    */
+  private[kernels] final class Buf(sizeHint: Long, limit: Int) {
     private val cap = math.min(limit + 1L, Int.MaxValue - 8L)
     var bytes = new Array[Byte](math.min(cap, math.max(64L, sizeHint)).toInt)
     var len = 0
@@ -138,6 +144,29 @@ object Inflate {
         len += n
       }
       len <= limit
+    }
+
+    /** Append what `in` reads until it ends; false once more than `limit`
+      * bytes are in. A full buffer grows only when one more byte comes,
+      * so an exact size hint costs no copy.
+      */
+    def fill(in: InputStream): Boolean = {
+      var n = 1
+      while (n > 0) {
+        if (len < bytes.length) {
+          n = in.read(bytes, len, bytes.length - len)
+          if (n > 0) len += n
+        } else if (len >= cap) return false
+        else {
+          val b = in.read()
+          if (b >= 0) {
+            bytes = java.util.Arrays.copyOf(bytes, math.min(cap, len * 2L).toInt)
+            bytes(len) = b.toByte
+            len += 1
+          } else n = b
+        }
+      }
+      true
     }
 
     def result(): Array[Byte] = if (len == bytes.length) bytes else java.util.Arrays.copyOf(bytes, len)

@@ -111,6 +111,7 @@ object TableFormat {
   * [[JvmModeLocalFileSystem]]: without libhadoop, which Spark does not
   * ship, Hadoop's `RawLocalFileSystem` forks a `chmod` process per
   * directory, data file and `.crc` sidecar. Other schemes are untouched.
+  * `graft.Verify`'s per-query dumps write with the same options.
   */
 object ParquetFormat extends TableFormat {
 
@@ -118,7 +119,7 @@ object ParquetFormat extends TableFormat {
     * of the tasks; with the cache off, the class applies even when a
     * plain `file://` file system is already cached in this JVM.
     */
-  private val writeOptions = Map(
+  private[graft] val writeOptions = Map(
     "fs.file.impl" -> classOf[JvmModeLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
 

@@ -1,9 +1,13 @@
 package graft
 
-import graft.HostileDocs.{gzip => gz, gzipMember, zstd => zst}
+import com.github.luben.zstd.Zstd
+import graft.HostileDocs.{gzip => gz, gzipMember, zstd => zst, zstdClaiming, zstdUnsized}
 import graft.kernels.ExtractKernel
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** gzip/zstd transport decode ahead of content sniffing. */
 class GzipTransportSpec extends AnyFunSuite {
@@ -154,5 +158,70 @@ class GzipTransportSpec extends AnyFunSuite {
     val m2 = gz(b)
     for (cut <- 10 to 18)
       assert(extract(gz(a) ++ m2.take(cut)).error === "gzip_corrupt", cut)
+  }
+
+  // zstd bounds: the output buffer is pre-sized from the frame header only
+  // up to maxOut and up to what the body could expand to
+
+  private def allocated(): Long =
+    ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+      .getCurrentThreadAllocatedBytes
+
+  test("zstd transport: output of exactly maxOut decodes, maxOut - 1 refuses, sized or not") {
+    val page = ("<p>bounded zstd page " + "gamma delta " * 9000 + "</p>").getBytes(UTF_8)
+    val sized = zst(page)
+    val unsized = zstdUnsized(page)
+    assert(Zstd.getFrameContentSize(sized) === page.length.toLong)
+    assert(Zstd.getFrameContentSize(unsized) === -1L)
+    for (body <- Seq(sized, unsized)) {
+      assert(ExtractKernel.decompressTransport(body, maxOut = page.length).map(_.toSeq) ===
+        Some(page.toSeq))
+      assert(ExtractKernel.decompressTransport(body, maxOut = page.length - 1).isEmpty)
+    }
+  }
+
+  test("zstd transport: a header claiming more than the body could hold is not allocated") {
+    // 4 magic, descriptor (4-byte size, window byte), 128 KiB window, a
+    // 60 MiB claim, two 128 KiB RLE blocks, then a block header cut short
+    val rle = Array[Byte](0x02, 0x00, 0x10, 'a')
+    val body = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0x80.toByte, 0x38) ++
+      Array[Byte](0, 0, 0xc0.toByte, 0x03) ++ rle ++ rle ++ rle.take(2)
+    assert(body.length === 20)
+    assert(Zstd.getFrameContentSize(body) === 60L * 1024 * 1024)
+    ExtractKernel.decompressTransport(zst(page2k(0))) // warm the stream's pooled buffer
+    val before = allocated()
+    assert(ExtractKernel.decompressTransport(body).isEmpty)
+    val used = allocated() - before
+    assert(used < 8L * 1024 * 1024, s"$used bytes allocated")
+    // a claim the body can hold but the payload does not fill is corrupt
+    val short = "a short payload".getBytes(UTF_8)
+    assert(ExtractKernel.decompressTransport(zstdClaiming(short, short.length.toLong)).map(_.toSeq) ===
+      Some(short.toSeq))
+    assert(ExtractKernel.decompressTransport(zstdClaiming(short, short.length + 1L)).isEmpty)
+  }
+
+  private def page2k(i: Int): Array[Byte] =
+    graft.gen.PagesGen.htmlPage(Seq.tabulate(8)(j => s"paragraph $j of page $i " * 6), None, i.toLong)
+      .getBytes(UTF_8)
+
+  test("zstd transport: decoding allocates little beyond the decoded bytes") {
+    val bodies = (0 until 1000).map(i => zst(page2k(i)))
+    val plain = (0 until 1000).map(i => page2k(i).length.toLong).sum
+    assert(plain / 1000 > 1500 && plain / 1000 < 3000, plain / 1000)
+    bodies.foreach(ExtractKernel.decompressTransport(_)) // warm-up: JIT and the buffer pool
+    val before = allocated()
+    var decoded = 0L
+    bodies.foreach(b => decoded += ExtractKernel.decompressTransport(b).get.length)
+    val perBody = (allocated() - before) / bodies.length
+    assert(decoded === plain)
+    assert(perBody < 16 * 1024, s"$perBody bytes allocated per body")
+  }
+
+  test("zstd transport: the finalizable zstd stream is not used in src/main") {
+    val users = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => "ZstdInputStream(?!NoFinalizer)".r.findFirstIn(Files.readString(p)).isDefined)
+      .toList
+    assert(users.isEmpty, users)
   }
 }

@@ -22,6 +22,28 @@ object HostileDocs {
 
   def zstd(b: Array[Byte]): Array[Byte] = com.github.luben.zstd.Zstd.compress(b, 3)
 
+  /** One zstd frame as a streaming compressor writes it: no content size in its header. */
+  def zstdUnsized(b: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new com.github.luben.zstd.ZstdOutputStream(bos)
+    z.write(b); z.close()
+    bos.toByteArray
+  }
+
+  private def le(v: Long, n: Int): Array[Byte] = Array.tabulate(n)(i => ((v >> (8 * i)) & 0xff).toByte)
+
+  private val ZstdMagic = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte)
+
+  /** One single-segment zstd frame whose header claims `claim` content
+    * bytes, holding `payload` (at most 128 KiB) as one raw last block.
+    */
+  def zstdClaiming(payload: Array[Byte], claim: Long): Array[Byte] =
+    ZstdMagic ++ Array(0xa0.toByte) ++ le(claim, 4) ++ le((payload.length.toLong << 3) | 1, 3) ++ payload
+
+  /** A skippable frame (magic 0x184D2A50, little-endian) with `n` bytes of user data. */
+  def zstdSkippable(n: Int): Array[Byte] =
+    Array[Byte](0x50, 0x2a, 0x4d, 0x18) ++ le(n.toLong, 4) ++ Array.tabulate[Byte](n)(i => (i % 7).toByte)
+
   /** One RFC 1952 member written field by field, with the optional
     * header fields the JDK writer never emits but real archivers do:
     * FEXTRA (`extra`), FNAME (`name`), FCOMMENT (`comment`) and FHCRC
@@ -29,7 +51,6 @@ object HostileDocs {
     */
   def gzipMember(payload: Array[Byte], extra: Array[Byte] = null, name: String = null,
       comment: String = null, hcrc: Boolean = false, hcrcFlip: Int = 0): Array[Byte] = {
-    def le(v: Long, n: Int): Array[Byte] = Array.tabulate(n)(i => ((v >> (8 * i)) & 0xff).toByte)
     val flg = (if (hcrc) 2 else 0) | (if (extra != null) 4 else 0) |
       (if (name != null) 8 else 0) | (if (comment != null) 16 else 0)
     val bos = new java.io.ByteArrayOutputStream()
@@ -117,6 +138,11 @@ object HostileDocs {
     Seq(
       "truncated-gzip" -> gz.take(gz.length * 3 / 5),
       "truncated-zstd" -> zst.take(zst.length * 3 / 5),
+      "two-frame-zstd" -> (zstd(html.take(html.length / 2)) ++ zstd(html.drop(html.length / 2))),
+      "unsized-zstd" -> zstdUnsized(html),
+      "overclaim-zstd" -> zstdClaiming(html, html.length + 100L),
+      "empty-zstd" -> zstd(Array.emptyByteArray),
+      "skippable-zstd" -> (zstdSkippable(8) ++ zst),
       "empty-gzip" -> gzip(Array.emptyByteArray),
       "two-member-gzip" -> (gzip(html.take(html.length / 2)) ++ gzip(html.drop(html.length / 2))),
       "fname-gzip" -> gzipMember(html, name = "page.html"),

@@ -144,16 +144,26 @@ class PipelineSpec extends SparkTestBase with TimeLimits {
     def at(name: String) = typed(s"hostile://$name")
     assert(at("truncated-gzip").doc_kind == "html" && at("truncated-gzip").error == "gzip_corrupt")
     assert(at("truncated-zstd").doc_kind == "html" && at("truncated-zstd").error == "zstd_corrupt")
+    // a header claiming more content than its frame holds is corrupt
+    assert(at("overclaim-zstd").doc_kind == "html" && at("overclaim-zstd").error == "zstd_corrupt")
     // a coded body that decodes to nothing is empty: crawl text stands in
     // only when no bytes were stored
-    assert(at("empty-gzip").doc_kind == "empty" && at("empty-gzip").text == "" &&
-      at("empty-gzip").error == null)
+    Seq("empty-gzip", "empty-zstd").foreach { n =>
+      assert(at(n).doc_kind == "empty" && at(n).text == "" && at(n).error == null, n)
+    }
     assert(at("no-bytes").doc_kind == "passthrough" && at("no-bytes").text == HostileDocs.CrawlText)
-    // a two-member body and an FNAME header decode like one plain member
-    Seq("two-member-gzip", "fname-gzip").foreach { n =>
+    // two members or frames, an FNAME header and a frame with no content
+    // size decode like one plain member or frame
+    Seq("two-member-gzip", "fname-gzip", "two-frame-zstd", "unsized-zstd").foreach { n =>
       assert(at(n).doc_kind == "html" && at(n).error == null, n)
       assert(at(n).text == "hostile main content body here", n)
     }
+    // the transport sniff matches a zstd frame's magic only, so a body
+    // that starts with a skippable frame is read as html: its raw bytes
+    // surface as text and the frame after it is never decoded
+    val skippable = at("skippable-zstd")
+    assert(skippable.doc_kind == "html" && skippable.error == null)
+    assert(skippable.text.startsWith("P*M") && !skippable.text.contains("hostile main content"))
     Seq("garbage-pdf", "cyclic-kids").foreach { n =>
       assert(at(n).doc_kind == "pdf" && at(n).error != null && at(n).text == "", n)
     }
